@@ -17,21 +17,26 @@ from pyspark.sql import functions as F
 from openelevationservice_spark.constants import COORD_PRECISION, NODATA, PX, TILE_PX
 from openelevationservice_spark.sources import fixtures as fx
 
-# Volumes per size.  "full" is the measured benchmark: on 4 cores each
-# operation takes about 1-6 s, so one cycle of a workload's four
-# operations fits the run time.  "tiny" is the smoke-test size.
+# Volumes per size and workload.  "full" is the measured benchmark: on 4
+# cores each operation takes about 1-6 s, most of it fixed per-query cost
+# (planning, scheduling, broadcast, Python workers).  Prepare ingests a
+# 16x16-tile world eight times over: the same 2048 tiles as 32x32 twice,
+# with a quarter of the tiles to generate and decode in each set-up.
+# "tiny" is the smoke-test size.
 SIZES = {
-    "full": dict(world=32, points=1_200_000, lines=30_000, polygons=200,
-                 dissolve_polygons=80, tile_reps=2, docs=2_500,
-                 vectors=10_000, queries=8, topk=10),
-    "tiny": dict(world=4, points=6_000, lines=1_500, polygons=10,
-                 dissolve_polygons=5, tile_reps=2, docs=500,
-                 vectors=500, queries=4, topk=5),
+    "full": {
+        "replay": dict(world=32, points=4_800_000, lines=150_000, polygons=1_000,
+                       dissolve_polygons=200),
+        "prepare": dict(world=16, tile_reps=8, docs=5_000, vectors=10_000, queries=8, topk=10),
+    },
+    "tiny": {
+        "replay": dict(world=4, points=6_000, lines=1_500, polygons=10, dissolve_polygons=5),
+        "prepare": dict(world=4, tile_reps=2, docs=500, vectors=500, queries=4, topk=5),
+    },
 }
 
 
-def world_for(size: str) -> fx.World:
-    n = SIZES[size]["world"]
+def world_for(n: int) -> fx.World:
     return fx.World(tx0=4636, ty0=1242, nx=n, ny=n)
 
 
@@ -124,7 +129,7 @@ def rects_df(spark, rects: Rects, g: Grid):
         pdf, schema="poly_id long, ring array<struct<lon:double,lat:double>>")
 
 
-def points_df(spark, g: Grid, n: int, seed: int):
+def points_df(spark, g: Grid, n: int, seed: int, parts: int):
     """n points at pixel centres, generated on the executors.
 
     ``point_id`` encodes the local pixel (id * W*H + gy*W + gx) so the
@@ -132,7 +137,7 @@ def points_df(spark, g: Grid, n: int, seed: int):
     wpx, hpx = g.w, g.h
     gx = F.pmod(F.xxhash64(F.col("id"), F.lit(seed)), F.lit(wpx))
     gy = F.pmod(F.xxhash64(F.col("id"), F.lit(seed + 1)), F.lit(hpx))
-    base = spark.range(n).select("id", gx.alias("gx"), gy.alias("gy"))
+    base = spark.range(0, n, 1, parts).select("id", gx.alias("gx"), gy.alias("gy"))
     return base.select(
         (F.col("id") * (wpx * hpx) + F.col("gy") * wpx + F.col("gx")).alias("point_id"),
         (F.lit(g.world.min_x) + (F.col("gx") + F.lit(0.5)) * F.lit(PX)).alias("lon"),
@@ -170,7 +175,7 @@ def make_docs(rng, n: int) -> pd.DataFrame:
             for _ in range(int(rng.integers(1, 3))):
                 toks[int(rng.integers(0, len(toks)))] = _WORDS[int(rng.integers(0, len(_WORDS)))]
         else:
-            length = int(rng.integers(20, 90))
+            length = int(rng.integers(10, 101))
             stop = rng.random(length) < 0.25
             toks = [(_STOP[langs[i]][int(rng.integers(0, 10))] if s
                      else _WORDS[int(rng.integers(0, len(_WORDS)))]) for s in stop]

@@ -1,6 +1,6 @@
 """Run one benchmark workload and print its metrics.
 
-    python3 perfbench/run.py --workload replay --seed 1 --seconds 12 --trace 0
+    python3 perfbench/run.py --workload replay --seed 1 --seconds 10 --trace 0
 
 Run from the repository root.  The last line of standard output is one
 JSON object: ``{"correct", "attempted", "failed", "metrics"}``.  With
@@ -26,7 +26,7 @@ import traceback
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 OUT_DIR = os.path.join(ROOT, ".perfbench_out")
-SETUP_REPS = 3       # set-ups per run; setup_s is their median
+SETUP_REPS = 4       # set-ups per run; setup_s is their median
 
 
 def say(msg: str) -> None:
@@ -46,9 +46,38 @@ def machine_state() -> dict:
     return {"loadavg": load, "cpu": _cpu_times()}
 
 
-def steal_share(before: dict, after: dict) -> float:
-    d = [b - a for a, b in zip(before["cpu"], after["cpu"])]
+def steal_share(before: list[int], after: list[int]) -> float:
+    d = [b - a for a, b in zip(before, after)]
     return d[7] / max(sum(d), 1)  # field 8 of the cpu line is steal
+
+
+def process_tree() -> dict[int, list[str]]:
+    """This process and its descendants (the driver JVM, the Python
+    workers): pid -> the fields of /proc/<pid>/stat after the name."""
+    stat: dict[int, list[str]] = {}
+    kids: dict[int, list[int]] = {}
+    for d in os.listdir("/proc"):
+        if d.isdigit():
+            try:
+                with open(f"/proc/{d}/stat") as f:
+                    fields = f.read().rsplit(")", 1)[1].split()
+            except OSError:
+                continue
+            stat[int(d)] = fields
+            kids.setdefault(int(fields[1]), []).append(int(d))
+    out, todo = {}, [os.getpid()]
+    while todo:
+        p = todo.pop()
+        if p in stat:
+            out[p] = stat[p]
+        todo.extend(kids.get(p, []))
+    return out
+
+
+def tree_cpu_s() -> float:
+    """CPU seconds (user + system) of the process tree, reaped children included."""
+    ticks = sum(int(x) for fields in process_tree().values() for x in fields[11:15])
+    return ticks / os.sysconf("SC_CLK_TCK")
 
 
 def heap_size() -> str:
@@ -57,31 +86,28 @@ def heap_size() -> str:
     return f"{max(1, kb // (4 * 1024 * 1024))}g"  # a quarter of RAM
 
 
+def peak_rss_mb() -> float:
+    """Sum over the process tree of each process's peak resident set
+    (VmHWM): read once, so untraced runs pay nothing for it."""
+    kb = 0
+    for pid in process_tree():
+        try:
+            with open(f"/proc/{pid}/status") as f:
+                kb += next((int(ln.split()[1]) for ln in f if ln.startswith("VmHWM:")), 0)
+        except OSError:
+            pass
+    return kb / 1024.0
+
+
 class MemSampler(threading.Thread):
     """Peak proportional set size of this process and its descendants
-    (the driver JVM and the Python workers), sampled every 0.2 s."""
+    (the driver JVM and the Python workers), sampled every 0.2 s.
+    Traced runs only: reading smaps_rollup walks the JVM's page tables."""
 
     def __init__(self):
         super().__init__(daemon=True)
         self.peak_kb = 0
         self._halt = threading.Event()
-
-    def _tree(self) -> list[int]:
-        kids: dict[int, list[int]] = {}
-        for d in os.listdir("/proc"):
-            if d.isdigit():
-                try:
-                    with open(f"/proc/{d}/stat") as f:
-                        ppid = int(f.read().rsplit(")", 1)[1].split()[1])
-                except (OSError, IndexError, ValueError):
-                    continue
-                kids.setdefault(ppid, []).append(int(d))
-        out, todo = [], [os.getpid()]
-        while todo:
-            p = todo.pop()
-            out.append(p)
-            todo.extend(kids.get(p, []))
-        return out
 
     @staticmethod
     def _pss_kb(pid: int) -> int:
@@ -96,7 +122,7 @@ class MemSampler(threading.Thread):
 
     def run(self):
         while not self._halt.wait(0.2):
-            self.peak_kb = max(self.peak_kb, sum(self._pss_kb(p) for p in self._tree()))
+            self.peak_kb = max(self.peak_kb, sum(self._pss_kb(p) for p in process_tree()))
 
     def stop(self) -> float:
         self._halt.set()
@@ -106,7 +132,7 @@ class MemSampler(threading.Thread):
 
 # --- the run ---------------------------------------------------------------
 
-def run(workload: str, seed: int, seconds: float, trace: bool, size: str) -> dict:
+def run(workload: str, seed: int, trace: bool, size: str) -> dict:
     from openelevationservice_spark.operators.sample import pixel_index
     from openelevationservice_spark.plans.session import build_session
     from openelevationservice_spark.sources import fixtures as fx
@@ -118,11 +144,13 @@ def run(workload: str, seed: int, seconds: float, trace: bool, size: str) -> dic
     tmp_dir = os.path.join(OUT_DIR, "tmp", str(os.getpid()))
     log_dir = os.path.join(tmp_dir, "eventlog")
     os.makedirs(log_dir, exist_ok=True)
-    extra = ({"spark.eventLog.enabled": "true", "spark.eventLog.compress": "false",
-              "spark.eventLog.dir": "file://" + log_dir} if trace else None)
+    extra = {"spark.ui.showConsoleProgress": "false"}
+    if trace:
+        extra.update({"spark.eventLog.enabled": "true", "spark.eventLog.compress": "false",
+                      "spark.eventLog.dir": "file://" + log_dir})
     wl = WORKLOADS[workload](size, seed, tmp_dir)
     tracer = Tracer(enabled=trace)
-    spark, setups = None, []
+    spark, setups, rss_mb = None, [], None
     attempted = failed = 0
     try:
         t0 = time.perf_counter()
@@ -131,15 +159,17 @@ def run(workload: str, seed: int, seconds: float, trace: bool, size: str) -> dic
         session_s = time.perf_counter() - t0
         tracer.sc = spark.sparkContext
         for rep in range(SETUP_REPS):
-            wl.release()
+            wl.release()  # the previous repetition's world and pixel index
             t0 = time.perf_counter()
             with tracer.span("sources.world", op=f"setup#{rep}"):
                 images = fx.make_images_df(spark, wl.world).persist()
                 images.count()
+                wl.hold(images)
             t1 = time.perf_counter()
             with tracer.span("operators.sample.pixel_index", op=f"setup#{rep}"):
                 pix = pixel_index(images).persist()
                 pix.count()
+                wl.hold(pix)
             t2 = time.perf_counter()
             setups.append({"world_s": t1 - t0, "pixel_index_s": t2 - t1, "total_s": t2 - t0})
             say(f"setup {rep}: " + " ".join(f"{k}={v:.3f}" for k, v in setups[-1].items()))
@@ -150,9 +180,12 @@ def run(workload: str, seed: int, seconds: float, trace: bool, size: str) -> dic
         say(f"session_s={session_s:.3f} inputs_s={inputs_s:.3f}")
 
         def execute(op, label):
+            """Run one checked operation: its output rows, wall seconds,
+            CPU seconds of the process tree and CPU steal share, or None
+            if it raised or failed its check."""
             nonlocal attempted, failed
             attempted += 1
-            t0 = time.perf_counter()
+            c0, p0, t0 = _cpu_times(), tree_cpu_s(), time.perf_counter()
             try:
                 with tracer.span(f"op.{op.kind}", op=label, group=op.kind):
                     rows = int(op.run(tracer))
@@ -164,63 +197,58 @@ def run(workload: str, seed: int, seconds: float, trace: bool, size: str) -> dic
                 failed += 1
                 say(f"ERROR {label}:\n" + traceback.format_exc())
                 return None
-            return time.perf_counter() - t0, rows
+            wall = time.perf_counter() - t0
+            return {"rows": rows, "wall_s": wall, "cpu_s": tree_cpu_s() - p0,
+                    "steal": steal_share(c0, _cpu_times())}
 
-        # warm-up: one untimed cycle (checked), so the timed cycles do not
-        # measure first-run code generation and JIT compilation
-        t0 = time.perf_counter()
-        for j, op in enumerate(wl.cycle(-1)):
-            execute(op, f"warmup.{op.kind}.{j}")
-        warmup_s = time.perf_counter() - t0
-        say(f"warm-up cycle = {warmup_s:.3f} s (first run of each operation)")
-        # whole cycles only: at least one, and another only while it is due
-        # to end within --seconds at the mean cycle time so far
-        cycles, lat, i = [], {k: [] for k in wl.kinds}, 0
+        # one timed cycle, whatever --seconds says: each kind's operation
+        # once, one at a time, from the session's first query.  A run thus
+        # measures each query's first execution in a fresh session (code
+        # generation and JIT compilation included, as a batch job pays
+        # them), and a faster program does not change what is measured.
+        ops: dict[str, list[dict]] = {k: [] for k in wl.kinds}
         t_start = time.perf_counter()
-        while True:
-            rows, ok, ops = 0, True, wl.cycle(i)
-            for j, op in enumerate(ops):
-                res = execute(op, f"{op.kind}#{i}.{j}")
-                if res is None:
-                    ok = False
-                    continue
-                lat[op.kind].append(res[0])
-                rows += res[1]
-            i += 1
-            if ok:
-                cycles.append((sum(lat[op.kind][-1] for op in ops), rows))
-            if trace:  # outside the timed operations
-                for j, op in enumerate(wl.traced_extras(i - 1)):
-                    execute(op, f"{op.kind}#{i - 1}.{j}")
-            elapsed = time.perf_counter() - t_start
-            if elapsed * (i + 1) / i > seconds or failed * 2 > attempted:
-                break
+        for j, op in enumerate(wl.cycle(0)):
+            res = execute(op, f"{op.kind}#0.{j}")
+            if res is not None:
+                ops[op.kind].append(res)
         measured_s = time.perf_counter() - t_start
-        if trace:
+        if trace:  # outside the timed window
+            for j, op in enumerate(wl.traced_extras()):
+                execute(op, f"{op.kind}.{j}")
             wl.probe_kernels()
     finally:
         if spark is not None:
+            rss_mb = peak_rss_mb()  # before the Python workers stop
             wl.release()
             spark.stop()
 
     result = {
         "workload": workload, "seed": seed, "size": size, "trace": trace,
-        "session_s": session_s, "inputs_s": inputs_s, "setups": setups, "warmup_s": warmup_s,
-        "cycles": cycles, "measured_s": measured_s,
-        "latency_s": lat, "attempted": attempted, "failed": failed,
-        "digests": wl.digests,
+        "session_s": session_s, "inputs_s": inputs_s, "setups": setups,
+        "measured_s": measured_s, "ops": ops,
+        "attempted": attempted, "failed": failed, "digests": wl.digests,
+        "peak_rss_mb": rss_mb,
     }
+    med = statistics.median
+    per_kind = {k: {"n": len(v), "p50_ms": med(o["wall_s"] for o in v) * 1e3,
+                    "cpu_s": med(o["cpu_s"] for o in v), "rows": v[-1]["rows"],
+                    "unit": wl.units.get(k, "rows")}
+                for k, v in ops.items() if v}
+    for v in per_kind.values():
+        v["per_s"] = v["rows"] / v["p50_ms"] * 1e3
     e2e = {}
-    if cycles and all(lat.values()):
+    if len(per_kind) == len(wl.kinds):
+        kinds = per_kind.values()
         e2e = {
-            "setup_s": statistics.median(s["total_s"] for s in setups),
-            "rows_per_s": statistics.median(r / w for w, r in cycles),
-            "kind_geomean_ms": statistics.geometric_mean(
-                statistics.median(v) for v in lat.values()) * 1e3,
+            "setup_s": med(s["total_s"] for s in setups),
+            # one cycle's output rows over the sum of the kinds' times
+            "rows_per_s": sum(v["rows"] for v in kinds) / sum(v["p50_ms"] for v in kinds) * 1e3,
+            "kind_geomean_ms": statistics.geometric_mean(v["p50_ms"] for v in kinds),
+            "cpu_s_per_cycle": sum(v["cpu_s"] for v in kinds),
         }
     result["end_to_end"] = e2e
-    result["per_kind"] = {k: {"n": len(v), "p50_ms": statistics.median(v) * 1e3}
-                          for k, v in lat.items() if v}
+    result["per_kind"] = per_kind
     if trace:
         result["spans"] = tracer.spans
         result["layers"] = _layers(wl, tracer, session_s, inputs_s, setups, engine_by_group(
@@ -246,8 +274,7 @@ def _layers(wl, tracer, session_s, inputs_s, setups, engine, selfs) -> dict:
             check_s[s["parent"]] = check_s.get(s["parent"], 0.0) + s["end"] - s["start"]
     for kind in wl.kinds:
         calls = [s["end"] - s["start"] - check_s.get(s["id"], 0.0)
-                 for s in tracer.spans
-                 if s["name"] == f"op.{kind}" and not s["op"].startswith("warmup")]
+                 for s in tracer.spans if s["name"] == f"op.{kind}"]
         if calls:
             out[f"{kind}.call_s"] = med(calls)
     for group, rec in engine.items():
@@ -264,7 +291,7 @@ def _layers(wl, tracer, session_s, inputs_s, setups, engine, selfs) -> dict:
         if f"api.operator_ms.{kind}" in out:
             out[f"api.overhead_ms.{kind}"] = (out[f"api.request_ms.{kind}"]
                                               - out[f"api.operator_ms.{kind}"])
-    # engine totals per operation of the workload's own kinds (warm-up included)
+    # engine totals per operation of the workload's own kinds
     n_ops = max(sum(1 for s in tracer.spans if s["group"] in wl.kinds), 1)
 
     def per_op(m, scale=1.0):
@@ -332,29 +359,38 @@ def main(argv=None) -> int:
         f"java={java[0] if java else '?'}")
     before = machine_state()
     say(f"before: loadavg={' '.join(before['loadavg'])}")
-    sampler = MemSampler()
-    sampler.start()
+    sampler = MemSampler() if args.trace else None
+    if sampler:
+        sampler.start()
     try:
-        res = run(args.workload, args.seed, args.seconds, bool(args.trace), args.size)
+        res = run(args.workload, args.seed, bool(args.trace), args.size)
     except Exception:
-        sampler.stop()
         traceback.print_exc()
         return 1
     finally:
+        peak_mb = sampler.stop() if sampler else None
         _stop_gateway()
-    peak_mb = sampler.stop()
     after = machine_state()
-    say(f"after: loadavg={' '.join(after['loadavg'])} steal={steal_share(before, after):.4f}")
+    say(f"after: loadavg={' '.join(after['loadavg'])} steal={steal_share(before['cpu'], after['cpu']):.4f}")
     res["machine"] = {"before": before, "after": after, "nproc": os.cpu_count(),
                       "heap": os.environ["OES_DRIVER_MEM"]}
 
     e2e = res["end_to_end"]
-    res["peak_pss_mb"] = peak_mb
-    say(f"peak memory (PSS of the driver, its JVM and Python workers) = {peak_mb:.1f} MB")
+    say(f"peak_rss_mb = {res['peak_rss_mb']:.1f} MB (peak RSS of the driver, its JVM "
+        "and Python workers, summed per process)")
+    if sampler:
+        res["peak_pss_mb"] = peak_mb
+        say(f"peak memory (sampled PSS of the same processes) = {peak_mb:.1f} MB")
     units = {m["name"]: m["unit"] for m in spec["end_to_end"] + spec["per_layer"]}
     for kind, v in res["per_kind"].items():
-        say(f"{kind}: n={v['n']} p50={v['p50_ms']:.1f} ms")
-    say(f"failed_frac={res['failed'] / max(res['attempted'], 1):.4f} "
+        say(f"{kind}_p50_ms = {v['p50_ms']:.1f} ms (n={v['n']}); "
+            f"{kind}_{v['unit']}_per_s = {v['per_s']:.6g} {v['unit']}/s; "
+            f"{kind}_cpu_s = {v['cpu_s']:.3f} s")
+    timed = [o for v in res["ops"].values() for o in v]
+    if timed:
+        say("CPU steal over the timed operations = "
+            f"{sum(o['steal'] * o['wall_s'] for o in timed) / sum(o['wall_s'] for o in timed):.4f}")
+    say(f"failed_frac = {res['failed'] / max(res['attempted'], 1):.4f} "
         f"({res['failed']} of {res['attempted']} operations)")
     for name, v in e2e.items():
         say(f"{name} = {v:.6g} {units.get(name, '')}")
@@ -366,14 +402,14 @@ def main(argv=None) -> int:
         for name in sorted(layers):
             say(f"layer {name} = {layers[name]:.6g}")
         untraced = os.path.join(OUT_DIR, f"{tag}-trace0.json")
-        if os.path.exists(untraced) and res["cycles"]:
+        if os.path.exists(untraced) and res["per_kind"]:
             with open(untraced) as f:
                 base = json.load(f)
-            if base.get("cycles"):
-                mean = lambda cs: sum(w for w, _ in cs) / len(cs)  # noqa: E731
-                res["tracing_overhead_s_per_cycle"] = mean(res["cycles"]) - mean(base["cycles"])
-                say(f"tracing overhead = {res['tracing_overhead_s_per_cycle']:.4f} s per cycle "
-                    f"(traced minus untraced run, same seed)")
+            if base.get("per_kind"):
+                cycle = lambda r: sum(v["p50_ms"] for v in r["per_kind"].values())  # noqa: E731
+                res["tracing_overhead_ms_per_cycle"] = cycle(res) - cycle(base)
+                say(f"tracing overhead = {res['tracing_overhead_ms_per_cycle']:.1f} ms per cycle "
+                    f"(sum of the kinds' times, traced minus untraced run, same seed)")
     values = res["layers"] if args.trace else e2e
     wanted = spec["per_layer"] if args.trace else spec["end_to_end"]
     metrics = {m["name"]: {"value": values[m["name"]], "unit": m["unit"]}

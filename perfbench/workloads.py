@@ -83,12 +83,13 @@ def _dir_bytes(path: str) -> int:
 class Workload:
     name = ""
     kinds: tuple[str, ...] = ()
+    units: dict[str, str] = {}  # what a kind's output counts, if not rows
 
     def __init__(self, size: str, seed: int, tmp_dir: str):
-        self.p = inp.SIZES[size]
+        self.p = inp.SIZES[size][self.name]
         self.seed = seed
         self.tmp_dir = tmp_dir
-        self.world = inp.world_for(size)
+        self.world = inp.world_for(self.p["world"])
         self.grid = inp.Grid(self.world)
         self.digests: dict[str, str] = {}
         self.layer: dict[str, list] = {}   # per-layer samples, trace runs only
@@ -106,7 +107,6 @@ class Workload:
 
     def build_inputs(self, spark, images, pix) -> None:
         self.spark, self.images, self.pix = spark, images, pix
-        self._cached = [images, pix]
         self.parts = spark.sparkContext.defaultParallelism * 2
         sizes = images.select("image_id", F.length("bytes")).collect()
         self.tile_size = {r[0]: r[1] for r in sizes}
@@ -132,11 +132,15 @@ class Workload:
         self.touched_bytes[kind] = (self.touched_bytes.get(kind, 0)
                                     + sum(self.tile_size[t] for t in tiles))
 
+    def hold(self, df):
+        """Keep ``df`` persisted until the next ``release``."""
+        self._cached.append(df)
+        return df
+
     def _persist(self, df):
         df = df.persist()
         df.count()
-        self._cached.append(df)
-        return df
+        return self.hold(df)
 
     def release(self) -> None:
         for df in self._cached:
@@ -147,8 +151,8 @@ class Workload:
     def cycle(self, i: int) -> list[Op]:
         raise NotImplementedError
 
-    def traced_extras(self, i: int) -> list[Op]:
-        """Operations run after timed cycle ``i`` in traced runs only."""
+    def traced_extras(self) -> list[Op]:
+        """Operations run after the timed window in traced runs only."""
         return []
 
     def probe_kernels(self) -> None:
@@ -181,8 +185,7 @@ class Replay(Workload):
     def _build(self):
         g, p = self.grid, self.p
         self.n_points = p["points"]
-        self.pts = self._persist(
-            inp.points_df(self.spark, g, p["points"], self.seed).repartition(self.parts))
+        self.pts = inp.points_df(self.spark, g, p["points"], self.seed, self.parts)
         self.lines = self._persist(
             self.spark.createDataFrame(self.lines_pdf).repartition(self.parts))
         self.polys = self._persist(inp.rects_df(self.spark, self.rects, g))
@@ -193,8 +196,8 @@ class Replay(Workload):
         return [Op("point", self.point), Op("line", self.line),
                 Op("polygon", self.polygon), Op("dissolve", self.dissolve)]
 
-    def traced_extras(self, i):
-        return self.api.ops(i)
+    def traced_extras(self):
+        return [op for i in range(ApiRequests.ROUNDS) for op in self.api.ops(i)]
 
     def point(self, t):
         g = self.grid
@@ -313,6 +316,7 @@ class Prepare(Workload):
 
     name = "prepare"
     kinds = ("ingest", "dedup", "ann", "curate")
+    units = {"ingest": "tiles", "dedup": "docs", "ann": "vectors", "curate": "docs"}
 
     def _generate(self, rng):
         p, g = self.p, self.grid
@@ -335,7 +339,7 @@ class Prepare(Workload):
         big = (self.images
                .withColumn("rep", F.explode(F.sequence(F.lit(0), F.lit(reps - 1))))
                .withColumn("image_id", F.concat_ws("#", "image_id", "rep")).drop("rep"))
-        self.imgs_big = self._persist(big.repartition(self.parts))
+        self.imgs_big = big.repartition(self.parts)  # replicated inside each ingest query
         self.docs = self._persist(
             self.spark.createDataFrame(self.docs_pdf).repartition(self.parts))
         emb = self.spark.createDataFrame(self.emb_pdf,
@@ -376,22 +380,13 @@ class Prepare(Workload):
             shutil.rmtree(store.root, ignore_errors=True)
         return r[0] + m["total_rows"]
 
+    def traced_extras(self):
+        return [Op("dedup.split", self.dedup_split)]
+
     def dedup(self, t):
-        if t.enabled:  # the two halves of dedup_clusters, timed apart
-            with t.span("operators.dedup.lsh_pairs") as s1:
-                pairs = dedup.lsh_candidate_pairs(self.docs, n_hashes=8, bands=4).persist()
-                n_pairs = pairs.count()
-            with t.span("operators.dedup.components") as s2:
-                rows = [tuple(r) for r in dedup.connected_components(
-                    pairs, self.docs.select("doc_id"), "doc_id",
-                    with_sizes=True, ids_unique=True).collect()]
-            pairs.unpersist()
-            self.note("dedup.lsh_pairs_s", s1["end"] - s1["start"])
-            self.note("dedup.components_s", s2["end"] - s2["start"])
-            self.note("dedup.candidate_pairs", n_pairs)
-            self.note("dedup.candidate_pairs_per_doc", n_pairs / self.p["docs"])
-        else:
+        with t.span("operators.dedup"):
             df = dedup.dedup_clusters(self.docs, n_hashes=8, bands=4)
+        with t.span("engine.action"):
             rows = [tuple(r) for r in df.collect()]
         with t.span("bench.check"):
             _check(len(rows) == self.p["docs"], f"dedup rows {len(rows)} != {self.p['docs']}")
@@ -405,6 +400,23 @@ class Prepare(Workload):
                    "dedup cluster sizes disagree with the assignment")
             self.same_digest("dedup", rows)
         return len(rows)
+
+    def dedup_split(self, t):
+        """The two halves of ``dedup_clusters`` timed apart (traced runs,
+        after the timed cycle), to locate the minhash tail."""
+        with t.span("operators.dedup.lsh_pairs") as s1:
+            pairs = dedup.lsh_candidate_pairs(self.docs, n_hashes=8, bands=4).persist()
+            n_pairs = pairs.count()
+        with t.span("operators.dedup.components") as s2:
+            n = dedup.connected_components(pairs, self.docs.select("doc_id"), "doc_id",
+                                           with_sizes=True, ids_unique=True).count()
+        pairs.unpersist()
+        _check(n == self.p["docs"], f"dedup components rows {n} != {self.p['docs']}")
+        self.note("dedup.lsh_pairs_s", s1["end"] - s1["start"])
+        self.note("dedup.components_s", s2["end"] - s2["start"])
+        self.note("dedup.candidate_pairs", n_pairs)
+        self.note("dedup.candidate_pairs_per_doc", n_pairs / self.p["docs"])
+        return n
 
     def ann(self, t):
         k = self.p["topk"]
@@ -454,12 +466,13 @@ class Prepare(Workload):
 class ApiRequests:
     """ElevationService requests, one of each kind, sent one at a time.
 
-    Replay's traced runs send one such block after every timed cycle
-    (outside the timed operations) to measure the API layer: each
-    request is followed by the same operator plus collect on the same
-    1-row input, so the layer's own overhead can be separated."""
+    Replay's traced runs send ``ROUNDS`` such blocks after the timed
+    window to measure the API layer: each request is followed by the
+    same operator plus collect on the same 1-row input, so the layer's
+    own overhead can be separated."""
 
     KINDS = ("point", "line", "polygon", "colorpolygon")
+    ROUNDS = 1
     LINE_DX, LINE_DY, SIDE = 40, 30, 24
 
     def __init__(self, wl: Workload):
