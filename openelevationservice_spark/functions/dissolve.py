@@ -107,6 +107,12 @@ def _trace_loops_keys(ck: np.ndarray, x0: int, y0: int):
         return [], []
     cy = ck >> _KSH
     cx = ck & ((1 << _KSH) - 1)
+    # edge keys pack dir << 60 | vertex y << 32 | vertex x and vertices
+    # reach cy + 1 / cx + 1: y must stay below 2^28, x below 2^32
+    if int(cy[-1]) + 1 >= 1 << 28 or int(cx.max()) + 1 >= 1 << _KSH:
+        raise AssertionError(
+            "dissolve: cell bbox span outside the 2^28 x 2^32 edge-key bound"
+        )
     nbr_delta = (-(1 << _KSH), 1, (1 << _KSH), -1)   # top/right/bottom/left
     # one presence probe for all 4 neighbor directions
     nk = np.concatenate([ck + d for d in nbr_delta])
@@ -173,11 +179,14 @@ def _trace_loops_keys(ck: np.ndarray, x0: int, y0: int):
 
 
 #: field widths of the batched cell key: band << 46 | ly << 23 | lx.
-#: Local (bbox-shifted) coords are far inside 23 bits; band index is the
-#: Arrow-batch row index (< 2^17 rows per batch by Arrow batch sizing).
+#: Local (bbox-shifted) vertex coords must fit 23 bits (asserted in
+#: batch_invariants); the band index gets the 16 bits between bit 46 and
+#: the 2-bit direction field of the uint64 edge key, so one call takes
+#: at most MAX_BATCH_BANDS bands (callers slice larger Arrow batches).
 _BSH_BAND = 46
 _BSH_Y = 23
 _BMASK = (1 << _BSH_Y) - 1
+MAX_BATCH_BANDS = 1 << 16
 
 
 def batch_invariants(band: np.ndarray, gx: np.ndarray, gy: np.ndarray,
@@ -207,9 +216,9 @@ def batch_invariants(band: np.ndarray, gx: np.ndarray, gy: np.ndarray,
     geometry.  Zero-area degenerate cycles count as neither, exactly
     like the ring path.
     """
-    if n_bands > (1 << 16):
+    if n_bands > MAX_BATCH_BANDS:
         # band index must fit the 16-bit field of the packed edge key;
-        # Arrow batches cap rows at 65536, so real callers never hit this
+        # callers slice batches to MAX_BATCH_BANDS (color.py)
         raise ValueError(f"batch_invariants: {n_bands} bands > 2^16 per batch")
     n_cells = len(gx)
     if n_cells == 0:
@@ -223,6 +232,12 @@ def batch_invariants(band: np.ndarray, gx: np.ndarray, gy: np.ndarray,
     y0b = np.minimum.reduceat(gy, seg[:-1])
     lx = gx - x0b[band]
     ly = gy - y0b[band]
+    # boundary vertices reach lx + 1 / ly + 1; a local span past the
+    # 23-bit field would carry into the next field and corrupt keys
+    if int(lx.max()) >= _BMASK or int(ly.max()) >= _BMASK:
+        raise AssertionError(
+            "batch_invariants: band bbox span outside the 23-bit key field"
+        )
     ck = np.unique((band << _BSH_BAND) | (ly << _BSH_Y) | lx)
     cb = ck >> _BSH_BAND
     cy = (ck >> _BSH_Y) & _BMASK

@@ -27,12 +27,12 @@ import pandas as pd
 
 from .api import ApiError, ElevationService
 from .operators.color import polygon_color_features
-from .operators.polygon import polygon_pixel_runs, runs_stats
+from .operators.polygon import blob_stats, polygon_pixel_run_blobs
 from .plans.cache import lease, release
 
 #: per-RPC lease-slot counter: grpc_serve runs a thread pool, and a
 #: single shared slot would let a concurrent AreaRangesElevation RPC's
-#: lease() unpersist the in-flight RPC's pixel dump between its stats
+#: lease() unpersist the in-flight RPC's blob table between its stats
 #: collect and the dissolve — correct results, cache benefit silently
 #: lost (round-4 ADVICE).  itertools.count() is atomic under the GIL.
 _AREA_RPC_SEQ = itertools.count()
@@ -136,27 +136,27 @@ class OpenElevationServicer:
                           "ring": [[{"lon": x, "lat": y} for x, y in ring]]}),
             schema="poly_id long, ring array<struct<lon:double,lat:double>>",
         )
-        # ONE rasterization per RPC: the scanline-run dump is leased
+        # ONE rasterization per RPC: the packed run-blob table is leased
         # (persisted) so the stats action materializes it and the
         # dissolve action reads the cache — the reference likewise
         # fetches pixels once and derives both from the list
-        # (querybuilder.py:77-88).  Runs, not exploded pixels, are the
-        # shared unit (the r5 runs-resident dissolve shape).  The slot
-        # is per-call (and released at RPC end): concurrent area RPCs
-        # from grpc_serve's thread pool must not evict each other's
-        # in-flight cache.
+        # (querybuilder.py:77-88).  The blob table is the dissolve's own
+        # input, and its scalar per-pair columns give the stats without
+        # unpacking.  The slot is per-call (and released at RPC end):
+        # concurrent area RPCs from grpc_serve's thread pool must not
+        # evict each other's in-flight cache.
         slot = f"grpc_area_pixels:{next(_AREA_RPC_SEQ)}"
-        runs = polygon_pixel_runs(polys, svc.images_df, spread=False)
-        lease(slot, runs)
+        blobs = polygon_pixel_run_blobs(polys, svc.images_df, spread=False)
+        lease(slot, blobs)
         try:
-            stats = runs_stats(runs).collect()
+            stats = blob_stats(blobs).collect()
             if not stats:
                 raise GrpcAbort(
                     "INTERNAL",
                     "The requested geometry is outside the bounds of srtm",
                 )
             feats = polygon_color_features(
-                polys, svc.images_df, spread=False, runs_df=runs
+                polys, svc.images_df, spread=False, blobs_df=blobs
             ).toPandas()
         finally:
             release(slot)

@@ -10,17 +10,22 @@ polygons, then **client-side** min/max/avg, 23-band bucketing
 
 and a shapely ``unary_union`` per band.  At continental polygons that
 pixel list explodes driver memory (SURVEY.md §3.3) — here the whole
-pipeline stays distributed AND runs-resident (r5): scanline runs →
-stats off the run arrays (G1, JVM array_min/array_max — no pixel
-explode) → vectorized band-split kernel → packed band-subruns →
-hash-repartition by **(poly_id, height_base)** (bands dissolve
-independently, exactly as the reference unions per band — so the
-largest polygon's bands spread across tasks) → one ``array<long>``
-subrun row per band (co-partitioned ``collect_list``, see
-:func:`_banded_subruns`) → exact grid dissolve kernel (G3) over each
-band row.  Only the final FeatureCollection is collected.  The
-exploded-pixel shape survives as the asserted parity twin
-(:func:`_banded_cells`, ``cells_shape="pixels"`` / ``pixels_df=``).
+pipeline stays distributed, and pixel values never become JVM rows:
+
+    rasterize → one packed run blob per (polygon, tile) pair
+                (operators/polygon.py, scalar min/max/sum/count beside it)
+              → per-polygon stats off the scalar columns (G1, blob_stats)
+              → vectorized band-split kernel → packed band-subruns,
+                partially aggregated per (poly_id, height_base) map-side
+              → hash exchange on (poly_id, height_base) → one row per band
+              → exact grid dissolve kernel (G3) per band
+
+Bands dissolve independently, exactly as the reference unions per band,
+so the largest polygon's bands spread across tasks.  Only the final
+FeatureCollection is collected.  This is the one physical shape of both
+:func:`polygon_color_features` and :func:`polygon_color_invariants`;
+``index_strategy="shuffle"`` swaps only the polygon × tile join, for
+polygon batches past the broadcast threshold.
 """
 
 from __future__ import annotations
@@ -33,15 +38,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..constants import NUM_RANGES, PX, WORLD_X0, WORLD_Y0
-from ..functions.dissolve import dissolve_pixels_rings, quad_counts
+from ..functions.dissolve import dissolve_pixels_rings
 from ..plans.cache import lease
-from .polygon import (polygon_pixel_run_blobs, polygon_pixel_runs,
-                      polygon_pixels, runs_stats)
+from .polygon import blob_stats, polygon_pixel_run_blobs
 
 
-def polygon_stats(pixels_df: DataFrame) -> DataFrame:
+def polygon_stats(pixels: DataFrame) -> DataFrame:
     """min/max/avg per polygon (reference ``querybuilder.py:84-88``)."""
-    return pixels_df.groupBy("poly_id").agg(
+    return pixels.groupBy("poly_id").agg(
         F.min("z").alias("min_z"),
         F.max("z").alias("max_z"),
         F.avg("z").alias("avg_z"),
@@ -49,10 +53,10 @@ def polygon_stats(pixels_df: DataFrame) -> DataFrame:
     )
 
 
-def with_height_base(pixels_df: DataFrame, stats_df: DataFrame,
+def with_height_base(pixels: DataFrame, stats_df: DataFrame,
                      num_ranges: int = NUM_RANGES) -> DataFrame:
     """Exact reference band arithmetic as JVM columns (G2)."""
-    j = pixels_df.join(F.broadcast(stats_df.select("poly_id", "min_z", "max_z")), "poly_id")
+    j = pixels.join(F.broadcast(stats_df.select("poly_id", "min_z", "max_z")), "poly_id")
     range_div = (F.col("max_z") - F.col("min_z") + F.lit(1)) / F.lit(float(num_ranges))
     color_range = F.floor((F.col("z") - F.col("min_z")) / range_div)
     height_base = F.ceil(color_range * range_div + F.col("min_z"))
@@ -107,46 +111,6 @@ def _dissolve_partitions(df: DataFrame) -> int:
     return df.sparkSession.sparkContext.defaultParallelism * 2
 
 
-#: gx/gy pack base for the band-cell transfer (gxy = gx * 2^32 + gy);
-#: a global pixel grid at SRTM-like resolution is ~10^6 cells per axis,
-#: far inside the 32-bit halves.
-_GXY = 1 << 32
-
-
-def _banded_cells(pixels: DataFrame, num_ranges: int) -> DataFrame:
-    """One row per (poly_id, height_base): the band's cells as ONE packed
-    ``array<long>`` column.
-
-    This is the operator's Arrow-boundary diet (round-5 decomposition,
-    BENCH/SCALE.md): shipping the 9.9M banded pixel rows into the python
-    kernel as 4 scalar columns was +2.75 s at local[32] — ~35 % of the
-    query — while the kernel's own compute is noise (~0.3 s).  Packing
-    (gx, gy) into one long and gathering each band with a co-partitioned
-    ``collect_list`` cuts per-value Arrow writes 4× and row overhead
-    ~430× (one row per band), and replaces the sortWithinPartitions +
-    python-side group streaming entirely; the agg adds no JVM cost (the
-    `agg_jvm` variant times identical to the former sort shape).
-
-    The explicit ``repartition`` count is load-bearing (AQE straggler
-    tail otherwise — see the partition-count plan test); ``groupBy`` on
-    the same keys reuses that exchange, so the agg is partial-free but
-    exchange-free too.  Peak task memory is one band's cell array —
-    the same bound as the python kernel's dense-grid materialization,
-    which has always been the operator's per-band bound (the reference
-    dissolves a bbox request's bands driver-side; continental single
-    bands need a tiled dissolve in ANY shape).
-    """
-    stats = polygon_stats(pixels)
-    banded = with_height_base(pixels, stats, num_ranges)
-    gxy = (F.col("gx").cast("long") * F.lit(_GXY) + F.col("gy")).alias("gxy")
-    return (
-        banded.select("poly_id", "height_base", gxy)
-        .repartition(_dissolve_partitions(banded), "poly_id", "height_base")
-        .groupBy("poly_id", "height_base")
-        .agg(F.collect_list("gxy").alias("cells"))
-    )
-
-
 #: subrun packing: one long per band-subrun, gy<<40 | gx0<<16 | len.
 #: gx gets 24 bits (16.7M cells); gy gets 23 — bits 40..62 — so the
 #: packed value stays inside SIGNED int64 (a 24-bit gy would reach the
@@ -173,50 +137,6 @@ SUBRUN_SCHEMA = T.StructType(
         T.StructField("subs", T.BinaryType()),
     ]
 )
-
-
-def _band_subrun_kernel(num_ranges: int):
-    """Vectorized band-split of scanline runs → packed band-subruns.
-
-    Input rows: (poly_id, gy, gx0, zs, min_z, max_z) — the pixel-run
-    table joined with the broadcast per-polygon stats.  The kernel
-    flattens every run in the batch into one z vector, applies the
-    exact reference band arithmetic (``querybuilder.py:56-102``; the
-    same IEEE-double expression as :func:`with_height_base`, so both
-    shapes bucket identically), and splits runs at band-change
-    boundaries — pure numpy, no per-run python loop.  Terrain is
-    locally smooth, so subrun count ~ run count, not pixel count:
-    the downstream exchange ships ~run-many longs instead of
-    pixel-many rows (the measured r5 transfer term).
-
-    The packed subruns are PARTIALLY AGGREGATED before they leave the
-    kernel (guide §2.3 "aggregate before you shuffle"): one output row
-    per (poly_id, height_base) group *of the batch*, carrying that
-    group's subruns as one ``array<long>`` — the r6 measurement showed
-    the synthetic z field band-splits almost every step (7.8M subruns
-    from 9.9M pixels), so per-subrun rows re-created the per-pixel
-    Arrow/exchange row volume the runs diet was meant to remove.  The
-    final gather flattens the partials (same multiset of packed longs;
-    every consumer rasterizes, so order never matters)."""
-
-    def kernel(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            zs_list = pdf["zs"].to_numpy()
-            lens = np.fromiter((len(v) for v in zs_list), np.int64,
-                               count=len(zs_list))
-            if int(lens.sum()) == 0:
-                continue
-            z = np.concatenate([np.asarray(v, dtype=np.int64) for v in zs_list])
-            out = _subrun_partial_frame(
-                pdf["poly_id"].to_numpy(), pdf["gy"].to_numpy(),
-                pdf["gx0"].to_numpy(), lens, z,
-                pdf["min_z"].to_numpy(), pdf["max_z"].to_numpy(), num_ranges)
-            if out is not None:
-                yield out
-
-    return kernel
 
 
 def _subrun_partial_frame(pid_run, gy_run, gx0_run, lens, z,
@@ -269,12 +189,26 @@ def _subrun_partial_frame(pid_run, gy_run, gx0_run, lens, z,
 
 
 def _band_subrun_kernel_blob(num_ranges: int):
-    """Blob twin of :func:`_band_subrun_kernel`: input rows are
-    (poly_id, blob, min_z, max_z) from
+    """Vectorized band-split of packed run blobs → packed band-subruns.
+
+    Input rows: (poly_id, blob, min_z, max_z) from
     :func:`~..operators.polygon.polygon_pixel_run_blobs` joined with the
-    broadcast stats.  Unpacks every pair's runs with ``np.frombuffer``
-    views (z never existed as a JVM array) and band-splits the whole
-    batch in one vectorized pass."""
+    broadcast per-polygon stats.  Unpacks every pair's runs with
+    ``np.frombuffer`` views (z never exists as a JVM array), applies the
+    exact reference band arithmetic (``querybuilder.py:56-102``; the
+    same IEEE-double expression as :func:`with_height_base`) and splits
+    runs at band-change boundaries in one vectorized pass per batch.
+    Terrain is locally smooth, so subrun count ~ run count, not pixel
+    count.
+
+    The packed subruns are PARTIALLY AGGREGATED before they leave the
+    kernel (guide §2.3 "aggregate before you shuffle"): one output row
+    per (poly_id, height_base) group *of the batch*, carrying that
+    group's subruns as one binary buffer — per-subrun rows would
+    re-create the per-pixel row volume on the exchange (the synthetic
+    z field band-splits almost every step).  The final gather
+    concatenates the partials (same multiset of packed longs; every
+    consumer rasterizes, so order never matters)."""
 
     def kernel(batches):
         for pdf in batches:
@@ -309,24 +243,6 @@ def _band_subrun_kernel_blob(num_ranges: int):
     return kernel
 
 
-def _banded_subruns(runs: DataFrame, num_ranges: int) -> DataFrame:
-    """One row per (poly_id, height_base): the band's packed subruns.
-
-    The runs-resident successor of :func:`_banded_cells` (kept as the
-    parity twin): the persisted/aggregated/shuffled unit is the
-    scanline run, never the exploded pixel row.  vs the pixel shape
-    this removes the 9.9M-row posexplode+persist, the pixel-row stats
-    scan (JVM array_min/array_max over runs instead), the 9.9M-long
-    exchange (ships ~run-many packed subruns) and the 9.9M-value
-    collect_list — the kernel re-expands cells from subruns with one
-    np.repeat.  Results are asserted frame-identical to the pixel
-    shape in tests/test_polygon.py."""
-    stats = runs_stats(runs).select("poly_id", "min_z", "max_z")
-    j = runs.join(F.broadcast(stats), "poly_id")
-    subs = j.mapInPandas(_band_subrun_kernel(num_ranges), SUBRUN_SCHEMA)
-    return _gather_bands(subs)
-
-
 def _gather_bands(subs: DataFrame) -> DataFrame:
     """(poly, band)-exchange + gather of the map-side subrun partials.
     The gathered column is ``array<binary>`` (one packed buffer per
@@ -340,15 +256,12 @@ def _gather_bands(subs: DataFrame) -> DataFrame:
 
 
 def _banded_subruns_blob(blobs: DataFrame, num_ranges: int) -> DataFrame:
-    """Blob-resident successor of :func:`_banded_subruns` (the r6
-    default): stats aggregate over the blob table's pruned scalar
-    min/max columns (no array re-fold, no array cache scan), broadcast
-    back, and the band-split unpacks the packed runs in Python —
-    z values cross the JVM boundary exactly twice, both times as one
-    binary buffer memcpy."""
-    stats = (blobs.groupBy("poly_id")
-             .agg(F.min("run_min").alias("min_z"),
-                  F.max("run_max").alias("max_z")))
+    """One row per (poly_id, height_base): the band's packed subruns.
+    Stats aggregate over the blob table's pruned scalar min/max columns
+    (no blob unpacking), broadcast back, and the band-split unpacks the
+    packed runs in Python — z values cross the JVM boundary exactly
+    twice, both times as one binary buffer memcpy."""
+    stats = blob_stats(blobs).select("poly_id", "min_z", "max_z")
     j = (blobs.join(F.broadcast(stats), "poly_id")
          .select("poly_id", "blob", "min_z", "max_z"))
     subs = j.mapInPandas(_band_subrun_kernel_blob(num_ranges), SUBRUN_SCHEMA)
@@ -398,25 +311,6 @@ def _iter_subrun_groups(batches):
             yield int(pid), int(hb), gx[seg[b]:seg[b + 1]], gy[seg[b]:seg[b + 1]]
 
 
-def _iter_cell_groups(batches):
-    """(poly_id, height_base, gx, gy) per band row.  collect_list order
-    is nondeterministic, but every kernel consumer rasterizes the cells
-    into an occupancy grid first — order-invariant by construction."""
-    for pdf in batches:
-        for pid, hb, cells in zip(pdf["poly_id"].to_numpy(),
-                                  pdf["height_base"].to_numpy(),
-                                  pdf["cells"].to_numpy()):
-            arr = np.asarray(cells, dtype=np.int64)
-            yield int(pid), int(hb), arr >> 32, arr & (_GXY - 1)
-
-
-def _dissolve_partition(batches):
-    rows = []
-    for pid, hb, gx, gy in _iter_cell_groups(batches):
-        rows.extend(_dissolve_group(pid, hb, gx, gy))
-    yield pd.DataFrame(rows, columns=[f.name for f in FEATURE_SCHEMA.fields])
-
-
 def _dissolve_partition_subs(batches):
     rows = []
     for pid, hb, gx, gy in _iter_subrun_groups(batches):
@@ -428,32 +322,24 @@ def polygon_color_features(polygons_df: DataFrame, images_df: DataFrame,
                            num_ranges: int = NUM_RANGES,
                            index_strategy: str = "broadcast",
                            spread: bool = True,
-                           pixels_df: DataFrame | None = None,
-                           runs_df: DataFrame | None = None) -> DataFrame:
+                           blobs_df: DataFrame | None = None) -> DataFrame:
     """Distributed equivalent of ``group_and_union_geometries``.
 
     Returns one row per dissolved feature:
     (poly_id, height_base, feature_idx, n_rings, area_px, rings).
 
-    Default shape is runs-resident (see :func:`_banded_subruns`); pass
-    ``runs_df`` (an already-built — typically already-persisted —
-    ``polygon_pixel_runs`` result for the same polygons) to reuse one
-    rasterization across stats and dissolve; the caller then owns its
-    cache lifecycle and this operator takes no lease of its own.
-    ``pixels_df`` selects the pixel-shape parity twin the same way.
+    Pass ``blobs_df`` (an already-built — typically already-persisted —
+    ``polygon_pixel_run_blobs`` result for the same polygons) to reuse
+    one rasterization across :func:`~.polygon.blob_stats` and the
+    dissolve; the caller then owns its cache lifecycle and this
+    operator takes no lease of its own.
     """
-    if pixels_df is not None:
-        return _banded_cells(pixels_df, num_ranges).mapInPandas(
-            _dissolve_partition, schema=FEATURE_SCHEMA
-        )
-    if runs_df is not None:
-        return _banded_subruns(runs_df, num_ranges).mapInPandas(
-            _dissolve_partition_subs, schema=FEATURE_SCHEMA
-        )
-    blobs = polygon_pixel_run_blobs(polygons_df, images_df,
-                                    index_strategy=index_strategy,
-                                    spread=spread)
-    lease("color_features", blobs)
+    blobs = blobs_df
+    if blobs is None:
+        blobs = polygon_pixel_run_blobs(polygons_df, images_df,
+                                        index_strategy=index_strategy,
+                                        spread=spread)
+        lease("color_features", blobs)
     return _banded_subruns_blob(blobs, num_ranges).mapInPandas(
         _dissolve_partition_subs, schema=FEATURE_SCHEMA
     )
@@ -513,12 +399,6 @@ def _invariants_group(poly_id: int, hb: int, gx: np.ndarray,
     }
 
 
-def _invariants_partition(batches):
-    rows = [_invariants_group(pid, hb, gx, gy)
-            for pid, hb, gx, gy in _iter_cell_groups(batches)]
-    yield pd.DataFrame(rows, columns=[f.name for f in INVARIANT_SCHEMA.fields])
-
-
 def _invariants_partition_subs(batches):
     """Batched invariants: one vectorized pass per Arrow batch
     (functions.dissolve.batch_invariants — successor permutation +
@@ -529,71 +409,63 @@ def _invariants_partition_subs(batches):
     hole-free bands — the overwhelming case for contiguous elevation
     bands — never build rings at all.  Results are identical by
     construction and asserted against the per-band path in
-    tests/test_polygon.py."""
+    tests/test_geometry_dissolve.py::test_batch_invariants_matches_per_band.
+
+    ``batch_invariants`` packs the band index into a 16-bit key field,
+    while the Arrow batch size (``spark.sql.execution.arrow.
+    maxRecordsPerBatch``) is a deployment setting, so every batch is
+    sliced into runs of at most ``MAX_BATCH_BANDS`` bands."""
+    from ..functions.dissolve import MAX_BATCH_BANDS
+
+    for batch in batches:
+        for start in range(0, len(batch), MAX_BATCH_BANDS):
+            yield _invariants_frame(batch.iloc[start:start + MAX_BATCH_BANDS])
+
+
+def _invariants_frame(pdf: pd.DataFrame) -> pd.DataFrame:
+    """INVARIANT_SCHEMA rows for one slice of ≤ MAX_BATCH_BANDS bands."""
     from ..functions.dissolve import batch_invariants
 
-    cols = [f.name for f in INVARIANT_SCHEMA.fields]
-    for pdf in batches:
-        if not len(pdf):
-            continue
-        band, gx, gy, seg = _expand_subrun_batch(pdf)
-        n_bands = len(pdf)
-        pid = pdf["poly_id"].to_numpy()
-        hbs = pdf["height_base"].to_numpy()
-        shells, holes, area2, q1, q3, qd, has_neg = batch_invariants(
-            band, gx, gy, n_bands, seg)
-        euler4 = (q1 - q3 + 2 * qd) // 4
-        euler8 = (q1 - q3 - 2 * qd) // 4
-        n_holes = np.zeros(n_bands, dtype=np.int64)
-        for b in np.flatnonzero(has_neg):
-            r = _invariants_group(int(pid[b]), int(hbs[b]),
-                                  gx[seg[b]:seg[b + 1]], gy[seg[b]:seg[b + 1]])
-            area2[b] = 2 * r["area_px"]
-            euler4[b] = r["euler4"]
-            euler8[b] = r["euler8"]
-        # sandwich check for the batched bands (the fallback asserts its
-        # own inside _invariants_group)
-        ok = ((euler8 <= shells - n_holes) & (shells - n_holes <= euler4)
-              & (area2 % 2 == 0)) | has_neg
-        if not ok.all():
-            b = int(np.flatnonzero(~ok)[0])
-            raise AssertionError(
-                f"dissolve/quad mismatch: shells={int(shells[b])} "
-                f"ring_holes={int(n_holes[b])} euler4={int(euler4[b])} "
-                f"euler8={int(euler8[b])} area2={int(area2[b])}"
-            )
-        yield pd.DataFrame(
-            {"poly_id": pid, "height_base": hbs, "area_px": area2 // 2,
-             "euler4": euler4, "euler8": euler8},
-            columns=cols,
+    band, gx, gy, seg = _expand_subrun_batch(pdf)
+    n_bands = len(pdf)
+    pid = pdf["poly_id"].to_numpy()
+    hbs = pdf["height_base"].to_numpy()
+    shells, holes, area2, q1, q3, qd, has_neg = batch_invariants(
+        band, gx, gy, n_bands, seg)
+    euler4 = (q1 - q3 + 2 * qd) // 4
+    euler8 = (q1 - q3 - 2 * qd) // 4
+    n_holes = np.zeros(n_bands, dtype=np.int64)
+    for b in np.flatnonzero(has_neg):
+        r = _invariants_group(int(pid[b]), int(hbs[b]),
+                              gx[seg[b]:seg[b + 1]], gy[seg[b]:seg[b + 1]])
+        area2[b] = 2 * r["area_px"]
+        euler4[b] = r["euler4"]
+        euler8[b] = r["euler8"]
+    # sandwich check for the batched bands (the fallback asserts its
+    # own inside _invariants_group)
+    ok = ((euler8 <= shells - n_holes) & (shells - n_holes <= euler4)
+          & (area2 % 2 == 0)) | has_neg
+    if not ok.all():
+        b = int(np.flatnonzero(~ok)[0])
+        raise AssertionError(
+            f"dissolve/quad mismatch: shells={int(shells[b])} "
+            f"ring_holes={int(n_holes[b])} euler4={int(euler4[b])} "
+            f"euler8={int(euler8[b])} area2={int(area2[b])}"
         )
+    return pd.DataFrame(
+        {"poly_id": pid, "height_base": hbs, "area_px": area2 // 2,
+         "euler4": euler4, "euler8": euler8},
+        columns=[f.name for f in INVARIANT_SCHEMA.fields],
+    )
 
 
 def polygon_color_invariants(polygons_df: DataFrame, images_df: DataFrame,
                              num_ranges: int = NUM_RANGES,
                              index_strategy: str = "broadcast",
-                             spread: bool = True,
-                             cells_shape: str = "blob") -> DataFrame:
+                             spread: bool = True) -> DataFrame:
     """Per-band dissolve invariants (poly_id, height_base, area_px,
     euler4, euler8) — the oracle-checkable face of the dissolve (G3).
-    Same plan shape as :func:`polygon_color_features`.  The default
-    rasterizes straight to packed run BLOBS (r6); ``cells_shape="runs"``
-    selects the r5 runs-resident twin (JVM zs arrays),
-    ``cells_shape="pixels"`` the exploded-pixel parity twin."""
-    if cells_shape == "pixels":
-        pixels = polygon_pixels(polygons_df, images_df,
-                                index_strategy=index_strategy, spread=spread)
-        lease("color_invariants", pixels)
-        return _banded_cells(pixels, num_ranges).mapInPandas(
-            _invariants_partition, schema=INVARIANT_SCHEMA
-        )
-    if cells_shape == "runs":
-        runs = polygon_pixel_runs(polygons_df, images_df,
-                                  index_strategy=index_strategy, spread=spread)
-        lease("color_invariants", runs)
-        return _banded_subruns(runs, num_ranges).mapInPandas(
-            _invariants_partition_subs, schema=INVARIANT_SCHEMA
-        )
+    Same plan shape as :func:`polygon_color_features`."""
     blobs = polygon_pixel_run_blobs(polygons_df, images_df,
                                     index_strategy=index_strategy, spread=spread)
     lease("color_invariants", blobs)

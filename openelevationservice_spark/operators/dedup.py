@@ -642,7 +642,13 @@ def dedup_clusters(df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
     components → (id, rep_id, cluster_size).  ``rep_id`` is the cluster
     representative a curation pipeline keeps; singletons are their own
     representative.  ``driver_max_pairs`` passes through to
-    :func:`connected_components` (0 forces the distributed loop)."""
+    :func:`connected_components` (0 forces the distributed loop).
+
+    ``df`` must hold one row per document: ``id_col`` values are
+    required to be unique.  The node set is taken as-is
+    (``ids_unique=True``, no defensive distinct), so a duplicated id
+    yields duplicated output rows; deduplicate ids first if the input
+    does not guarantee this."""
     pairs = lsh_candidate_pairs(df, id_col, text_col, n_hashes, bands, shingle_n)
     # sizes ride the CC result: on the driver fast path they come off
     # the same broadcast labels table (no window exchange+sort at all);

@@ -25,12 +25,11 @@ from pyspark.sql import functions as F
 from ..constants import NODATA
 from ..functions.cells import cell_size_deg, cell_x_col, cell_y_col, disk_offsets, linear_id_col
 from ..sources.tiles import tile_index
-from .sample import gather_z
+from .sample import gather_z_jvm, pixel_index
 
 
 def knn_tiles(points_df: DataFrame, images_df: DataFrame, k: int = 1,
               max_rings: int = 2, index_strategy: str = "broadcast",
-              gather_strategy: str = "jvm",
               lon: str = "lon", lat: str = "lat",
               id_col: str = "point_id",
               pix_index_df: DataFrame | None = None) -> DataFrame:
@@ -39,15 +38,15 @@ def knn_tiles(points_df: DataFrame, images_df: DataFrame, k: int = 1,
     Points farther than ``max_rings`` cells from any tile produce no
     rows (documented bound; widen max_rings for sparser worlds).
 
-    ``gather_strategy`` defaults to ``"jvm"`` (executor-side decoded
-    pixel index + codegen ``element_at``, same as point_elevation) — the
-    ``"broadcast"`` grid gather collects every decoded grid to the
-    driver and must be opted into explicitly; no operator defaults to a
-    driver-side collect.  The candidate ranking window sees metadata
-    only; the k winners fetch their pixel array through a second
-    broadcast equi-join, so pixel payloads never ride the window
-    exchange (25 candidates/point each dragging a full tile array
-    through the shuffle would dwarf the query).
+    z comes from the same decoded pixel index and codegen'd
+    ``element_at`` gather as :func:`.point.point_elevation`.  The
+    candidate ranking window sees metadata only; the k winners fetch
+    their pixel array through a second equi-join on ``image_id``, so
+    pixel payloads never ride the window exchange (25 candidates/point
+    each dragging a full tile array through the shuffle would dwarf the
+    query).  ``index_strategy="shuffle"`` exchanges both index joins
+    instead of broadcasting them, for an index past the broadcast
+    threshold.
     """
     dxs, dys = disk_offsets(max_rings)
     offsets = F.array(*[
@@ -86,14 +85,11 @@ def knn_tiles(points_df: DataFrame, images_df: DataFrame, k: int = 1,
         j.withColumn("ix", F.floor((clx - F.col("ul_x")) / F.col("px")).cast("int"))
         .withColumn("iy", F.floor((F.col("ul_y") - cly) / F.col("px")).cast("int"))
     )
-    if gather_strategy == "jvm":
-        from .sample import gather_z_jvm, pixel_index
-
-        pix = pix_index_df if pix_index_df is not None else pixel_index(images_df)
-        j = j.join(F.broadcast(pix.select("image_id", "pix")), "image_id")
-        out = gather_z_jvm(j)
-    else:
-        out = gather_z(j, images_df, strategy=gather_strategy)
+    pix = (pix_index_df if pix_index_df is not None
+           else pixel_index(images_df)).select("image_id", "pix")
+    if index_strategy == "broadcast":
+        pix = F.broadcast(pix)
+    out = gather_z_jvm(j.join(pix, "image_id"))
     return (
         out.withColumn("z", F.coalesce(F.col("z"), F.lit(NODATA)).cast("int"))
         .drop("min_x", "min_y", "max_x", "max_y", "ul_x", "ul_y", "px", "w", "h", "cell_id")

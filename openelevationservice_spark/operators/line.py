@@ -16,7 +16,9 @@ PostGIS ``ST_LineInterpolatePoints(line, frac)`` (repeat=true) emits
 points at t = frac, 2*frac, …, n*frac with n = floor(1/frac).  All of
 the densify arithmetic here is JVM Column math (``sequence`` +
 ``explode`` is the Spark-native table-generating operator, SURVEY.md
-§2.4 A5); only the z-gather touches Python via the shared Arrow kernel.
+§2.4 A5), and the vertices sample z through the same pixel-index join
+and codegen'd ``element_at`` gather as the point query: the whole probe
+side is whole-stage codegen, the tile decode is the only Python stage.
 
 Determinism note: the reference orders only by distance-from-start;
 equidistant distinct vertices have planner-dependent order there.  We
@@ -28,10 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..constants import COORD_PRECISION, NODATA
-from ..sources.tiles import tile_index
-from .point import join_tiles, with_pixel_indices
-from .sample import gather_z
+from ..constants import COORD_PRECISION
+from .point import point_elevation
 
 
 def densify_lines(lines_df: DataFrame) -> DataFrame:
@@ -62,156 +62,12 @@ def densify_lines(lines_df: DataFrame) -> DataFrame:
       generated index sequence: interior indices run 1..n_keep with
       n_keep = n_interp − [last point has t ≥ 1.0 or coords == P2].
 
-    Physical shape: ONE ``transform`` lambda builds the final
-    (dist, x, y) structs (higher-order functions are interpreted —
-    CodegenFallback — so single-pass matters); ``posexplode`` position
-    IS seq−1.  Zero shuffles.  NOTE: composing the per-line scalars as
-    Python Column variables duplicates their subtrees by value (no CSE
-    inside conditional branches), so this twin is kept only as the
-    array-expression PARITY form — the default physical form is
-    :func:`densify_lines_explode`, which stages every scalar through
-    its own select.
-    """
-    dx = F.col("x2") - F.col("x1")
-    dy = F.col("y2") - F.col("y1")
-    line_len = F.sqrt(dx * dx + dy * dy)
-    frac = F.when(line_len == 0.0, F.lit(1.0)).otherwise(
-        F.least(F.lit(1.0), F.lit(COORD_PRECISION) / line_len)
-    )
-    n_interp = (
-        F.when(line_len == 0.0, F.lit(0))
-        .otherwise(F.floor(F.lit(1.0) / frac))
-        .cast("int")
-    )
-    t_last = n_interp * frac
-    x_last = F.col("x1") + t_last * dx
-    y_last = F.col("y1") + t_last * dy
-    tail_dropped = (t_last >= 1.0) | ((x_last == F.col("x2")) & (y_last == F.col("y2")))
-    n_keep = F.when(n_interp >= 1,
-                    n_interp - F.when(tail_dropped, 1).otherwise(0)
-                    ).otherwise(F.lit(0))
-    p2_kept = (F.col("x2") != F.col("x1")) | (F.col("y2") != F.col("y1"))
-
-    def pt(x, y):
-        return F.struct(x.alias("x"), y.alias("y"))
-
-    def interp(k):
-        t = k * frac
-        return pt(F.col("x1") + t * dx, F.col("y1") + t * dy)
-
-    ks = F.when(n_keep >= 1, F.sequence(F.lit(1), n_keep)).otherwise(
-        F.array().cast("array<int>")
-    )
-    p2 = F.when(p2_kept, F.array(pt(F.col("x2"), F.col("y2")))).otherwise(
-        F.array().cast("array<struct<x:double,y:double>>")
-    )
-    verts = F.concat(F.array(pt(F.col("x1"), F.col("y1"))), F.transform(ks, interp), p2)
-
-    # second (cheap) pass: dist from the already-computed coords — fusing
-    # it into the lambda above would re-inline the frac subtree into the
-    # dist operands (lambda substitution duplicates expression trees and
-    # higher-order functions evaluate interpreted), doubling per-element
-    # cost
-    def with_dist(v):
-        ddx = v.getField("x") - F.col("x1")
-        ddy = v.getField("y") - F.col("y1")
-        return F.struct(
-            F.sqrt(ddx * ddx + ddy * ddy).alias("dist"),
-            v.getField("x").alias("x"),
-            v.getField("y").alias("y"),
-        )
-
-    verts = F.transform(verts, with_dist)
-
-    v = lines_df.select(
-        "line_id", "x1", "y1",
-        F.posexplode(verts).alias("pos", "v"),
-    )
-    return v.select(
-        "line_id", "x1", "y1",
-        (F.col("pos") + 1).alias("seq"),
-        F.col("v.x").alias("x"),
-        F.col("v.y").alias("y"),
-        F.col("v.dist").alias("dist"),
-    )
-
-
-DENSIFY_SCHEMA = "line_id long, x1 double, y1 double, seq int, x double, y double, dist double"
-
-
-def _densify_batches(batches):
-    import numpy as np
-    import pandas as pd
-
-    for pdf in batches:
-        if not len(pdf):
-            yield pd.DataFrame({c: [] for c in
-                                ["line_id", "x1", "y1", "seq", "x", "y", "dist"]})
-            continue
-        x1 = pdf["x1"].to_numpy(np.float64)
-        y1 = pdf["y1"].to_numpy(np.float64)
-        x2 = pdf["x2"].to_numpy(np.float64)
-        y2 = pdf["y2"].to_numpy(np.float64)
-        dx = x2 - x1
-        dy = y2 - y1
-        ln = np.sqrt(dx * dx + dy * dy)
-        with np.errstate(divide="ignore"):
-            frac = np.where(ln == 0.0, 1.0,
-                            np.minimum(1.0, COORD_PRECISION / ln))
-        n_int = np.where(ln == 0.0, 0, np.floor(1.0 / frac)).astype(np.int64)
-        t_last = n_int * frac
-        xl = x1 + t_last * dx
-        yl = y1 + t_last * dy
-        tail = (n_int >= 1) & ((t_last >= 1.0) | ((xl == x2) & (yl == y2)))
-        n_keep = n_int - tail.astype(np.int64)
-        p2 = (x2 != x1) | (y2 != y1)
-        cnt = 1 + n_keep + p2.astype(np.int64)
-        off = np.concatenate([[0], np.cumsum(cnt)])
-        li = np.repeat(np.arange(len(pdf)), cnt)
-        j = np.arange(off[-1]) - off[li]
-        is_p1 = j == 0
-        is_p2 = p2[li] & (j == cnt[li] - 1)
-        t = j * frac[li]
-        x = np.where(is_p1, x1[li],
-                     np.where(is_p2, x2[li], x1[li] + t * dx[li]))
-        y = np.where(is_p1, y1[li],
-                     np.where(is_p2, y2[li], y1[li] + t * dy[li]))
-        ddx = x - x1[li]
-        ddy = y - y1[li]
-        yield pd.DataFrame({
-            "line_id": pdf["line_id"].to_numpy(np.int64)[li],
-            "x1": x1[li], "y1": y1[li],
-            "seq": (j + 1).astype(np.int32),
-            "x": x, "y": y,
-            "dist": np.sqrt(ddx * ddx + ddy * ddy),
-        })
-
-
-def densify_lines_arrow(lines_df: DataFrame) -> DataFrame:
-    """Vectorized Arrow implementation of ``densify_lines`` — identical
-    IEEE-754 arithmetic (same operations, same order), several times
-    the throughput of the array-expression form because Spark's
-    higher-order functions evaluate interpreted (CodegenFallback) with
-    per-element object churn, while this path is flat numpy over Arrow
-    batches.  Identical outputs are asserted in tests/test_line.py.
-    """
-    return lines_df.select("line_id", "x1", "y1", "x2", "y2").mapInPandas(
-        _densify_batches, schema=DENSIFY_SCHEMA
-    )
-
-
-def densify_lines_explode(lines_df: DataFrame) -> DataFrame:
-    """Whole-stage-codegen densify — the default physical form.
-
-    ``explode(sequence(0, cnt-1))`` generates the vertex index rows and
-    every coordinate is plain post-explode Column arithmetic: no Arrow
-    boundary (the arrow twin pays an Arrow→InternalRow conversion per
-    OUTPUT vertex in the JVM — allocation-bound, measured 0.42 scaling
-    efficiency 2→8 cores), no interpreted higher-order functions (the
-    array-expression twin is CodegenFallback).  9× the 2-core
-    throughput of the arrow twin at bench volume and bit-identical
-    output (same IEEE ops in the same order; asserted in
-    tests/test_line.py against both twins).
+    Physical shape: ``explode(sequence(0, cnt-1))`` generates the vertex
+    index rows and every coordinate is plain post-explode Column
+    arithmetic, so the whole densify is whole-stage codegen with zero
+    shuffles — no Arrow boundary and no interpreted higher-order
+    functions.  Output is bit-identical to the numpy reference in
+    tests/references.py (same IEEE ops in the same order).
 
     Every intermediate scalar goes through its own ``select`` stage so
     it materializes ONCE per row as a named attribute: composing the
@@ -219,9 +75,8 @@ def densify_lines_explode(lines_df: DataFrame) -> DataFrame:
     reference (expression trees are built by value), and Spark's
     codegen common-subexpression elimination does not reach inside
     conditional branches — the naïvely-composed form measured 10×
-    slower than the arrow twin instead of faster.  Catalyst's
-    CollapseProject keeps non-cheap multi-referenced aliases staged, so
-    the chained selects survive optimization.
+    slower.  Catalyst's CollapseProject keeps non-cheap multi-referenced
+    aliases staged, so the chained selects survive optimization.
     """
     d = lines_df.select(
         "line_id", "x1", "y1", "x2", "y2",
@@ -267,59 +122,29 @@ def densify_lines_explode(lines_df: DataFrame) -> DataFrame:
     return e.withColumn("dist", F.sqrt(ddx * ddx + ddy * ddy))
 
 
-_DENSIFY_IMPLS = {
-    "explode": lambda df: densify_lines_explode(df),
-    "arrow": lambda df: densify_lines_arrow(df),
-    "sql": lambda df: densify_lines(df),
-}
-
-
 def line_vertices_elevation(lines_df: DataFrame, images_df: DataFrame,
                             how: str = "inner",
                             index_strategy: str = "broadcast",
-                            gather_strategy: str = "jvm",
-                            grids_bc=None,
-                            pix_index_df: DataFrame | None = None,
-                            densify_impl: str = "explode") -> DataFrame:
+                            pix_index_df: DataFrame | None = None) -> DataFrame:
     """Densified vertices with z and a deterministic order index ``seq``.
 
     Output: (line_id, seq, x, y, z, dist, image_id, ix, iy).  ``seq``
     is assigned over the full deduped vertex set *before* the coverage
     join, so under ``how='inner'`` out-of-coverage vertices leave gaps
     in seq (order is unaffected; the reference emits survivors in the
-    same distance order).
+    same distance order).  The vertices are sampled by
+    :func:`.point.point_elevation`; ``index_strategy`` and
+    ``pix_index_df`` mean the same there.
     """
-    verts = _DENSIFY_IMPLS[densify_impl](lines_df)
-    if gather_strategy == "jvm":
-        from .sample import gather_z_jvm, pixel_index
-
-        idx = pix_index_df if pix_index_df is not None else pixel_index(images_df)
-        j = join_tiles(verts, idx, how=how, index_strategy=index_strategy,
-                       lon="x", lat="y", extra_cols=("pix",))
-        j = with_pixel_indices(j, lon="x", lat="y")
-        j = j.select("line_id", "seq", "x", "y", "dist",
-                     "image_id", "w", "h", "ix", "iy", "pix")
-        out = gather_z_jvm(j).drop("w", "h")
-    else:
-        idx = tile_index(images_df)
-        j = join_tiles(verts, idx, how=how, index_strategy=index_strategy,
-                       lon="x", lat="y")
-        j = with_pixel_indices(j, lon="x", lat="y")
-        # dist came with the vertex structs — prune the tile metadata so
-        # the Arrow batches stay narrow
-        j = j.select("line_id", "seq", "x", "y", "dist", "image_id", "ix", "iy")
-        out = gather_z(j, images_df, strategy=gather_strategy, grids_bc=grids_bc)
-    z = F.when(F.col("image_id").isNotNull(),
-               F.coalesce(F.col("z"), F.lit(NODATA))).otherwise(F.lit(None))
-    return (
-        out.withColumn("z", z.cast("int"))
-        .select("line_id", "seq", "x", "y", "z", "dist", "image_id", "ix", "iy")
-    )
+    verts = densify_lines(lines_df).select("line_id", "seq", "x", "y", "dist")
+    return point_elevation(
+        verts, images_df, how=how, index_strategy=index_strategy,
+        lon="x", lat="y", pix_index_df=pix_index_df,
+    ).select("line_id", "seq", "x", "y", "z", "dist", "image_id", "ix", "iy")
 
 
 def line_elevation(lines_df: DataFrame, images_df: DataFrame,
-                   index_strategy: str = "broadcast",
-                   gather_strategy: str = "jvm") -> DataFrame:
+                   index_strategy: str = "broadcast") -> DataFrame:
     """Assembled 3-D lines: (line_id, n_vertices, is_degenerate_point, vertices).
 
     ``vertices`` is the ordered array of (x, y, z) structs —
@@ -328,8 +153,7 @@ def line_elevation(lines_df: DataFrame, images_df: DataFrame,
     (reference ``views.py:63-68``).
     """
     v = line_vertices_elevation(lines_df, images_df,
-                                index_strategy=index_strategy,
-                                gather_strategy=gather_strategy)
+                                index_strategy=index_strategy)
     pt = F.struct(F.col("dist"), F.col("x"), F.col("y"), F.col("z"))
     return (
         v.groupBy("line_id")

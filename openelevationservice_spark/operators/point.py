@@ -5,12 +5,14 @@ Reference shape (``server/api/querybuilder.py:257-313``)::
     points2d → JOIN oes_cgiar ON ST_Intersects(rast, geom) LIMIT 1
              → ST_Value(rast, geom) → MakePoint(x, y, coalesce(z, -32768))
 
-Spark plan (all index arithmetic JVM-side, whole-stage codegen):
+Spark plan (one physical shape, all JVM-side except the tile decode):
 
     points ─ cell_id = f(lon, lat)            (Column arithmetic)
-           ─ equi-join tile index on cell_id  (broadcast | shuffle)
+           ─ equi-join pixel index on cell_id (broadcast; shuffle once
+                                               the index outgrows the
+                                               broadcast threshold)
            ─ ix/iy pixel indices              (Column arithmetic)
-           ─ gather z from decoded grid       (Arrow pandas UDF)
+           ─ gather z: element_at(pix, …)     (codegen'd, sample.py)
            ─ coalesce(z, -32768)
 
 The equi-join is *exact*, not approximate: tiles partition the plane at
@@ -29,8 +31,7 @@ from pyspark.sql import functions as F
 
 from ..constants import NODATA
 from ..functions.cells import cell_id_col
-from ..sources.tiles import tile_index
-from .sample import gather_z
+from .sample import gather_z_jvm, pixel_index
 
 
 def with_pixel_indices(df: DataFrame, lon: str = "lon", lat: str = "lat") -> DataFrame:
@@ -44,12 +45,11 @@ def with_pixel_indices(df: DataFrame, lon: str = "lon", lat: str = "lat") -> Dat
 
 def join_tiles(points_df: DataFrame, index_df: DataFrame, how: str = "inner",
                index_strategy: str = "broadcast",
-               lon: str = "lon", lat: str = "lat",
-               extra_cols: tuple[str, ...] = ()) -> DataFrame:
-    """points × tile-index equi-join on cell_id (J1 in SURVEY.md §2.3)."""
+               lon: str = "lon", lat: str = "lat") -> DataFrame:
+    """points × pixel-index equi-join on cell_id (J1 in SURVEY.md §2.3)."""
     pts = points_df.withColumn("cell_id", cell_id_col(F.col(lon), F.col(lat)))
     idx = index_df.select("cell_id", "image_id", "ul_x", "ul_y", "px", "w", "h",
-                          *extra_cols)
+                          "pix")
     if index_strategy == "broadcast":
         idx = F.broadcast(idx)
     elif index_strategy != "shuffle":
@@ -60,9 +60,8 @@ def join_tiles(points_df: DataFrame, index_df: DataFrame, how: str = "inner",
 def point_elevation(points_df: DataFrame, images_df: DataFrame,
                     how: str = "inner",
                     index_strategy: str = "broadcast",
-                    gather_strategy: str = "jvm",
                     lon: str = "lon", lat: str = "lat",
-                    grids_bc=None, pix_index_df: DataFrame | None = None) -> DataFrame:
+                    pix_index_df: DataFrame | None = None) -> DataFrame:
     """points (…, lon, lat) → (…, image_id, ix, iy, z).
 
     ``z`` is coalesced to NODATA (−32768) exactly like the reference's
@@ -70,31 +69,20 @@ def point_elevation(points_df: DataFrame, images_df: DataFrame,
     points that hit a tile; points that hit no tile keep NULL z under
     ``how='left'`` (they are absent under ``how='inner'``).
 
-    gather strategies: ``jvm`` (default — decoded pixel arrays ride the
-    broadcast index, sampling is a codegen'd ``element_at``; no Python
-    in the hot path), ``broadcast`` (Arrow gather against a broadcast
-    grid dict), ``cogroup`` (the 10^12-image shuffle path).  Pass a
-    persisted ``pix_index_df`` (operators.sample.pixel_index) to reuse
-    decode work across queries.
+    The decoded pixel arrays ride the index join and sampling is a
+    codegen'd ``element_at`` — no Python in the hot path.  Pass a
+    persisted ``pix_index_df`` (:func:`.sample.pixel_index`) to reuse
+    decode work across queries.  ``index_strategy="shuffle"`` exchanges
+    both sides on ``cell_id`` instead of broadcasting the index — the
+    regime where the queried tiles' decoded pixels exceed the broadcast
+    threshold.
     """
-    if gather_strategy == "jvm":
-        from .sample import gather_z_jvm, pixel_index
-
-        idx = pix_index_df if pix_index_df is not None else pixel_index(images_df)
-        j = join_tiles(points_df, idx, how=how, index_strategy=index_strategy,
-                       lon=lon, lat=lat, extra_cols=("pix",))
-        j = with_pixel_indices(j, lon=lon, lat=lat)
-        j = j.select(*points_df.columns, "image_id", "w", "h", "ix", "iy", "pix")
-        out = gather_z_jvm(j).drop("w", "h")
-    else:
-        idx = tile_index(images_df)
-        j = join_tiles(points_df, idx, how=how, index_strategy=index_strategy,
-                       lon=lon, lat=lat)
-        j = with_pixel_indices(j, lon=lon, lat=lat)
-        # prune tile metadata before the Arrow boundary — the gather only
-        # needs (image_id, ix, iy) plus the caller's columns
-        j = j.select(*points_df.columns, "image_id", "ix", "iy")
-        out = gather_z(j, images_df, strategy=gather_strategy, grids_bc=grids_bc)
+    idx = pix_index_df if pix_index_df is not None else pixel_index(images_df)
+    j = join_tiles(points_df, idx, how=how, index_strategy=index_strategy,
+                   lon=lon, lat=lat)
+    j = with_pixel_indices(j, lon=lon, lat=lat)
+    j = j.select(*points_df.columns, "image_id", "w", "h", "ix", "iy", "pix")
+    out = gather_z_jvm(j).drop("w", "h")
     z = F.when(F.col("image_id").isNotNull(),
                F.coalesce(F.col("z"), F.lit(NODATA))).otherwise(F.lit(None))
     return out.withColumn("z", z.cast("int"))

@@ -22,10 +22,15 @@ query filters NODATA explicitly).  The Spark plan:
             → cover-cell explode (sequence × sequence, JVM)        [J3]
             → equi-join tile index on cell_id                      [J3]
             → mapInPandas: decode tile, centroid grid, vectorized
-              PIP filter, NODATA filter → pixel rows               [A2-A4, P2-P3]
+              PIP filter, NODATA filter → scanline runs            [A2-A4, P2-P3]
+            → posexplode(runs) → pixel rows (JVM codegen)
 
 The per-(polygon, tile) explode is Spark's ``LATERAL
-ST_PixelAsPolygons`` equivalent (SURVEY.md §2.3 J5).
+ST_PixelAsPolygons`` equivalent (SURVEY.md §2.3 J5).  One rasterization
+core (:func:`_iter_pair_masks`) feeds two emitters: scanline runs for
+the pixel dump (:func:`polygon_pixels`) and one packed blob per
+(polygon, tile) pair for the band dissolve
+(:func:`polygon_pixel_run_blobs`, consumed by ``operators/color.py``).
 """
 
 from __future__ import annotations
@@ -77,6 +82,14 @@ def polygon_tile_join(polygons_df: DataFrame, index_df: DataFrame,
     request's polygons always can; batches past broadcast size use
     ``index_strategy="shuffle"`` (both sides exchanged on cell_id).
 
+    Broadcast-size caveat: the broadcast side grows with the polygon
+    batch — one row per (polygon, bbox cell) pair, each carrying the
+    polygon's full ring — not with the tile table.  A large batch of
+    polygons (many polygons, or polygons with large bboxes or long
+    rings) can exceed ``spark.sql.autoBroadcastJoinThreshold`` /
+    ``spark.driver.maxResultSize`` and fail the broadcast; callers
+    replaying such batches pass ``index_strategy="shuffle"``.
+
     ``spread=False`` skips the shuffle path's pre-join repartition —
     right for interactive single-polygon requests (the API layer sets
     it), where an extra full exchange into mostly-empty tasks only
@@ -108,25 +121,14 @@ def polygon_tile_join(polygons_df: DataFrame, index_df: DataFrame,
     return p.join(idx, "cell_id", "inner")
 
 
-# Arrow boundary carries only the irreducible columns; image_id / x / y
-# are derived JVM-side from (gx, gy) with bit-identical arithmetic
-# (see with_pixel_coords) — halves the Python→JVM transfer volume of
-# the pixel dump, the operator's dominant cost at scale.
-PIXEL_SCHEMA = T.StructType(
-    [
-        T.StructField("poly_id", T.LongType()),
-        T.StructField("gx", T.LongType()),
-        T.StructField("gy", T.LongType()),
-        T.StructField("z", T.IntegerType()),
-    ]
-)
-
-
 def with_pixel_coords(df: DataFrame) -> DataFrame:
     """Derive (image_id, x, y) from global pixel indices as Columns.
 
-    Exactly the arithmetic of the tile captions (sources/fixtures.py
-    ``tile_caption``) and the numpy centroid computation:
+    The rasterizer ships no image_id / x / y across the Arrow boundary;
+    deriving them JVM-side keeps the Python→JVM transfer of the pixel
+    dump to the irreducible columns.  Exactly the arithmetic of the
+    tile captions (sources/fixtures.py ``tile_caption``) and the numpy
+    centroid computation:
     ``ul_x = WORLD_X0 + tx*TILE_DEG``; ``x = ul_x + (ix + 0.5)*PX`` —
     identical double operations in identical order, so values are
     bit-equal to computing them inside the Arrow kernel.
@@ -142,48 +144,6 @@ def with_pixel_coords(df: DataFrame) -> DataFrame:
         .withColumn("x", ul_x + ((F.col("gx") - tx * TILE_PX) + F.lit(0.5)) * F.lit(PX))
         .withColumn("y", ul_y - ((F.col("gy") - ty * TILE_PX) + F.lit(0.5)) * F.lit(PX))
     )
-
-
-def _pixel_rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Per (polygon, tile) row → covered non-NODATA pixel rows."""
-    cols = [f.name for f in PIXEL_SCHEMA.fields]
-    for pdf in batches:
-        grid_cache: dict[str, np.ndarray] = {}
-        outs = []
-        for _, r in pdf.iterrows():
-            img = r["image_id"]
-            grid = grid_cache.get(img)
-            if grid is None:
-                grid = image_codec.decode(r["bytes"], r["fmt"], int(r["w"]), int(r["h"]))
-                grid_cache[img] = grid
-            h, w = grid.shape
-            if w != TILE_PX or h != TILE_PX:
-                # with_pixel_coords derives image_id/x/y from gx, gy using
-                # the constant TILE_PX — a tile of any other size would
-                # silently produce wrong coordinates downstream
-                raise AssertionError(
-                    f"tile {img} is {w}x{h}, expected {TILE_PX}x{TILE_PX}"
-                )
-            ul_x, ul_y, px = r["ul_x"], r["ul_y"], r["px"]
-            jj, ii = np.meshgrid(np.arange(w), np.arange(h))
-            cx = ul_x + (jj + 0.5) * px          # centroid lon
-            cy = ul_y - (ii + 0.5) * px          # centroid lat
-            rx, ry = ring_to_arrays(r["ring"])
-            mask = points_in_ring(cx.ravel(), cy.ravel(), rx, ry).reshape(h, w)
-            mask &= grid != NODATA
-            if not mask.any():
-                continue
-            iy, ix = np.nonzero(mask)
-            tx = int(round((ul_x - WORLD_X0) / TILE_DEG))
-            ty = int(round((WORLD_Y0 - ul_y) / TILE_DEG))
-            outs.append(pd.DataFrame({
-                "poly_id": np.int64(r["poly_id"]),
-                "gx": tx * w + ix,
-                "gy": ty * h + iy,
-                "z": grid[iy, ix].astype(np.int32),
-            }))
-        yield (pd.concat(outs, ignore_index=True)[cols] if outs
-               else pd.DataFrame({c: [] for c in cols}))
 
 
 # Run-length-encoded Arrow boundary: the Python kernel emits one row per
@@ -229,7 +189,7 @@ def _pixel_runs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     former per-pair meshgrid rebuild dominated the kernel).  Exactly
     rectangular rings take an interval-comparison fast path (identical
     covered set to the boundary-inclusive even-odd PIP for axis-aligned
-    rectangles — parity-asserted against the general kernel in
+    rectangles — asserted against a numpy centroid-in-ring mask in
     tests/test_polygon.py); everything else runs the general vectorized
     PIP over the cached centroid grid.
     """
@@ -281,6 +241,9 @@ def _iter_pair_masks(pdf: pd.DataFrame):
             grid = image_codec.decode(data, fmt, int(w0), int(h0))
             h, w = grid.shape
             if w != TILE_PX or h != TILE_PX:
+                # with_pixel_coords derives image_id/x/y from gx, gy using
+                # the constant TILE_PX — a tile of any other size would
+                # silently produce wrong coordinates downstream
                 raise AssertionError(
                     f"tile {img} is {w}x{h}, expected {TILE_PX}x{TILE_PX}"
                 )
@@ -310,7 +273,8 @@ def _iter_pair_masks(pdf: pd.DataFrame):
 # Opaque-blob run transfer for the dissolve pipeline: one row per
 # (polygon, tile) pair, runs packed into a single binary column —
 # int32 n_runs, int32 gy[n], int32 gx0[n], int32 len[n], int16 z[...]
-# (little-endian), plus scalar per-pair min/max for the stats agg.
+# (little-endian), plus scalar per-pair min/max/sum/count for the stats
+# agg (blob_stats).
 # z values never become JVM arrays: binary crosses Arrow as one buffer
 # memcpy, the cache stores ~9k blob rows instead of ~300k array rows,
 # and the stats scan reads 2 pruned int columns instead of re-folding
@@ -321,6 +285,8 @@ RUN_BLOB_SCHEMA = T.StructType(
         T.StructField("blob", T.BinaryType()),
         T.StructField("run_min", T.IntegerType()),
         T.StructField("run_max", T.IntegerType()),
+        T.StructField("run_sum", T.LongType()),
+        T.StructField("run_n", T.IntegerType()),
     ]
 )
 
@@ -332,6 +298,8 @@ def _pixel_run_blobs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         blobs: list[bytes] = []
         mins: list[int] = []
         maxs: list[int] = []
+        sums: list[int] = []
+        ns: list[int] = []
         for pid, grid, mask, tx, ty in _iter_pair_masks(pdf):
             d = np.diff(np.pad(mask, ((0, 0), (1, 1))).astype(np.int8), axis=1)
             ys, xs0 = np.nonzero(d == 1)
@@ -347,11 +315,15 @@ def _pixel_run_blobs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             blobs.append(head.tobytes() + zcat.tobytes())
             mins.append(int(zcat.min()))
             maxs.append(int(zcat.max()))
+            sums.append(int(zcat.sum(dtype=np.int64)))
+            ns.append(len(zcat))
         yield pd.DataFrame(
             {"poly_id": np.asarray(pids, dtype=np.int64),
              "blob": pd.Series(blobs, dtype=object),
              "run_min": np.asarray(mins, dtype=np.int32),
-             "run_max": np.asarray(maxs, dtype=np.int32)},
+             "run_max": np.asarray(maxs, dtype=np.int32),
+             "run_sum": np.asarray(sums, dtype=np.int64),
+             "run_n": np.asarray(ns, dtype=np.int32)},
             columns=cols,
         )
 
@@ -360,7 +332,9 @@ def polygon_pixel_run_blobs(polygons_df: DataFrame, images_df: DataFrame,
                             index_strategy: str = "broadcast",
                             spread: bool = True) -> DataFrame:
     """Covered-pixel runs as per-(polygon, tile) packed blobs —
-    the dissolve pipeline's transfer/cache format (see RUN_BLOB_SCHEMA)."""
+    the dissolve pipeline's transfer/cache format (see RUN_BLOB_SCHEMA).
+    Large polygon batches: see the broadcast-size caveat of
+    :func:`polygon_tile_join`."""
     idx = tile_index(images_df, with_bytes=True)
     j = polygon_tile_join(polygons_df.select("poly_id", "ring"), idx,
                           index_strategy=index_strategy, spread=spread)
@@ -370,32 +344,23 @@ def polygon_pixel_run_blobs(polygons_df: DataFrame, images_df: DataFrame,
 def polygon_pixel_runs(polygons_df: DataFrame, images_df: DataFrame,
                        index_strategy: str = "broadcast",
                        spread: bool = True) -> DataFrame:
-    """Covered-pixel scanline runs: (poly_id, gy, gx0, zs)."""
+    """Covered-pixel scanline runs: (poly_id, gy, gx0, zs).  Large
+    polygon batches: see the broadcast-size caveat of
+    :func:`polygon_tile_join`."""
     idx = tile_index(images_df, with_bytes=True)
     j = polygon_tile_join(polygons_df.select("poly_id", "ring"), idx,
                           index_strategy=index_strategy, spread=spread)
     return j.mapInPandas(_pixel_runs, schema=RUN_SCHEMA)
 
 
-def runs_stats(runs_df: DataFrame) -> DataFrame:
-    """min/max/avg/count per polygon straight off scanline runs —
-    value-identical to ``polygon_stats(polygon_pixels(...))`` (G1,
-    reference ``querybuilder.py:84-88``) without exploding the runs to
-    pixel rows: per-run min/max/count are JVM ``array_min`` /
-    ``array_max`` / ``size`` inside codegen, the per-run z sum is one
-    ``aggregate`` fold (exact integer arithmetic, so avg matches the
-    pixel-path double average bit-for-bit only after the final single
-    division — asserted in tests/test_polygon.py)."""
-    run_sum = F.aggregate("zs", F.lit(0).cast("long"),
-                          lambda acc, x: acc + x.cast("long"))
-    per_run = runs_df.select(
-        "poly_id",
-        F.array_min("zs").cast("int").alias("run_min"),
-        F.array_max("zs").cast("int").alias("run_max"),
-        F.size("zs").cast("long").alias("run_n"),
-        run_sum.alias("run_sum"),
-    )
-    return per_run.groupBy("poly_id").agg(
+def blob_stats(blobs_df: DataFrame) -> DataFrame:
+    """min/max/avg/count per polygon from the blob table's scalar
+    per-pair columns — value-identical to
+    ``polygon_stats(polygon_pixels(...))`` (G1, reference
+    ``querybuilder.py:84-88``) without unpacking a single blob: the
+    avg is one exact integer sum over one exact count, the same double
+    division as the pixel-row average (asserted in tests/test_polygon.py)."""
+    return blobs_df.groupBy("poly_id").agg(
         F.min("run_min").alias("min_z"),
         F.max("run_max").alias("max_z"),
         (F.sum("run_sum") / F.sum("run_n")).alias("avg_z"),
@@ -405,33 +370,25 @@ def runs_stats(runs_df: DataFrame) -> DataFrame:
 
 def polygon_pixels(polygons_df: DataFrame, images_df: DataFrame,
                    index_strategy: str = "broadcast",
-                   spread: bool = True, emit: str = "runs") -> DataFrame:
+                   spread: bool = True) -> DataFrame:
     """Pixel rows covered by each polygon: (poly_id, image_id, gx, gy, x, y, z).
 
     Matches the reference's centroid-dump semantics (z != NODATA,
     centroid covered); ordering is applied by ``polygon_elevation``.
-
-    ``emit="runs"`` (default): the Python kernel ships scanline runs and
-    a JVM ``posexplode`` generates pixel rows inside codegen.
-    ``emit="rows"``: per-pixel Arrow rows (kept as the parity twin,
-    asserted equal in tests/test_polygon.py).
+    The Python kernel ships scanline runs and a JVM ``posexplode``
+    generates the pixel rows inside codegen.
     """
-    if emit == "runs":
-        runs = polygon_pixel_runs(polygons_df, images_df,
-                                  index_strategy=index_strategy, spread=spread)
-        px = runs.select(
-            "poly_id", "gy", "gx0", F.posexplode("zs").alias("pos", "z")
-        ).select(
-            "poly_id",
-            (F.col("gx0") + F.col("pos")).alias("gx"),
-            "gy",
-            F.col("z").cast("int").alias("z"),
-        )
-        return with_pixel_coords(px)
-    idx = tile_index(images_df, with_bytes=True)
-    j = polygon_tile_join(polygons_df.select("poly_id", "ring"), idx,
-                          index_strategy=index_strategy, spread=spread)
-    return with_pixel_coords(j.mapInPandas(_pixel_rows, schema=PIXEL_SCHEMA))
+    runs = polygon_pixel_runs(polygons_df, images_df,
+                              index_strategy=index_strategy, spread=spread)
+    px = runs.select(
+        "poly_id", "gy", "gx0", F.posexplode("zs").alias("pos", "z")
+    ).select(
+        "poly_id",
+        (F.col("gx0") + F.col("pos")).alias("gx"),
+        "gy",
+        F.col("z").cast("int").alias("z"),
+    )
+    return with_pixel_coords(px)
 
 
 def polygon_elevation(polygons_df: DataFrame, images_df: DataFrame,

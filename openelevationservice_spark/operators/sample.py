@@ -1,33 +1,24 @@
-"""Elevation gather kernel — the Spark replacement for ``ST_Value``.
+"""Elevation gather — the Spark replacement for ``ST_Value``.
 
 ``ST_Value(rast, geom)`` samples the pixel containing a point with no
 interpolation (reference ``server/api/querybuilder.py:218,286``): pixel
 index is ``ix = floor((x - ul_x)/px)``, ``iy = floor((ul_y - y)/px)``
-from the upper-left origin.  The index arithmetic happens **JVM-side**
-(plain Columns, see operators/point.py); this module only performs the
-final grid gather, which needs the decoded image payload and therefore
-runs in Arrow-vectorized pandas UDFs.
+from the upper-left origin.
 
-Two physical strategies (picked like a join strategy):
-
-- ``broadcast`` — decode every tile once on the executors, collect the
-  (small) decoded grids to the driver, broadcast the dict, and gather
-  via ``mapInPandas`` with **zero shuffle**.  Right when the tile
-  working set fits in memory (the reference's whole-planet SRTM is
-  ~67 GB decoded; a queried region is far smaller).
-- ``cogroup`` — shuffle-free of driver memory: semi-join-prune the
-  images table to the touched tiles, then
-  ``points.groupBy(image_id).cogroup(images.groupBy(image_id))``
-  so each tile's bytes cross the wire **once** per task, not once per
-  point row.  This is the 10^12-image path: both sides hash-partition
-  on image_id, skew handled by AQE.
+One physical shape serves every point-sampling operator (point, line
+vertices, kNN, streaming): :func:`pixel_index` decodes each tile ONCE
+into a flat ``array<smallint>`` column riding the tile index, the
+operators join it on ``cell_id`` (broadcast, or shuffled once the index
+outgrows the broadcast threshold — ``index_strategy="shuffle"``), and
+:func:`gather_z_jvm` samples it with a codegen'd ``element_at``.  The
+index arithmetic and the gather are plain Columns; the tile decode is
+the only Python stage.
 """
 
 from __future__ import annotations
 
 from typing import Iterator
 
-import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
@@ -35,117 +26,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import image_codec
-
-
-def _gather(grid: np.ndarray, ix: np.ndarray, iy: np.ndarray) -> np.ndarray:
-    """grid[iy, ix] with out-of-range → NaN (float64 result)."""
-    h, w = grid.shape
-    ok = (ix >= 0) & (ix < w) & (iy >= 0) & (iy < h)
-    out = np.full(len(ix), np.nan)
-    if ok.any():
-        out[ok] = grid[iy[ok], ix[ok]].astype(np.float64)
-    return out
-
-
-def _z_to_int32(vals: np.ndarray) -> pd.array:
-    """float64-with-NaN → nullable Int32, fully vectorized (a per-row
-    Python comprehension here ran once per output row in the kNN and
-    streaming gathers)."""
-    mask = np.isnan(vals)
-    ints = np.where(mask, 0, vals).astype(np.int32)
-    return pd.arrays.IntegerArray(ints, mask)
-
-
-def broadcast_grids(images_df: DataFrame):
-    """Decode every tile once (executor-side) and broadcast the grid dict.
-
-    Build once per tile snapshot and pass to repeated queries via the
-    operators' ``grids_bc`` parameter — a replay service would hold
-    this for the life of the tile snapshot instead of re-collecting
-    per query.
-    """
-    spark = images_df.sparkSession
-    decoded = images_df.select("image_id", "bytes", "fmt", "w", "h").mapInPandas(
-        _decode_batches, schema="image_id string, grid binary, w int, h int"
-    ).collect()
-    grids = {
-        r["image_id"]: np.frombuffer(r["grid"], dtype="<i2").reshape(r["h"], r["w"])
-        for r in decoded
-    }
-    return spark.sparkContext.broadcast(grids)
-
-
-def gather_z_broadcast(df: DataFrame, images_df: DataFrame, z_col: str = "z",
-                       grids_bc=None) -> DataFrame:
-    """Broadcast-grid gather: no shuffle, one decode per tile.
-
-    ``df`` must carry ``image_id, ix, iy``; all columns pass through.
-    """
-    bc = grids_bc if grids_bc is not None else broadcast_grids(images_df)
-    out_schema = T.StructType(df.schema.fields + [T.StructField(z_col, T.IntegerType(), True)])
-
-    def gather(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        g = bc.value
-        for pdf in batches:
-            z = np.full(len(pdf), np.nan)
-            if len(pdf):
-                for img, sub in pdf.groupby("image_id", sort=False):
-                    grid = g.get(img)
-                    if grid is None:
-                        continue
-                    z[sub.index.to_numpy()] = _gather(
-                        grid, sub["ix"].to_numpy(np.int64), sub["iy"].to_numpy(np.int64)
-                    )
-            pdf = pdf.copy()
-            pdf[z_col] = _z_to_int32(z)
-            yield pdf
-
-    return df.mapInPandas(gather, schema=out_schema)
-
-
-def _decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        grids = [
-            image_codec.decode(b, f, int(w), int(h)).astype("<i2").tobytes()
-            for b, f, w, h in zip(pdf["bytes"], pdf["fmt"], pdf["w"], pdf["h"])
-        ]
-        yield pd.DataFrame(
-            {"image_id": pdf["image_id"], "grid": grids, "w": pdf["w"], "h": pdf["h"]}
-        )
-
-
-def gather_z_cogroup(df: DataFrame, images_df: DataFrame, z_col: str = "z") -> DataFrame:
-    """Cogrouped gather: tile bytes shuffle once per tile, scale path."""
-    # rename every image-side column: df may descend from images_df (the
-    # tile index does), which would otherwise trip Spark's
-    # ambiguous-self-join analysis on the semi-join and the cogroup
-    touched = df.select(F.col("image_id").alias("touched_id")).distinct()
-    imgs = images_df.select(
-        F.col("image_id").alias("img_id"),
-        F.col("bytes").alias("img_bytes"),
-        F.col("fmt").alias("img_fmt"),
-        F.col("w").alias("img_w"),
-        F.col("h").alias("img_h"),
-    )
-    pruned = imgs.join(touched, imgs["img_id"] == touched["touched_id"], "left_semi")
-    out_schema = T.StructType(df.schema.fields + [T.StructField(z_col, T.IntegerType(), True)])
-
-    def sample(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        out = left.copy()
-        if len(right) == 0 or len(left) == 0:
-            out[z_col] = pd.array([None] * len(left), dtype="Int32")
-            return out
-        r = right.iloc[0]
-        grid = image_codec.decode(r["img_bytes"], r["img_fmt"], int(r["img_w"]), int(r["img_h"]))
-        z = _gather(grid, left["ix"].to_numpy(np.int64), left["iy"].to_numpy(np.int64))
-        out[z_col] = _z_to_int32(z)
-        return out
-
-    return (
-        df.groupBy("image_id")
-        .cogroup(pruned.groupBy("img_id"))
-        .applyInPandas(sample, schema=out_schema)
-    )
 
 
 def pixel_index(images_df: DataFrame) -> DataFrame:
@@ -193,12 +73,3 @@ def gather_z_jvm(df: DataFrame, z_col: str = "z") -> DataFrame:
         F.element_at(F.col("pix"), (F.col("iy") * F.col("w") + F.col("ix") + 1).cast("int")),
     )
     return df.withColumn(z_col, z.cast("int")).drop("pix")
-
-
-def gather_z(df: DataFrame, images_df: DataFrame, z_col: str = "z",
-             strategy: str = "broadcast", grids_bc=None) -> DataFrame:
-    if strategy == "broadcast":
-        return gather_z_broadcast(df, images_df, z_col, grids_bc=grids_bc)
-    if strategy == "cogroup":
-        return gather_z_cogroup(df, images_df, z_col)
-    raise ValueError(f"unknown gather strategy {strategy!r}")

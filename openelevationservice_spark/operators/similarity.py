@@ -25,7 +25,6 @@ from __future__ import annotations
 import hashlib
 import itertools
 import math
-import os
 
 import numpy as np
 import pandas as pd
@@ -87,9 +86,9 @@ def topk_per_query(scored: DataFrame, k: int, query_id: str, corpus_id: str,
     frame and ran ``sort_values`` + ``groupby().head`` per batch, whose
     object churn in the shared heap was the measured 2→8-core scaling
     regression (BENCH/SCALE.md r4 A/B: the numpy cut is ~2× faster per
-    batch and restores ann_topk eff ≥ its r2 level).  ``impl="pandas"``
-    keeps the old kernel selectable for A/B runs; key columns with
-    object dtype also fall back to it (lexsort needs primitive keys).
+    batch and restores ann_topk eff ≥ its r2 level).  Key columns with
+    object dtype (string ids) take the pandas cut instead, chosen from
+    the first non-empty batch — lexsort needs primitive keys.
 
     ``scored`` should be pre-projected to (query_id, corpus_id, sim):
     extra columns are carried through the Arrow boundary and cost
@@ -97,7 +96,6 @@ def topk_per_query(scored: DataFrame, k: int, query_id: str, corpus_id: str,
     """
     schema = scored.schema
     cols = [f.name for f in schema.fields]
-    impl = os.environ.get("OES_TOPK_PRUNE", "numpy")
 
     def _cut_pandas(both: pd.DataFrame) -> pd.DataFrame:
         both = both.sort_values([query_id, sim_col, corpus_id],
@@ -147,9 +145,7 @@ def topk_per_query(scored: DataFrame, k: int, query_id: str, corpus_id: str,
             arrs = {c: a[keep] for c, a in arrs.items()}
         yield pd.DataFrame(arrs) if arrs is not None else pd.DataFrame(columns=cols)
 
-    pruned = scored.mapInPandas(
-        prune_pandas if impl == "pandas" else prune_numpy, schema=schema
-    )
+    pruned = scored.mapInPandas(prune_numpy, schema=schema)
     w2 = Window.partitionBy(query_id).orderBy(F.desc(sim_col), F.col(corpus_id))
     return (
         pruned.withColumn("rank", F.row_number().over(w2))

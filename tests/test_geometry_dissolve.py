@@ -162,3 +162,33 @@ def test_batch_invariants_matches_per_band():
         assert r["euler4"] == e4 and r["euler8"] == e8
         if not neg[b]:
             assert r["area_px"] == a2[b] // 2
+
+
+def test_invariants_partition_slices_oversized_batches():
+    """An Arrow batch holding more bands than the 16-bit band field of
+    the batched key (maxRecordsPerBatch is a deployment setting) is
+    sliced, not rejected: 65,537 single-cell bands in ONE batch each
+    come back as one unit square (area 1, Euler numbers 1)."""
+    import pandas as pd
+
+    from openelevationservice_spark.operators.color import (
+        _SUB_GX_SHIFT,
+        _SUB_GY_SHIFT,
+        _invariants_partition_subs,
+    )
+
+    n = (1 << 16) + 1
+    i = np.arange(n, dtype=np.int64)
+    gx, gy = 3 * (i % 1000), 3 * (i // 1000)
+    packed = ((gy << _SUB_GY_SHIFT) | (gx << _SUB_GX_SHIFT) | 1).astype("<i8")
+    batch = pd.DataFrame({
+        "poly_id": np.zeros(n, dtype=np.int64),
+        "height_base": i,
+        "subs": [[packed[k:k + 1].tobytes()] for k in range(n)],
+    })
+    frames = list(_invariants_partition_subs(iter([batch])))
+    assert len(frames) == 2
+    out = pd.concat(frames, ignore_index=True)
+    assert out["height_base"].tolist() == i.tolist()
+    assert (out["area_px"] == 1).all()
+    assert (out["euler4"] == 1).all() and (out["euler8"] == 1).all()

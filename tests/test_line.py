@@ -11,6 +11,7 @@ from openelevationservice_spark.operators.line import (
     line_vertices_elevation,
 )
 from openelevationservice_spark.sources import fixtures as fx
+from tests.references import assert_densify_matches_reference
 
 
 def densify_oracle(x1, y1, x2, y2):
@@ -97,12 +98,12 @@ def test_reference_golden_line_vertex_count(spark):
     assert list(out.sort_values("seq")["seq"]) == [1, 2]
 
 
-@pytest.mark.parametrize("gather_strategy", ["broadcast", "cogroup"])
-def test_line_vertices_match_oracle(spark, world, images, gather_strategy):
+@pytest.mark.parametrize("index_strategy", ["broadcast", "shuffle"])
+def test_line_vertices_match_oracle(spark, world, images, index_strategy):
     pdf = fx.make_lines_pdf(world, n=30)
     out = (
         line_vertices_elevation(spark.createDataFrame(pdf), images,
-                                gather_strategy=gather_strategy)
+                                index_strategy=index_strategy)
         .toPandas()
         .sort_values(["line_id", "seq"])
     )
@@ -129,16 +130,10 @@ def test_line_assembly_ordered(spark, world, images):
             d_prev = d
 
 
-def test_densify_arrow_equals_sql(spark):
-    """The Arrow densify and the array-expression densify are the same
-    operator: identical rows bit-for-bit on a mixed batch (normal,
-    short, axis-aligned, zero-length lines)."""
-    import pandas as pd
-    from openelevationservice_spark.operators.line import (
-        densify_lines,
-        densify_lines_arrow,
-    )
-
+def test_densify_equals_numpy_reference(spark):
+    """The whole-stage-codegen densify matches the numpy reference
+    (tests/references.py) bit-for-bit on a mixed batch: normal, short,
+    axis-aligned and zero-length lines."""
     pdf = pd.DataFrame({
         "line_id": [1, 2, 3, 4, 5],
         "x1": [13.33, 13.33, 13.30, 13.31, 13.34],
@@ -146,38 +141,6 @@ def test_densify_arrow_equals_sql(spark):
         "x2": [13.34, 13.33, 13.30, 13.3101, 13.34001],
         "y2": [38.12, 38.11, 38.14, 38.12, 38.13],
     })
-    lines = spark.createDataFrame(pdf)
-    a = densify_lines_arrow(lines).toPandas().sort_values(
-        ["line_id", "seq"]).reset_index(drop=True)
-    b = densify_lines(lines).toPandas().sort_values(
-        ["line_id", "seq"]).reset_index(drop=True)
-    assert len(a) == len(b) > 5
-    for c in a.columns:
-        assert (a[c].to_numpy() == b[c].to_numpy()).all(), c
-
-
-def test_densify_explode_equals_arrow(spark):
-    """The whole-stage-codegen densify is the same operator as the Arrow
-    twin: identical rows bit-for-bit on a mixed batch."""
-    import pandas as pd
-    from openelevationservice_spark.operators.line import (
-        densify_lines_arrow,
-        densify_lines_explode,
-    )
-
-    pdf = pd.DataFrame({
-        "line_id": [1, 2, 3, 4, 5],
-        "x1": [13.33, 13.33, 13.30, 13.31, 13.34],
-        "y1": [38.11, 38.11, 38.10, 38.12, 38.13],
-        "x2": [13.34, 13.33, 13.30, 13.3101, 13.34001],
-        "y2": [38.12, 38.11, 38.14, 38.12, 38.13],
-    })
-    lines = spark.createDataFrame(pdf)
-    cols = ["line_id", "x1", "y1", "seq", "x", "y", "dist"]
-    a = densify_lines_arrow(lines).select(cols).toPandas().sort_values(
-        ["line_id", "seq"]).reset_index(drop=True)
-    b = densify_lines_explode(lines).select(cols).toPandas().sort_values(
-        ["line_id", "seq"]).reset_index(drop=True)
-    assert len(a) == len(b) > 5
-    for c in cols:
-        assert (a[c].to_numpy() == b[c].to_numpy()).all(), c
+    got = densify_lines(spark.createDataFrame(pdf)).toPandas()
+    assert len(got) > 5
+    assert_densify_matches_reference(got, pdf)

@@ -9,7 +9,7 @@ import pytest
 from openelevationservice_spark.plans import exec as ex
 from openelevationservice_spark.operators.point import point_elevation
 from openelevationservice_spark.operators.line import (
-    densify_lines_arrow,
+    densify_lines,
     line_vertices_elevation,
 )
 from openelevationservice_spark.operators.polygon import polygon_pixels
@@ -49,8 +49,10 @@ def test_point_plan_is_broadcast_equi_join(spark, images, pts):
 def test_densify_plan_has_no_exchange(spark):
     lines = spark.createDataFrame(pd.DataFrame({
         "line_id": [1], "x1": [13.2], "y1": [38.2], "x2": [13.21], "y2": [38.21]}))
-    plan = ex.explain_str(densify_lines_arrow(lines))
+    plan = ex.explain_str(densify_lines(lines))
     assert "Exchange" not in plan          # densify is shuffle-free
+    assert "MapInPandas" not in plan       # and pure JVM: no Arrow kernel
+    assert "EvalPython" not in plan
 
 
 def test_line_plan_shape(spark, images, pts):
@@ -102,7 +104,7 @@ def test_line_elevation_default_gather_is_jvm(spark, images):
     by default (round-4 verdict #1: the wrapper was missed when the
     defaults flipped).  Exactly one MapInPandas node (build-side tile
     decode; formatted explain prints each node twice — tree + detail); a
-    broadcast-grid gather would add a probe-side node."""
+    Python gather would add a probe-side node."""
     from openelevationservice_spark.operators.line import line_elevation
 
     lines = spark.createDataFrame(pd.DataFrame({

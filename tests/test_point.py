@@ -38,15 +38,11 @@ def images(spark, world):
     return df
 
 
-@pytest.mark.parametrize("gather_strategy,index_strategy", [
-    ("broadcast", "broadcast"), ("cogroup", "broadcast"),
-    ("jvm", "broadcast"), ("jvm", "shuffle")])
-def test_point_elevation_matches_oracle(spark, world, images, gather_strategy,
-                                        index_strategy):
+@pytest.mark.parametrize("index_strategy", ["broadcast", "shuffle"])
+def test_point_elevation_matches_oracle(spark, world, images, index_strategy):
     pdf = fx.make_points_pdf(world, n=300)
     pts = spark.createDataFrame(pdf)
-    out = point_elevation(pts, images, how="left", gather_strategy=gather_strategy,
-                          index_strategy=index_strategy)
+    out = point_elevation(pts, images, how="left", index_strategy=index_strategy)
     got = out.select("point_id", "image_id", "z").toPandas().sort_values("point_id")
 
     image, z, _, _ = numpy_point_oracle(

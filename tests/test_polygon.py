@@ -156,10 +156,42 @@ def test_color_features_cover_all_pixels(spark, world, images):
     assert set(feats.height_base) == set(banded.height_base)
 
 
+def centroid_mask_pixels(poly_id, ring, world):
+    """numpy reference of the pixel dump: every world pixel whose
+    centroid the ring covers (boundary inclusive) and whose
+    ``fixtures.z_field`` value is not NODATA, with the tile-caption
+    centroid arithmetic (ul + (i + 0.5)·PX)."""
+    from openelevationservice_spark.constants import TILE_PX
+    from openelevationservice_spark.functions.geometry import (
+        points_in_ring,
+        ring_to_arrays,
+    )
+
+    rx, ry = ring_to_arrays(ring)
+    i = np.arange(TILE_PX)
+    parts = []
+    for ty in range(world.ty0, world.ty0 + world.ny):
+        for tx in range(world.tx0, world.tx0 + world.nx):
+            cx = (WORLD_X0 + tx * TILE_DEG) + (i + 0.5) * PX
+            cy = (WORLD_Y0 - ty * TILE_DEG) - (i + 0.5) * PX
+            CX, CY = np.meshgrid(cx, cy)
+            GX, GY = np.meshgrid(tx * TILE_PX + i, ty * TILE_PX + i)
+            z = fx.z_field(GX, GY)
+            m = (points_in_ring(CX, CY, rx, ry).reshape(CX.shape)
+                 & (z != NODATA))
+            parts.append(pd.DataFrame({
+                "poly_id": poly_id, "gx": GX[m], "gy": GY[m],
+                "z": z[m].astype(np.int64), "x": CX[m], "y": CY[m],
+                "image_id": f"tile_{tx:05d}_{ty:05d}"}))
+    return pd.concat(parts, ignore_index=True)
+
+
 def test_pixel_runs_equal_pixel_rows(spark, world, images):
-    """The run-length-encoded kernel (rect fast path + JVM posexplode)
-    and the per-pixel kernel are the same operator — identical rows on
-    both a rectangle and a triangle (the general-PIP path)."""
+    """The run-length-encoded pixel dump (rect fast path, general PIP,
+    scanline runs, JVM posexplode, JVM coordinates) equals a numpy
+    centroid-in-ring mask over the fixture field — row for row and
+    bit for bit, on a rectangle (rect fast path) and a triangle (the
+    general PIP path)."""
     x0 = world.min_x + 0.1 * TILE_DEG
     y0 = world.max_y - 1.0 * TILE_DEG
     tri = [
@@ -168,18 +200,17 @@ def test_pixel_runs_equal_pixel_rows(spark, world, images):
         {"lon": x0, "lat": y0 + TILE_DEG},
         {"lon": x0, "lat": y0},
     ]
+    rect = bbox_ring(x0, y0, x0 + 0.7 * TILE_DEG, y0 + 0.9 * TILE_DEG)
     schema = "poly_id long, ring array<struct<lon:double, lat:double>>"
     polys = spark.createDataFrame(
-        pd.DataFrame({"poly_id": [0, 1],
-                      "ring": [tri, bbox_ring(x0, y0, x0 + 0.7 * TILE_DEG,
-                                              y0 + 0.9 * TILE_DEG)]}),
-        schema=schema)
+        pd.DataFrame({"poly_id": [0, 1], "ring": [tri, rect]}), schema=schema)
     key = ["poly_id", "gx", "gy"]
     cols = key + ["z", "x", "y", "image_id"]
-    a = (polygon_pixels(polys, images, emit="runs").select(cols)
+    a = (polygon_pixels(polys, images).select(cols)
          .toPandas().sort_values(key).reset_index(drop=True))
-    b = (polygon_pixels(polys, images, emit="rows").select(cols)
-         .toPandas().sort_values(key).reset_index(drop=True))
+    b = (pd.concat([centroid_mask_pixels(0, tri, world),
+                    centroid_mask_pixels(1, rect, world)])
+         .sort_values(key).reset_index(drop=True))
     assert len(a) == len(b) > 100
     for c in cols:
         assert (a[c].to_numpy() == b[c].to_numpy()).all(), c
@@ -239,11 +270,12 @@ def test_dissolve_bands_of_one_polygon_spread_across_tasks(spark, world, images)
 
 
 def test_runs_stats_equal_pixel_stats(spark, world, images):
-    """runs_stats (JVM array folds over scanline runs) must be
-    value-identical to polygon_stats over the exploded pixel rows —
-    including the double avg (exact integer sum / count in both)."""
+    """blob_stats (scalar per-pair min/max/sum/count beside the packed
+    run blobs) must be value-identical to polygon_stats over the
+    exploded pixel rows — including the double avg (exact integer sum /
+    count in both)."""
     from openelevationservice_spark.operators.polygon import (
-        polygon_pixel_runs, runs_stats,
+        blob_stats, polygon_pixel_run_blobs,
     )
 
     x0 = world.min_x + 0.1 * TILE_DEG
@@ -259,7 +291,7 @@ def test_runs_stats_equal_pixel_stats(spark, world, images):
                       "ring": [tri, bbox_ring(x0, y0, x0 + 0.7 * TILE_DEG,
                                               y0 + 0.9 * TILE_DEG)]}),
         schema="poly_id long, ring array<struct<lon:double, lat:double>>")
-    a = (runs_stats(polygon_pixel_runs(polys, images))
+    a = (blob_stats(polygon_pixel_run_blobs(polys, images))
          .toPandas().sort_values("poly_id").reset_index(drop=True))
     b = (polygon_stats(polygon_pixels(polys, images))
          .toPandas().sort_values("poly_id").reset_index(drop=True))
@@ -267,11 +299,32 @@ def test_runs_stats_equal_pixel_stats(spark, world, images):
     assert (a["avg_z"].to_numpy() == b["avg_z"].to_numpy()).all()
 
 
+def reference_bands(px: pd.DataFrame, num_ranges: int = NUM_RANGES):
+    """{(poly_id, height_base): (gx, gy)} from pixel rows, with the
+    reference band arithmetic (querybuilder.py:56-102) in numpy."""
+    bands = {}
+    for pid, g in px.groupby("poly_id"):
+        z = g["z"].to_numpy(np.int64)
+        mn, mx = int(z.min()), int(z.max())
+        range_div = (mx - mn + 1) / float(num_ranges)
+        hb = np.ceil(np.floor((z - mn) / range_div) * range_div + mn).astype(np.int64)
+        for h in np.unique(hb):
+            sel = hb == h
+            bands[(int(pid), int(h))] = (g["gx"].to_numpy(np.int64)[sel],
+                                         g["gy"].to_numpy(np.int64)[sel])
+    return bands
+
+
 def test_dissolve_subrun_shape_equals_pixel_shape(spark, world, images):
-    """The runs-resident dissolve (band-split subruns, r5 default) and
-    the exploded-pixel twin are the same operator: identical invariants
-    AND identical traced features on both a rectangle (rect fast path)
-    and a triangle (general PIP, runs split across bands)."""
+    """The blob-resident dissolve (band-split subruns, batched
+    invariants) equals bands traced one at a time from the pixel dump:
+    invariants against ring areas + connected-component labeling,
+    features against ``dissolve_pixels_rings`` — on a rectangle (rect
+    fast path) and a triangle (general PIP, runs split across bands)."""
+    from openelevationservice_spark.functions.dissolve import (
+        dissolve_pixels_rings,
+        label_counts,
+    )
     from openelevationservice_spark.operators.color import (
         polygon_color_invariants,
     )
@@ -289,25 +342,37 @@ def test_dissolve_subrun_shape_equals_pixel_shape(spark, world, images):
                       "ring": [tri, bbox_ring(x0, y0, x0 + 0.8 * TILE_DEG,
                                               y0 + 1.1 * TILE_DEG)]}),
         schema="poly_id long, ring array<struct<lon:double, lat:double>>")
+    bands = reference_bands(
+        polygon_pixels(polys, images).select("poly_id", "gx", "gy", "z").toPandas())
+
+    inv_rows, feat_rows = [], []
+    for (pid, hb), (gx, gy) in sorted(bands.items()):
+        rings_all, areas2 = dissolve_pixels_rings(gx, gy)
+        c4, c8, h4, h8 = label_counts(gx, gy)
+        inv_rows.append({"poly_id": pid, "height_base": hb,
+                         "area_px": sum(map(sum, areas2)) // 2,
+                         "euler4": c4 - h8, "euler8": c8 - h4})
+        for i, (rings, ra) in enumerate(zip(rings_all, areas2)):
+            feat_rows.append({
+                "poly_id": pid, "height_base": hb, "feature_idx": i,
+                "n_rings": len(rings), "area_px": sum(ra) / 2.0,
+                "rings": tuple(tuple((WORLD_X0 + x * PX, WORLD_Y0 - y * PX)
+                                     for x, y in ring) for ring in rings)})
+    want_inv = pd.DataFrame(inv_rows)
+    want_feat = pd.DataFrame(feat_rows)
 
     key = ["poly_id", "height_base"]
-    inv_new = (polygon_color_invariants(polys, images)
-               .toPandas().sort_values(key).reset_index(drop=True))
-    inv_old = (polygon_color_invariants(polys, images, cells_shape="pixels")
-               .toPandas().sort_values(key).reset_index(drop=True))
-    assert len(inv_new) == len(inv_old) > 10
-    pd.testing.assert_frame_equal(inv_new, inv_old)
+    inv = (polygon_color_invariants(polys, images)
+           .toPandas().sort_values(key).reset_index(drop=True))
+    assert len(inv) == len(want_inv) > 10
+    pd.testing.assert_frame_equal(inv, want_inv, check_dtype=False)
 
     fkey = key + ["feature_idx"]
-    f_new = (polygon_color_features(polys, images)
+    feats = (polygon_color_features(polys, images)
              .toPandas().sort_values(fkey).reset_index(drop=True))
-    f_old = (polygon_color_features(
-                 polys, images, pixels_df=polygon_pixels(polys, images))
-             .toPandas().sort_values(fkey).reset_index(drop=True))
-    assert len(f_new) == len(f_old) > 10
-    for c in ("n_rings", "area_px"):
-        assert (f_new[c].to_numpy() == f_old[c].to_numpy()).all(), c
-    # ring geometry: compare as canonical vertex tuples per feature
-    def canon(rings):
-        return tuple(tuple((p["x"], p["y"]) for p in ring) for ring in rings)
-    assert [canon(r) for r in f_new["rings"]] == [canon(r) for r in f_old["rings"]]
+    assert len(feats) == len(want_feat) > 10
+    for c in fkey + ["n_rings", "area_px"]:
+        assert (feats[c].to_numpy() == want_feat[c].to_numpy()).all(), c
+    got_rings = [tuple(tuple((p["x"], p["y"]) for p in ring) for ring in rings)
+                 for rings in feats["rings"]]
+    assert got_rings == list(want_feat["rings"])

@@ -109,24 +109,17 @@ def test_dissolve_preserves_area_and_closes_rings(pixels):
     st.floats(13.0, 14.0, allow_nan=False),
     st.floats(38.0, 39.0, allow_nan=False),
 ), min_size=1, max_size=8))
-def test_densify_implementations_agree(spark, lines):
-    """The Arrow densify and the array-expression densify are the same
-    operator on arbitrary segments (incl. zero-length and near-seam)."""
+def test_densify_matches_numpy_reference(spark, lines):
+    """The Spark densify and the numpy reference (tests/references.py)
+    are the same operator on arbitrary segments (incl. zero-length and
+    near-seam)."""
     import pandas as pd
-    from openelevationservice_spark.operators.line import (
-        densify_lines,
-        densify_lines_arrow,
-    )
+    from openelevationservice_spark.operators.line import densify_lines
+    from tests.references import assert_densify_matches_reference
 
     pdf = pd.DataFrame(
         [(i, x1, y1, x2, y2) for i, (x1, y1, x2, y2) in enumerate(lines)],
         columns=["line_id", "x1", "y1", "x2", "y2"],
     )
-    df = spark.createDataFrame(pdf)
-    a = densify_lines_arrow(df).toPandas().sort_values(
-        ["line_id", "seq"]).reset_index(drop=True)
-    b = densify_lines(df).toPandas().sort_values(
-        ["line_id", "seq"]).reset_index(drop=True)
-    assert len(a) == len(b)
-    for c in a.columns:
-        assert (a[c].to_numpy() == b[c].to_numpy()).all(), c
+    got = densify_lines(spark.createDataFrame(pdf)).toPandas()
+    assert_densify_matches_reference(got, pdf)

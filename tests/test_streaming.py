@@ -33,6 +33,11 @@ def test_streaming_point_elevation(spark, tmp_path, world):
     images = spark.createDataFrame(fx.make_images_pdf(world), schema=fx.IMAGES_SCHEMA)
     stream = spark.readStream.schema(POINTS_STREAM_SCHEMA).parquet(str(src))
     out = streaming_point_elevation(stream, images)
+    # the pixel index the stream builds is persisted under a lease, so
+    # micro-batches reuse the decoded tiles
+    from openelevationservice_spark.plans import cache
+    app = spark.sparkContext.applicationId
+    assert (app, "streaming_pix_index") in cache._LEASES
     q = (out.writeStream.outputMode("append").format("memory")
          .queryName("stream_pts").start())
     try:
@@ -110,9 +115,11 @@ def test_windowed_counts(spark, tmp_path, world):
 
 
 def test_streaming_point_elevation_jvm_gather(spark, tmp_path, world):
-    """The stream path composes with the batch jvm pixel-index gather
-    (codegen element_at, no Python in the hot path) — the 10^12-image
-    shape where the Arrow broadcast-grid gather no longer fits."""
+    """The stream path runs the batch jvm pixel-index gather (codegen
+    element_at, no Python in the hot path) over a caller-persisted
+    index, here with the shuffle index join — the regime where the
+    index no longer fits the broadcast threshold — and matches the
+    batch default's z."""
     from openelevationservice_spark.operators.sample import pixel_index
 
     src = tmp_path / "pts_jvm"
@@ -123,7 +130,7 @@ def test_streaming_point_elevation_jvm_gather(spark, tmp_path, world):
     pix.count()
     try:
         stream = spark.readStream.schema(POINTS_STREAM_SCHEMA).parquet(str(src))
-        out = streaming_point_elevation(stream, images, gather_strategy="jvm",
+        out = streaming_point_elevation(stream, images, index_strategy="shuffle",
                                         pix_index_df=pix)
         q = (out.writeStream.outputMode("append").format("memory")
              .queryName("stream_pts_jvm").start())
@@ -134,11 +141,10 @@ def test_streaming_point_elevation_jvm_gather(spark, tmp_path, world):
         got = spark.sql("select * from stream_pts_jvm").toPandas()
         assert len(got) == len(pdf)
         assert got.z.notna().all()
-        # parity with the broadcast-gather batch path
         from openelevationservice_spark.operators.point import point_elevation
         batch = point_elevation(
             spark.createDataFrame(pdf[["point_id", "lon", "lat"]]), images,
-            how="left", gather_strategy="broadcast",
+            how="left",
         ).toPandas()
         m = got.merge(batch[["point_id", "z"]], on="point_id", suffixes=("_s", "_b"))
         assert (m.z_s == m.z_b).all()
