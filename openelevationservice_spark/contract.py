@@ -1023,8 +1023,7 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
     out = similarity.lsh_ann_topk(emb, queries, k=3, n_planes=_LSH_PLANES,
-                                  probe_bits=_LSH_PROBE_BITS,
-                                  method="jvm", dim=_EMB_DIM)
+                                  probe_bits=_LSH_PROBE_BITS)
     return out.select("q_id", F.col("rank").cast("long").alias("rank"),
                       "vec_id", F.round("sim", 6).alias("sim"))
 
@@ -1083,7 +1082,7 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cent = similarity.ivf_seed_centroids(emb, "embedding", "vec_id", _IVF_K)
     out = similarity.ivf_topk(emb, queries, k=3, n_centroids=_IVF_K,
-                              nprobe=_IVF_NPROBE, centroids=cent, method="jvm")
+                              nprobe=_IVF_NPROBE, centroids=cent)
     return out.select("q_id", F.col("rank").cast("long").alias("rank"),
                       "vec_id", F.round("sim", 6).alias("sim"))
 

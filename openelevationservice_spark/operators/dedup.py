@@ -2,20 +2,22 @@
 
 Not part of the reference (a request/response elevation service), but
 first-class for the 100 TB engine: exact dedup, MinHash+LSH candidate
-generation, n-gram Jaccard verification, and SimHash — all pure
-DataFrame/Column expressions (JVM-side, whole-stage codegen; no Python
-in any hot path), each with an ANSI-SQL twin for the DuckDB oracle.
+generation, connected-component clustering, n-gram Jaccard verification
+and SimHash, each checked by an ANSI-SQL DuckDB oracle.  Every operator
+has one physical shape (connected components picks its driver or
+distributed path from the pair count).  All of them are DataFrame/Column
+expressions (JVM-side, whole-stage codegen) except the MinHash
+signature, which is one ``mapInPandas`` kernel: shingle construction and
+md5 per shingle through interpreted higher-order Column functions cost
+about an order of magnitude more than python ``hashlib`` behind a single
+Arrow boundary.
 
-Hash choice: md5 (available and bit-identical in Spark and DuckDB);
-MinHash hashes each distinct shingle ONCE (md5 hex prefix → 32-bit int,
-the same conv trick the simhash oracle uses) and derives the n hash
-functions as integer permutations ``h_i(x) = (a_i*x + b_i) mod 2^31-1``
-— the standard universal min-wise family.  The former design took the
-lexicographic min over n *seeded md5 hex strings* per shingle; that is
-also a valid family but allocates n strings per shingle, and the string
-churn was the measured scaling limiter at volume (single-JVM allocator
-contention, BENCH/BASELINE.md).  The permutation family is pure codegen
-int arithmetic after one md5 — and equally oracle-expressible.
+Hash choice: md5 (available and bit-identical in Spark and DuckDB).
+MinHash hashes each shingle once (md5 hex prefix → 32-bit int, the same
+conv trick the simhash oracle uses) and derives the n hash functions as
+integer permutations ``h_i(x) = (a_i*x + b_i) mod 2^31-1`` — the
+standard universal min-wise family, int64 arithmetic after one md5 and
+expressible in the oracle SQL.
 """
 
 from __future__ import annotations
@@ -48,14 +50,6 @@ def minhash_perm_consts(n_hashes: int) -> list[tuple[int, int]]:
     return out
 
 
-def shingle_base_hash(sh: Column) -> Column:
-    """32-bit unsigned int from the md5 hex prefix of a shingle.
-
-    DuckDB twin: ``('0x' || substr(md5(sh), 1, 8))::BIGINT`` (the same
-    expression pair simhash uses for word hashes)."""
-    return F.conv(F.substring(F.md5(sh), 1, 8), 16, 10).cast("bigint")
-
-
 def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Hash-groupBy exact dedup: one row per distinct text.
 
@@ -84,56 +78,25 @@ def word_shingles(text: Column, n: int) -> Column:
 
 
 def minhash_signature(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-                      n_hashes: int = 8, shingle_n: int = 3,
-                      impl: str = "kernel") -> DataFrame:
+                      n_hashes: int = 8, shingle_n: int = 3) -> DataFrame:
     """(id, sig: array<bigint>) — per-doc MinHash signature.
 
     sig[i] = min over shingles of (a_i * md5prefix(shingle) + b_i) mod
     2^31-1 (see module docstring for the family).  MIN is
     duplicate-invariant, so no DISTINCT is needed over the shingles.
-    Docs with no shingle produce no row in every shape.
+    Docs with no shingle (null, or fewer than ``shingle_n`` words)
+    produce no row.
 
-    ``impl="kernel"`` (default, r6): shingling + hashing + the n mins
-    run in an Arrow kernel — python ``str.split``/``" ".join`` +
-    ``hashlib.md5`` per shingle and one ``np.minimum.reduceat`` per
-    hash function (guide §4.2: the Column shapes evaluate the shingle
-    construction and md5 through interpreted higher-order functions at
-    ~an order of magnitude more per-shingle cost; measured full-LSH
-    2.58 → 1.51 s at a ×16 corpus, gap growing with volume).
-    Exactness: python ``split(" ")`` keeps leading/empty/trailing
-    tokens exactly like Spark's regex split with limit −1, ``join``
-    matches ``concat_ws`` over non-null strings, and the int64
-    permutation arithmetic is overflow-audited (module docstring) —
-    signatures are frame-identical across all three impls (tested).
-
-    ``impl="arrays"`` is the exchange-free pure-Column twin (base
-    hashes + mins as array transforms, zero exchanges);
-    :func:`minhash_signature_explode` the explode + map-side-combine
-    twin (codegen md5, one exchange) whose shape mirrors the SQL
-    oracle.
+    One ``mapInPandas`` kernel, no exchange: per Arrow batch, python
+    ``str.split``/``" ".join`` build the shingles, ``hashlib.md5``
+    hashes each one, and one ``np.minimum.reduceat`` per hash function
+    takes the per-doc mins.  Python ``split(" ")`` keeps leading, empty
+    and trailing tokens exactly like Spark's regex split with limit -1
+    (:func:`word_shingles`), ``join`` matches ``concat_ws`` over
+    non-null strings, and the int64 permutation arithmetic is
+    overflow-audited (module docstring), so the signatures equal the SQL
+    oracle's bit for bit.
     """
-    if impl == "arrays":
-        xs = F.transform(word_shingles(F.col(text_col), shingle_n),
-                         lambda s: shingle_base_hash(s))
-        # Shingle-bearing docs filter on the RAW column (size(words) >=
-        # n ⟺ the shingle array is nonempty): a filter on the derived
-        # _xs column would be pushed below the projection by
-        # substitution, evaluating the whole md5-transform subtree
-        # twice per row (the guide §4.4 duplication, expression-level —
-        # measured 2× on the bench corpus).
-        d = (df.filter(F.size(F.split(F.col(text_col), " ")) >= shingle_n)
-             .select(F.col(id_col), xs.alias("_xs")))
-        mins = [
-            F.array_min(F.transform(
-                "_xs", lambda x: (F.lit(a) * x + F.lit(b)) % F.lit(MERSENNE31)
-            )).alias(f"h{i}")
-            for i, (a, b) in enumerate(minhash_perm_consts(n_hashes))
-        ]
-        d = d.select(id_col, *mins)
-        return d.select(id_col, F.array(*[F.col(f"h{i}")
-                                          for i in range(n_hashes)]).alias("sig"))
-    if impl != "kernel":
-        raise ValueError(f"unknown minhash_signature impl {impl!r}")
     consts = minhash_perm_consts(n_hashes)
     a_vec = np.array([a for a, _ in consts], dtype=np.int64)
     b_vec = np.array([b for _, b in consts], dtype=np.int64)
@@ -174,25 +137,6 @@ def minhash_signature(df: DataFrame, id_col: str = "doc_id", text_col: str = "te
             yield pd.DataFrame({id_col: pd.Series(ids), "sig": list(sigs)})
 
     return df.select(id_col, text_col).mapInPandas(kernel, out_schema)
-
-
-def minhash_signature_explode(df: DataFrame, id_col: str = "doc_id",
-                              text_col: str = "text",
-                              n_hashes: int = 8, shingle_n: int = 3) -> DataFrame:
-    """Explode + groupBy twin of :func:`minhash_signature` (codegen md5
-    per exploded shingle row, n parallel partial-agg mins, one
-    exchange) — the right shape when per-core CPU, not exchange count,
-    is the binding constraint."""
-    sh = df.select(
-        F.col(id_col), F.explode(word_shingles(F.col(text_col), shingle_n)).alias("sh")
-    )
-    shx = sh.select(F.col(id_col), shingle_base_hash(F.col("sh")).alias("_x"))
-    aggs = [
-        F.min((F.lit(a) * F.col("_x") + F.lit(b)) % F.lit(MERSENNE31)).alias(f"h{i}")
-        for i, (a, b) in enumerate(minhash_perm_consts(n_hashes))
-    ]
-    sig = shx.groupBy(id_col).agg(*aggs)
-    return sig.select(id_col, F.array(*[F.col(f"h{i}") for i in range(n_hashes)]).alias("sig"))
 
 
 def lsh_candidate_pairs(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
@@ -373,71 +317,10 @@ def _driver_union_find(rows) -> dict:
     return {v: comp_min[find(v)] for v in parent}
 
 
-def _cc_alternating_labels(p: DataFrame, max_iters: int):
-    """Alternating large-star/small-star CC (Kiveris et al., "Connected
-    Components in MapReduce and Beyond") over the distinct pair list.
-
-    Converges in O(log d) rounds on adversarial long-chain graphs where
-    min-label propagation needs O(d) — the robustness path for graphs
-    whose components are NOT near-cliques.  Each round costs two
-    groupBy exchanges (vs one for label propagation), so the default
-    stays label propagation: near-dup clusters have diameter 2-3 and
-    pay fewer shuffles there.
-
-    large-star: every node's bigger neighbors re-attach to the minimum
-    of its neighborhood (including itself); small-star: every node and
-    its smaller neighbors attach to the smallest of them.  At the
-    fixpoint the edge set is a star per component rooted at the
-    component minimum.  Returns (labels(_v, _lbl), rounds) — labels
-    cover edge endpoints only, roots included.
-    """
-    e = (p.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
-         .filter(F.col("u") != F.col("v")).distinct().localCheckpoint())
-    rounds = 0
-    for it in range(max_iters):
-        rounds = it + 1
-        # large-star
-        sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        mins = (sym.groupBy("u").agg(F.min("v").alias("_mn"))
-                .select("u", F.least("u", "_mn").alias("m")))
-        large = (sym.join(mins, "u")
-                 .filter(F.col("v") > F.col("u"))
-                 .select(F.col("v").alias("u"), F.col("m").alias("v"))
-                 .filter(F.col("u") != F.col("v")).distinct())
-        # small-star over edges oriented (big u, small v)
-        nbr = large.select(F.greatest("u", "v").alias("u"),
-                           F.least("u", "v").alias("v"))
-        mins2 = nbr.groupBy("u").agg(F.min("v").alias("m"))
-        new_e = (
-            nbr.join(mins2, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .unionByName(mins2.select(F.col("u"), F.col("m").alias("v")))
-            .distinct().localCheckpoint()
-        )
-        # exact fixpoint: both sides are distinct sets with all (u, v)
-        # oriented u > v, so set equality = equal counts + empty except
-        if (new_e.count() == e.count()
-                and new_e.exceptAll(e).limit(1).count() == 0):
-            e = new_e
-            return (
-                e.select(F.col("u").alias("_v"), F.col("v").alias("_lbl"))
-                .unionByName(e.select(F.col("v").alias("_v"),
-                                      F.col("v").alias("_lbl")))
-                .distinct(),
-                rounds,
-            )
-        e = new_e
-    raise RuntimeError(
-        f"alternating connected_components did not converge in {max_iters} rounds"
-    )
-
-
 def connected_components(pairs: DataFrame, ids: DataFrame,
                          id_col: str = "doc_id",
                          max_iters: int = 50,
                          driver_max_pairs: int = CC_DRIVER_MAX_PAIRS,
-                         algorithm: str = "label",
                          with_sizes: bool = False,
                          ids_unique: bool = False) -> DataFrame:
     """Duplicate-cluster assignment: (id, rep_id = min id of its
@@ -445,21 +328,20 @@ def connected_components(pairs: DataFrame, ids: DataFrame,
     turns candidate PAIRS into dedup GROUPS (keep one representative
     per cluster) in a production pipeline.
 
-    Iterative min-label propagation, the standard distributed CC shape:
-    every round each node takes the min label over itself and its
+    The pair count picks one of two paths: at most ``driver_max_pairs``
+    pairs run union-find on the driver (the fast path below); larger
+    graphs run iterative min-label propagation, the standard distributed
+    CC shape: every round each node takes the min label over itself and its
     neighbors (one shuffle per round); rounds needed = graph diameter,
     which for near-dup clusters is tiny (duplicate groups are
     near-cliques).  Each round ``localCheckpoint``s the label table —
     without it the self-referential plan grows exponentially — and
     convergence is an exact fixpoint test (count of changed labels,
-    driver-side loop like GraphX/GraphFrames CC).  For adversarial
-    long-chain graphs pass ``algorithm="alternating"`` — the
-    large-star/small-star variant (:func:`_cc_alternating_labels`)
-    converges in O(log d) rounds at two exchanges per round; near-dup
-    clustering defaults to label propagation (diameter 2-3, one
-    exchange per round).
+    driver-side loop like GraphX/GraphFrames CC).  A long chain needs
+    as many rounds as its length; ``max_iters`` bounds them and the loop
+    raises if the labels have not converged by then.
 
-    The fixpoint is the per-component min id — method-independent, which
+    The fixpoint is the per-component min id — path-independent, which
     is what lets a recursive-CTE SQL oracle verify it exactly.
 
     The propagation loop runs over EDGE ENDPOINTS only: a node with no
@@ -490,7 +372,7 @@ def connected_components(pairs: DataFrame, ids: DataFrame,
     ``with_sizes=True`` adds ``cluster_size`` (count of the id's
     component, singletons = 1).  On the fast path the sizes are a
     Counter over the driver-resident labels and ride the SAME broadcast
-    table — no extra exchange; the distributed paths fall back to one
+    table — no extra exchange; the distributed loop falls back to one
     window over ``rep_id`` (the r5 shape).  Values are identical either
     way: every cluster member is an edge endpoint, so counting label
     occurrences counts the component.
@@ -550,20 +432,6 @@ def connected_components(pairs: DataFrame, ids: DataFrame,
             .select(F.col("_v").alias(id_col),
                     F.coalesce(F.col("_lbl"), F.col("_v")).alias("rep_id"))
         )
-    if algorithm == "alternating":
-        try:
-            labels, _rounds = _cc_alternating_labels(p, max_iters)
-        finally:
-            if own_p:
-                p.unpersist()
-        res = (
-            nodes.join(labels, "_v", "left")
-            .select(F.col("_v").alias(id_col),
-                    F.coalesce(F.col("_lbl"), F.col("_v")).alias("rep_id"))
-        )
-        return _with_window_sizes(res, id_col) if with_sizes else res
-    if algorithm != "label":
-        raise ValueError(f"unknown connected_components algorithm {algorithm!r}")
     # both directions; propagation includes the node's own label
     e = (
         p.select(F.col("id_a").alias("_v"), F.col("id_b").alias("_w"))
@@ -652,7 +520,7 @@ def dedup_clusters(df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
     pairs = lsh_candidate_pairs(df, id_col, text_col, n_hashes, bands, shingle_n)
     # sizes ride the CC result: on the driver fast path they come off
     # the same broadcast labels table (no window exchange+sort at all);
-    # the distributed paths keep the one-exchange window shape
+    # the distributed loop keeps the one-exchange window shape
     # ids_unique: the corpus contract is one row per document, so the
     # defensive distinct over node ids is a no-op exchange here
     return connected_components(pairs, df.select(id_col), id_col,

@@ -1,17 +1,21 @@
 """Similarity search over embedding columns (array<float>).
 
-Brute-force cosine top-k as the exact baseline (JVM-side
-``zip_with``/``aggregate`` fold — no Python), LSH and IVF bucketed
-variants as the approximate scale paths (candidate joins are equi-joins
-on bucket/list keys, never cross joins), and an **exact** all-pairs
-nearest-neighbor built on IVF triangle-inequality pruning
-(:func:`exact_nn`) — the scale-safe embedding near-dup operator.
+Brute-force cosine top-k as the exact baseline (one ``mapInArrow``
+scoring + prune kernel), LSH and IVF bucketed variants as the
+approximate scale paths (candidate joins are equi-joins on bucket/list
+keys, never cross joins), and an **exact** all-pairs nearest-neighbor
+built on IVF triangle-inequality pruning (:func:`exact_nn`) — the
+scale-safe embedding near-dup operator.  Each operator has one physical
+shape, and it is the shape the DuckDB oracle checks.
 
 Determinism: LSH hyperplanes and IVF centroids are derived from md5 /
 deterministic k-means, so an external engine (the DuckDB oracle) can
-reproduce bucketing bit-for-bit from injected literals.  All similarity
-values are sequential-fold doubles (same IEEE-754 result in the JVM, in
-DuckDB's ``list_reduce``, and in the reference semantics).
+reproduce bucketing bit-for-bit from injected literals.  Every dot
+product — similarity values, LSH plane signs, IVF centroid ranks — is a
+sequential-in-dimension fold of doubles, whether it runs as a Column
+fold in the JVM or as a numpy loop over the dimension in an Arrow
+kernel, so it has the same IEEE-754 result as DuckDB's
+``list_reduce``.
 
 Top-k extraction is two-stage: a shuffle-free per-partition prune
 keeps each partition's local top-k per query, the final per-query
@@ -157,7 +161,7 @@ def pack_vectors(df: DataFrame, vec_col: str = "embedding",
                  out_col: str | None = None,
                  dtype: str = "float32") -> DataFrame:
     """Replace an ``array<float/double>`` column with its fixed-width
-    little-endian packed ``binary`` twin.
+    little-endian packed ``binary`` encoding.
 
     At scale the embedding column is the transfer bottleneck of every
     scoring kernel: Arrow serialization of ``list<double>`` rows writes
@@ -184,10 +188,9 @@ def _unpack_binary(arr: "pa.Array", dim: int, np_dtype: np.dtype) -> np.ndarray:
     """View a fixed-width packed ``binary`` Arrow column as an (n, dim)
     matrix straight off the Arrow buffers — ZERO per-row python objects.
 
-    The ``mapInPandas`` conversion of a binary column materializes one
-    python ``bytes`` object per row (n allocations + a second copy in
-    the kernel's ``b"".join``); this reads the offsets buffer once and
-    reinterprets the shared data buffer in place."""
+    A ``mapInPandas`` conversion of a binary column would materialize
+    one python ``bytes`` object per row; this reads the offsets buffer
+    once and reinterprets the shared data buffer in place."""
     n = len(arr)
     w = dim * np_dtype.itemsize
     off_dtype = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
@@ -213,53 +216,34 @@ def _unpack_list(arr: "pa.Array", dim: int) -> np.ndarray:
 def cosine_topk(corpus_df: DataFrame, queries_df: DataFrame, k: int = 3,
                 corpus_id: str = "vec_id", corpus_vec: str = "embedding",
                 query_id: str = "q_id", query_vec: str = "q_vec",
-                method: str = "arrow", vec_dtype: str = "float32",
-                arrow_impl: str = "batch") -> DataFrame:
+                vec_dtype: str = "float32") -> DataFrame:
     """Exact brute-force top-k: (q_id, rank, vec_id, sim).
 
     The query side is tiny by construction (it rides inside the scoring
     task); the scan over the corpus is embarrassingly parallel; the
     final per-query window ranks only ≤ P·k survivors.
 
-    ``method="arrow"`` (default, the scale path) fuses scoring and the
-    per-partition top-k prune into ONE python kernel (``arrow_impl=
-    "batch"``, the default, runs it over raw ``mapInArrow`` record
-    batches — the corpus matrix is a buffer view, no per-row python
-    objects; ``arrow_impl="pandas"`` is the ``mapInPandas`` twin kept
-    for A/B — both share the same scoring/prune code paths): each
-    Arrow batch of corpus vectors is scored against every query with a
-    *sequential-in-dimension* accumulation loop — the identical IEEE
-    operation order as the JVM fold / the SQL oracle's ``list_reduce``
-    (acc = ((0 + x₀y₀) + x₁y₁) + …, norms as sequential squared sums,
-    then one multiply and one divide), so results are bit-exact across
-    all three engines.  A ``binary`` corpus column (packed vectors, see
-    :func:`pack_vectors`) is detected automatically and unpacked with
-    ``np.frombuffer`` (``vec_dtype`` names the packed element type);
-    float32 packing of a float32 source is lossless, so the packed path
-    is bit-identical to the list path too.  Scores are cut to the
-    per-query running top-k
-    (partition + tie-resolving lexsort on the ≥kth slice, O(n) per
-    batch).  Rationale (BENCH/SCALE.md r4 decomposition): the
-    ``method="jvm"`` shape's ``aggregate``/``zip_with`` fold is
+    Scoring and the per-partition top-k prune are ONE ``mapInArrow``
+    kernel over raw record batches: the corpus matrix is a view of the
+    Arrow buffers (no per-row python objects).  Each batch is scored
+    against every query with a *sequential-in-dimension* accumulation
+    loop — the identical IEEE operation order as the SQL oracle's
+    ``list_reduce`` and :func:`cosine_similarity_col` (acc = ((0 +
+    x₀y₀) + x₁y₁) + …, norms as sequential squared sums, then one
+    multiply and one divide), so results are bit-exact across engines.
+    A ``binary`` corpus column (packed vectors, see :func:`pack_vectors`)
+    is detected automatically and unpacked in place (``vec_dtype`` names
+    the packed element type); float32 packing of a float32 source is
+    lossless, so the packed path is bit-identical to the list path too.
+    Scores are cut to the per-query running top-k (partition +
+    tie-resolving lexsort on the ≥kth slice, O(n) per batch).
+    Rationale (BENCH/SCALE.md r4 decomposition): the Column
+    ``aggregate``/``zip_with`` fold over a cross join is
     CodegenFallback — interpreted, one boxed object per element — and
-    was measured as ~95 % of query wall with a 0.75 scaling ceiling
-    from single-JVM-heap allocation contention; the Arrow kernel runs
-    in separate worker processes and sidesteps both.
+    was measured as ~95 % of query wall with a 0.75 scaling ceiling from
+    single-JVM-heap allocation contention; the Arrow kernel runs in
+    separate worker processes and sidesteps both.
     """
-    if method == "jvm":
-        vec_d = F.transform(F.col(corpus_vec), lambda x: x.cast("double"))
-        qvec_d = F.transform(F.col(query_vec), lambda x: x.cast("double"))
-        c = corpus_df.select(F.col(corpus_id), vec_d.alias("_cv"))
-        q = queries_df.select(F.col(query_id), qvec_d.alias("_qv"))
-        j = c.crossJoin(F.broadcast(q))
-        j = j.select(query_id, corpus_id,
-                     cosine_similarity_col(F.col("_cv"), F.col("_qv")).alias("sim"))
-        return topk_per_query(j, k, query_id, corpus_id).select(
-            query_id, "rank", corpus_id, "sim"
-        )
-    if method != "arrow":
-        raise ValueError(f"unknown cosine_topk method {method!r}")
-
     # The query side rides inside every scoring task (driver collect +
     # closure capture) — that is the operator's contract and only holds
     # for small query sets.  The LIMIT cap makes an oversized queries_df
@@ -269,14 +253,13 @@ def cosine_topk(corpus_df: DataFrame, queries_df: DataFrame, k: int = 3,
             .limit(MAX_DRIVER_QUERIES + 1).toPandas())
     if len(qpdf) > MAX_DRIVER_QUERIES:
         raise ValueError(
-            f"cosine_topk(method='arrow') collects the query side to the "
-            f"driver; got > {MAX_DRIVER_QUERIES} queries. For large query "
+            f"cosine_topk collects the query side to the driver; got > "
+            f"{MAX_DRIVER_QUERIES} queries. For large query "
             f"sets use lsh_ann_topk/ivf_topk (bucketed equi-joins) or "
             f"score in chunks."
         )
     if not len(qpdf):
-        # empty query set: empty result, correct schema (the jvm path's
-        # join would likewise produce no rows)
+        # empty query set: empty result, correct schema
         schema = T.StructType([
             T.StructField(query_id, queries_df.schema[query_id].dataType),
             T.StructField("rank", T.IntegerType(), False),
@@ -306,8 +289,8 @@ def cosine_topk(corpus_df: DataFrame, queries_df: DataFrame, k: int = 3,
     np_dtype = np.dtype(vec_dtype).newbyteorder("<")
 
     def _score(mat):
-        # sequential-in-dimension fold: identical IEEE order across the
-        # pandas and arrow-batch kernels, the JVM fold and the SQL oracle
+        # sequential-in-dimension fold: the IEEE order of the Column
+        # fold and of the SQL oracle's list_reduce
         n = mat.shape[0]
         dots = np.zeros((n, nq))
         cacc = np.zeros(n)
@@ -342,27 +325,6 @@ def cosine_topk(corpus_df: DataFrame, queries_df: DataFrame, k: int = 3,
     def score_prune(batches):
         best_c = [None] * nq
         best_s = [None] * nq
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            cids = pdf[corpus_id].to_numpy()
-            raw = pdf[corpus_vec].to_numpy()
-            if is_packed:
-                mat = (np.frombuffer(b"".join(raw), dtype=np_dtype)
-                       .reshape(len(raw), dim).astype(np.float64))
-            else:
-                mat = np.stack(raw).astype(np.float64)
-            _update(best_c, best_s, cids, _score(mat))
-        if best_s[0] is None:
-            return
-        yield _finish(best_c, best_s)
-
-    def score_prune_arrow(batches):
-        # mapInArrow twin: the corpus matrix is a view of the Arrow
-        # buffers (no per-row bytes/ndarray objects, no join copy) —
-        # the transfer-side python cost the pandas kernel still paid.
-        best_c = [None] * nq
-        best_s = [None] * nq
         for rb in batches:
             if not rb.num_rows:
                 continue
@@ -377,13 +339,7 @@ def cosine_topk(corpus_df: DataFrame, queries_df: DataFrame, k: int = 3,
         yield pa.RecordBatch.from_pandas(_finish(best_c, best_s),
                                          preserve_index=False)
 
-    sel = corpus_df.select(corpus_id, corpus_vec)
-    if arrow_impl == "batch":
-        pruned = sel.mapInArrow(score_prune_arrow, schema)
-    elif arrow_impl == "pandas":
-        pruned = sel.mapInPandas(score_prune, schema)
-    else:
-        raise ValueError(f"unknown cosine_topk arrow_impl {arrow_impl!r}")
+    pruned = corpus_df.select(corpus_id, corpus_vec).mapInArrow(score_prune, schema)
     w2 = Window.partitionBy(query_id).orderBy(F.desc("sim"), F.col(corpus_id))
     return (
         pruned.withColumn("rank", F.row_number().over(w2))
@@ -411,38 +367,35 @@ def deterministic_hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[l
     return planes
 
 
-def _plane_matrix(dim: int, n_planes: int, seed: int) -> np.ndarray:
-    return np.asarray(deterministic_hyperplanes(dim, n_planes, seed), dtype=np.float64)
+def _fold_dots(mat: np.ndarray, rows: np.ndarray) -> np.ndarray:
+    """(n, m) dot products of every row of ``mat`` with every row of
+    ``rows`` as a sequential-in-dimension fold: acc = ((0 + x₀y₀) +
+    x₁y₁) + …, the IEEE order of :func:`_dot` and of DuckDB's
+    ``list_reduce`` (a matmul's blocked summation could round a
+    near-zero dot to the other sign)."""
+    acc = np.zeros((mat.shape[0], rows.shape[0]))
+    for i in range(mat.shape[1]):
+        acc += mat[:, i, None] * rows[:, i]
+    return acc
 
 
 def with_lsh_bucket(df: DataFrame, vec_col: str = "embedding",
                     n_planes: int = 8, seed: int = 42,
-                    bucket_col: str = "bucket", method: str = "arrow",
-                    dim: int | None = None) -> DataFrame:
-    """Random-hyperplane LSH bucket id.
+                    bucket_col: str = "bucket") -> DataFrame:
+    """Random-hyperplane LSH bucket id: bit p is set when the vector's
+    dot product with hyperplane p (:func:`deterministic_hyperplanes`) is
+    positive.
 
-    ``method="arrow"``: one vectorized numpy matmul per batch (the scale
-    path).  ``method="jvm"``: per-plane sequential-fold dot products as
-    Columns — bit-identical to the SQL oracle's ``list_reduce`` (the
-    arrow matmul could round a near-zero dot to the other sign), used by
-    the driver-contract query; requires ``dim``.
+    One scalar Arrow UDF; each batch's dot products are a
+    sequential-in-dimension fold (:func:`_fold_dots`), so buckets equal
+    the SQL oracle's ``list_reduce`` sign bits exactly.
     """
-    if method == "jvm":
-        if dim is None:
-            raise ValueError("jvm bucket method requires dim")
-        planes = deterministic_hyperplanes(dim, n_planes, seed)
-        vec_d = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-        bucket = F.lit(0)
-        for p, plane in enumerate(planes):
-            lits = F.array(*[F.lit(float(c)) for c in plane])
-            bucket = bucket + F.when(_dot(vec_d, lits) > 0, F.lit(1 << p)).otherwise(F.lit(0))
-        return df.withColumn(bucket_col, bucket.cast("int"))
-
     @F.pandas_udf(T.IntegerType())
     def bucket(v: pd.Series) -> pd.Series:
         mat = np.stack(v.to_numpy()).astype(np.float64)  # (n, dim)
-        planes = _plane_matrix(mat.shape[1], n_planes, seed)  # (p, dim)
-        signs = (mat @ planes.T) > 0  # (n, p)
+        planes = np.asarray(deterministic_hyperplanes(mat.shape[1], n_planes, seed),
+                            dtype=np.float64)             # (p, dim)
+        signs = _fold_dots(mat, planes) > 0               # (n, p)
         return pd.Series((signs * (1 << np.arange(n_planes))).sum(axis=1).astype(np.int32))
 
     return df.withColumn(bucket_col, bucket(F.col(vec_col)))
@@ -451,22 +404,21 @@ def with_lsh_bucket(df: DataFrame, vec_col: str = "embedding",
 def lsh_ann_topk(corpus_df: DataFrame, queries_df: DataFrame, k: int = 3,
                  n_planes: int = 8, seed: int = 42, probe_bits: int = 1,
                  corpus_id: str = "vec_id", corpus_vec: str = "embedding",
-                 query_id: str = "q_id", query_vec: str = "q_vec",
-                 method: str = "arrow", dim: int | None = None) -> DataFrame:
+                 query_id: str = "q_id", query_vec: str = "q_vec") -> DataFrame:
     """Approximate top-k: bucket-equi-join + bucket-local brute force.
 
     ``probe_bits`` = multi-probe: each query also probes buckets at
     Hamming distance 1 in the first ``probe_bits`` sign bits (recall
     knob).  Candidate volume ~ corpus/2^p per probe — scale path.
+    Both sides are bucketed by :func:`with_lsh_bucket`, the probes join
+    the corpus on bucket id (broadcast query side), candidates are
+    scored by :func:`cosine_similarity_col` and ranked by
+    :func:`topk_per_query`.
     """
-    c = with_lsh_bucket(
-        corpus_df.select(corpus_id, corpus_vec), corpus_vec, n_planes, seed,
-        method=method, dim=dim,
-    )
-    q = with_lsh_bucket(
-        queries_df.select(query_id, F.col(query_vec)), query_vec, n_planes, seed,
-        method=method, dim=dim,
-    )
+    c = with_lsh_bucket(corpus_df.select(corpus_id, corpus_vec), corpus_vec,
+                        n_planes, seed)
+    q = with_lsh_bucket(queries_df.select(query_id, F.col(query_vec)), query_vec,
+                        n_planes, seed)
     probes = [F.col("bucket")] + [
         F.col("bucket").bitwiseXOR(F.lit(1 << b)) for b in range(probe_bits)
     ]
@@ -520,44 +472,23 @@ def ivf_train_centroids(corpus_df: DataFrame, vec_col: str = "embedding",
     return cent
 
 
-def _centroid_dot_cols(vec_d, centroids: np.ndarray) -> list:
-    """Per-centroid sequential-fold dot products as Columns (the JVM twin
-    of the arrow matmul; bit-identical to DuckDB ``list_reduce``).
-    argmax over dots == argmax over cosines (norms don't change it)."""
-    cols = []
-    for c in centroids:
-        lits = F.array(*[F.lit(float(v)) for v in c])
-        cols.append(_dot(vec_d, lits))
-    return cols
-
-
 def ivf_assign(df: DataFrame, centroids: np.ndarray, vec_col: str,
-               nprobe: int = 1, list_col: str = "ivf_list",
-               method: str = "arrow") -> DataFrame:
+               nprobe: int = 1, list_col: str = "ivf_list") -> DataFrame:
     """Attach the ``nprobe`` nearest inverted-list ids (exploded so the
     join below is a plain equi-join).
 
-    ``method="arrow"`` = one numpy matmul per batch (scale path);
-    ``method="jvm"`` = per-centroid fold dots + struct-sort, the
-    oracle-parity path (ties broken by lowest centroid id in both).
+    One scalar Arrow UDF ranks the centroids by raw dot product (argmax
+    over dots == argmax over cosines: the vector's norm does not change
+    the order), computed as a sequential-in-dimension fold
+    (:func:`_fold_dots`) and ordered by a stable argsort, so ties go to
+    the lowest centroid id — the SQL oracle's ``ORDER BY dot DESC, l``.
     """
-    if method == "jvm":
-        vec_d = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-        dots = _centroid_dot_cols(vec_d, centroids)
-        ranked = F.sort_array(F.array(*[
-            F.struct((-d).alias("nd"), F.lit(i).alias("i")) for i, d in enumerate(dots)
-        ]))
-        lists = F.transform(F.slice(ranked, 1, nprobe), lambda s: s["i"].cast("int"))
-        return df.withColumn(list_col, F.explode(lists))
-
-    cent = centroids  # closure-captured; broadcast with the UDF
+    cent = np.asarray(centroids, dtype=np.float64)  # closure-captured
 
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
     def lists(v: pd.Series) -> pd.Series:
         mat = np.stack(v.to_numpy()).astype(np.float64)
-        mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-        sims = mat @ cent.T                       # (n, k)
-        top = np.argsort(-sims, axis=1, kind="stable")[:, :nprobe]
+        top = np.argsort(-_fold_dots(mat, cent), axis=1, kind="stable")[:, :nprobe]
         return pd.Series(list(top.astype(np.int32)))
 
     return df.withColumn(list_col, F.explode(lists(F.col(vec_col))))
@@ -567,13 +498,15 @@ def ivf_topk(corpus_df: DataFrame, queries_df: DataFrame, k: int = 3,
              n_centroids: int = 16, nprobe: int = 4, iters: int = 5,
              corpus_id: str = "vec_id", corpus_vec: str = "embedding",
              query_id: str = "q_id", query_vec: str = "q_vec",
-             centroids: np.ndarray | None = None,
-             method: str = "arrow") -> DataFrame:
+             centroids: np.ndarray | None = None) -> DataFrame:
     """IVF approximate top-k: corpus rows live in exactly one inverted
     list; each query probes its ``nprobe`` nearest lists and brute-forces
     only those lists (equi-join on list id — candidate volume ~
     nprobe/k of the corpus).  ``nprobe == n_centroids`` degenerates to
-    exact brute force.
+    exact brute force.  Both sides are assigned by :func:`ivf_assign`
+    (the corpus to its one nearest list), candidates are scored by
+    :func:`cosine_similarity_col` and ranked by :func:`topk_per_query`.
+    ``centroids`` defaults to :func:`ivf_train_centroids`.
     """
     if centroids is None:
         centroids = ivf_train_centroids(
@@ -581,14 +514,10 @@ def ivf_topk(corpus_df: DataFrame, queries_df: DataFrame, k: int = 3,
         )
     vec_d = F.transform(F.col(corpus_vec), lambda x: x.cast("double"))
     qvec_d = F.transform(F.col(query_vec), lambda x: x.cast("double"))
-    c = ivf_assign(
-        corpus_df.select(corpus_id, vec_d.alias("_cv")), centroids, "_cv",
-        nprobe=1, method=method,
-    )
-    q = ivf_assign(
-        queries_df.select(query_id, qvec_d.alias("_qv")), centroids, "_qv",
-        nprobe=nprobe, method=method,
-    )
+    c = ivf_assign(corpus_df.select(corpus_id, vec_d.alias("_cv")), centroids, "_cv",
+                   nprobe=1)
+    q = ivf_assign(queries_df.select(query_id, qvec_d.alias("_qv")), centroids, "_qv",
+                   nprobe=nprobe)
     j = c.join(F.broadcast(q), "ivf_list")
     j = j.select(query_id, corpus_id,
                  cosine_similarity_col(F.col("_cv"), F.col("_qv")).alias("sim"))

@@ -7,10 +7,16 @@ the tests can demand bit-identical output.
 
 from __future__ import annotations
 
+import hashlib
+
 import numpy as np
 import pandas as pd
+from pyspark.sql import functions as F
 
 from openelevationservice_spark.constants import COORD_PRECISION
+from openelevationservice_spark.operators.dedup import (
+    MERSENNE31, minhash_perm_consts, word_shingles)
+from openelevationservice_spark.operators.similarity import deterministic_hyperplanes
 
 DENSIFY_COLUMNS = ["line_id", "x1", "y1", "seq", "x", "y", "dist"]
 
@@ -66,3 +72,71 @@ def assert_densify_matches_reference(got: pd.DataFrame, lines: pd.DataFrame) -> 
     assert len(a) == len(b)
     for c in DENSIFY_COLUMNS:
         assert (a[c].to_numpy() == b[c].to_numpy()).all(), c
+
+
+def minhash_reference(df, id_col: str = "doc_id", text_col: str = "text",
+                      n_hashes: int = 8, shingle_n: int = 3) -> pd.DataFrame:
+    """``operators.dedup.minhash_signature`` of a Spark DataFrame, sorted
+    by id.  The shingles are Spark's own :func:`word_shingles` output
+    (so Spark's regex split defines the tokens), collected and hashed
+    with ``hashlib`` md5 prefixes; sig[i] is the numpy min of
+    (a_i * x + b_i) mod 2^31-1 over the doc's shingle hashes.  Docs
+    without a shingle get no row."""
+    rows = df.select(F.col(id_col).alias("id"),
+                     word_shingles(F.col(text_col), shingle_n).alias("sh")).collect()
+    ab = np.array(minhash_perm_consts(n_hashes), dtype=np.int64)
+    ids, sigs = [], []
+    for r in sorted(rows, key=lambda r: r.id):
+        if not r.sh:
+            continue
+        x = np.array([int(hashlib.md5(sh.encode("utf-8")).hexdigest()[:8], 16)
+                      for sh in r.sh], dtype=np.int64)
+        sigs.append(((ab[:, :1] * x + ab[:, 1:]) % MERSENNE31).min(axis=1).tolist())
+        ids.append(r.id)
+    return pd.DataFrame({id_col: ids, "sig": sigs})
+
+
+def fold_dot(u: np.ndarray, v: np.ndarray) -> np.ndarray:
+    """Row-wise dot products of two (n, dim) float64 matrices (or a
+    matrix and one vector) as a sequential fold over the dimension,
+    acc = ((0 + u₀v₀) + u₁v₁) + …: the IEEE order of the Column fold and
+    of DuckDB's ``list_reduce``."""
+    acc = np.zeros(len(u))
+    for i in range(u.shape[1]):
+        acc = acc + u[:, i] * v[..., i]
+    return acc
+
+
+def lsh_bucket_reference(vecs: np.ndarray, n_planes: int, seed: int = 42) -> np.ndarray:
+    """``similarity.with_lsh_bucket``: bit p set when the fold dot with
+    hyperplane p is positive."""
+    planes = np.asarray(deterministic_hyperplanes(vecs.shape[1], n_planes, seed),
+                        dtype=np.float64)
+    bucket = np.zeros(len(vecs), dtype=np.int64)
+    for p, plane in enumerate(planes):
+        bucket += np.where(fold_dot(vecs, plane) > 0, 1 << p, 0)
+    return bucket
+
+
+def ivf_lists_reference(vecs: np.ndarray, centroids: np.ndarray,
+                        nprobe: int) -> list[list[int]]:
+    """``similarity.ivf_assign`` before the explode: per vector, the
+    ``nprobe`` centroid ids ordered by fold dot descending, ties to the
+    lower id (the oracle's ``ORDER BY dot DESC, l``)."""
+    dots = np.stack([fold_dot(vecs, c) for c in centroids], axis=1)
+    return [sorted(range(len(centroids)), key=lambda l: (-row[l], l))[:nprobe]
+            for row in dots]
+
+
+def cosine_topk_reference(ids, vecs: np.ndarray, q_ids, q_vecs: np.ndarray,
+                          k: int) -> pd.DataFrame:
+    """``similarity.cosine_topk``: (q_id, rank, vec_id, sim) with sim =
+    dot / (sqrt(|c|²) * sqrt(|q|²)), every term a fold; ranks order by
+    sim descending, then corpus id."""
+    cnorm = np.sqrt(fold_dot(vecs, vecs))
+    out = []
+    for qid, q in zip(q_ids, q_vecs):
+        sims = fold_dot(vecs, q) / (cnorm * np.sqrt(fold_dot(q[None, :], q)[0]))
+        order = sorted(range(len(ids)), key=lambda i: (-sims[i], ids[i]))[:k]
+        out += [(qid, r + 1, ids[i], sims[i]) for r, i in enumerate(order)]
+    return pd.DataFrame(out, columns=["q_id", "rank", "vec_id", "sim"])

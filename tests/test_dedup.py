@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from openelevationservice_spark.operators import dedup
+from tests.references import minhash_reference
 
 
 DOCS = [
@@ -123,43 +124,6 @@ def test_connected_components_long_chain(spark):
     assert (got["rep_id"] == 0).all()
 
 
-def test_connected_components_alternating_chain(spark):
-    """algorithm='alternating' (large-star/small-star) must label a
-    64-node chain correctly in O(log d) rounds — the robustness path for
-    graphs that are NOT near-cliques (min-label propagation needs d
-    rounds; the default path is unchanged)."""
-    n = 64
-    pairs = spark.createDataFrame(
-        pd.DataFrame({"id_a": list(range(n - 1)), "id_b": list(range(1, n))})
-    )
-    ids = spark.createDataFrame(pd.DataFrame({"doc_id": list(range(n))}))
-    got = dedup.connected_components(
-        pairs, ids, driver_max_pairs=0, algorithm="alternating", max_iters=12
-    ).toPandas()
-    assert (got["rep_id"] == 0).all() and len(got) == n
-    # rounds directly: far under the diameter (63), O(log d) with slack
-    _, rounds = dedup._cc_alternating_labels(pairs.select("id_a", "id_b"), 20)
-    assert rounds <= 10
-
-
-def test_connected_components_alternating_matches_label(spark):
-    """Both distributed algorithms produce the identical fixpoint on a
-    mixed graph (chain + clique + singleton)."""
-    pairs = spark.createDataFrame(
-        pd.DataFrame({"id_a": [2, 1, 10, 10, 11, 30],
-                      "id_b": [3, 2, 11, 12, 12, 31]})
-    )
-    ids = spark.createDataFrame(pd.DataFrame({"doc_id": list(range(1, 4))
-                                              + [10, 11, 12, 20, 30, 31]}))
-    a = (dedup.connected_components(pairs, ids, driver_max_pairs=0,
-                                    algorithm="alternating")
-         .toPandas().set_index("doc_id")["rep_id"].to_dict())
-    b = (dedup.connected_components(pairs, ids, driver_max_pairs=0)
-         .toPandas().set_index("doc_id")["rep_id"].to_dict())
-    assert a == b
-    assert a[20] == 20 and a[3] == 1 and a[12] == 10 and a[31] == 30
-
-
 def test_connected_components_driver_path_string_ids(spark):
     """The union-find fast path must handle non-numeric ids (min = lexical)."""
     pairs = spark.createDataFrame(
@@ -214,37 +178,31 @@ def test_connected_components_unpersists_on_nonconvergence(spark, monkeypatch):
     assert balance and all(v == 0 for v in balance.values())
 
 
-def test_minhash_signature_twins_equal(spark, docs):
-    """All three signature impls — the r6 Arrow kernel (default), the
-    exchange-free array-resident Column shape, and the explode +
-    groupBy twin — must be frame-identical."""
-    from openelevationservice_spark.operators.dedup import (
-        minhash_signature, minhash_signature_explode)
+def _sig_frame(sig):
+    pdf = sig.toPandas().sort_values("doc_id").reset_index(drop=True)
+    return pdf["doc_id"].tolist(), [list(x) for x in pdf["sig"]]
 
-    a = minhash_signature(docs, n_hashes=8).orderBy("doc_id").toPandas()
-    b = minhash_signature_explode(docs, n_hashes=8).orderBy("doc_id").toPandas()
-    c = minhash_signature(docs, n_hashes=8, impl="arrays").orderBy("doc_id").toPandas()
-    assert a["doc_id"].tolist() == b["doc_id"].tolist() == c["doc_id"].tolist()
-    assert ([list(x) for x in a["sig"]] == [list(x) for x in b["sig"]]
-            == [list(x) for x in c["sig"]])
+
+def test_minhash_signature_matches_reference(spark, docs):
+    """The Arrow kernel's signatures equal the reference built from
+    Spark's own shingles, hashlib md5 and numpy mins."""
+    want = minhash_reference(docs, n_hashes=8)
+    assert _sig_frame(dedup.minhash_signature(docs, n_hashes=8)) == \
+        (want["doc_id"].tolist(), want["sig"].tolist())
 
 
 def test_minhash_signature_kernel_edge_texts(spark):
-    """Kernel/Column parity on edge inputs: empty text, consecutive and
-    trailing spaces (Spark regex split with limit -1 vs python
-    str.split), sub-shingle docs, null text."""
-    import pandas as pd
-
-    from openelevationservice_spark.operators.dedup import (
-        minhash_signature, minhash_signature_explode)
-
+    """Edge inputs: empty text, consecutive and trailing spaces (python
+    str.split vs Spark's regex split with limit -1), a leading space,
+    sub-shingle docs, null text — checked against the reference, whose
+    shingles come from Spark's word_shingles."""
     pdf = pd.DataFrame({
         "doc_id": [1, 2, 3, 4, 5, 6],
         "text": ["", "a b", "a  b c ", " leading space here", None,
                  "one two three four"],
     })
     df = spark.createDataFrame(pdf, schema="doc_id long, text string")
-    a = minhash_signature(df, n_hashes=4).orderBy("doc_id").toPandas()
-    b = minhash_signature_explode(df, n_hashes=4).orderBy("doc_id").toPandas()
-    assert a["doc_id"].tolist() == b["doc_id"].tolist()
-    assert [list(x) for x in a["sig"]] == [list(x) for x in b["sig"]]
+    want = minhash_reference(df, n_hashes=4)
+    assert want["doc_id"].tolist() == [3, 4, 6]
+    assert _sig_frame(dedup.minhash_signature(df, n_hashes=4)) == \
+        (want["doc_id"].tolist(), want["sig"].tolist())

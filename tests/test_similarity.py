@@ -4,6 +4,9 @@ import pytest
 
 from openelevationservice_spark.operators import similarity as sim
 
+from tests.references import (
+    cosine_topk_reference, ivf_lists_reference, lsh_bucket_reference)
+
 
 @pytest.fixture(scope="module")
 def corpus_pdf():
@@ -116,20 +119,26 @@ def test_deterministic_hyperplanes_stable():
     assert a != sim.deterministic_hyperplanes(16, 4, seed=7)
 
 
-def test_lsh_bucket_jvm_matches_arrow(spark, corpus):
-    jvm = sim.with_lsh_bucket(corpus, n_planes=6, method="jvm", dim=16).toPandas()
-    arrow = sim.with_lsh_bucket(corpus, n_planes=6, method="arrow").toPandas()
-    m = jvm.merge(arrow, on="vec_id", suffixes=("_j", "_a"))
-    assert (m.bucket_j == m.bucket_a).all()
+def _matrix(pdf, col="embedding"):
+    return np.stack([np.asarray(v, dtype=np.float64) for v in pdf[col]])
 
 
-def test_ivf_assign_jvm_matches_arrow(spark, corpus):
+def test_lsh_bucket_matches_reference(spark, corpus, corpus_pdf):
+    """Buckets equal the sequential-fold sign bits exactly (the oracle's
+    list_reduce order)."""
+    got = sim.with_lsh_bucket(corpus, n_planes=6).toPandas().sort_values("vec_id")
+    want = lsh_bucket_reference(_matrix(corpus_pdf), 6)
+    assert got["vec_id"].tolist() == corpus_pdf["vec_id"].tolist()
+    assert got["bucket"].tolist() == want.tolist()
+
+
+def test_ivf_assign_matches_reference(spark, corpus, corpus_pdf):
+    """The nprobe lists equal the fold-dot ranking with lowest-id ties."""
     cent = sim.ivf_seed_centroids(corpus, n_centroids=8)
-    j = sim.ivf_assign(corpus, cent, "embedding", nprobe=3, method="jvm").toPandas()
-    a = sim.ivf_assign(corpus, cent, "embedding", nprobe=3, method="arrow").toPandas()
-    key = ["vec_id", "ivf_list"]
-    assert sorted(map(tuple, j[key].values.tolist())) == \
-        sorted(map(tuple, a[key].values.tolist()))
+    got = sim.ivf_assign(corpus, cent, "embedding", nprobe=3).toPandas()
+    want = ivf_lists_reference(_matrix(corpus_pdf), cent, 3)
+    assert sorted(map(tuple, got[["vec_id", "ivf_list"]].values.tolist())) == \
+        sorted((int(i), l) for i, ls in zip(corpus_pdf["vec_id"], want) for l in ls)
 
 
 def test_exact_nn_matches_brute_force(spark, corpus, corpus_pdf):
@@ -172,30 +181,29 @@ def test_cosine_topk_packed_binary_is_bit_identical(spark, corpus, corpus_pdf):
     pd.testing.assert_frame_equal(got, want)  # sims bit-equal, not approx
 
 
-def test_cosine_topk_arrow_batch_matches_pandas_kernel(spark, corpus, corpus_pdf):
-    """The mapInArrow kernel (buffer-view unpack, default) must be
-    bit-identical to the mapInPandas twin on BOTH corpus formats —
-    same sequential-fold op order, only the transfer differs."""
+def test_cosine_topk_matches_reference(spark, corpus, corpus_pdf):
+    """List and packed-binary corpora both equal the sequential-fold
+    reference exactly: ids, ranks and sim bits."""
+    srcs = [5, 17, 42]
     queries = spark.createDataFrame(
-        pd.DataFrame({"q_id": [0, 1], "q_vec": [corpus_pdf["embedding"][5],
-                                                corpus_pdf["embedding"][17]]}),
+        pd.DataFrame({"q_id": [0, 1, 2],
+                      "q_vec": [corpus_pdf["embedding"][i] for i in srcs]}),
         schema="q_id long, q_vec array<float>",
     )
+    mat = _matrix(corpus_pdf)
+    want = cosine_topk_reference(corpus_pdf["vec_id"].tolist(), mat, [0, 1, 2],
+                                 mat[srcs], 5)
     key = ["q_id", "rank"]
     for fmt in (corpus, sim.pack_vectors(corpus, "embedding")):
-        got = (sim.cosine_topk(fmt, queries, k=5, arrow_impl="batch")
-               .toPandas().sort_values(key).reset_index(drop=True))
-        want = (sim.cosine_topk(fmt, queries, k=5, arrow_impl="pandas")
-                .toPandas().sort_values(key).reset_index(drop=True))
-        pd.testing.assert_frame_equal(got, want)  # sims bit-equal
-    with pytest.raises(ValueError, match="arrow_impl"):
-        sim.cosine_topk(corpus, queries, k=5, arrow_impl="nope")
+        got = (sim.cosine_topk(fmt, queries, k=5).toPandas()
+               .sort_values(key).reset_index(drop=True))
+        assert got[key + ["vec_id"]].values.tolist() == want[key + ["vec_id"]].values.tolist()
+        assert (got["sim"].to_numpy() == want["sim"].to_numpy()).all()
 
 
 def test_cosine_topk_arrow_batch_string_ids(spark, corpus_pdf):
-    """String corpus/query ids flow through the arrow-batch kernel
-    (object-dtype to_numpy + lexsort tie-break) identically to the
-    pandas kernel."""
+    """String corpus/query ids flow through the kernel (object-dtype
+    to_numpy + lexsort tie-break) and match the reference exactly."""
     pdf = corpus_pdf.assign(vec_id=[f"doc{i:04d}" for i in range(len(corpus_pdf))])
     corpus_s = spark.createDataFrame(pdf, schema="vec_id string, embedding array<float>")
     queries = spark.createDataFrame(
@@ -203,12 +211,13 @@ def test_cosine_topk_arrow_batch_string_ids(spark, corpus_pdf):
                                                       pdf["embedding"][17]]}),
         schema="q_id string, q_vec array<float>",
     )
+    mat = _matrix(pdf)
+    want = cosine_topk_reference(pdf["vec_id"].tolist(), mat, ["qa", "qb"],
+                                 mat[[5, 17]], 5)
     key = ["q_id", "rank"]
-    got = (sim.cosine_topk(corpus_s, queries, k=5, arrow_impl="batch")
+    got = (sim.cosine_topk(corpus_s, queries, k=5)
            .toPandas().sort_values(key).reset_index(drop=True))
-    want = (sim.cosine_topk(corpus_s, queries, k=5, arrow_impl="pandas")
-            .toPandas().sort_values(key).reset_index(drop=True))
-    pd.testing.assert_frame_equal(got, want)
+    pd.testing.assert_frame_equal(got, want, check_dtype=False, check_exact=True)
     assert got.loc[0, "vec_id"] == "doc0005"
 
 
@@ -222,7 +231,7 @@ def test_cosine_topk_empty_queries(spark, corpus):
 
 
 def test_cosine_topk_query_collect_is_capped(spark, corpus, monkeypatch):
-    """The arrow path collects the query side to the driver — an
+    """cosine_topk collects the query side to the driver — an
     oversized queries_df must fail loudly, not silently materialize."""
     monkeypatch.setattr(sim, "MAX_DRIVER_QUERIES", 3)
     queries = corpus.limit(10).selectExpr("vec_id as q_id", "embedding as q_vec")
