@@ -35,7 +35,6 @@ MAXIMUM_NODES = 2000  # reference ops_settings.sample.yml:4
 
 FORMATS_IN = ("geojson", "point", "polyline", "polygon",
               "encodedpolyline", "encodedpolyline5", "encodedpolyline6")
-FORMATS_OUT = ("geojson", "point", "polyline", "encodedpolyline", "colorpolygon")
 DATASETS = ("srtm",)  # reference validator.py:14-23 (``dataset ∈ [srtm]``)
 
 
@@ -160,15 +159,6 @@ def parse_get_geometry(text: str):
 # ---------------------------------------------------------------------------
 # formatting (A8: ST_AsGeoJSON / ST_AsText; F6 zero-length fixup; F9 metadata)
 # ---------------------------------------------------------------------------
-
-def _wkt_point_z(x: float, y: float, z: int) -> str:
-    return f"POINT Z ({x} {y} {z})"
-
-
-def _wkt_line_z(coords) -> str:
-    body = ", ".join(f"{x} {y} {z}" for x, y, z in coords)
-    return f"LINESTRING Z ({body})"
-
 
 def _response(geometry) -> dict:
     """Reference response envelope (response.py:6-15)."""

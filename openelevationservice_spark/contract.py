@@ -887,15 +887,16 @@ FROM px
 
 
 # ===========================================================================
-# Q21. color dissolve — G3 (grid connected-components + ring tracing).
+# Q21. color dissolve — G3 (boundary tracing).
 # The dissolve itself is not SQL-expressible, but its per-band invariants
 # are: Σ ring shoelace area must equal the band's pixel count, and the
 # Euler numbers χ4 = C4−H8 / χ8 = C8−H4 must match Gray's 2×2 quad-count
-# formula ((Q1 − Q3 ± 2·QD)/4).  The kernel cross-asserts the traced
-# rings against independent grid labeling (operators/color.py), so this
-# oracle binds the ring tracer, the labeling, the band arithmetic and
-# the pixel sets.  Per-ring geometric oracles stay in
-# tests/test_geometry_dissolve.py.
+# formula ((Q1 − Q3 ± 2·QD)/4).  The kernel cross-asserts its traced
+# shell and hole counts against its own Gray quad counts
+# (χ8 ≤ shells − holes ≤ χ4, operators/color.py), so this oracle binds
+# the boundary tracer, the quad counts, the band arithmetic and the
+# pixel sets.  Per-ring geometric checks and the grid-labeling
+# reference stay in tests/test_geometry_dissolve.py.
 # ===========================================================================
 
 def q_color_dissolve(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -54,8 +54,3 @@ def points_in_ring(px: np.ndarray, py: np.ndarray,
             xint = x1 + t * (x2 - x1)
             inside ^= crosses & (px < xint)
     return inside | on_edge
-
-
-def ring_bbox(ring) -> tuple[float, float, float, float]:
-    xs, ys = ring_to_arrays(ring)
-    return float(xs.min()), float(ys.min()), float(xs.max()), float(ys.max())

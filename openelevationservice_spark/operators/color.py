@@ -18,7 +18,9 @@ pipeline stays distributed, and pixel values never become JVM rows:
               → vectorized band-split kernel → packed band-subruns,
                 partially aggregated per (poly_id, height_base) map-side
               → hash exchange on (poly_id, height_base) → one row per band
-              → exact grid dissolve kernel (G3) per band
+              → exact grid dissolve kernel (G3): one batched boundary
+                trace per Arrow batch for the invariants, rings per band
+                only for the GeoJSON features
 
 Bands dissolve independently, exactly as the reference unions per band,
 so the largest polygon's bands spread across tasks.  Only the final
@@ -38,7 +40,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..constants import NUM_RANGES, PX, WORLD_X0, WORLD_Y0
-from ..functions.dissolve import dissolve_pixels_rings
+from ..functions.dissolve import (MAX_BATCH_BANDS, batch_invariants,
+                                  dissolve_pixels_rings)
 from ..plans.cache import lease
 from .polygon import blob_stats, polygon_pixel_run_blobs
 
@@ -356,67 +359,27 @@ INVARIANT_SCHEMA = T.StructType(
 )
 
 
-def _invariants_group(poly_id: int, hb: int, gx: np.ndarray,
-                      gy: np.ndarray) -> dict:
-    """Dissolve one (poly_id, height_base) band and reduce it to three
-    SQL-checkable invariants:
+def _invariants_partition_subs(batches):
+    """Batched invariants: one vectorized pass per Arrow batch over
+    EVERY band (functions.dissolve.batch_invariants — successor
+    permutation + min-label doubling, no per-edge Python walk, no ring
+    vertex lists), reduced to three SQL-checkable invariants:
 
-    - ``area_px``  — Σ shoelace area of the traced rings (holes negative);
-      equals the band's pixel count iff the ring tracer is exact.
+    - ``area_px``  — Σ shoelace area of the traced loops (holes
+      negative); equals the band's pixel count iff the tracer is exact.
     - ``euler4``   — C4 − H8 = Gray quad formula (Q1 − Q3 + 2·QD)/4.
     - ``euler8``   — C8 − H4 = (Q1 − Q3 − 2·QD)/4.
 
-    The loop tracer is cross-asserted against the one-pass quad counts
-    (shells = C4, GEOS-convention ring holes ∈ [H8, H4] — properties
-    established against independent grid labeling in
-    tests/test_geometry_dissolve.py — give the sandwich
-    χ8 ≤ shells − ring_holes ≤ χ4), so a tracer bug fails the query
-    instead of shipping wrong rings.  Full union-find labeling stays in
-    the property tests: running it per band was the kernel's dominant
-    cost (Python union loops over the mostly-background bbox).
-    """
-    from ..functions.dissolve import (_cell_keys, _dissolve_rings_keys,
-                                      _quad_counts_keys)
-    ck, x0, y0 = _cell_keys(gx, gy)
-    polys, ring_areas = _dissolve_rings_keys(ck, x0, y0)
-    n_shells = len(polys)
-    n_holes = sum(len(rings) - 1 for rings in polys)
-    area2 = sum(a for areas in ring_areas for a in areas)
-    q1, q3, qd = _quad_counts_keys(ck)
-    euler4 = (q1 - q3 + 2 * qd) // 4
-    euler8 = (q1 - q3 - 2 * qd) // 4
-    if not (euler8 <= n_shells - n_holes <= euler4) or area2 % 2:
-        raise AssertionError(
-            f"dissolve/quad mismatch: shells={n_shells} ring_holes={n_holes} "
-            f"euler4={euler4} euler8={euler8} area2={area2}"
-        )
-    return {
-        "poly_id": poly_id,
-        "height_base": hb,
-        "area_px": area2 // 2,
-        "euler4": euler4,
-        "euler8": euler8,
-    }
-
-
-def _invariants_partition_subs(batches):
-    """Batched invariants: one vectorized pass per Arrow batch
-    (functions.dissolve.batch_invariants — successor permutation +
-    min-label doubling, no per-edge Python walk, no ring vertex
-    lists).  Bands containing a NEGATIVE-area cycle fall back to the
-    exact per-band ring path, because the reference hole-attachment
-    semantics (holes no shell contains are dropped) need ring geometry;
-    hole-free bands — the overwhelming case for contiguous elevation
-    bands — never build rings at all.  Results are identical by
-    construction and asserted against the per-band path in
-    tests/test_geometry_dissolve.py::test_batch_invariants_matches_per_band.
+    The traced loops are cross-asserted against the quad counts
+    (shells = C4 and holes ∈ [H8, H4], established against grid
+    labeling in tests/test_geometry_dissolve.py, give the sandwich
+    χ8 ≤ shells − holes ≤ χ4), so a tracer bug fails the query instead
+    of shipping wrong areas.
 
     ``batch_invariants`` packs the band index into a 16-bit key field,
     while the Arrow batch size (``spark.sql.execution.arrow.
     maxRecordsPerBatch``) is a deployment setting, so every batch is
     sliced into runs of at most ``MAX_BATCH_BANDS`` bands."""
-    from ..functions.dissolve import MAX_BATCH_BANDS
-
     for batch in batches:
         for start in range(0, len(batch), MAX_BATCH_BANDS):
             yield _invariants_frame(batch.iloc[start:start + MAX_BATCH_BANDS])
@@ -424,32 +387,21 @@ def _invariants_partition_subs(batches):
 
 def _invariants_frame(pdf: pd.DataFrame) -> pd.DataFrame:
     """INVARIANT_SCHEMA rows for one slice of ≤ MAX_BATCH_BANDS bands."""
-    from ..functions.dissolve import batch_invariants
-
     band, gx, gy, seg = _expand_subrun_batch(pdf)
     n_bands = len(pdf)
     pid = pdf["poly_id"].to_numpy()
     hbs = pdf["height_base"].to_numpy()
-    shells, holes, area2, q1, q3, qd, has_neg = batch_invariants(
+    shells, holes, area2, q1, q3, qd = batch_invariants(
         band, gx, gy, n_bands, seg)
     euler4 = (q1 - q3 + 2 * qd) // 4
     euler8 = (q1 - q3 - 2 * qd) // 4
-    n_holes = np.zeros(n_bands, dtype=np.int64)
-    for b in np.flatnonzero(has_neg):
-        r = _invariants_group(int(pid[b]), int(hbs[b]),
-                              gx[seg[b]:seg[b + 1]], gy[seg[b]:seg[b + 1]])
-        area2[b] = 2 * r["area_px"]
-        euler4[b] = r["euler4"]
-        euler8[b] = r["euler8"]
-    # sandwich check for the batched bands (the fallback asserts its
-    # own inside _invariants_group)
-    ok = ((euler8 <= shells - n_holes) & (shells - n_holes <= euler4)
-          & (area2 % 2 == 0)) | has_neg
+    ok = ((euler8 <= shells - holes) & (shells - holes <= euler4)
+          & (area2 % 2 == 0))
     if not ok.all():
         b = int(np.flatnonzero(~ok)[0])
         raise AssertionError(
             f"dissolve/quad mismatch: shells={int(shells[b])} "
-            f"ring_holes={int(n_holes[b])} euler4={int(euler4[b])} "
+            f"holes={int(holes[b])} euler4={int(euler4[b])} "
             f"euler8={int(euler8[b])} area2={int(area2[b])}"
         )
     return pd.DataFrame(

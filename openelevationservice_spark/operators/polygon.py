@@ -133,8 +133,6 @@ def with_pixel_coords(df: DataFrame) -> DataFrame:
     identical double operations in identical order, so values are
     bit-equal to computing them inside the Arrow kernel.
     """
-    from ..constants import PX, TILE_PX
-
     tx = (F.col("gx") / TILE_PX).cast("long")
     ty = (F.col("gy") / TILE_PX).cast("long")
     ul_x = F.lit(WORLD_X0) + tx * F.lit(TILE_DEG)
@@ -200,19 +198,15 @@ def _pixel_runs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         gx0s: list[np.ndarray] = []
         zs: list[np.ndarray] = []
         for pid, grid, mask, tx, ty in _iter_pair_masks(pdf):
-            # run extraction: ±1 edges of each scanline's 0-padded mask
-            d = np.diff(np.pad(mask, ((0, 0), (1, 1))).astype(np.int8), axis=1)
-            ys, xs0 = np.nonzero(d == 1)          # run starts (inclusive)
-            _, xs1 = np.nonzero(d == -1)          # run ends (exclusive)
-            h, w = grid.shape
+            gy, gx0, ln = _mask_runs(mask, tx, ty)
             # fully vectorized run assembly (no per-run Python): masked
             # values in row-major order ARE the runs concatenated in
             # (y, x0) order, so one boolean gather + np.split at the
             # run-length boundaries rebuilds every run's z slice
-            poly_ids.append(np.full(len(ys), pid, np.int64))
-            gys.append(ty * h + ys.astype(np.int64))
-            gx0s.append(tx * w + xs0.astype(np.int64))
-            zs.extend(np.split(grid[mask], np.cumsum(xs1 - xs0)[:-1]))
+            poly_ids.append(np.full(len(gy), pid, np.int64))
+            gys.append(gy)
+            gx0s.append(gx0)
+            zs.extend(np.split(grid[mask], np.cumsum(ln)[:-1]))
         empty = np.empty(0, np.int64)
         yield pd.DataFrame(
             {"poly_id": np.concatenate(poly_ids) if poly_ids else empty,
@@ -223,6 +217,18 @@ def _pixel_runs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
              "zs": pd.Series(zs, dtype=object)},
             columns=cols,
         )
+
+
+def _mask_runs(mask: np.ndarray, tx: int, ty: int):
+    """Scanline runs of one tile's covered-pixel mask as GLOBAL
+    (gy, gx0, length) int64 arrays in (y, x0) order — the ±1 edges of
+    each scanline's 0-padded mask are the run starts and ends."""
+    d = np.diff(np.pad(mask, ((0, 0), (1, 1))).astype(np.int8), axis=1)
+    ys, xs0 = np.nonzero(d == 1)          # run starts (inclusive)
+    _, xs1 = np.nonzero(d == -1)          # run ends (exclusive)
+    h, w = mask.shape
+    return (ty * h + ys.astype(np.int64), tx * w + xs0.astype(np.int64),
+            xs1 - xs0)
 
 
 def _iter_pair_masks(pdf: pd.DataFrame):
@@ -301,16 +307,14 @@ def _pixel_run_blobs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         sums: list[int] = []
         ns: list[int] = []
         for pid, grid, mask, tx, ty in _iter_pair_masks(pdf):
-            d = np.diff(np.pad(mask, ((0, 0), (1, 1))).astype(np.int8), axis=1)
-            ys, xs0 = np.nonzero(d == 1)
-            _, xs1 = np.nonzero(d == -1)
-            h, w = grid.shape
+            gy, gx0, ln = _mask_runs(mask, tx, ty)
+            n = len(gy)
             zcat = grid[mask].astype("<i2", copy=False)
-            head = np.empty(1 + 3 * len(ys), dtype="<i4")
-            head[0] = len(ys)
-            head[1:1 + len(ys)] = ty * h + ys
-            head[1 + len(ys):1 + 2 * len(ys)] = tx * w + xs0
-            head[1 + 2 * len(ys):] = xs1 - xs0
+            head = np.empty(1 + 3 * n, dtype="<i4")
+            head[0] = n
+            head[1:1 + n] = gy
+            head[1 + n:1 + 2 * n] = gx0
+            head[1 + 2 * n:] = ln
             pids.append(pid)
             blobs.append(head.tobytes() + zcat.tobytes())
             mins.append(int(zcat.min()))

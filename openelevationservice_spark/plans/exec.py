@@ -1,11 +1,11 @@
-"""Physical-layout helpers: skew salting, range partitioning, plan checks.
+"""Physical-layout helpers: skew salting and plan checks.
 
 The reference has no skew story — a polygon over dense terrain simply
 ships more rows (SURVEY.md §4.1).  At 10^12 images the replay workload
 is Zipf-ish over tiles (cities, popular regions), so the north rule
 demands explicit handling: AQE skew-join is enabled in the session
-factory; these helpers add *salted repartitioning* for the cases AQE
-can't rewrite (skewed ``groupBy`` keys, skewed gather groups).
+factory; these helpers add a deterministic salt and a salted two-phase
+count for the case AQE can't rewrite (skewed ``groupBy`` keys).
 """
 
 from __future__ import annotations
@@ -23,15 +23,6 @@ def with_salt(df: DataFrame, n_salts: int, salt_col: str = "salt") -> DataFrame:
     return df.withColumn(salt_col, F.pmod(F.xxhash64(*df.columns), F.lit(n_salts)).cast("int"))
 
 
-def repartition_salted(df: DataFrame, key: str, n_salts: int,
-                       num_partitions: int | None = None) -> DataFrame:
-    """Repartition by (key, salt) to split hot keys across tasks."""
-    salted = with_salt(df, n_salts)
-    if num_partitions:
-        return salted.repartition(num_partitions, F.col(key), F.col("salt"))
-    return salted.repartition(F.col(key), F.col("salt"))
-
-
 def two_phase_count(df: DataFrame, key: str, n_salts: int = 16) -> DataFrame:
     """Skew-safe count per key: partial agg on (key, salt), final on key."""
     return (
@@ -41,12 +32,6 @@ def two_phase_count(df: DataFrame, key: str, n_salts: int = 16) -> DataFrame:
         .groupBy(key)
         .agg(F.sum("_partial").alias("count"))
     )
-
-
-def key_histogram(df: DataFrame, key: str, top: int = 20) -> list[tuple]:
-    """Driver-side skew diagnostic: the hottest keys and their counts."""
-    rows = df.groupBy(key).count().orderBy(F.desc("count")).limit(top).collect()
-    return [(r[key], r["count"]) for r in rows]
 
 
 def explain_str(df: DataFrame, mode: str = "formatted") -> str:

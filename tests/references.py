@@ -14,6 +14,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from openelevationservice_spark.constants import COORD_PRECISION
+from openelevationservice_spark.functions.dissolve import dissolve_pixels_rings
 from openelevationservice_spark.operators.dedup import (
     MERSENNE31, minhash_perm_consts, word_shingles)
 from openelevationservice_spark.operators.similarity import deterministic_hyperplanes
@@ -140,3 +141,89 @@ def cosine_topk_reference(ids, vecs: np.ndarray, q_ids, q_vecs: np.ndarray,
         order = sorted(range(len(ids)), key=lambda i: (-sims[i], ids[i]))[:k]
         out += [(qid, r + 1, ids[i], sims[i]) for r, i in enumerate(order)]
     return pd.DataFrame(out, columns=["q_id", "rank", "vec_id", "sim"])
+
+
+def dissolve_pixels(gx: np.ndarray, gy: np.ndarray):
+    """Rings only of ``functions.dissolve.dissolve_pixels_rings``: a list
+    of polygons, each a list of closed rings (shell CCW, holes CW)."""
+    return dissolve_pixels_rings(gx, gy)[0]
+
+
+def _signed_area2(loop) -> int:
+    """Twice the shoelace signed area (integer-exact)."""
+    s = 0
+    n = len(loop)
+    for i in range(n):
+        x1, y1 = loop[i]
+        x2, y2 = loop[(i + 1) % n]
+        s += x1 * y2 - x2 * y1
+    return s
+
+
+def dissolve_area_px(polys) -> float:
+    """Total area (in pixel units) of a dissolve result."""
+    total = 0.0
+    for rings in polys:
+        for ring in rings:
+            total += _signed_area2(ring[:-1]) / 2.0
+    return total
+
+
+def _dense_grid(gx: np.ndarray, gy: np.ndarray):
+    """Boolean occupancy grid over the cell bbox + its origin."""
+    x0 = int(gx.min())
+    y0 = int(gy.min())
+    g = np.zeros((int(gy.max()) - y0 + 1, int(gx.max()) - x0 + 1), dtype=bool)
+    g[gy - y0, gx - x0] = True
+    return g, x0, y0
+
+
+def _n_components(g: np.ndarray, conn: int) -> int:
+    """Connected components of a boolean grid (conn ∈ {4, 8}) — adjacency
+    pairs extracted with numpy shifts, merged with union-find."""
+    n = int(g.sum())
+    if n == 0:
+        return 0
+    idx = np.full(g.shape, -1, dtype=np.int64)
+    idx[g] = np.arange(n)
+    parent = np.arange(n)
+
+    def find(a: int) -> int:
+        while parent[a] != a:
+            parent[a] = parent[parent[a]]
+            a = parent[a]
+        return a
+
+    shifts = [((slice(None), slice(None, -1)), (slice(None), slice(1, None))),
+              ((slice(None, -1), slice(None)), (slice(1, None), slice(None)))]
+    if conn == 8:
+        shifts += [((slice(None, -1), slice(None, -1)), (slice(1, None), slice(1, None))),
+                   ((slice(None, -1), slice(1, None)), (slice(1, None), slice(None, -1)))]
+    for sa, sb in shifts:
+        m = g[sa] & g[sb]
+        for a, b in zip(idx[sa][m].tolist(), idx[sb][m].tolist()):
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                parent[rb] = ra
+    return len({find(a) for a in range(n)})
+
+
+def label_counts(gx: np.ndarray, gy: np.ndarray) -> tuple[int, int, int, int]:
+    """(C4, C8, H4, H8) for the cell set: foreground components under 4-
+    and 8-connectivity, and background holes under 4- and 8-connectivity
+    (bounded background components inside a 1-cell-padded bbox, minus
+    the single outer component).
+
+    These are the Euler-number building blocks — Gray's quad-count
+    formula gives χ4 = C4 − H8 = (Q1 − Q3 + 2·QD)/4 and
+    χ8 = C8 − H4 = (Q1 − Q3 − 2·QD)/4, which is how the SQL oracle
+    verifies the dissolve (contract query ``color_dissolve``).
+    """
+    g, _, _ = _dense_grid(np.asarray(gx), np.asarray(gy))
+    bg = ~np.pad(g, 1)
+    return (
+        _n_components(g, 4),
+        _n_components(g, 8),
+        _n_components(bg, 4) - 1,
+        _n_components(bg, 8) - 1,
+    )

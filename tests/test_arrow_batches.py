@@ -1,9 +1,11 @@
 """Arrow batch boundaries do not change kernel output.
 
-Each curation kernel runs once with 7-row Arrow batches (many batches
-per partition: the cosine top-k carry across batches, per-batch
-``reduceat`` offsets in MinHash) and once with 65536-row batches (one
-batch per partition); the results must be identical.
+Each curation and elevation kernel runs once with 7-row Arrow batches
+(many batches per partition: the cosine top-k carry across batches,
+per-batch ``reduceat`` offsets in MinHash, the rasterizer's per-batch
+tile cache, map-side band partials and batched dissolve slices) and
+once with 65536-row batches (one batch per partition); the results
+must be identical.
 """
 
 import numpy as np
@@ -11,8 +13,13 @@ import pandas as pd
 import pyarrow as pa
 import pytest
 
+from openelevationservice_spark.constants import TILE_DEG
 from openelevationservice_spark.operators import dedup
 from openelevationservice_spark.operators import similarity as sim
+from openelevationservice_spark.operators.color import (
+    polygon_color_features, polygon_color_invariants)
+from openelevationservice_spark.operators.polygon import polygon_pixels
+from openelevationservice_spark.sources import fixtures as fx
 
 BATCH_CONF = "spark.sql.execution.arrow.maxRecordsPerBatch"
 SMALL, LARGE = 7, 65536
@@ -37,6 +44,26 @@ def corpus(spark):
         schema="vec_id long, embedding array<float>")
 
 
+@pytest.fixture(scope="module")
+def elevation(spark):
+    """A 3x3-tile world and two polygons across tile seams: a triangle
+    (general point-in-polygon, runs split across bands) and a
+    rectangle."""
+    world = fx.World(nx=3, ny=3)
+    images = spark.createDataFrame(fx.make_images_pdf(world), schema=fx.IMAGES_SCHEMA)
+    x0 = world.min_x + 0.2 * TILE_DEG
+    y0 = world.max_y - 2.7 * TILE_DEG
+    tri = [(x0, y0), (x0 + 2.3 * TILE_DEG, y0), (x0, y0 + 2.3 * TILE_DEG), (x0, y0)]
+    rect = [(x0 + 0.4 * TILE_DEG, y0 + 0.3 * TILE_DEG), (x0 + 1.9 * TILE_DEG, y0 + 0.3 * TILE_DEG),
+            (x0 + 1.9 * TILE_DEG, y0 + 1.6 * TILE_DEG), (x0 + 0.4 * TILE_DEG, y0 + 1.6 * TILE_DEG),
+            (x0 + 0.4 * TILE_DEG, y0 + 0.3 * TILE_DEG)]
+    polys = spark.createDataFrame(
+        pd.DataFrame({"poly_id": [0, 1],
+                      "ring": [[{"lon": x, "lat": y} for x, y in r] for r in (tri, rect)]}),
+        schema="poly_id long, ring array<struct<lon:double, lat:double>>")
+    return polys, images
+
+
 def _max_batch_rows(spark) -> int:
     def sizes(batches):
         for b in batches:
@@ -51,7 +78,15 @@ def _rows(df, key):
             for row in pdf.itertuples(index=False)]
 
 
-def _outputs(docs, corpus):
+def _feature_rows(df):
+    pdf = (df.toPandas().sort_values(["poly_id", "height_base", "feature_idx"])
+           .reset_index(drop=True))
+    return [(r.poly_id, r.height_base, r.feature_idx, r.n_rings, r.area_px,
+             [[(p["x"], p["y"]) for p in ring] for ring in r.rings])
+            for r in pdf.itertuples(index=False)]
+
+
+def _outputs(docs, corpus, polys, images):
     queries = corpus.filter("vec_id IN (5, 17, 42)").selectExpr(
         "vec_id AS q_id", "embedding AS q_vec")
     cent = sim.ivf_seed_centroids(corpus, n_centroids=8)
@@ -64,19 +99,24 @@ def _outputs(docs, corpus):
                      ["vec_id"]),
         "ivf": _rows(sim.ivf_assign(corpus, cent, "embedding", nprobe=3)
                      .select("vec_id", "ivf_list"), ["vec_id", "ivf_list"]),
+        "polygon_pixels": _rows(polygon_pixels(polys, images), ["poly_id", "gy", "gx"]),
+        "color_invariants": _rows(polygon_color_invariants(polys, images),
+                                  ["poly_id", "height_base"]),
+        "color_features": _feature_rows(polygon_color_features(polys, images)),
     }
 
 
-def test_kernels_identical_across_batch_sizes(spark, docs, corpus):
+def test_kernels_identical_across_batch_sizes(spark, docs, corpus, elevation):
     before = spark.conf.get(BATCH_CONF)
     got = {}
     try:
         for n in (SMALL, LARGE):
             spark.conf.set(BATCH_CONF, str(n))
             assert _max_batch_rows(spark) == min(n, 200)
-            got[n] = _outputs(docs, corpus)
+            got[n] = _outputs(docs, corpus, *elevation)
     finally:
         spark.conf.set(BATCH_CONF, before)
     for name in got[SMALL]:
         assert got[SMALL][name] == got[LARGE][name], name
     assert len(got[SMALL]["minhash"]) > 100
+    assert len(got[SMALL]["color_features"]) >= len(got[SMALL]["color_invariants"]) > 2 * SMALL

@@ -1,7 +1,8 @@
 import numpy as np
 
-from openelevationservice_spark.functions.dissolve import dissolve_area_px, dissolve_pixels
+from openelevationservice_spark.functions.dissolve import batch_invariants, quad_counts
 from openelevationservice_spark.functions.geometry import points_in_ring, ring_to_arrays
+from tests.references import _signed_area2, dissolve_area_px, dissolve_pixels, label_counts
 
 
 def test_pip_square_inclusive_boundary():
@@ -71,7 +72,6 @@ def test_dissolve_big_random_area_matches_count():
 
 
 def test_label_counts_basic():
-    from openelevationservice_spark.functions.dissolve import label_counts
     # single cell
     assert label_counts(np.array([0]), np.array([0])) == (1, 1, 0, 0)
     # two diagonal cells: 2 comps at 4-conn, 1 at 8-conn, no holes
@@ -84,8 +84,6 @@ def test_label_counts_basic():
 def test_loops_match_labeling_random_grids():
     """Property: traced shells == C4; GEOS ring holes ∈ [H8, H4];
     shoelace area == pixel count — on 300 random grids."""
-    from openelevationservice_spark.functions.dissolve import (
-        _signed_area2, dissolve_pixels, label_counts)
     rng = np.random.default_rng(7)
     for _ in range(300):
         h, w = rng.integers(1, 11, 2)
@@ -106,8 +104,6 @@ def test_loops_match_labeling_random_grids():
 def test_quad_counts_match_labeling():
     """χ4/χ8 from the one-pass quad counts equal the labeling-derived
     Euler numbers on random grids (the in-kernel sandwich relies on it)."""
-    from openelevationservice_spark.functions.dissolve import (
-        dissolve_pixels, label_counts, quad_counts)
     rng = np.random.default_rng(21)
     for _ in range(200):
         h, w = rng.integers(1, 11, 2)
@@ -125,14 +121,26 @@ def test_quad_counts_match_labeling():
         assert c8 - h4 <= n_shells - n_holes <= c4 - h8
 
 
-def test_batch_invariants_matches_per_band():
-    """The r6 batched invariants core (one vectorized pass over many
-    bands, min-label doubling instead of the per-edge walk) must equal
-    the per-band ring path on random cell sets — including donut bands,
-    which exercise the negative-cycle (hole) fallback flag."""
-    from openelevationservice_spark.functions.dissolve import batch_invariants
-    from openelevationservice_spark.operators.color import _invariants_group
+def _holey_bands():
+    """Bands whose hole count depends on connectivity: a donut, a hole
+    pinched to the outside at one corner, and two holes that touch at a
+    corner."""
+    donut = np.ones((5, 5), bool)
+    donut[2, 2] = False
+    pinch = np.ones((3, 3), bool)
+    pinch[1, 1] = pinch[2, 2] = False
+    pair = np.ones((4, 4), bool)
+    pair[1, 1] = pair[2, 2] = False
+    return [np.nonzero(g)[::-1] for g in (donut, pinch, pair)]
 
+
+def test_batch_invariants_match_labeling():
+    """The batched invariants (one vectorized pass over many bands,
+    min-label doubling instead of the per-edge walk) against grid
+    labeling on random bands plus the holey bands: shells == C4,
+    H8 <= holes <= H4, area2 == 2 * cells, Euler numbers from the quad
+    counts; shell and hole counts also equal the rings of
+    ``dissolve_pixels``."""
     rng = np.random.default_rng(99)
     bands = []
     for _ in range(60):
@@ -143,32 +151,33 @@ def test_batch_invariants_matches_per_band():
         gy, gx = np.nonzero(g)
         off = rng.integers(0, 500, 2)
         bands.append((gx + off[0], gy + off[1]))
-    # a donut: 5x5 block minus center (guaranteed hole)
-    yy, xx = np.mgrid[0:5, 0:5]
-    m = np.ones((5, 5), bool); m[2, 2] = False
-    gy, gx = np.nonzero(m)
-    bands.append((gx + 40, gy + 17))
+    bands += [(gx + 40, gy + 17) for gx, gy in _holey_bands()]
 
     band = np.repeat(np.arange(len(bands)), [len(b[0]) for b in bands])
     gx = np.concatenate([b[0] for b in bands]).astype(np.int64)
     gy = np.concatenate([b[1] for b in bands]).astype(np.int64)
     seg = np.concatenate(([0], np.cumsum([len(b[0]) for b in bands])))
-    sh, ho, a2, q1, q3, qd, neg = batch_invariants(band, gx, gy, len(bands), seg)
-    assert neg[-1]  # the donut's hole flags the fallback
-    for b in range(len(bands)):
-        r = _invariants_group(7, 11, gx[seg[b]:seg[b + 1]], gy[seg[b]:seg[b + 1]])
-        e4 = (int(q1[b]) - int(q3[b]) + 2 * int(qd[b])) // 4
-        e8 = (int(q1[b]) - int(q3[b]) - 2 * int(qd[b])) // 4
-        assert r["euler4"] == e4 and r["euler8"] == e8
-        if not neg[b]:
-            assert r["area_px"] == a2[b] // 2
+    sh, ho, a2, q1, q3, qd = batch_invariants(band, gx, gy, len(bands), seg)
+    assert ho[-3:].tolist() == [1, 0, 1]  # pinched holes join a ring (GEOS)
+    for b, (bx, by) in enumerate(bands):
+        c4, c8, h4, h8 = label_counts(bx, by)
+        assert sh[b] == c4
+        assert h8 <= ho[b] <= h4
+        assert a2[b] == 2 * len(bx)
+        assert (q1[b] - q3[b] + 2 * qd[b]) // 4 == c4 - h8
+        assert (q1[b] - q3[b] - 2 * qd[b]) // 4 == c8 - h4
+        polys = dissolve_pixels(bx, by)
+        assert sh[b] == len(polys)
+        assert ho[b] == sum(len(rings) - 1 for rings in polys)
 
 
 def test_invariants_partition_slices_oversized_batches():
     """An Arrow batch holding more bands than the 16-bit band field of
     the batched key (maxRecordsPerBatch is a deployment setting) is
     sliced, not rejected: 65,537 single-cell bands in ONE batch each
-    come back as one unit square (area 1, Euler numbers 1)."""
+    come back as one unit square (area 1, Euler numbers 1).  The holey
+    bands that follow them in the batch come back with area = cell
+    count and the labeling's Euler numbers."""
     import pandas as pd
 
     from openelevationservice_spark.operators.color import (
@@ -181,14 +190,27 @@ def test_invariants_partition_slices_oversized_batches():
     i = np.arange(n, dtype=np.int64)
     gx, gy = 3 * (i % 1000), 3 * (i // 1000)
     packed = ((gy << _SUB_GY_SHIFT) | (gx << _SUB_GX_SHIFT) | 1).astype("<i8")
+    subs = [[packed[k:k + 1].tobytes()] for k in range(n)]
+    holey = _holey_bands()
+    for hx, hy in holey:
+        # one unit subrun per cell, split over two partial buffers
+        cells = ((hy + 7) << _SUB_GY_SHIFT) | ((hx + 9) << _SUB_GX_SHIFT) | 1
+        cells = cells.astype("<i8")
+        subs.append([cells[:3].tobytes(), cells[3:].tobytes()])
+    n_all = n + len(holey)
     batch = pd.DataFrame({
-        "poly_id": np.zeros(n, dtype=np.int64),
-        "height_base": i,
-        "subs": [[packed[k:k + 1].tobytes()] for k in range(n)],
+        "poly_id": np.zeros(n_all, dtype=np.int64),
+        "height_base": np.arange(n_all, dtype=np.int64),
+        "subs": subs,
     })
     frames = list(_invariants_partition_subs(iter([batch])))
     assert len(frames) == 2
     out = pd.concat(frames, ignore_index=True)
-    assert out["height_base"].tolist() == i.tolist()
-    assert (out["area_px"] == 1).all()
-    assert (out["euler4"] == 1).all() and (out["euler8"] == 1).all()
+    assert out["height_base"].tolist() == list(range(n_all))
+    single = out.iloc[:n]
+    assert (single["area_px"] == 1).all()
+    assert (single["euler4"] == 1).all() and (single["euler8"] == 1).all()
+    for (hx, hy), row in zip(holey, out.iloc[n:].itertuples()):
+        c4, c8, h4, h8 = label_counts(hx, hy)
+        assert row.area_px == len(hx)
+        assert (row.euler4, row.euler8) == (c4 - h8, c8 - h4)

@@ -321,10 +321,8 @@ def test_dissolve_subrun_shape_equals_pixel_shape(spark, world, images):
     invariants against ring areas + connected-component labeling,
     features against ``dissolve_pixels_rings`` — on a rectangle (rect
     fast path) and a triangle (general PIP, runs split across bands)."""
-    from openelevationservice_spark.functions.dissolve import (
-        dissolve_pixels_rings,
-        label_counts,
-    )
+    from openelevationservice_spark.functions.dissolve import dissolve_pixels_rings
+    from tests.references import label_counts
     from openelevationservice_spark.operators.color import (
         polygon_color_invariants,
     )

@@ -13,10 +13,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from openelevationservice_spark.functions import cells, polyline as pl
-from openelevationservice_spark.functions.dissolve import (
-    _signed_area2,
-    dissolve_pixels,
-)
+from tests.references import _signed_area2, dissolve_pixels
 
 lon_s = st.floats(min_value=-179.99, max_value=179.99,
                   allow_nan=False, allow_infinity=False)
