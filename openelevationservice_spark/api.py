@@ -298,9 +298,9 @@ class ElevationService:
             ]}),
             schema="poly_id long, ring array<struct<lon:double,lat:double>>",
         )
-        # spread=False: one interactive polygon — the batch-replay
-        # repartition would only add an exchange of mostly-empty tasks
-        px = (polygon_pixels(polys, self.images_df, spread=False)
+        # default broadcast join: the one polygon rides into the tile
+        # scan, with no exchange in front of the rasterizer
+        px = (polygon_pixels(polys, self.images_df)
               .orderBy("x", "y")                      # W2 ordered dump
               .select("x", "y", "z").collect())
         if not px:
@@ -322,8 +322,7 @@ class ElevationService:
             ]}),
             schema="poly_id long, ring array<struct<lon:double,lat:double>>",
         )
-        feats = polygon_color_features(polys, self.images_df,
-                                       spread=False).toPandas()
+        feats = polygon_color_features(polys, self.images_df).toPandas()
         if feats.empty:
             raise _err_geometry(
                 "The requested geometry is outside the bounds of srtm"

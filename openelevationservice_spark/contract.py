@@ -833,7 +833,8 @@ def q_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
     from pyspark.sql import types as T
 
-    from .operators.multimodal import _decode_any, resize
+    from .functions import image_codec
+    from .operators.multimodal import resize
 
     small = resize(_images(spark), factor=2)
     schema = T.StructType([
@@ -849,7 +850,7 @@ def q_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in batches:
             out = []
             for r in pdf.itertuples():
-                g = _decode_any(r.bytes, r.fmt, int(r.w), int(r.h))
+                g = image_codec.decode(r.bytes, r.fmt, int(r.w), int(r.h))
                 tx, ty = int(r.image_id[5:10]), int(r.image_id[11:16])
                 ii, jj = np.meshgrid(np.arange(g.shape[0]), np.arange(g.shape[1]),
                                      indexing="ij")

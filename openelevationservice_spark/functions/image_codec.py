@@ -17,7 +17,7 @@ Formats:
 Per-row invariant (``input_hint``): decode -> tile -> encode -> decode
 round-trips with PSNR >= 40 dB (lossless formats round-trip exactly)
 and caption equality.  ``psnr`` and ``phash64`` are provided for that
-check, vectorized over Arrow batches via the ``*_udf`` wrappers.
+check.
 """
 
 from __future__ import annotations
@@ -26,7 +26,6 @@ import struct
 import zlib
 
 import numpy as np
-import pandas as pd
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
@@ -140,16 +139,6 @@ def phash64(grid: np.ndarray) -> int:
     bits = (blocks > np.median(blocks)).ravel()
     v = int.from_bytes(np.packbits(bits, bitorder="little").tobytes(), "little")
     return v - (1 << 64) if v >= (1 << 63) else v
-
-
-# ---------------------------------------------------------------------------
-# Arrow-vectorized wrappers (operate on pandas Series of rows)
-# ---------------------------------------------------------------------------
-
-def decode_series(data: pd.Series, fmt: pd.Series, w: pd.Series, h: pd.Series) -> list[np.ndarray]:
-    """Decode a batch of image payloads → list of int16 grids."""
-    return [decode(d, f, int(wi), int(hi))
-            for d, f, wi, hi in zip(data, fmt, w, h)]
 
 
 def roundtrip_check(data: bytes, fmt: str, w: int, h: int,

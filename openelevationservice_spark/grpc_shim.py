@@ -146,7 +146,7 @@ class OpenElevationServicer:
         # concurrent area RPCs from grpc_serve's thread pool must not
         # evict each other's in-flight cache.
         slot = f"grpc_area_pixels:{next(_AREA_RPC_SEQ)}"
-        blobs = polygon_pixel_run_blobs(polys, svc.images_df, spread=False)
+        blobs = polygon_pixel_run_blobs(polys, svc.images_df)
         lease(slot, blobs)
         try:
             stats = blob_stats(blobs).collect()
@@ -156,7 +156,7 @@ class OpenElevationServicer:
                     "The requested geometry is outside the bounds of srtm",
                 )
             feats = polygon_color_features(
-                polys, svc.images_df, spread=False, blobs_df=blobs
+                polys, svc.images_df, blobs_df=blobs
             ).toPandas()
         finally:
             release(slot)

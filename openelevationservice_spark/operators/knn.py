@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from ..constants import NODATA
 from ..functions.cells import cell_size_deg, cell_x_col, cell_y_col, disk_offsets, linear_id_col
 from ..sources.tiles import tile_index
-from .sample import gather_z_jvm, pixel_index
+from .sample import gather_z_jvm, is_broadcast, pixel_index
 
 
 def knn_tiles(points_df: DataFrame, images_df: DataFrame, k: int = 1,
@@ -66,7 +66,7 @@ def knn_tiles(points_df: DataFrame, images_df: DataFrame, k: int = 1,
         "cell_id", "image_id", "ul_x", "ul_y", "px", "w", "h",
         "min_x", "min_y", "max_x", "max_y",
     )
-    if index_strategy == "broadcast":
+    if is_broadcast(index_strategy):
         idx = F.broadcast(idx)
     j = pts.join(idx, "cell_id", "inner")
 
@@ -87,7 +87,7 @@ def knn_tiles(points_df: DataFrame, images_df: DataFrame, k: int = 1,
     )
     pix = (pix_index_df if pix_index_df is not None
            else pixel_index(images_df)).select("image_id", "pix")
-    if index_strategy == "broadcast":
+    if is_broadcast(index_strategy):
         pix = F.broadcast(pix)
     out = gather_z_jvm(j.join(pix, "image_id"))
     return (

@@ -2,11 +2,11 @@
 
 Images/audio/video are carried as ``binary`` columns with typed
 metadata, processed through ``mapInPandas`` Arrow batches.  The raster
-codecs (raw16/png16) are real; decoders for container formats that
-need native libraries absent from this sandbox (JPEG, WAV, MP4) are
-STUBBED behind ``NotImplementedError`` with the Spark-side plumbing —
-schema, partitioning, UDF signature, batch shape — fully real and
-tested via the raster formats.
+codecs (raw16/png16) are real; container formats that need native
+libraries (JPEG, WAV, MP4) are STUBBED — ``image_codec.decode`` raises
+``NotImplementedError`` for any other format — with the Spark-side
+plumbing (schema, partitioning, UDF signature, batch shape) fully real
+and tested via the raster formats.
 """
 
 from __future__ import annotations
@@ -38,18 +38,6 @@ META_SCHEMA = T.StructType(
     ]
 )
 
-_STUB_FORMATS = {"jpeg", "png8", "wav", "mp4"}
-
-
-def _decode_any(data: bytes, fmt: str, w: int, h: int) -> np.ndarray:
-    if fmt in _STUB_FORMATS:
-        raise NotImplementedError(
-            f"decoder for {fmt!r} requires native libs not present in this "
-            "sandbox; plumbing is exercised via raw16/png16"
-        )
-    return image_codec.decode(data, fmt, w, h)
-
-
 def image_metadata(images_df: DataFrame) -> DataFrame:
     """Decode + feature-extract per image (Arrow batches)."""
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -60,7 +48,7 @@ def image_metadata(images_df: DataFrame) -> DataFrame:
             for img, data, fmt, w, h in zip(
                 pdf["image_id"], pdf["bytes"], pdf["fmt"], pdf["w"], pdf["h"]
             ):
-                g = _decode_any(data, fmt, int(w), int(h))
+                g = image_codec.decode(data, fmt, int(w), int(h))
                 out["image_id"].append(img)
                 out["fmt"].append(fmt)
                 out["n_bytes"].append(len(data))
@@ -98,7 +86,7 @@ def resize(images_df: DataFrame, factor: int = 2, out_fmt: str = "raw16") -> Dat
             for img, data, fmt, w0, h0 in zip(
                 pdf["image_id"], pdf["bytes"], pdf["fmt"], pdf["w"], pdf["h"]
             ):
-                g = _decode_any(data, fmt, int(w0), int(h0))
+                g = image_codec.decode(data, fmt, int(w0), int(h0))
                 h, w = g.shape
                 h2, w2 = h // factor, w // factor
                 blocks = g[: h2 * factor, : w2 * factor].reshape(h2, factor, w2, factor)

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from ..constants import NODATA
 from ..functions.cells import cell_id_col
-from .sample import gather_z_jvm, pixel_index
+from .sample import gather_z_jvm, is_broadcast, pixel_index
 
 
 def with_pixel_indices(df: DataFrame, lon: str = "lon", lat: str = "lat") -> DataFrame:
@@ -50,10 +50,8 @@ def join_tiles(points_df: DataFrame, index_df: DataFrame, how: str = "inner",
     pts = points_df.withColumn("cell_id", cell_id_col(F.col(lon), F.col(lat)))
     idx = index_df.select("cell_id", "image_id", "ul_x", "ul_y", "px", "w", "h",
                           "pix")
-    if index_strategy == "broadcast":
+    if is_broadcast(index_strategy):
         idx = F.broadcast(idx)
-    elif index_strategy != "shuffle":
-        raise ValueError(f"unknown index strategy {index_strategy!r}")
     return pts.join(idx, "cell_id", how)
 
 

@@ -49,6 +49,7 @@ from ..functions import image_codec
 from ..functions.cells import linear_id_col
 from ..functions.geometry import points_in_ring, ring_to_arrays
 from ..sources.tiles import tile_index
+from .sample import is_broadcast
 
 
 def polygons_with_bbox(polygons_df: DataFrame) -> DataFrame:
@@ -91,10 +92,10 @@ def polygon_tile_join(polygons_df: DataFrame, index_df: DataFrame,
     replaying such batches pass ``index_strategy="shuffle"``.
 
     ``spread=False`` skips the shuffle path's pre-join repartition —
-    right for interactive single-polygon requests (the API layer sets
-    it), where an extra full exchange into mostly-empty tasks only
-    adds latency.  The broadcast orientation never needs the spread:
-    kernel parallelism comes from the tile-table scan.
+    right for small shuffled batches, where an extra full exchange into
+    mostly-empty tasks only adds latency.  The broadcast orientation
+    never reads ``spread``: kernel parallelism comes from the tile-table
+    scan.
     """
     p = polygons_with_bbox(polygons_df)
     cx0 = F.floor((F.col("min_x") - F.lit(WORLD_X0)) / F.lit(TILE_DEG)).cast("long")
@@ -107,7 +108,7 @@ def polygon_tile_join(polygons_df: DataFrame, index_df: DataFrame,
         .withColumn("cell_id", linear_id_col(F.col("cx"), F.col("cy")))
     )
     idx = index_df.select("cell_id", "image_id", "bytes", "fmt", "ul_x", "ul_y", "px", "w", "h")
-    if index_strategy == "broadcast":
+    if is_broadcast(index_strategy):
         return idx.join(F.broadcast(p.select("poly_id", "ring", "cell_id")),
                         "cell_id", "inner")
     # shuffle path: spread the (polygon, cell) pairs BEFORE the join —

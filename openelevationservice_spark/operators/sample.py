@@ -28,6 +28,14 @@ from pyspark.sql import types as T
 from ..functions import image_codec
 
 
+def is_broadcast(index_strategy: str) -> bool:
+    """True for ``"broadcast"``, False for ``"shuffle"``; any other
+    ``index_strategy`` (a typo included) raises."""
+    if index_strategy not in ("broadcast", "shuffle"):
+        raise ValueError(f"unknown index strategy {index_strategy!r}")
+    return index_strategy == "broadcast"
+
+
 def pixel_index(images_df: DataFrame) -> DataFrame:
     """Tile index + decoded pixels as a flat ``array<smallint>`` column.
 

@@ -13,22 +13,23 @@ deterministic k-means, so an external engine (the DuckDB oracle) can
 reproduce bucketing bit-for-bit from injected literals.  Every dot
 product — similarity values, LSH plane signs, IVF centroid ranks — is a
 sequential-in-dimension fold of doubles, whether it runs as a Column
-fold in the JVM or as a numpy loop over the dimension in an Arrow
-kernel, so it has the same IEEE-754 result as DuckDB's
+fold in the JVM or one of the two numpy folds (:func:`_fold_dots`,
+:func:`_fold_sq`), so it has the same IEEE-754 result as DuckDB's
 ``list_reduce``.
 
 Top-k extraction is two-stage: a shuffle-free per-partition prune
 keeps each partition's local top-k per query, the final per-query
 window ranks only P·k survivors — the full score set never funnels
 through ≤|queries| partitions (that was a straggler by construction at
-100× corpus).
+100× corpus).  There is one prune cut (:func:`_topk_keep`, a numpy
+``lexsort`` over (query, -sim, corpus)) and one final window
+(:func:`_rank_topk`), shared by :func:`topk_per_query` and
+:func:`cosine_topk`.
 """
 
 from __future__ import annotations
 
 import hashlib
-import itertools
-import math
 
 import numpy as np
 import pandas as pd
@@ -57,42 +58,100 @@ def _norm(a):
                               F.lit(0.0), lambda acc, x: acc + x))
 
 
+def _fold_dots(mat: np.ndarray, rows: np.ndarray) -> np.ndarray:
+    """(n, m) dot products of every row of ``mat`` with every row of
+    ``rows`` as a sequential-in-dimension fold: acc = ((0 + x₀y₀) +
+    x₁y₁) + …, the IEEE order of :func:`_dot` and of DuckDB's
+    ``list_reduce`` (a matmul's blocked summation could round a
+    near-zero dot to the other sign)."""
+    acc = np.zeros((mat.shape[0], rows.shape[0]))
+    for i in range(mat.shape[1]):
+        acc += mat[:, i, None] * rows[:, i]
+    return acc
+
+
+def _fold_sq(mat: np.ndarray) -> np.ndarray:
+    """Row-wise sum of squares as the same sequential fold — the IEEE
+    order of :func:`_norm`'s ``aggregate``."""
+    acc = np.zeros(mat.shape[0])
+    for i in range(mat.shape[1]):
+        acc += mat[:, i] * mat[:, i]
+    return acc
+
+
 def cosine_similarity_col(a, b):
     """cos(a, b) as a Column — sequential fold, deterministic order."""
     return _dot(a, b) / (_norm(a) * _norm(b))
+
+
+def _sort_key(a: np.ndarray) -> np.ndarray:
+    """``a`` as a lexsort key: object-dtype ids (strings) become their
+    ``pd.factorize(sort=True)`` codes; nulls get -1 and sort first, like
+    Spark's ascending window order."""
+    return pd.factorize(a, sort=True)[0] if a.dtype == object else a
+
+
+def _topk_keep(q: np.ndarray, s: np.ndarray, c: np.ndarray, k: int) -> np.ndarray:
+    """Indices of the rows ranked < k within their query under the total
+    order (query asc, sim desc, corpus asc) — one ``lexsort`` and a
+    vectorized rank-within-run.  (query, corpus) is a row key, so the
+    order is total and the kept SET is unique, ties included."""
+    qk = _sort_key(q)
+    order = np.lexsort((_sort_key(c), -s.astype(np.float64, copy=False), qk))
+    qs = qk[order]
+    new_run = np.empty(len(qs), dtype=bool)
+    new_run[:1] = True
+    np.not_equal(qs[1:], qs[:-1], out=new_run[1:])
+    starts = np.flatnonzero(new_run)
+    rank = np.arange(len(qs)) - starts[np.cumsum(new_run) - 1]
+    return np.sort(order[rank < k])
+
+
+def _carry_topk(batches, k: int, q: str, s: str, c: str) -> dict | None:
+    """Running top-k over a stream of column dicts (name → array): after
+    every batch the carry is cut back to ≤ k rows per query.  Top-k of
+    carry ∪ batch == top-k of the union (a row outside some prefix's
+    top-k is outside the whole stream's), so memory is O(q·k + batch).
+    ``None`` when the stream is empty."""
+    carry = None
+    for cols in batches:
+        if carry is not None:
+            cols = {n: np.concatenate([carry[n], a]) for n, a in cols.items()}
+        keep = _topk_keep(cols[q], cols[s], cols[c], k)
+        carry = {n: a[keep] for n, a in cols.items()}
+    return carry
+
+
+def _rank_topk(pruned: DataFrame, k: int, query_id: str, corpus_id: str,
+               sim_col: str = "sim") -> DataFrame:
+    """The final per-query ``row_number`` window over the pruned rows."""
+    w = Window.partitionBy(query_id).orderBy(F.desc(sim_col), F.col(corpus_id))
+    return (
+        pruned.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+    )
 
 
 def topk_per_query(scored: DataFrame, k: int, query_id: str, corpus_id: str,
                    sim_col: str = "sim") -> DataFrame:
     """Two-stage top-k: shuffle-free per-partition prune, then one window.
 
-    Stage 1 keeps each partition's local top-k per query (an Arrow
+    Stage 1 keeps each partition's local top-k per query (a
     ``mapInPandas`` over the three narrow score columns — values pass
     through bit-exact, only row selection happens) with ZERO shuffle;
     the final per-query ``row_number`` window then ranks only ≤ P·k
     survivors per query.  The full score set never crosses an exchange —
-    the former single per-query window funneled corpus×queries rows
-    through ≤|queries| reducers, a straggler by construction at 100×
-    corpus.  Output is identical to the single window (the true top-k
-    rows are each top-k within their own partition).
+    a single per-query window funnels corpus×queries rows through
+    ≤|queries| reducers, a straggler by construction at 100× corpus.
+    Output is identical to the single window (the true top-k rows are
+    each top-k within their own partition).
 
-    The prune is incremental: after every Arrow batch the carry is cut
-    back to ≤ q·k rows (top-k of carry ∪ batch == top-k of the union,
-    since a row outside some prefix's top-k is outside the partition's),
-    so per-task memory is O(q·k + batch), independent of partition size
-    (VERDICT r2 "What's wrong" #4 — the former shape concatenated the
-    whole partition first).  The total ordering (query, -sim, corpus_id)
-    makes the cut deterministic, ties included ((query, corpus) is a
-    row key, so the ordering is total and the kept SET is unique).
-
-    The per-batch cut runs on raw numpy column arrays (``lexsort`` +
-    vectorized rank-within-run); the round-3 shape re-built a pandas
-    frame and ran ``sort_values`` + ``groupby().head`` per batch, whose
-    object churn in the shared heap was the measured 2→8-core scaling
-    regression (BENCH/SCALE.md r4 A/B: the numpy cut is ~2× faster per
-    batch and restores ann_topk eff ≥ its r2 level).  Key columns with
-    object dtype (string ids) take the pandas cut instead, chosen from
-    the first non-empty batch — lexsort needs primitive keys.
+    The prune is incremental (:func:`_carry_topk`): after every Arrow
+    batch the carry is cut back to ≤ q·k rows, so per-task memory is
+    O(q·k + batch), independent of partition size.  The cut is one
+    numpy ``lexsort`` on (query asc, sim desc, corpus asc) with a
+    vectorized rank-within-run (:func:`_topk_keep`) — the same cut
+    :func:`cosine_topk` runs; string ids sort by their factorized codes.
 
     ``scored`` should be pre-projected to (query_id, corpus_id, sim):
     extra columns are carried through the Arrow boundary and cost
@@ -101,60 +160,14 @@ def topk_per_query(scored: DataFrame, k: int, query_id: str, corpus_id: str,
     schema = scored.schema
     cols = [f.name for f in schema.fields]
 
-    def _cut_pandas(both: pd.DataFrame) -> pd.DataFrame:
-        both = both.sort_values([query_id, sim_col, corpus_id],
-                                ascending=[True, False, True], kind="stable")
-        return both.groupby(query_id, sort=False).head(k)
+    def prune(batches):
+        carry = _carry_topk(({n: pdf[n].to_numpy() for n in cols}
+                             for pdf in batches if len(pdf)),
+                            k, query_id, sim_col, corpus_id)
+        yield pd.DataFrame(carry) if carry is not None else pd.DataFrame(columns=cols)
 
-    def prune_pandas(batches):
-        carry = None
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            both = pdf if carry is None else pd.concat([carry, pdf], ignore_index=True)
-            carry = _cut_pandas(both)
-        yield carry if carry is not None else pd.DataFrame(columns=cols)
-
-    def prune_numpy(batches):
-        arrs: dict[str, np.ndarray] | None = None
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            if arrs is None:
-                if any(pdf[c].dtype == object for c in (query_id, sim_col, corpus_id)):
-                    # non-primitive keys: delegate to the pandas kernel.
-                    # chain() keeps streaming batch-at-a-time — list(batches)
-                    # would materialize the rest of the partition at once,
-                    # voiding the bounded O(q·k + batch) memory contract
-                    # exactly when ids are strings (round-4 ADVICE).
-                    yield from prune_pandas(itertools.chain([pdf], batches))
-                    return
-                arrs = {c: pdf[c].to_numpy() for c in cols}
-            else:
-                new = {c: pdf[c].to_numpy() for c in cols}
-                arrs = {c: np.concatenate([arrs[c], new[c]]) for c in cols}
-            qv, sv, cv = arrs[query_id], arrs[sim_col], arrs[corpus_id]
-            # total order (query asc, sim desc, corpus asc); rank-in-run
-            # beats a per-key argpartition here because batches hold many
-            # small query groups (one partition sees every query)
-            order = np.lexsort((cv, -sv.astype(np.float64, copy=False), qv))
-            qs = qv[order]
-            new_run = np.empty(len(qs), dtype=bool)
-            new_run[0] = True
-            np.not_equal(qs[1:], qs[:-1], out=new_run[1:])
-            starts = np.flatnonzero(new_run)
-            run_id = np.cumsum(new_run) - 1
-            rank = np.arange(len(qs)) - starts[run_id]
-            keep = np.sort(order[rank < k])
-            arrs = {c: a[keep] for c, a in arrs.items()}
-        yield pd.DataFrame(arrs) if arrs is not None else pd.DataFrame(columns=cols)
-
-    pruned = scored.mapInPandas(prune_numpy, schema=schema)
-    w2 = Window.partitionBy(query_id).orderBy(F.desc(sim_col), F.col(corpus_id))
-    return (
-        pruned.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-    )
+    return _rank_topk(scored.mapInPandas(prune, schema=schema),
+                      k, query_id, corpus_id, sim_col)
 
 
 def pack_vectors(df: DataFrame, vec_col: str = "embedding",
@@ -226,8 +239,9 @@ def cosine_topk(corpus_df: DataFrame, queries_df: DataFrame, k: int = 3,
     Scoring and the per-partition top-k prune are ONE ``mapInArrow``
     kernel over raw record batches: the corpus matrix is a view of the
     Arrow buffers (no per-row python objects).  Each batch is scored
-    against every query with a *sequential-in-dimension* accumulation
-    loop — the identical IEEE operation order as the SQL oracle's
+    against every query with the *sequential-in-dimension* folds
+    :func:`_fold_dots` and :func:`_fold_sq` — the identical IEEE
+    operation order as the SQL oracle's
     ``list_reduce`` and :func:`cosine_similarity_col` (acc = ((0 +
     x₀y₀) + x₁y₁) + …, norms as sequential squared sums, then one
     multiply and one divide), so results are bit-exact across engines.
@@ -235,8 +249,11 @@ def cosine_topk(corpus_df: DataFrame, queries_df: DataFrame, k: int = 3,
     is detected automatically and unpacked in place (``vec_dtype`` names
     the packed element type); float32 packing of a float32 source is
     lossless, so the packed path is bit-identical to the list path too.
-    Scores are cut to the per-query running top-k (partition +
-    tie-resolving lexsort on the ≥kth slice, O(n) per batch).
+    Each batch takes one ``np.partition`` threshold per query (all
+    queries at once, O(n) per batch); the rows at or above a query's
+    k-th score go long-form through the same running carry and
+    ``lexsort`` cut as :func:`topk_per_query` (:func:`_carry_topk`), and
+    the same final window ranks the survivors.
     Rationale (BENCH/SCALE.md r4 decomposition): the Column
     ``aggregate``/``zip_with`` fold over a cross join is
     CodegenFallback — interpreted, one boxed object per element — and
@@ -270,10 +287,7 @@ def cosine_topk(corpus_df: DataFrame, queries_df: DataFrame, k: int = 3,
     qids = qpdf[query_id].to_numpy()
     qmat = np.stack([np.asarray(v, dtype=np.float64) for v in qpdf[query_vec]])
     nq, dim = qmat.shape
-    qacc = np.zeros(nq)
-    for i in range(dim):                       # sequential fold, like _norm
-        qacc += qmat[:, i] * qmat[:, i]
-    qn = np.sqrt(qacc)
+    qn = np.sqrt(_fold_sq(qmat))
 
     schema = T.StructType([
         T.StructField(query_id, queries_df.schema[query_id].dataType),
@@ -288,64 +302,34 @@ def cosine_topk(corpus_df: DataFrame, queries_df: DataFrame, k: int = 3,
     is_packed = isinstance(corpus_df.schema[corpus_vec].dataType, T.BinaryType)
     np_dtype = np.dtype(vec_dtype).newbyteorder("<")
 
-    def _score(mat):
-        # sequential-in-dimension fold: the IEEE order of the Column
-        # fold and of the SQL oracle's list_reduce
-        n = mat.shape[0]
-        dots = np.zeros((n, nq))
-        cacc = np.zeros(n)
-        for i in range(dim):
-            col = mat[:, i]
-            dots += col[:, None] * qmat[:, i]
-            cacc += col * col
-        return dots / (np.sqrt(cacc)[:, None] * qn)
-
-    def _update(best_c, best_s, cids, sims):
-        for j in range(nq):
-            s = sims[:, j] if best_s[j] is None else np.concatenate([best_s[j], sims[:, j]])
-            c = cids if best_c[j] is None else np.concatenate([best_c[j], cids])
-            if len(s) > k:
-                kth = np.partition(s, len(s) - k)[len(s) - k]
-                cand = np.flatnonzero(s >= kth)      # > kth plus ALL kth ties
-                order = np.lexsort((c[cand], -s[cand]))
-                keep = cand[order[:k]]
-            else:
-                keep = np.arange(len(s))
-            best_s[j] = s[keep]
-            best_c[j] = c[keep]
-
-    def _finish(best_c, best_s):
-        counts = [len(s) for s in best_s]
-        return pd.DataFrame({
-            query_id: np.repeat(qids, counts),
-            corpus_id: np.concatenate(best_c),
-            "sim": np.concatenate(best_s),
-        })
+    def candidates(rb):
+        # long-form (query index, corpus id, sim) rows at or above each
+        # query's k-th score in this batch — all k-th ties included
+        cids = rb.column(rb.schema.get_field_index(corpus_id)) \
+                 .to_numpy(zero_copy_only=False)
+        varr = rb.column(rb.schema.get_field_index(corpus_vec))
+        mat = (_unpack_binary(varr, dim, np_dtype) if is_packed
+               else _unpack_list(varr, dim)).astype(np.float64)
+        sims = _fold_dots(mat, qmat) / (np.sqrt(_fold_sq(mat))[:, None] * qn)
+        n = len(mat)
+        if n > k:
+            rows, qi = np.nonzero(sims >= np.partition(sims, n - k, axis=0)[n - k])
+        else:
+            rows, qi = np.divmod(np.arange(n * nq), nq)
+        return {"q": qi, "c": cids[rows], "s": sims[rows, qi]}
 
     def score_prune(batches):
-        best_c = [None] * nq
-        best_s = [None] * nq
-        for rb in batches:
-            if not rb.num_rows:
-                continue
-            cids = rb.column(rb.schema.get_field_index(corpus_id)) \
-                     .to_numpy(zero_copy_only=False)
-            varr = rb.column(rb.schema.get_field_index(corpus_vec))
-            mat = (_unpack_binary(varr, dim, np_dtype) if is_packed
-                   else _unpack_list(varr, dim)).astype(np.float64)
-            _update(best_c, best_s, cids, _score(mat))
-        if best_s[0] is None:
+        carry = _carry_topk((candidates(rb) for rb in batches if rb.num_rows),
+                            k, "q", "s", "c")
+        if carry is None:
             return
-        yield pa.RecordBatch.from_pandas(_finish(best_c, best_s),
-                                         preserve_index=False)
+        yield pa.RecordBatch.from_pandas(pd.DataFrame({
+            query_id: qids[carry["q"]], corpus_id: carry["c"], "sim": carry["s"],
+        }), preserve_index=False)
 
     pruned = corpus_df.select(corpus_id, corpus_vec).mapInArrow(score_prune, schema)
-    w2 = Window.partitionBy(query_id).orderBy(F.desc("sim"), F.col(corpus_id))
-    return (
-        pruned.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select(query_id, "rank", corpus_id, "sim")
-    )
+    return _rank_topk(pruned, k, query_id, corpus_id).select(
+        query_id, "rank", corpus_id, "sim")
 
 
 # --- LSH (random-hyperplane signs) -----------------------------------------
@@ -365,18 +349,6 @@ def deterministic_hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[l
             ctr += 1
         planes.append(vals[:dim])
     return planes
-
-
-def _fold_dots(mat: np.ndarray, rows: np.ndarray) -> np.ndarray:
-    """(n, m) dot products of every row of ``mat`` with every row of
-    ``rows`` as a sequential-in-dimension fold: acc = ((0 + x₀y₀) +
-    x₁y₁) + …, the IEEE order of :func:`_dot` and of DuckDB's
-    ``list_reduce`` (a matmul's blocked summation could round a
-    near-zero dot to the other sign)."""
-    acc = np.zeros((mat.shape[0], rows.shape[0]))
-    for i in range(mat.shape[1]):
-        acc += mat[:, i, None] * rows[:, i]
-    return acc
 
 
 def with_lsh_bucket(df: DataFrame, vec_col: str = "embedding",
@@ -529,24 +501,18 @@ def ivf_topk(corpus_df: DataFrame, queries_df: DataFrame, k: int = 3,
 def ivf_seed_centroids(corpus_df: DataFrame, vec_col: str = "embedding",
                        id_col: str = "vec_id", n_centroids: int = 16) -> np.ndarray:
     """Zero-iteration quantizer: the normalized first ``n_centroids``
-    vectors by id.  Normalization uses a sequential-fold sum of squares
-    (Python loop, NOT numpy pairwise summation) so an external SQL
-    engine's ``list_reduce`` reproduces every centroid bit-for-bit —
-    this is the quantizer the oracle-checked contract query uses; the
-    k-means quantizer (:func:`ivf_train_centroids`) is the production
-    default and is unit-tested against full-probe brute force.
+    vectors by id.  Norms are a sequential-fold sum of squares
+    (:func:`_fold_sq`, NOT numpy pairwise summation) and an IEEE sqrt,
+    so an external SQL engine's ``list_reduce`` reproduces every
+    centroid bit-for-bit — this is the quantizer the oracle-checked
+    contract query uses; the k-means quantizer
+    (:func:`ivf_train_centroids`) is the production default and is
+    unit-tested against full-probe brute force.
     """
     pdf = (corpus_df.select(id_col, vec_col).orderBy(id_col)
            .limit(n_centroids).toPandas())
-    out = []
-    for vec in pdf[vec_col]:
-        v = [float(x) for x in vec]
-        s = 0.0
-        for x in v:
-            s += x * x
-        nrm = math.sqrt(s)   # IEEE sqrt, not pow(s, 0.5) — matches SQL sqrt()
-        out.append([x / nrm for x in v])
-    return np.asarray(out, dtype=np.float64)
+    mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+    return mat / np.sqrt(_fold_sq(mat))[:, None]
 
 
 # --- exact all-pairs NN via IVF triangle-inequality pruning -----------------

@@ -3,7 +3,9 @@ import pandas as pd
 import pytest
 
 from openelevationservice_spark.constants import NODATA, PX, TILE_DEG, WORLD_X0, WORLD_Y0
+from openelevationservice_spark.operators.knn import knn_tiles
 from openelevationservice_spark.operators.point import point_elevation
+from openelevationservice_spark.operators.polygon import polygon_pixels
 from openelevationservice_spark.sources import fixtures as fx
 
 
@@ -56,6 +58,23 @@ def test_point_elevation_matches_oracle(spark, world, images, index_strategy):
     assert (m.loc[inside, "z"].astype(np.int64) == m.loc[inside, "z_ref"]).all()
     assert m.loc[~inside, "image_id"].isna().all()
     assert m.loc[~inside, "z"].isna().all()
+
+
+def test_unknown_index_strategy_raises(spark, world, images):
+    """A misspelled strategy raises; it is never taken as the shuffle join."""
+    pts = spark.createDataFrame(fx.make_points_pdf(world, n=3))
+    x0, y0 = world.min_x, world.min_y
+    polys = spark.createDataFrame(
+        pd.DataFrame({"poly_id": [0], "ring": [[
+            {"lon": x0, "lat": y0}, {"lon": x0 + PX, "lat": y0},
+            {"lon": x0 + PX, "lat": y0 + PX}, {"lon": x0, "lat": y0}]]}),
+        schema="poly_id long, ring array<struct<lon:double, lat:double>>",
+    )
+    for run in (lambda s: point_elevation(pts, images, index_strategy=s),
+                lambda s: polygon_pixels(polys, images, index_strategy=s),
+                lambda s: knn_tiles(pts, images, index_strategy=s)):
+        with pytest.raises(ValueError, match="unknown index strategy 'shufle'"):
+            run("shufle")
 
 
 def test_inner_join_drops_out_of_coverage(spark, world, images):

@@ -239,8 +239,9 @@ def test_cosine_topk_query_collect_is_capped(spark, corpus, monkeypatch):
         sim.cosine_topk(corpus, queries, k=3)
 
 
-def test_topk_per_query_equals_single_window(spark, corpus):
-    """The salted two-stage top-k is output-identical to one window."""
+def test_cosine_topk_equals_single_window(spark, corpus):
+    """cosine_topk's partition-local prune plus final window is
+    output-identical to one window over the full cross join."""
     from pyspark.sql import Window, functions as F
     q = corpus.limit(4).select(F.col("vec_id").alias("q_id"),
                                F.col("embedding").alias("q_vec"))
@@ -258,3 +259,35 @@ def test_topk_per_query_equals_single_window(spark, corpus):
     want = want.sort_values(key).reset_index(drop=True)
     pd.testing.assert_frame_equal(got[["q_id", "rank", "vec_id"]],
                                   want[["q_id", "rank", "vec_id"]])
+
+
+def test_topk_per_query_string_ids_equal_single_window(spark):
+    """String ids with heavily tied sims, cut over many 7-row Arrow
+    batches: the prune plus final window keep exactly the rows of one
+    row_number window — a null corpus id included, which sorts first."""
+    from pyspark.sql import Window, functions as F
+    rng = np.random.default_rng(3)
+    n = 300
+    pdf = pd.DataFrame({
+        "q_id": [f"q{i}" for i in rng.integers(0, 5, n)],
+        "vec_id": [f"d{i:03d}" for i in rng.permutation(n)],
+        "sim": rng.integers(0, 4, n) / 4.0,
+    })
+    pdf.loc[7, ["vec_id", "sim"]] = [None, 0.75]
+    scored = spark.createDataFrame(
+        pdf, schema="q_id string, vec_id string, sim double").repartition(3)
+    w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.col("vec_id"))
+    want = (scored.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= 4).toPandas())
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(conf)
+    try:
+        spark.conf.set(conf, "7")
+        got = sim.topk_per_query(scored, 4, "q_id", "vec_id").toPandas()
+    finally:
+        spark.conf.set(conf, before)
+    key = ["q_id", "rank"]
+    got = got.sort_values(key).reset_index(drop=True)
+    want = want.sort_values(key).reset_index(drop=True)
+    pd.testing.assert_frame_equal(got, want)
+    assert want["vec_id"].isna().any()
