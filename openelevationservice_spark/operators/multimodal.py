@@ -1,12 +1,9 @@
-"""Multimodal-column plumbing: opaque binary payloads + typed metadata.
+"""Image-column plumbing: opaque binary payloads + typed metadata.
 
-Images/audio/video are carried as ``binary`` columns with typed
-metadata, processed through ``mapInPandas`` Arrow batches.  The raster
-codecs (raw16/png16) are real; container formats that need native
-libraries (JPEG, WAV, MP4) are STUBBED — ``image_codec.decode`` raises
-``NotImplementedError`` for any other format — with the Spark-side
-plumbing (schema, partitioning, UDF signature, batch shape) fully real
-and tested via the raster formats.
+Tiles are carried as ``binary`` columns with typed metadata and
+processed through ``mapInPandas`` Arrow batches.  The raster codecs
+(raw16/png16) are real; ``image_codec.decode`` raises
+``NotImplementedError`` for any other format.
 """
 
 from __future__ import annotations
@@ -17,7 +14,6 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import image_codec
@@ -100,77 +96,6 @@ def resize(images_df: DataFrame, factor: int = 2, out_fmt: str = "raw16") -> Dat
 
     return images_df.select("image_id", "bytes", "fmt", "w", "h").mapInPandas(
         rs, schema=RESIZE_SCHEMA
-    )
-
-
-def frame_sample(videos_df: DataFrame, every_n: int = 30) -> DataFrame:
-    """Video frame sampling — STUB: schema + signature only.
-
-    Raises at execution (not at plan time) because no video decoder is
-    available offline.  The plumbing (binary column in, exploded frame
-    rows out) is the real contract.
-    """
-    schema = T.StructType([
-        T.StructField("video_id", T.StringType()),
-        T.StructField("frame_idx", T.IntegerType()),
-        T.StructField("frame", T.BinaryType()),
-    ])
-
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                raise NotImplementedError(
-                    "video decode requires native libs not in this sandbox"
-                )
-            yield pd.DataFrame({"video_id": [], "frame_idx": [], "frame": []})
-
-    return videos_df.mapInPandas(sample, schema=schema)
-
-
-def audio_features(audio_df: DataFrame, frame_ms: int = 25) -> DataFrame:
-    """Audio feature extraction over opaque binary payloads.
-
-    Real Spark plumbing (binary column + typed metadata in, framed
-    feature rows out via Arrow batches); the codec itself is a
-    deterministic fake for ``fmt == 'pcm16'`` (raw little-endian int16
-    samples — decodable with numpy alone) and a clearly-marked STUB for
-    compressed formats (no audio libs in this sandbox).  Input schema:
-    (audio_id string, bytes binary, sample_rate int, fmt string).
-    Output: one row per ``frame_ms`` frame with RMS + peak.
-    """
-    schema = T.StructType([
-        T.StructField("audio_id", T.StringType()),
-        T.StructField("frame_idx", T.IntegerType()),
-        T.StructField("rms", T.DoubleType()),
-        T.StructField("peak", T.IntegerType()),
-    ])
-
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                if r["fmt"] != "pcm16":
-                    raise NotImplementedError(
-                        f"audio decode for {r['fmt']!r} requires native "
-                        "libs not in this sandbox"
-                    )
-                samples = np.frombuffer(r["bytes"], dtype="<i2")
-                spf = max(1, int(r["sample_rate"]) * frame_ms // 1000)
-                n_frames = len(samples) // spf
-                if not n_frames:
-                    continue
-                fr = samples[: n_frames * spf].reshape(n_frames, spf).astype(np.float64)
-                rows.append(pd.DataFrame({
-                    "audio_id": r["audio_id"],
-                    "frame_idx": np.arange(n_frames, dtype=np.int32),
-                    "rms": np.sqrt((fr * fr).mean(axis=1)),
-                    "peak": np.abs(fr).max(axis=1).astype(np.int32),
-                }))
-            yield (pd.concat(rows, ignore_index=True) if rows
-                   else pd.DataFrame({f.name: [] for f in schema.fields}))
-
-    return audio_df.select("audio_id", "bytes", "sample_rate", "fmt").mapInPandas(
-        feats, schema=schema
     )
 
 

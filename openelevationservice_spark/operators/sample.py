@@ -6,7 +6,7 @@ index is ``ix = floor((x - ul_x)/px)``, ``iy = floor((ul_y - y)/px)``
 from the upper-left origin.
 
 One physical shape serves every point-sampling operator (point, line
-vertices, kNN, streaming): :func:`pixel_index` decodes each tile ONCE
+vertices, kNN): :func:`pixel_index` decodes each tile ONCE
 into a flat ``array<smallint>`` column riding the tile index, the
 operators join it on ``cell_id`` (broadcast, or shuffled once the index
 outgrows the broadcast threshold — ``index_strategy="shuffle"``), and

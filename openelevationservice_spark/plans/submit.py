@@ -30,7 +30,7 @@ def build_zip(out_path: str) -> str:
     return out_path
 
 
-def _run_job(job: str, sf_dir: str, cpus: int, checkpoint_root: str | None) -> None:
+def _run_job(job: str, sf_dir: str, cpus: int | None, checkpoint_root: str | None) -> None:
     from pyspark.sql import SparkSession
 
     from .session import build_session
@@ -61,8 +61,8 @@ def main() -> None:
                                       "knn_tiles", "tile_stats"])
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR",
                                                        "/root/testdata/sf0.1"))
-    ap.add_argument("--cpus", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cpus", type=int, default=None,
+                    help="local[N] cores (default: build_session's rule)")
     ap.add_argument("--checkpoint-root", default=None,
                     help="SnapshotStore root for resumable execution")
     args = ap.parse_args()

@@ -1,19 +1,11 @@
 """Snapshot / checkpoint layer with per-partition lineage + row counts.
 
-North-rule requirement: "all stages checkpoint to Iceberg snapshots
-with per-partition lineage + row-count metrics so a killed job resumes
-mid-tiling".  This sandbox has no Iceberg runtime jars (SURVEY.md
-§7.0), so the layer implements Iceberg's *semantics* over Parquet —
-atomic manifest swap via directory rename, immutable snapshot dirs,
-manifest lineage.  When ``iceberg_catalog`` names a configured Spark
-catalog, :meth:`SnapshotStore.write` additionally attempts a real
-``writeTo("<catalog>.<stage>_<snap>").using("iceberg")`` **fed from the
-parquet snapshot just written** (a re-scan, never a second compute of
-the input plan — so a nondeterministic df cannot diverge between the
-two copies).  Parquet stays the authoritative copy that ``read()``
-scans; on failure the manifest records ``iceberg_fallback: true`` plus
-the error string (``iceberg_error``), distinguishing missing runtime
-jars from a genuine write failure (tests/test_snapshots_exec.py).
+Every stage checkpoints to an immutable Parquet snapshot with an
+Iceberg-style manifest (per-partition lineage + row counts), so a
+killed job resumes mid-tiling: atomic manifest swap via directory
+rename, immutable snapshot dirs, manifest lineage.  Reads scan the
+Parquet files with the schema recorded in the manifest, so no read
+runs a schema-inference job.
 
 Layout::
 
@@ -33,11 +25,12 @@ import os
 import shutil
 import time
 import uuid
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def _params_hash(params: dict) -> str:
@@ -61,11 +54,15 @@ def _footer_partition_counts(path: str) -> list[dict]:
     return out
 
 
+def _scan(spark: SparkSession, manifest: dict) -> DataFrame:
+    """A snapshot's rows, read with the schema its manifest recorded (an
+    inferred read would run one schema-inference job per scan)."""
+    return spark.read.schema(StructType.fromJson(manifest["schema"])).parquet(manifest["path"])
+
+
 @dataclass
 class SnapshotStore:
     root: str
-    iceberg_catalog: str | None = None   # e.g. "local" when jars are present
-    _spark: SparkSession | None = field(default=None, repr=False)
 
     def _stage_dir(self, stage: str) -> str:
         return os.path.join(self.root, stage)
@@ -76,20 +73,6 @@ class SnapshotStore:
             return None
         with open(p) as f:
             return json.load(f)
-
-    def _try_iceberg(self, df: DataFrame, stage: str, snap_id: str) -> tuple[str | None, str | None]:
-        """Real Iceberg path: returns (table identifier, None) on success,
-        (None, error string) on failure — so a genuine write failure
-        (auth, schema mismatch, partial commit) is distinguishable in the
-        manifest from the expected no-runtime-jars fallback."""
-        if not self.iceberg_catalog:
-            return None, None
-        table = f"{self.iceberg_catalog}.{stage.replace('/', '_')}_{snap_id.replace('-', '_')}"
-        try:
-            df.writeTo(table).using("iceberg").createOrReplace()
-            return table, None
-        except Exception as e:  # no catalog impl / no runtime / real failure
-            return None, str(e).split("\n")[0][:500]
 
     def write(self, df: DataFrame, stage: str, params: dict | None = None,
               inputs: list[str] | None = None) -> dict:
@@ -117,14 +100,6 @@ class SnapshotStore:
                 f"snapshot {snap_id}: observed {observed_total} rows during "
                 f"the write but parquet footers sum to {total}"
             )
-        # Iceberg copy is derived from the parquet snapshot just written
-        # (a re-scan, not a recompute of df) so a nondeterministic df can
-        # never leave the two copies divergent; parquet stays the
-        # authoritative copy read()/run_stage() use, the Iceberg table is
-        # a secondary artifact for downstream catalog consumers.
-        iceberg_table, iceberg_error = self._try_iceberg(
-            df.sparkSession.read.parquet(tmp), stage, snap_id
-        )
         manifest = {
             "snapshot_id": snap_id,
             "stage": stage,
@@ -135,10 +110,7 @@ class SnapshotStore:
             "partitions": partitions,
             "total_rows": total,
             "schema": df.schema.jsonValue(),
-            "format": "parquet",  # authoritative copy (what read() scans)
-            "iceberg_table": iceberg_table,
-            "iceberg_fallback": bool(self.iceberg_catalog) and iceberg_table is None,
-            "iceberg_error": iceberg_error,
+            "format": "parquet",
         }
         with open(os.path.join(tmp, "_manifest.json"), "w") as f:
             json.dump(manifest, f, indent=1)
@@ -153,7 +125,7 @@ class SnapshotStore:
         m = self.current_manifest(stage)
         if m is None:
             raise FileNotFoundError(f"no snapshot for stage {stage!r} under {self.root}")
-        return spark.read.parquet(m["path"])
+        return _scan(spark, m)
 
     def run_stage(self, spark: SparkSession, stage: str, params: dict,
                   build: Callable[[], DataFrame],
@@ -172,9 +144,9 @@ class SnapshotStore:
             and m.get("inputs", []) == (inputs or [])
             and os.path.exists(m["path"])
         ):
-            return spark.read.parquet(m["path"]), {**m, "resumed": True}
+            return _scan(spark, m), {**m, "resumed": True}
         manifest = self.write(build(), stage, params, inputs)
-        return spark.read.parquet(manifest["path"]), {**manifest, "resumed": False}
+        return _scan(spark, manifest), {**manifest, "resumed": False}
 
     def drop_stage(self, stage: str) -> None:
         shutil.rmtree(self._stage_dir(stage), ignore_errors=True)

@@ -14,6 +14,11 @@ result is banned by name.
 The benchmark (``perfbench/``) calls the library with keyword options;
 every such call must still bind to the library's current signatures, so
 dropping a parameter breaks a tier-1 test instead of a traced run.
+
+Every module is reached from an entry point: the request surfaces
+(``api.py``, ``grpc_shim.py``), the contract queries, the submit CLI,
+the driver entry and the benchmarks.  A module only its own tests import
+is dead code and leaves the package.
 """
 
 import ast
@@ -23,6 +28,9 @@ from pathlib import Path
 
 PACKAGE = Path(__file__).resolve().parents[1] / "openelevationservice_spark"
 PERFBENCH = PACKAGE.parent / "perfbench"
+ENTRY_POINTS = [PACKAGE / "api.py", PACKAGE / "grpc_shim.py", PACKAGE / "contract.py",
+                PACKAGE / "plans" / "submit.py", PACKAGE.parent / "__spark_entry__.py",
+                PACKAGE.parent / "bench.py", *sorted(PERFBENCH.glob("*.py"))]
 DEPLOYMENT_SETTINGS = {"plans/session.py", "plans/submit.py"}
 ENV_READERS = {"environ", "environb", "getenv", "getenvb"}
 SHAPE_SELECTORS = {"impl", "method", "arrow_impl", "algorithm", "gather_strategy",
@@ -60,6 +68,18 @@ def test_detector_sees_env_reads():
     src = ("import os\nimport os as o\nfrom os import getenv\n"
            "a = os.environ.get('X')\nb = o.getenv('Y')\n")
     assert _env_reads(ast.parse(src)) == [3, 4, 5]
+
+
+def test_submit_leaves_cpus_to_build_session(monkeypatch):
+    """Without ``--cpus`` the submit CLI passes ``cpus=None``, so the
+    session is sized by build_session's one rule."""
+    from openelevationservice_spark.plans import submit
+    calls = []
+    monkeypatch.setattr(submit, "_run_job", lambda *a: calls.append(a))
+    monkeypatch.setattr("sys.argv", ["submit", "--job", "point_elevation", "--sf-dir", "sf"])
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    submit.main()
+    assert calls == [("point_elevation", "sf", None, None)]
 
 
 def _shape_selectors(tree: ast.Module) -> list[str]:
@@ -185,3 +205,62 @@ def test_detector_sees_unbound_calls():
            "polygon_pixels(a)\n")
     assert [(line, call) for line, call, _ in _unbound_library_calls(ast.parse(src))] == \
         [(3, "polygon_pixels"), (5, "api.no_such_function"), (7, "polygon_pixels")]
+
+
+def _imported_files(path: Path, root: Path) -> set[Path]:
+    """Files under ``root`` that ``path`` imports anywhere in its body
+    (function-local imports included), relative imports resolved."""
+    pkg = path.relative_to(root).parent.parts
+    candidates = []
+    for node in ast.walk(ast.parse(path.read_text(), str(path))):
+        if isinstance(node, ast.Import):
+            candidates += [a.name.split(".") for a in node.names]
+        elif isinstance(node, ast.ImportFrom):
+            base = list(pkg[:len(pkg) - node.level + 1]) if node.level else []
+            base += node.module.split(".") if node.module else []
+            candidates += [base] + [base + [a.name] for a in node.names]
+    found = set()
+    for parts in filter(None, candidates):
+        module = root.joinpath(*parts)
+        for f in (module.with_suffix(".py"), module / "__init__.py"):
+            if f.is_file():
+                found.add(f)
+    return found
+
+
+def _unreached(package: Path, entries: list[Path]) -> list[str]:
+    """Non-``__init__`` modules of ``package`` that no chain of imports
+    from ``entries`` reaches."""
+    root = package.parent
+    seen, todo = set(entries), list(entries)
+    while todo:
+        new = _imported_files(todo.pop(), root) - seen
+        seen |= new
+        todo += new
+    return sorted(p.relative_to(package).as_posix() for p in package.rglob("*.py")
+                  if p.name != "__init__.py" and p not in seen)
+
+
+def test_every_module_is_reachable():
+    unreached = _unreached(PACKAGE, ENTRY_POINTS)
+    assert not unreached, f"modules no entry point imports: {unreached}"
+
+
+def test_detector_sees_unreached_module(tmp_path):
+    files = {
+        "pkg/__init__.py": "",
+        "pkg/entry.py": "from .a import f\nimport pkg.b as b\n"
+                        "def g():\n    from pkg.sub import c\n",
+        "pkg/a.py": "from ..pkg.sub.d import h\n",
+        "pkg/b.py": "import os\n",
+        "pkg/sub/__init__.py": "",
+        "pkg/sub/c.py": "",
+        "pkg/sub/d.py": "",
+        "pkg/dead.py": "from .sub import gone\n",
+        "pkg/sub/gone.py": "",
+    }
+    for name, src in files.items():
+        (tmp_path / name).parent.mkdir(parents=True, exist_ok=True)
+        (tmp_path / name).write_text(src)
+    package = tmp_path / "pkg"
+    assert _unreached(package, [package / "entry.py"]) == ["dead.py", "sub/gone.py"]

@@ -1,12 +1,11 @@
 """Physical-plan regression tests: the shapes that make this engine
 scale must not silently regress (SURVEY.md §4).  Assertions use the
-executedPlan string via plans/exec.py helpers.
+executedPlan string via the tests/plan_checks.py helpers.
 """
 
 import pandas as pd
 import pytest
 
-from openelevationservice_spark.plans import exec as ex
 from openelevationservice_spark.operators.point import point_elevation
 from openelevationservice_spark.operators.line import (
     densify_lines,
@@ -15,6 +14,7 @@ from openelevationservice_spark.operators.line import (
 from openelevationservice_spark.operators.polygon import polygon_pixels
 from openelevationservice_spark.operators import dedup
 from openelevationservice_spark.sources import fixtures as fx
+from tests import plan_checks as pc
 
 
 @pytest.fixture(scope="module")
@@ -37,9 +37,9 @@ def pts(spark, world):
 
 def test_point_plan_is_broadcast_equi_join(spark, images, pts):
     df = point_elevation(pts, images)
-    ex.assert_broadcast_join(df)
-    ex.assert_no_cartesian(df)
-    plan = ex.explain_str(df)
+    pc.assert_broadcast_join(df)
+    pc.assert_no_cartesian(df)
+    plan = pc.explain_str(df)
     # the gather is JVM element_at — no Python stage after the join
     after_join = plan[plan.index("BroadcastHashJoin"):]
     assert "ArrowEvalPython" not in after_join
@@ -49,7 +49,7 @@ def test_point_plan_is_broadcast_equi_join(spark, images, pts):
 def test_densify_plan_has_no_exchange(spark):
     lines = spark.createDataFrame(pd.DataFrame({
         "line_id": [1], "x1": [13.2], "y1": [38.2], "x2": [13.21], "y2": [38.21]}))
-    plan = ex.explain_str(densify_lines(lines))
+    plan = pc.explain_str(densify_lines(lines))
     assert "Exchange" not in plan          # densify is shuffle-free
     assert "MapInPandas" not in plan       # and pure JVM: no Arrow kernel
     assert "EvalPython" not in plan
@@ -59,8 +59,8 @@ def test_line_plan_shape(spark, images, pts):
     lines = spark.createDataFrame(pd.DataFrame({
         "line_id": [1], "x1": [13.2], "y1": [38.2], "x2": [13.21], "y2": [38.21]}))
     df = line_vertices_elevation(lines, images)
-    ex.assert_broadcast_join(df)
-    ex.assert_no_cartesian(df)
+    pc.assert_broadcast_join(df)
+    pc.assert_no_cartesian(df)
 
 
 def test_polygon_plan_is_equi_join(spark, images):
@@ -71,7 +71,7 @@ def test_polygon_plan_is_equi_join(spark, images):
              {"lon": 13.2, "lat": 38.2}]]}),
         schema="poly_id long, ring array<struct<lon:double,lat:double>>")
     df = polygon_pixels(polys, images)
-    ex.assert_no_cartesian(df)
+    pc.assert_no_cartesian(df)
 
 
 def test_lsh_pair_join_is_equi_not_cross(spark):
@@ -79,9 +79,9 @@ def test_lsh_pair_join_is_equi_not_cross(spark):
         "doc_id": [1, 2, 3],
         "text": ["a b c d e", "a b c d e", "x y z w v"]}))
     df = dedup.lsh_candidate_pairs(docs)
-    ex.assert_no_cartesian(df)
+    pc.assert_no_cartesian(df)
     df2 = dedup.simhash_near_pairs(docs, max_hamming=1)
-    ex.assert_no_cartesian(df2)
+    pc.assert_no_cartesian(df2)
 
 
 def test_line_default_path_is_pure_jvm(spark, images):
@@ -91,7 +91,7 @@ def test_line_default_path_is_pure_jvm(spark, images):
     lines = spark.createDataFrame(pd.DataFrame({
         "line_id": [1], "x1": [13.2], "y1": [38.2], "x2": [13.21], "y2": [38.21]}))
     df = line_vertices_elevation(lines, images)
-    plan = ex.explain_str(df)
+    plan = pc.explain_str(df)
     # the pixel-index build decodes tiles (one MapInPandas on the
     # broadcast side); the probe-side pipeline itself must be JVM-only
     probe = plan[plan.index("BroadcastHashJoin"):] + plan[:plan.index("Generate")]
@@ -109,7 +109,7 @@ def test_line_elevation_default_gather_is_jvm(spark, images):
 
     lines = spark.createDataFrame(pd.DataFrame({
         "line_id": [1], "x1": [13.2], "y1": [38.2], "x2": [13.21], "y2": [38.21]}))
-    plan = ex.explain_str(line_elevation(lines, images))
+    plan = pc.explain_str(line_elevation(lines, images))
     assert plan.count("MapInPandas") == 2
     assert "BatchEvalPython" not in plan
 
@@ -124,7 +124,7 @@ def test_polygon_runs_plan_generates_rows_in_jvm(spark, images):
              {"lon": 13.2, "lat": 38.2}]]}),
         schema="poly_id long, ring array<struct<lon:double,lat:double>>")
     df = polygon_pixels(polys, images)
-    plan = ex.explain_str(df)
+    plan = pc.explain_str(df)
     assert "Generate" in plan and "posexplode" in plan
     # two MapInPandas total: tile decode (build side) + run kernel
     assert plan.count("MapInPandas") == 2
@@ -151,7 +151,7 @@ def test_dissolve_exchange_partition_count_is_explicit(spark, images, world):
         }),
         schema="poly_id long, ring array<struct<lon:double,lat:double>>",
     )
-    plan = ex.explain_str(polygon_color_invariants(polys, images))
+    plan = pc.explain_str(polygon_color_invariants(polys, images))
     want = spark.sparkContext.defaultParallelism * 2
     m = re.search(r"hashpartitioning\(poly_id[^,]*, height_base[^,]*, (\d+)\)", plan)
     assert m, "dissolve band exchange missing from plan"

@@ -1,12 +1,12 @@
-import json
 import os
+import uuid
 
 import pytest
 
 from pyspark.sql import functions as F
 
-from openelevationservice_spark.plans import exec as ex
 from openelevationservice_spark.sources.snapshots import SnapshotStore
+from tests import plan_checks as pc
 
 
 @pytest.fixture
@@ -53,42 +53,14 @@ def test_run_stage_lineage_inputs(spark, store):
     assert not m_b2["resumed"]
 
 
-def test_salted_repartition_splits_hot_key(spark):
-    df = spark.range(10000).withColumn("key", F.lit("hot"))
-    salted = ex.with_salt(df, 8)
-    n = salted.select("salt").distinct().count()
-    assert n == 8
-
-
-def test_two_phase_count(spark):
-    df = spark.range(1000).withColumn("key", (F.col("id") % 3).cast("string"))
-    got = {r["key"]: r["count"] for r in ex.two_phase_count(df, "key").collect()}
-    assert got == {"0": 334, "1": 333, "2": 333}
-
-
 def test_plan_assertions(spark):
     small = spark.range(10).withColumnRenamed("id", "k")
     big = spark.range(1000).withColumnRenamed("id", "k")
     j = big.join(F.broadcast(small), "k")
-    ex.assert_broadcast_join(j)
-    ex.assert_no_cartesian(j)
+    pc.assert_broadcast_join(j)
+    pc.assert_no_cartesian(j)
     with pytest.raises(AssertionError):
-        ex.assert_no_cartesian(big.crossJoin(small.withColumnRenamed("k", "k2")))
-
-
-def test_iceberg_flag_falls_back_without_catalog(spark, tmp_path):
-    """iceberg_catalog set but no Iceberg runtime on this classpath →
-    the write must fall back to the parquet snapshot and say so."""
-    from openelevationservice_spark.sources.snapshots import SnapshotStore
-    st = SnapshotStore(str(tmp_path / "snaps"), iceberg_catalog="nosuch")
-    df = spark.range(100)
-    m = st.write(df, "ice_stage", params={"p": 1})
-    assert m["format"] == "parquet"
-    assert m["iceberg_fallback"] is True
-    assert m["iceberg_table"] is None
-    assert m["iceberg_error"]  # the actual failure is recorded, not swallowed
-    assert m["total_rows"] == 100
-    assert st.read(spark, "ice_stage").count() == 100
+        pc.assert_no_cartesian(big.crossJoin(small.withColumnRenamed("k", "k2")))
 
 
 def test_manifest_counts_match_footers(spark, store):
@@ -97,32 +69,41 @@ def test_manifest_counts_match_footers(spark, store):
     assert m["total_rows"] == 777
     assert len(m["partitions"]) >= 1
     assert sum(p["rows"] for p in m["partitions"]) == 777
-    assert m["iceberg_fallback"] is False
 
 
-@pytest.fixture(scope="module")
-def world_images(spark):
-    from openelevationservice_spark.sources import fixtures as fx
-    df = fx.make_images_df(spark, fx.World(nx=3, ny=3))
-    df.persist()
-    df.count()
-    return df
+def _jobs(spark, fn) -> int:
+    """Spark jobs launched while ``fn`` runs (counted by job group)."""
+    sc = spark.sparkContext
+    group = f"snapshot-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_ddl_create_import_drop(spark, world_images):
-    """S4: CREATE TABLE / append-import / DROP via spark.sql, mirroring
-    the reference's flask create / raster2pgsql -a / flask drop."""
-    from openelevationservice_spark.sources import ddl
-    name = "oes_cgiar_test_ddl"
-    ddl.drop_tiles_table(spark, name)
-    ddl.create_tiles_table(spark, name)
-    ddl.create_tiles_table(spark, name)          # idempotent
-    ddl.import_tiles(world_images, name)
-    back = ddl.read_tiles_table(spark, name)
-    assert back.count() == world_images.count()
-    assert set(back.columns) == {"image_id", "bytes", "w", "h",
-                                 "fmt", "caption", "phash"}
-    ddl.import_tiles(world_images, name)         # append semantics
-    assert ddl.read_tiles_table(spark, name).count() == 2 * world_images.count()
-    ddl.drop_tiles_table(spark, name)
-    assert name not in [t.name for t in spark.catalog.listTables()]
+def test_snapshot_reads_launch_no_jobs(spark, store, tmp_path):
+    """Reads use the manifest's schema: opening a snapshot (read or a
+    resumed run_stage) runs no schema-inference job, and a write runs
+    exactly the jobs of a plain parquet write of the same frame."""
+    df = spark.range(100).withColumn("v", F.col("id") * 2)
+    assert _jobs(spark, lambda: store.write(df, "w")) == \
+        _jobs(spark, lambda: df.write.parquet(str(tmp_path / "plain")))
+    assert _jobs(spark, lambda: store.read(spark, "w")) == 0
+    store.run_stage(spark, "r", {"x": 1}, lambda: df)
+    assert _jobs(spark, lambda: store.run_stage(spark, "r", {"x": 1}, lambda: df)) == 0
+
+
+def test_snapshot_read_schema_equals_inferred(spark, store):
+    df = spark.range(50).select(
+        F.col("id"), (F.col("id") * 2).cast("int").alias("k"),
+        F.array(F.col("id"), F.lit(1)).alias("xs"),
+        F.struct(F.lit("a").alias("s"), F.col("id").alias("n")).alias("st"),
+        F.when(F.col("id") % 3 == 0, F.lit(None)).otherwise(F.col("id")).alias("maybe"))
+    assert not df.schema["id"].nullable and not df.schema["xs"].nullable
+    m = store.write(df, "schema")
+    back = store.read(spark, "schema")
+    inferred = spark.read.parquet(m["path"])
+    assert back.schema == inferred.schema
+    assert sorted(back.collect()) == sorted(inferred.collect()) == sorted(df.collect())

@@ -88,46 +88,6 @@ def test_stub_format_raises_at_execution(spark):
         plan.collect()
 
 
-def test_frame_sample_stub_schema(spark):
-    empty = spark.createDataFrame(pd.DataFrame({"video_id": pd.Series([], dtype="str"),
-                                                "bytes": pd.Series([], dtype=object)}),
-                                  schema="video_id string, bytes binary")
-    out = multimodal.frame_sample(empty)
-    assert [f.name for f in out.schema.fields] == ["video_id", "frame_idx", "frame"]
-    assert out.count() == 0
-
-
 def test_roundtrip_invariant_all_ok(spark, images):
     got = multimodal.roundtrip_invariant(images).toPandas()
     assert got.ok.all() and got.phash_match.all() and got.caption_ok.all()
-
-
-def test_audio_features_pcm16(spark):
-    """Audio plumbing: pcm16 frames → RMS/peak rows; compressed fmt raises."""
-    import numpy as np
-    import pandas as pd
-    from openelevationservice_spark.operators.multimodal import audio_features
-
-    sr = 8000
-    t = np.arange(sr, dtype=np.float64) / sr          # 1 second
-    wave = (np.sin(2 * np.pi * 440 * t) * 10000).astype("<i2")
-    pdf = pd.DataFrame({
-        "audio_id": ["a1"], "bytes": [wave.tobytes()],
-        "sample_rate": [sr], "fmt": ["pcm16"],
-    })
-    df = spark.createDataFrame(pdf, schema="audio_id string, bytes binary, sample_rate int, fmt string")
-    out = audio_features(df, frame_ms=25).toPandas().sort_values("frame_idx")
-    spf = sr * 25 // 1000
-    assert len(out) == sr // spf
-    # sine RMS ≈ amplitude/sqrt(2) within a few percent per frame
-    assert np.allclose(out.rms, 10000 / np.sqrt(2), rtol=0.15)
-    assert (out.peak <= 10000).all() and (out.peak > 9000).all()
-
-    bad = spark.createDataFrame(
-        pd.DataFrame({"audio_id": ["a2"], "bytes": [b"xx"],
-                      "sample_rate": [sr], "fmt": ["mp3"]}),
-        schema="audio_id string, bytes binary, sample_rate int, fmt string")
-    import pytest
-    from py4j.protocol import Py4JJavaError
-    with pytest.raises(Exception):
-        audio_features(bad).collect()
