@@ -252,12 +252,14 @@ class ElevationService:
             pd.DataFrame({"line_id": [0], "x1": [x1], "y1": [y1],
                           "x2": [x2], "y2": [y2]})
         )
-        verts = (
+        # sorted on the driver: a Spark orderBy would run the plan (for
+        # polygons, the Python rasterizer) again in its sampling job
+        verts = sorted(
             line_vertices_elevation(lines, self.images_df,
                                     pix_index_df=self._pix_index())
-            .orderBy("seq")
-            .select("x", "y", F.coalesce(F.col("z"), F.lit(NODATA)).alias("z"))
-            .collect()
+            .select("seq", "x", "y", F.coalesce(F.col("z"), F.lit(NODATA)).alias("z"))
+            .collect(),
+            key=lambda r: r["seq"],
         )
         if not verts:
             raise _err_geometry(
@@ -298,11 +300,10 @@ class ElevationService:
             ]}),
             schema="poly_id long, ring array<struct<lon:double,lat:double>>",
         )
-        # default broadcast join: the one polygon rides into the tile
-        # scan, with no exchange in front of the rasterizer
-        px = (polygon_pixels(polys, self.images_df)
-              .orderBy("x", "y")                      # W2 ordered dump
-              .select("x", "y", "z").collect())
+        # W2 ordered dump, sorted on the driver like the line reply above
+        px = sorted(polygon_pixels(polys, self.images_df)
+                    .select("x", "y", "z").collect(),
+                    key=lambda r: (r["x"], r["y"]))
         if not px:
             raise _err_geometry(
                 "The requested geometry is outside the bounds of srtm"

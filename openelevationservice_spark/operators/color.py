@@ -4,7 +4,7 @@ Reference (``server/api/querybuilder.py:56-102`` +
 ``server/api/elevation_query_area_union.py:32-76``): fetch all pixel
 polygons, then **client-side** min/max/avg, 23-band bucketing
 
-    range_div   = (max - min + 1) / num_ranges
+    range_div   = (max - min + 1) / NUM_RANGES
     color_range = floor((height - min) / range_div)
     height_base = ceil(color_range * range_div + min)
 
@@ -25,9 +25,10 @@ pipeline stays distributed, and pixel values never become JVM rows:
 Bands dissolve independently, exactly as the reference unions per band,
 so the largest polygon's bands spread across tasks.  Only the final
 FeatureCollection is collected.  This is the one physical shape of both
-:func:`polygon_color_features` and :func:`polygon_color_invariants`;
-``index_strategy="shuffle"`` swaps only the polygon × tile join, for
-polygon batches past the broadcast threshold.
+:func:`polygon_color_features` and :func:`polygon_color_invariants`.
+The polygon × tile join is :func:`.polygon.polygon_tile_join`'s, so
+Spark's planner broadcasts or shuffles it by its size estimate; only the
+per-polygon stats (one small row per polygon) are broadcast by hint.
 """
 
 from __future__ import annotations
@@ -56,11 +57,10 @@ def polygon_stats(pixels: DataFrame) -> DataFrame:
     )
 
 
-def with_height_base(pixels: DataFrame, stats_df: DataFrame,
-                     num_ranges: int = NUM_RANGES) -> DataFrame:
+def with_height_base(pixels: DataFrame, stats_df: DataFrame) -> DataFrame:
     """Exact reference band arithmetic as JVM columns (G2)."""
     j = pixels.join(F.broadcast(stats_df.select("poly_id", "min_z", "max_z")), "poly_id")
-    range_div = (F.col("max_z") - F.col("min_z") + F.lit(1)) / F.lit(float(num_ranges))
+    range_div = (F.col("max_z") - F.col("min_z") + F.lit(1)) / F.lit(float(NUM_RANGES))
     color_range = F.floor((F.col("z") - F.col("min_z")) / range_div)
     height_base = F.ceil(color_range * range_div + F.col("min_z"))
     return j.withColumn("height_base", height_base.cast("long"))
@@ -143,7 +143,7 @@ SUBRUN_SCHEMA = T.StructType(
 
 
 def _subrun_partial_frame(pid_run, gy_run, gx0_run, lens, z,
-                          minz_run, maxz_run, num_ranges):
+                          minz_run, maxz_run):
     """Vectorized band-split of flat run arrays → map-side-partial
     subrun frame (one row per (poly, band) group of the batch, subruns
     packed).  ``z`` is the int64 concat of every run's values in run
@@ -155,7 +155,7 @@ def _subrun_partial_frame(pid_run, gy_run, gx0_run, lens, z,
     rep = np.repeat(np.arange(n_runs), lens)
     min_z = minz_run.astype(np.float64)[rep]
     max_z = maxz_run.astype(np.float64)[rep]
-    range_div = (max_z - min_z + 1.0) / float(num_ranges)
+    range_div = (max_z - min_z + 1.0) / float(NUM_RANGES)
     color_range = np.floor((z - min_z) / range_div)
     hb = np.ceil(color_range * range_div + min_z).astype(np.int64)
     starts0 = np.concatenate(([0], np.cumsum(lens)[:-1]))
@@ -191,7 +191,7 @@ def _subrun_partial_frame(pid_run, gy_run, gx0_run, lens, z,
     )
 
 
-def _band_subrun_kernel_blob(num_ranges: int):
+def _band_subrun_kernel_blob(batches):
     """Vectorized band-split of packed run blobs → packed band-subruns.
 
     Input rows: (poly_id, blob, min_z, max_z) from
@@ -212,38 +212,34 @@ def _band_subrun_kernel_blob(num_ranges: int):
     z field band-splits almost every step).  The final gather
     concatenates the partials (same multiset of packed longs; every
     consumer rasterizes, so order never matters)."""
-
-    def kernel(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            # per-row work is VIEWS only (3 frombuffer slices); every
-            # astype/expansion happens once per batch over the
-            # concatenated arrays — the per-pair alloc loop was the
-            # measured low-core cost of the blob path
-            gy_l, gx0_l, ln_l, z_l, n_runs = [], [], [], [], []
-            for blob in pdf["blob"]:
-                n = int(np.frombuffer(blob, dtype="<i4", count=1)[0])
-                head = np.frombuffer(blob, dtype="<i4", count=1 + 3 * n)
-                gy_l.append(head[1:1 + n])
-                gx0_l.append(head[1 + n:1 + 2 * n])
-                ln_l.append(head[1 + 2 * n:])
-                z_l.append(np.frombuffer(blob, dtype="<i2",
-                                         offset=4 * (1 + 3 * n)))
-                n_runs.append(n)
-            n_runs = np.asarray(n_runs, dtype=np.int64)
-            out = _subrun_partial_frame(
-                np.repeat(pdf["poly_id"].to_numpy(), n_runs),
-                np.concatenate(gy_l).astype(np.int64),
-                np.concatenate(gx0_l).astype(np.int64),
-                np.concatenate(ln_l).astype(np.int64),
-                np.concatenate(z_l).astype(np.int64),
-                np.repeat(pdf["min_z"].to_numpy(), n_runs),
-                np.repeat(pdf["max_z"].to_numpy(), n_runs), num_ranges)
-            if out is not None:
-                yield out
-
-    return kernel
+    for pdf in batches:
+        if not len(pdf):
+            continue
+        # per-row work is VIEWS only (3 frombuffer slices); every
+        # astype/expansion happens once per batch over the
+        # concatenated arrays — the per-pair alloc loop was the
+        # measured low-core cost of the blob path
+        gy_l, gx0_l, ln_l, z_l, n_runs = [], [], [], [], []
+        for blob in pdf["blob"]:
+            n = int(np.frombuffer(blob, dtype="<i4", count=1)[0])
+            head = np.frombuffer(blob, dtype="<i4", count=1 + 3 * n)
+            gy_l.append(head[1:1 + n])
+            gx0_l.append(head[1 + n:1 + 2 * n])
+            ln_l.append(head[1 + 2 * n:])
+            z_l.append(np.frombuffer(blob, dtype="<i2",
+                                     offset=4 * (1 + 3 * n)))
+            n_runs.append(n)
+        n_runs = np.asarray(n_runs, dtype=np.int64)
+        out = _subrun_partial_frame(
+            np.repeat(pdf["poly_id"].to_numpy(), n_runs),
+            np.concatenate(gy_l).astype(np.int64),
+            np.concatenate(gx0_l).astype(np.int64),
+            np.concatenate(ln_l).astype(np.int64),
+            np.concatenate(z_l).astype(np.int64),
+            np.repeat(pdf["min_z"].to_numpy(), n_runs),
+            np.repeat(pdf["max_z"].to_numpy(), n_runs))
+        if out is not None:
+            yield out
 
 
 def _gather_bands(subs: DataFrame) -> DataFrame:
@@ -258,7 +254,7 @@ def _gather_bands(subs: DataFrame) -> DataFrame:
     )
 
 
-def _banded_subruns_blob(blobs: DataFrame, num_ranges: int) -> DataFrame:
+def _banded_subruns_blob(blobs: DataFrame) -> DataFrame:
     """One row per (poly_id, height_base): the band's packed subruns.
     Stats aggregate over the blob table's pruned scalar min/max columns
     (no blob unpacking), broadcast back, and the band-split unpacks the
@@ -267,7 +263,7 @@ def _banded_subruns_blob(blobs: DataFrame, num_ranges: int) -> DataFrame:
     stats = blob_stats(blobs).select("poly_id", "min_z", "max_z")
     j = (blobs.join(F.broadcast(stats), "poly_id")
          .select("poly_id", "blob", "min_z", "max_z"))
-    subs = j.mapInPandas(_band_subrun_kernel_blob(num_ranges), SUBRUN_SCHEMA)
+    subs = j.mapInPandas(_band_subrun_kernel_blob, SUBRUN_SCHEMA)
     return _gather_bands(subs)
 
 
@@ -322,9 +318,7 @@ def _dissolve_partition_subs(batches):
 
 
 def polygon_color_features(polygons_df: DataFrame, images_df: DataFrame,
-                           num_ranges: int = NUM_RANGES,
-                           index_strategy: str = "broadcast",
-                           spread: bool = True,
+                           *, spread: bool = True,
                            blobs_df: DataFrame | None = None) -> DataFrame:
     """Distributed equivalent of ``group_and_union_geometries``.
 
@@ -335,15 +329,14 @@ def polygon_color_features(polygons_df: DataFrame, images_df: DataFrame,
     ``polygon_pixel_run_blobs`` result for the same polygons) to reuse
     one rasterization across :func:`~.polygon.blob_stats` and the
     dissolve; the caller then owns its cache lifecycle and this
-    operator takes no lease of its own.
+    operator takes no lease of its own.  ``spread`` is ignored: it is
+    kept only because existing benchmark calls pass it.
     """
     blobs = blobs_df
     if blobs is None:
-        blobs = polygon_pixel_run_blobs(polygons_df, images_df,
-                                        index_strategy=index_strategy,
-                                        spread=spread)
+        blobs = polygon_pixel_run_blobs(polygons_df, images_df)
         lease("color_features", blobs)
-    return _banded_subruns_blob(blobs, num_ranges).mapInPandas(
+    return _banded_subruns_blob(blobs).mapInPandas(
         _dissolve_partition_subs, schema=FEATURE_SCHEMA
     )
 
@@ -411,17 +404,13 @@ def _invariants_frame(pdf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
-def polygon_color_invariants(polygons_df: DataFrame, images_df: DataFrame,
-                             num_ranges: int = NUM_RANGES,
-                             index_strategy: str = "broadcast",
-                             spread: bool = True) -> DataFrame:
+def polygon_color_invariants(polygons_df: DataFrame, images_df: DataFrame) -> DataFrame:
     """Per-band dissolve invariants (poly_id, height_base, area_px,
     euler4, euler8) — the oracle-checkable face of the dissolve (G3).
     Same plan shape as :func:`polygon_color_features`."""
-    blobs = polygon_pixel_run_blobs(polygons_df, images_df,
-                                    index_strategy=index_strategy, spread=spread)
+    blobs = polygon_pixel_run_blobs(polygons_df, images_df)
     lease("color_invariants", blobs)
-    return _banded_subruns_blob(blobs, num_ranges).mapInPandas(
+    return _banded_subruns_blob(blobs).mapInPandas(
         _invariants_partition_subs, schema=INVARIANT_SCHEMA
     )
 

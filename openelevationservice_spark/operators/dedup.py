@@ -504,13 +504,12 @@ def _with_window_sizes(cc: DataFrame, id_col: str) -> DataFrame:
 
 
 def dedup_clusters(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-                   n_hashes: int = 8, bands: int = 4, shingle_n: int = 3,
-                   driver_max_pairs: int = CC_DRIVER_MAX_PAIRS) -> DataFrame:
+                   n_hashes: int = 8, bands: int = 4, shingle_n: int = 3) -> DataFrame:
     """End-to-end near-dup grouping: LSH candidate pairs → connected
     components → (id, rep_id, cluster_size).  ``rep_id`` is the cluster
     representative a curation pipeline keeps; singletons are their own
-    representative.  ``driver_max_pairs`` passes through to
-    :func:`connected_components` (0 forces the distributed loop).
+    representative.  Components come from :func:`connected_components`
+    at its default ``driver_max_pairs`` (``CC_DRIVER_MAX_PAIRS``).
 
     ``df`` must hold one row per document: ``id_col`` values are
     required to be unique.  The node set is taken as-is
@@ -524,5 +523,4 @@ def dedup_clusters(df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
     # ids_unique: the corpus contract is one row per document, so the
     # defensive distinct over node ids is a no-op exchange here
     return connected_components(pairs, df.select(id_col), id_col,
-                                driver_max_pairs=driver_max_pairs,
                                 with_sizes=True, ids_unique=True)

@@ -11,8 +11,9 @@ ring-expansion equi-join**, never a cross join:
           → distance point→tile-bbox (0 inside)
           → row_number per point ordered by (dist, image_id) ≤ k
 
-Candidate count is constant per point, so the plan is a plain
-broadcast/shuffle hash join plus one window — scale-safe.  ``z`` is
+Candidate count is constant per point, so the plan is a plain equi-join
+(broadcast while the index is under Spark's broadcast threshold, left
+to Spark's planner past it) plus one window — scale-safe.  ``z`` is
 sampled at the point clamped into the winning tile (the nearest pixel
 of that tile).
 """
@@ -25,11 +26,11 @@ from pyspark.sql import functions as F
 from ..constants import NODATA
 from ..functions.cells import cell_size_deg, cell_x_col, cell_y_col, disk_offsets, linear_id_col
 from ..sources.tiles import tile_index
-from .sample import gather_z_jvm, is_broadcast, pixel_index
+from .sample import broadcast_if_fits, gather_z_jvm, pixel_index
 
 
 def knn_tiles(points_df: DataFrame, images_df: DataFrame, k: int = 1,
-              max_rings: int = 2, index_strategy: str = "broadcast",
+              max_rings: int = 2,
               lon: str = "lon", lat: str = "lat",
               id_col: str = "point_id",
               pix_index_df: DataFrame | None = None) -> DataFrame:
@@ -44,9 +45,9 @@ def knn_tiles(points_df: DataFrame, images_df: DataFrame, k: int = 1,
     their pixel array through a second equi-join on ``image_id``, so
     pixel payloads never ride the window exchange (25 candidates/point
     each dragging a full tile array through the shuffle would dwarf the
-    query).  ``index_strategy="shuffle"`` exchanges both index joins
-    instead of broadcasting them, for an index past the broadcast
-    threshold.
+    query).  Both index joins broadcast their index side while Spark's
+    estimate of it is under the broadcast threshold and leave the join
+    to Spark's planner past it (:func:`.sample.broadcast_if_fits`).
     """
     dxs, dys = disk_offsets(max_rings)
     offsets = F.array(*[
@@ -66,9 +67,7 @@ def knn_tiles(points_df: DataFrame, images_df: DataFrame, k: int = 1,
         "cell_id", "image_id", "ul_x", "ul_y", "px", "w", "h",
         "min_x", "min_y", "max_x", "max_y",
     )
-    if is_broadcast(index_strategy):
-        idx = F.broadcast(idx)
-    j = pts.join(idx, "cell_id", "inner")
+    j = pts.join(broadcast_if_fits(idx), "cell_id", "inner")
 
     ddx = F.greatest(F.col("min_x") - F.col(lon), F.col(lon) - F.col("max_x"), F.lit(0.0))
     ddy = F.greatest(F.col("min_y") - F.col(lat), F.col(lat) - F.col("max_y"), F.lit(0.0))
@@ -87,9 +86,7 @@ def knn_tiles(points_df: DataFrame, images_df: DataFrame, k: int = 1,
     )
     pix = (pix_index_df if pix_index_df is not None
            else pixel_index(images_df)).select("image_id", "pix")
-    if is_broadcast(index_strategy):
-        pix = F.broadcast(pix)
-    out = gather_z_jvm(j.join(pix, "image_id"))
+    out = gather_z_jvm(j.join(broadcast_if_fits(pix), "image_id"))
     return (
         out.withColumn("z", F.coalesce(F.col("z"), F.lit(NODATA)).cast("int"))
         .drop("min_x", "min_y", "max_x", "max_y", "ul_x", "ul_y", "px", "w", "h", "cell_id")

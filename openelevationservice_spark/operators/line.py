@@ -124,7 +124,6 @@ def densify_lines(lines_df: DataFrame) -> DataFrame:
 
 def line_vertices_elevation(lines_df: DataFrame, images_df: DataFrame,
                             how: str = "inner",
-                            index_strategy: str = "broadcast",
                             pix_index_df: DataFrame | None = None) -> DataFrame:
     """Densified vertices with z and a deterministic order index ``seq``.
 
@@ -133,18 +132,16 @@ def line_vertices_elevation(lines_df: DataFrame, images_df: DataFrame,
     join, so under ``how='inner'`` out-of-coverage vertices leave gaps
     in seq (order is unaffected; the reference emits survivors in the
     same distance order).  The vertices are sampled by
-    :func:`.point.point_elevation`; ``index_strategy`` and
-    ``pix_index_df`` mean the same there.
+    :func:`.point.point_elevation` (same index join, chosen by Spark's
+    planner); ``pix_index_df`` means the same there.
     """
     verts = densify_lines(lines_df).select("line_id", "seq", "x", "y", "dist")
     return point_elevation(
-        verts, images_df, how=how, index_strategy=index_strategy,
-        lon="x", lat="y", pix_index_df=pix_index_df,
+        verts, images_df, how=how, lon="x", lat="y", pix_index_df=pix_index_df,
     ).select("line_id", "seq", "x", "y", "z", "dist", "image_id", "ix", "iy")
 
 
-def line_elevation(lines_df: DataFrame, images_df: DataFrame,
-                   index_strategy: str = "broadcast") -> DataFrame:
+def line_elevation(lines_df: DataFrame, images_df: DataFrame) -> DataFrame:
     """Assembled 3-D lines: (line_id, n_vertices, is_degenerate_point, vertices).
 
     ``vertices`` is the ordered array of (x, y, z) structs —
@@ -152,8 +149,7 @@ def line_elevation(lines_df: DataFrame, images_df: DataFrame,
     A single surviving vertex marks the zero-length-line fixup
     (reference ``views.py:63-68``).
     """
-    v = line_vertices_elevation(lines_df, images_df,
-                                index_strategy=index_strategy)
+    v = line_vertices_elevation(lines_df, images_df)
     pt = F.struct(F.col("dist"), F.col("x"), F.col("y"), F.col("z"))
     return (
         v.groupBy("line_id")

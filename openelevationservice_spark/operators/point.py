@@ -8,9 +8,10 @@ Reference shape (``server/api/querybuilder.py:257-313``)::
 Spark plan (one physical shape, all JVM-side except the tile decode):
 
     points ─ cell_id = f(lon, lat)            (Column arithmetic)
-           ─ equi-join pixel index on cell_id (broadcast; shuffle once
-                                               the index outgrows the
-                                               broadcast threshold)
+           ─ equi-join pixel index on cell_id (broadcast while the
+                                               index is under Spark's
+                                               broadcast threshold, the
+                                               planner's join past it)
            ─ ix/iy pixel indices              (Column arithmetic)
            ─ gather z: element_at(pix, …)     (codegen'd, sample.py)
            ─ coalesce(z, -32768)
@@ -31,7 +32,7 @@ from pyspark.sql import functions as F
 
 from ..constants import NODATA
 from ..functions.cells import cell_id_col
-from .sample import gather_z_jvm, is_broadcast, pixel_index
+from .sample import broadcast_if_fits, gather_z_jvm, pixel_index
 
 
 def with_pixel_indices(df: DataFrame, lon: str = "lon", lat: str = "lat") -> DataFrame:
@@ -43,21 +44,8 @@ def with_pixel_indices(df: DataFrame, lon: str = "lon", lat: str = "lat") -> Dat
     )
 
 
-def join_tiles(points_df: DataFrame, index_df: DataFrame, how: str = "inner",
-               index_strategy: str = "broadcast",
-               lon: str = "lon", lat: str = "lat") -> DataFrame:
-    """points × pixel-index equi-join on cell_id (J1 in SURVEY.md §2.3)."""
-    pts = points_df.withColumn("cell_id", cell_id_col(F.col(lon), F.col(lat)))
-    idx = index_df.select("cell_id", "image_id", "ul_x", "ul_y", "px", "w", "h",
-                          "pix")
-    if is_broadcast(index_strategy):
-        idx = F.broadcast(idx)
-    return pts.join(idx, "cell_id", how)
-
-
 def point_elevation(points_df: DataFrame, images_df: DataFrame,
                     how: str = "inner",
-                    index_strategy: str = "broadcast",
                     lon: str = "lon", lat: str = "lat",
                     pix_index_df: DataFrame | None = None) -> DataFrame:
     """points (…, lon, lat) → (…, image_id, ix, iy, z).
@@ -70,14 +58,17 @@ def point_elevation(points_df: DataFrame, images_df: DataFrame,
     The decoded pixel arrays ride the index join and sampling is a
     codegen'd ``element_at`` — no Python in the hot path.  Pass a
     persisted ``pix_index_df`` (:func:`.sample.pixel_index`) to reuse
-    decode work across queries.  ``index_strategy="shuffle"`` exchanges
-    both sides on ``cell_id`` instead of broadcasting the index — the
-    regime where the queried tiles' decoded pixels exceed the broadcast
-    threshold.
+    decode work across queries.  The index is broadcast while Spark's
+    size estimate of it is under ``spark.sql.autoBroadcastJoinThreshold``
+    (:func:`.sample.broadcast_if_fits`); once the decoded pixels outgrow
+    it, Spark's planner picks the join (a shuffle join on ``cell_id``
+    unless it takes the points side as small).
     """
-    idx = pix_index_df if pix_index_df is not None else pixel_index(images_df)
-    j = join_tiles(points_df, idx, how=how, index_strategy=index_strategy,
-                   lon=lon, lat=lat)
+    idx = (pix_index_df if pix_index_df is not None else pixel_index(images_df)).select(
+        "cell_id", "image_id", "ul_x", "ul_y", "px", "w", "h", "pix")
+    # the points × pixel-index equi-join on cell_id (J1 in SURVEY.md §2.3)
+    j = points_df.withColumn("cell_id", cell_id_col(F.col(lon), F.col(lat))).join(
+        broadcast_if_fits(idx), "cell_id", how)
     j = with_pixel_indices(j, lon=lon, lat=lat)
     j = j.select(*points_df.columns, "image_id", "w", "h", "ix", "iy", "pix")
     out = gather_z_jvm(j).drop("w", "h")

@@ -49,55 +49,38 @@ from ..functions import image_codec
 from ..functions.cells import linear_id_col
 from ..functions.geometry import points_in_ring, ring_to_arrays
 from ..sources.tiles import tile_index
-from .sample import is_broadcast
 
 
-def polygons_with_bbox(polygons_df: DataFrame) -> DataFrame:
-    """bbox columns from the ring array — pure Column arithmetic."""
+def polygon_tile_join(polygons_df: DataFrame, images_df: DataFrame) -> DataFrame:
+    """Polygon × tile join via cover-cell explode (SURVEY.md §2.3 J3):
+    one row per (polygon, bbox cell) pair with a tile, carrying the
+    ring and the tile's bytes and georeferencing.
+
+    One equi-join on ``cell_id`` with no hint: Spark's planner
+    broadcasts whichever side its size estimate puts under
+    ``spark.sql.autoBroadcastJoinThreshold`` (the smaller one when both
+    are) and plans a sort-merge or shuffled-hash join past it.  A
+    request's (polygon, cell) pairs — rings + ids — are the smaller
+    side, so they ride INTO the tile scan: the rasterizer gets
+    tile-locality (each tile's bytes reach exactly the partition that
+    scans them, each decoded once) and no exchange sits in front of it.
+
+    Remaining limit: Spark estimates the pair side from the polygon
+    rows, before the cover-cell explode, not from the exploded
+    (polygon, cell) count, and each pair carries the polygon's full
+    ring.  A few polygons with huge bounding boxes can therefore still
+    be planned as a broadcast past the threshold (and past
+    ``spark.driver.maxResultSize``).
+    """
     lons = F.transform("ring", lambda p: p["lon"])
     lats = F.transform("ring", lambda p: p["lat"])
-    return (
-        polygons_df
+    p = (
+        polygons_df.select("poly_id", "ring")
         .withColumn("min_x", F.array_min(lons))
         .withColumn("max_x", F.array_max(lons))
         .withColumn("min_y", F.array_min(lats))
         .withColumn("max_y", F.array_max(lats))
     )
-
-
-def polygon_tile_join(polygons_df: DataFrame, index_df: DataFrame,
-                      index_strategy: str = "broadcast",
-                      spread: bool = True) -> DataFrame:
-    """Polygon × tile join via cover-cell explode (SURVEY.md §2.3 J3).
-
-    ``index_strategy="broadcast"`` (default, r6 orientation) broadcasts
-    the exploded (polygon, cell) pairs — rings + ids, bounded by the
-    query batch — INTO the tile scan.  vs the former
-    broadcast-the-tile-bytes orientation this removes the pair-side
-    spread exchange, shrinks the broadcast ~5× (rings, not pixel
-    payloads), and gives the rasterizer tile-locality (each tile's
-    bytes reach exactly the partition that scans them, each decoded
-    once): measured 2.16 → 0.98 s for the bench blob build, identical
-    output multiset.  It is also the orientation that survives a
-    10^12-image world — the tile table can never be broadcast, a
-    request's polygons always can; batches past broadcast size use
-    ``index_strategy="shuffle"`` (both sides exchanged on cell_id).
-
-    Broadcast-size caveat: the broadcast side grows with the polygon
-    batch — one row per (polygon, bbox cell) pair, each carrying the
-    polygon's full ring — not with the tile table.  A large batch of
-    polygons (many polygons, or polygons with large bboxes or long
-    rings) can exceed ``spark.sql.autoBroadcastJoinThreshold`` /
-    ``spark.driver.maxResultSize`` and fail the broadcast; callers
-    replaying such batches pass ``index_strategy="shuffle"``.
-
-    ``spread=False`` skips the shuffle path's pre-join repartition —
-    right for small shuffled batches, where an extra full exchange into
-    mostly-empty tasks only adds latency.  The broadcast orientation
-    never reads ``spread``: kernel parallelism comes from the tile-table
-    scan.
-    """
-    p = polygons_with_bbox(polygons_df)
     cx0 = F.floor((F.col("min_x") - F.lit(WORLD_X0)) / F.lit(TILE_DEG)).cast("long")
     cx1 = F.floor((F.col("max_x") - F.lit(WORLD_X0)) / F.lit(TILE_DEG)).cast("long")
     cy0 = F.floor((F.lit(WORLD_Y0) - F.col("max_y")) / F.lit(TILE_DEG)).cast("long")
@@ -107,19 +90,9 @@ def polygon_tile_join(polygons_df: DataFrame, index_df: DataFrame,
         .withColumn("cy", F.explode(F.sequence(cy0, cy1)))
         .withColumn("cell_id", linear_id_col(F.col("cx"), F.col("cy")))
     )
-    idx = index_df.select("cell_id", "image_id", "bytes", "fmt", "ul_x", "ul_y", "px", "w", "h")
-    if is_broadcast(index_strategy):
-        return idx.join(F.broadcast(p.select("poly_id", "ring", "cell_id")),
-                        "cell_id", "inner")
-    # shuffle path: spread the (polygon, cell) pairs BEFORE the join —
-    # query tables often arrive as one small parquet file (one scan
-    # task), which would funnel every pixel-mask kernel invocation into
-    # a single python worker.  Shuffling here moves only rings + ids —
-    # the tile bytes join in after.
-    if spread:
-        spark = polygons_df.sparkSession
-        p = p.repartition(spark.sparkContext.defaultParallelism * 2, "poly_id", "cell_id")
-    return p.join(idx, "cell_id", "inner")
+    idx = tile_index(images_df, with_bytes=True).select(
+        "cell_id", "image_id", "bytes", "fmt", "ul_x", "ul_y", "px", "w", "h")
+    return idx.join(p.select("poly_id", "ring", "cell_id"), "cell_id", "inner")
 
 
 def with_pixel_coords(df: DataFrame) -> DataFrame:
@@ -333,29 +306,13 @@ def _pixel_run_blobs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         )
 
 
-def polygon_pixel_run_blobs(polygons_df: DataFrame, images_df: DataFrame,
-                            index_strategy: str = "broadcast",
-                            spread: bool = True) -> DataFrame:
+def polygon_pixel_run_blobs(polygons_df: DataFrame, images_df: DataFrame) -> DataFrame:
     """Covered-pixel runs as per-(polygon, tile) packed blobs —
     the dissolve pipeline's transfer/cache format (see RUN_BLOB_SCHEMA).
-    Large polygon batches: see the broadcast-size caveat of
+    Huge polygon bounding boxes: see the limit noted on
     :func:`polygon_tile_join`."""
-    idx = tile_index(images_df, with_bytes=True)
-    j = polygon_tile_join(polygons_df.select("poly_id", "ring"), idx,
-                          index_strategy=index_strategy, spread=spread)
-    return j.mapInPandas(_pixel_run_blobs, schema=RUN_BLOB_SCHEMA)
-
-
-def polygon_pixel_runs(polygons_df: DataFrame, images_df: DataFrame,
-                       index_strategy: str = "broadcast",
-                       spread: bool = True) -> DataFrame:
-    """Covered-pixel scanline runs: (poly_id, gy, gx0, zs).  Large
-    polygon batches: see the broadcast-size caveat of
-    :func:`polygon_tile_join`."""
-    idx = tile_index(images_df, with_bytes=True)
-    j = polygon_tile_join(polygons_df.select("poly_id", "ring"), idx,
-                          index_strategy=index_strategy, spread=spread)
-    return j.mapInPandas(_pixel_runs, schema=RUN_SCHEMA)
+    return polygon_tile_join(polygons_df, images_df).mapInPandas(
+        _pixel_run_blobs, schema=RUN_BLOB_SCHEMA)
 
 
 def blob_stats(blobs_df: DataFrame) -> DataFrame:
@@ -374,17 +331,18 @@ def blob_stats(blobs_df: DataFrame) -> DataFrame:
 
 
 def polygon_pixels(polygons_df: DataFrame, images_df: DataFrame,
-                   index_strategy: str = "broadcast",
-                   spread: bool = True) -> DataFrame:
+                   *, spread: bool = True) -> DataFrame:
     """Pixel rows covered by each polygon: (poly_id, image_id, gx, gy, x, y, z).
 
     Matches the reference's centroid-dump semantics (z != NODATA,
     centroid covered); ordering is applied by ``polygon_elevation``.
     The Python kernel ships scanline runs and a JVM ``posexplode``
-    generates the pixel rows inside codegen.
+    generates the pixel rows inside codegen.  Huge polygon bounding
+    boxes: see the limit noted on :func:`polygon_tile_join`.  ``spread``
+    is ignored: it is kept only because existing benchmark calls pass it.
     """
-    runs = polygon_pixel_runs(polygons_df, images_df,
-                              index_strategy=index_strategy, spread=spread)
+    runs = polygon_tile_join(polygons_df, images_df).mapInPandas(
+        _pixel_runs, schema=RUN_SCHEMA)
     px = runs.select(
         "poly_id", "gy", "gx0", F.posexplode("zs").alias("pos", "z")
     ).select(
@@ -396,13 +354,10 @@ def polygon_pixels(polygons_df: DataFrame, images_df: DataFrame,
     return with_pixel_coords(px)
 
 
-def polygon_elevation(polygons_df: DataFrame, images_df: DataFrame,
-                      index_strategy: str = "broadcast",
-                      spread: bool = True) -> DataFrame:
+def polygon_elevation(polygons_df: DataFrame, images_df: DataFrame) -> DataFrame:
     """(x, y, z) dump ordered by x, y (reference ``querybuilder.py:152``)."""
     return (
-        polygon_pixels(polygons_df, images_df, index_strategy=index_strategy,
-                       spread=spread)
+        polygon_pixels(polygons_df, images_df)
         .select("poly_id", "x", "y", "z")
         .orderBy("poly_id", "x", "y")
     )

@@ -8,11 +8,12 @@ from the upper-left origin.
 One physical shape serves every point-sampling operator (point, line
 vertices, kNN): :func:`pixel_index` decodes each tile ONCE
 into a flat ``array<smallint>`` column riding the tile index, the
-operators join it on ``cell_id`` (broadcast, or shuffled once the index
-outgrows the broadcast threshold — ``index_strategy="shuffle"``), and
-:func:`gather_z_jvm` samples it with a codegen'd ``element_at``.  The
-index arithmetic and the gather are plain Columns; the tile decode is
-the only Python stage.
+operators equi-join it on ``cell_id`` (:func:`broadcast_if_fits`
+broadcasts the index while Spark's own estimate of it is under
+``spark.sql.autoBroadcastJoinThreshold`` and leaves the join to Spark's
+planner past it), and :func:`gather_z_jvm` samples it with a codegen'd
+``element_at``.  The index arithmetic and the gather are plain Columns;
+the tile decode is the only Python stage.
 """
 
 from __future__ import annotations
@@ -28,12 +29,20 @@ from pyspark.sql import types as T
 from ..functions import image_codec
 
 
-def is_broadcast(index_strategy: str) -> bool:
-    """True for ``"broadcast"``, False for ``"shuffle"``; any other
-    ``index_strategy`` (a typo included) raises."""
-    if index_strategy not in ("broadcast", "shuffle"):
-        raise ValueError(f"unknown index strategy {index_strategy!r}")
-    return index_strategy == "broadcast"
+def broadcast_if_fits(index_df: DataFrame) -> DataFrame:
+    """The index side of a point-sampling join, broadcast by hint while
+    Spark's own size estimate of it is within
+    ``spark.sql.autoBroadcastJoinThreshold`` (``-1`` turns it off) and
+    left to the planner past it.  The hint keeps the probe side from
+    being built: probe rows come out of explodes (densified vertices,
+    kNN candidate disks) that Spark sizes like their input, and
+    unhinted, adaptive execution broadcast the 7.2 M densified vertices
+    of a 150 k-line batch (estimated at 6 MB) instead of the 5.6 MB
+    pixel index, then ran out of driver memory building it."""
+    spark = index_df.sparkSession
+    limit = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    size = int(index_df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    return F.broadcast(index_df) if 0 <= size <= limit else index_df
 
 
 def pixel_index(images_df: DataFrame) -> DataFrame:
@@ -41,7 +50,7 @@ def pixel_index(images_df: DataFrame) -> DataFrame:
 
     Decoding runs ONCE per tile (Arrow batches); downstream queries
     sample pixels entirely JVM-side via ``element_at`` inside the same
-    whole-stage-codegen'd projection as the broadcast join — no Python
+    whole-stage-codegen'd projection as the index join — no Python
     and no Arrow transfer anywhere in the per-query hot path.
     """
     from ..sources.tiles import tile_index

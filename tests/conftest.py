@@ -15,3 +15,28 @@ def spark():
     s = build_session(app="oes-tests", cpus=8, shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@pytest.fixture
+def no_broadcast(spark):
+    """``spark.sql.autoBroadcastJoinThreshold`` at -1, so Spark's planner
+    (AQE included) plans no broadcast join: the index joins take the
+    regime of an index past the threshold.  The previous value is
+    restored afterwards, because the session is shared."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
+@pytest.fixture
+def index_join(request):
+    """Join regime of a test parametrized indirectly over
+    ``["broadcast", "shuffle"]``: the session's threshold, or
+    :func:`no_broadcast`."""
+    if request.param == "shuffle":
+        request.getfixturevalue("no_broadcast")
+    return request.param

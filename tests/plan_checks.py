@@ -20,3 +20,12 @@ def assert_no_cartesian(df: DataFrame) -> None:
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan, (
         f"plan contains a cross join:\n{plan}"
     )
+
+
+def assert_join_regime(df: DataFrame, regime: str) -> None:
+    """``"broadcast"``: the plan has a broadcast hash join; ``"shuffle"``:
+    it has none.  Call after an action, so the final adaptive plan is
+    the one checked."""
+    plan = explain_str(df)
+    assert ("BroadcastHashJoin" in plan) == (regime == "broadcast"), (
+        f"expected the {regime} regime, got:\n{plan}")

@@ -5,6 +5,8 @@ deterministic field; byte-exact codec goldens live in
 tests/test_polyline.py).
 """
 
+import uuid
+
 import pytest
 
 from openelevationservice_spark import api
@@ -122,6 +124,32 @@ def test_polygon_ordered_dump(svc):
     assert len(rows) > 0
     assert rows == sorted(rows)                   # W2: ORDER BY x, y
     assert all(len(r) == 3 for r in rows)
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs launched while ``fn`` runs (counted by job group)."""
+    sc = spark.sparkContext
+    group = f"api-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_ordered_replies_run_the_plan_once(spark, svc):
+    """Polygon and line replies are sorted on the driver: a Spark
+    orderBy would add a range-partitioner sampling job that runs the
+    plan (for polygons, the Python rasterizer) a second time."""
+    d = 0.003
+    ring = [[VALID[0] - d, VALID[1] - d], [VALID[0], VALID[1] - d],
+            [VALID[0], VALID[1]], [VALID[0] - d, VALID[1]],
+            [VALID[0] - d, VALID[1] - d]]
+    line = {"type": "LineString", "coordinates": [VALID, [VALID[0] - 0.01, VALID[1] - 0.01]]}
+    svc.line(line, "geojson")   # builds and caches the pixel index first
+    assert _jobs(spark, lambda: svc.polygon([ring])) <= 2
+    assert _jobs(spark, lambda: svc.line(line, "geojson")) <= 2
 
 
 def test_colorpolygon_feature_collection(svc):

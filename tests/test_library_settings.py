@@ -6,10 +6,11 @@ only place the package reads environment variables; every operator
 decision must come from its arguments or its input, never from an
 env-var switch a caller cannot see.
 
-Each public operator has one physical shape; ``index_strategy`` is the
-one scale alternative (shuffle join once the index stops fitting a
-broadcast).  A parameter that picks among implementations of the same
-result is banned by name.
+Each public operator has one physical shape.  A parameter that picks
+among implementations of the same result is banned by name; so is
+``index_strategy``, because the broadcast-or-shuffle choice of an index
+join is Spark's planner's, made from its size estimate against
+``spark.sql.autoBroadcastJoinThreshold``, never a caller's flag.
 
 The benchmark (``perfbench/``) calls the library with keyword options;
 every such call must still bind to the library's current signatures, so
@@ -34,7 +35,7 @@ ENTRY_POINTS = [PACKAGE / "api.py", PACKAGE / "grpc_shim.py", PACKAGE / "contrac
 DEPLOYMENT_SETTINGS = {"plans/session.py", "plans/submit.py"}
 ENV_READERS = {"environ", "environb", "getenv", "getenvb"}
 SHAPE_SELECTORS = {"impl", "method", "arrow_impl", "algorithm", "gather_strategy",
-                   "densify_impl", "emit", "cells_shape"}
+                   "densify_impl", "emit", "cells_shape", "index_strategy"}
 
 
 def _env_reads(tree: ast.AST) -> list[int]:
@@ -111,7 +112,8 @@ def test_detector_sees_shape_selectors():
            "def _c(df, algorithm='label'): pass\n"
            "def d(df, emit='runs', /): pass\n"
            "def e(df, n=1):\n    def f(method): pass\n")
-    assert _shape_selectors(ast.parse(src)) == ["a(method)", "b(impl)", "d(emit)"]
+    assert _shape_selectors(ast.parse(src)) == ["a(method)", "b(impl)", "b(index_strategy)",
+                                                "d(emit)"]
 
 
 def _library_names(tree: ast.AST) -> dict[str, str]:
@@ -201,10 +203,12 @@ def test_detector_sees_unbound_calls():
            "polygon_pixels(a, b, spreed=False)\n"
            "api.ElevationService(s, i, _pix=p)\n"
            "api.no_such_function()\n"
-           "polygon_pixels(*xs, index_strategy='shuffle', spread=False)\n"
+           "polygon_pixels(*xs, spread=False)\n"
+           "polygon_pixels(*xs, index_strategy='shuffle')\n"
            "polygon_pixels(a)\n")
     assert [(line, call) for line, call, _ in _unbound_library_calls(ast.parse(src))] == \
-        [(3, "polygon_pixels"), (5, "api.no_such_function"), (7, "polygon_pixels")]
+        [(3, "polygon_pixels"), (5, "api.no_such_function"), (7, "polygon_pixels"),
+         (8, "polygon_pixels")]
 
 
 def _imported_files(path: Path, root: Path) -> set[Path]:

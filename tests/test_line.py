@@ -11,6 +11,7 @@ from openelevationservice_spark.operators.line import (
     line_vertices_elevation,
 )
 from openelevationservice_spark.sources import fixtures as fx
+from tests import plan_checks as pc
 from tests.references import assert_densify_matches_reference
 
 
@@ -98,15 +99,14 @@ def test_reference_golden_line_vertex_count(spark):
     assert list(out.sort_values("seq")["seq"]) == [1, 2]
 
 
-@pytest.mark.parametrize("index_strategy", ["broadcast", "shuffle"])
-def test_line_vertices_match_oracle(spark, world, images, index_strategy):
+@pytest.mark.parametrize("index_join", ["broadcast", "shuffle"], indirect=True)
+def test_line_vertices_match_oracle(spark, world, images, index_join):
+    """Same vertices under the planner's broadcast join and, with the
+    threshold at -1, its shuffle join."""
     pdf = fx.make_lines_pdf(world, n=30)
-    out = (
-        line_vertices_elevation(spark.createDataFrame(pdf), images,
-                                index_strategy=index_strategy)
-        .toPandas()
-        .sort_values(["line_id", "seq"])
-    )
+    df = line_vertices_elevation(spark.createDataFrame(pdf), images)
+    out = df.toPandas().sort_values(["line_id", "seq"])
+    pc.assert_join_regime(df, index_join)
     for _, r in pdf.iterrows():
         want_pts = densify_oracle(r.x1, r.y1, r.x2, r.y2)
         want = [(p, z_at(p[0], p[1], world)) for p in want_pts]

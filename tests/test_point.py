@@ -3,10 +3,9 @@ import pandas as pd
 import pytest
 
 from openelevationservice_spark.constants import NODATA, PX, TILE_DEG, WORLD_X0, WORLD_Y0
-from openelevationservice_spark.operators.knn import knn_tiles
 from openelevationservice_spark.operators.point import point_elevation
-from openelevationservice_spark.operators.polygon import polygon_pixels
 from openelevationservice_spark.sources import fixtures as fx
+from tests import plan_checks as pc
 
 
 def numpy_point_oracle(lon: np.ndarray, lat: np.ndarray, world: fx.World):
@@ -40,12 +39,15 @@ def images(spark, world):
     return df
 
 
-@pytest.mark.parametrize("index_strategy", ["broadcast", "shuffle"])
-def test_point_elevation_matches_oracle(spark, world, images, index_strategy):
+@pytest.mark.parametrize("index_join", ["broadcast", "shuffle"], indirect=True)
+def test_point_elevation_matches_oracle(spark, world, images, index_join):
+    """Same rows under the planner's broadcast join and, with the
+    threshold at -1, its shuffle join."""
     pdf = fx.make_points_pdf(world, n=300)
     pts = spark.createDataFrame(pdf)
-    out = point_elevation(pts, images, how="left", index_strategy=index_strategy)
-    got = out.select("point_id", "image_id", "z").toPandas().sort_values("point_id")
+    out = point_elevation(pts, images, how="left").select("point_id", "image_id", "z")
+    got = out.toPandas().sort_values("point_id")
+    pc.assert_join_regime(out, index_join)
 
     image, z, _, _ = numpy_point_oracle(
         pdf["lon"].to_numpy(), pdf["lat"].to_numpy(), world
@@ -58,23 +60,6 @@ def test_point_elevation_matches_oracle(spark, world, images, index_strategy):
     assert (m.loc[inside, "z"].astype(np.int64) == m.loc[inside, "z_ref"]).all()
     assert m.loc[~inside, "image_id"].isna().all()
     assert m.loc[~inside, "z"].isna().all()
-
-
-def test_unknown_index_strategy_raises(spark, world, images):
-    """A misspelled strategy raises; it is never taken as the shuffle join."""
-    pts = spark.createDataFrame(fx.make_points_pdf(world, n=3))
-    x0, y0 = world.min_x, world.min_y
-    polys = spark.createDataFrame(
-        pd.DataFrame({"poly_id": [0], "ring": [[
-            {"lon": x0, "lat": y0}, {"lon": x0 + PX, "lat": y0},
-            {"lon": x0 + PX, "lat": y0 + PX}, {"lon": x0, "lat": y0}]]}),
-        schema="poly_id long, ring array<struct<lon:double, lat:double>>",
-    )
-    for run in (lambda s: point_elevation(pts, images, index_strategy=s),
-                lambda s: polygon_pixels(polys, images, index_strategy=s),
-                lambda s: knn_tiles(pts, images, index_strategy=s)):
-        with pytest.raises(ValueError, match="unknown index strategy 'shufle'"):
-            run("shufle")
 
 
 def test_inner_join_drops_out_of_coverage(spark, world, images):

@@ -13,6 +13,7 @@ from openelevationservice_spark.operators.color import (
 )
 from openelevationservice_spark.operators.polygon import polygon_elevation, polygon_pixels
 from openelevationservice_spark.sources import fixtures as fx
+from tests import plan_checks as pc
 
 
 def bbox_ring(x0, y0, x1, y1):
@@ -211,6 +212,27 @@ def test_pixel_runs_equal_pixel_rows(spark, world, images):
     b = (pd.concat([centroid_mask_pixels(0, tri, world),
                     centroid_mask_pixels(1, rect, world)])
          .sort_values(key).reset_index(drop=True))
+    assert len(a) == len(b) > 100
+    for c in cols:
+        assert (a[c].to_numpy() == b[c].to_numpy()).all(), c
+
+
+def test_polygon_pixels_shuffle_join_matches_oracle(spark, world, images, no_broadcast):
+    """With the broadcast threshold at -1 the planner shuffles both
+    sides of the polygon × tile join, and the pixel dump still equals
+    the centroid-in-ring mask."""
+    x0 = world.min_x + 0.6 * TILE_DEG
+    y0 = world.max_y - 1.7 * TILE_DEG
+    ring = bbox_ring(x0, y0, x0 + 1.2 * TILE_DEG, y0 + 1.3 * TILE_DEG)
+    polys = spark.createDataFrame(
+        pd.DataFrame({"poly_id": [0], "ring": [ring]}),
+        schema="poly_id long, ring array<struct<lon:double, lat:double>>")
+    key = ["poly_id", "gx", "gy"]
+    cols = key + ["z", "x", "y", "image_id"]
+    df = polygon_pixels(polys, images).select(cols)
+    a = df.toPandas().sort_values(key).reset_index(drop=True)
+    pc.assert_join_regime(df, "shuffle")
+    b = centroid_mask_pixels(0, ring, world).sort_values(key).reset_index(drop=True)
     assert len(a) == len(b) > 100
     for c in cols:
         assert (a[c].to_numpy() == b[c].to_numpy()).all(), c
