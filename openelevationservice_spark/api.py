@@ -192,6 +192,14 @@ class ElevationService:
             self._pix.count()
         return self._pix
 
+    def polygon_frame(self, ring) -> DataFrame:
+        """One-row polygon input (poly_id 0) for the polygon operators."""
+        return self.spark.createDataFrame(
+            pd.DataFrame({"poly_id": [0],
+                          "ring": [[{"lon": x, "lat": y} for x, y in ring]]}),
+            schema="poly_id long, ring array<struct<lon:double,lat:double>>",
+        )
+
     # -- POST/GET /elevation/point (views.py:128-189) ----------------------
     def point(self, geometry, format_in: str = "point",
               format_out: str = "geojson", dataset: str = "srtm") -> dict:
@@ -227,8 +235,7 @@ class ElevationService:
 
     # -- POST /elevation/line (views.py:71-125) -----------------------------
     def line(self, geometry, format_in: str = "geojson",
-             format_out: str = "geojson", strict_two_vertex: bool = True,
-             dataset: str = "srtm") -> dict:
+             format_out: str = "geojson", dataset: str = "srtm") -> dict:
         validate_dataset(dataset)
         gtype, coords = parse_geometry(geometry, format_in)
         if gtype != "LineString":
@@ -236,18 +243,18 @@ class ElevationService:
         if len(coords) > MAXIMUM_NODES:
             # V5: maximum_nodes is configured+tested in the reference but
             # enforced nowhere; we enforce it (LimitError 4003).  Checked
-            # BEFORE the two-vertex guard so oversized inputs get 4003 in
-            # strict mode too (the reference test_api_line.py:90-97
-            # expects 4003 for a 2001-node polyline).
+            # BEFORE the two-vertex guard so oversized inputs get 4003
+            # (the reference test_api_line.py:90-97 expects 4003 for a
+            # 2001-node polyline).
             raise _err_limit(
                 f"Maximum number of nodes exceeded: {len(coords)} > {MAXIMUM_NODES}"
             )
-        if strict_two_vertex and len(coords) != 2:
+        if len(coords) != 2:
             # querybuilder.py:194-195 (reference 4002-rejects n != 2)
             raise _err_geometry(
                 "Only LineString with exactly 2 points are supported"
             )
-        (x1, y1), (x2, y2) = coords[0], coords[-1]
+        (x1, y1), (x2, y2) = coords
         lines = self.spark.createDataFrame(
             pd.DataFrame({"line_id": [0], "x1": [x1], "y1": [y1],
                           "x2": [x2], "y2": [y2]})
@@ -294,12 +301,7 @@ class ElevationService:
         gtype, ring = parse_geometry(geometry, format_in)
         if gtype != "Polygon":
             raise _err_geometry("Polygon endpoint requires a Polygon geometry")
-        polys = self.spark.createDataFrame(
-            pd.DataFrame({"poly_id": [0], "ring": [
-                [{"lon": x, "lat": y} for x, y in ring]
-            ]}),
-            schema="poly_id long, ring array<struct<lon:double,lat:double>>",
-        )
+        polys = self.polygon_frame(ring)
         # W2 ordered dump, sorted on the driver like the line reply above
         px = sorted(polygon_pixels(polys, self.images_df)
                     .select("x", "y", "z").collect(),
@@ -317,12 +319,7 @@ class ElevationService:
         gtype, ring = parse_geometry(geometry, format_in)
         if gtype != "Polygon":
             raise _err_geometry("Polygon endpoint requires a Polygon geometry")
-        polys = self.spark.createDataFrame(
-            pd.DataFrame({"poly_id": [0], "ring": [
-                [{"lon": x, "lat": y} for x, y in ring]
-            ]}),
-            schema="poly_id long, ring array<struct<lon:double,lat:double>>",
-        )
+        polys = self.polygon_frame(ring)
         feats = polygon_color_features(polys, self.images_df).toPandas()
         if feats.empty:
             raise _err_geometry(

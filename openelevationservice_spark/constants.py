@@ -11,8 +11,6 @@ Values are pinned to the reference so join outputs match bit-for-bit:
 - ``TILE_PX`` — 50x50-pixel physical tile grain
   (reference ``server/db_import/filestreams.py:72-78``,
   ``raster2pgsql ... -t 50x50 ... -P``).
-- ``SRID`` — EPSG:4326 everywhere
-  (reference ``server/db_import/filestreams.py:72``).
 """
 
 from __future__ import annotations
@@ -30,18 +28,14 @@ TILE_PX: int = 50
 # Ground footprint of one tile, in degrees.
 TILE_DEG: float = TILE_PX * PX
 
-SRID: int = 4326
-
 # Global cell-grid anchor: upper-left corner of the (lon, lat) plane.
 # Cells and tiles are addressed from here so that a tile footprint is
-# exactly one cell at the base resolution (see functions/cells.py).
+# exactly one cell (see functions/cells.py).
 WORLD_X0: float = -180.0
 WORLD_Y0: float = 90.0
 
-# Number of base-resolution cells along each axis (cell = one tile).
-# 360 / TILE_DEG = 8640, 180 / TILE_DEG = 4320.
+# Number of cells along the x axis (cell = one tile): 360 / TILE_DEG = 8640.
 NCELL_X: int = round(360.0 / TILE_DEG)
-NCELL_Y: int = round(180.0 / TILE_DEG)
 
 # Elevation-band bucketing (reference
 # ``server/api/querybuilder.py:66-67`` — num_ranges = 23).

@@ -24,7 +24,7 @@ from .operators.knn import knn_tiles
 from .operators.line import line_vertices_elevation
 from .operators.point import point_elevation
 from .operators.polygon import polygon_pixels
-from .operators.color import polygon_stats, with_height_base
+from .operators.color import polygon_color_invariants
 from .operators.multimodal import image_metadata
 from .sources import fixtures as fx
 
@@ -278,6 +278,9 @@ FROM v GROUP BY line_id
 
 # ===========================================================================
 # Q4/Q5. polygon pixel dump + elevation bands — A2-A4/P2-P3/G1-G2
+# Q5 counts each band's pixels through the dissolve operator
+# (polygon_color_invariants, also Q21's), so its oracle checks the band
+# rule the library runs: the numpy band-split of operators/color.py.
 # ===========================================================================
 
 def _polygons_df(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -328,11 +331,11 @@ def q_polygon_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_polygon_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pixels = polygon_pixels(_polygons_df(spark, sf_dir), _images(spark))
-    banded = with_height_base(pixels, polygon_stats(pixels))
-    return banded.groupBy("poly_id", "height_base").agg(
-        F.count(F.lit(1)).alias("n_pixels")
-    )
+    """Pixels per elevation band, read off the dissolve: ``area_px`` is
+    the band's pixel count (the ``color_dissolve`` oracle binds it to
+    the band's pixels), so this checks the library's one band rule."""
+    bands = polygon_color_invariants(_polygons_df(spark, sf_dir), _images(spark))
+    return bands.select("poly_id", "height_base", F.col("area_px").alias("n_pixels"))
 
 
 def _sql_polygon_bands() -> str:
@@ -901,8 +904,6 @@ FROM px
 # ===========================================================================
 
 def q_color_dissolve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.color import polygon_color_invariants
-
     polys = _polygons_df(spark, sf_dir)
     return polygon_color_invariants(polys, _images(spark))
 

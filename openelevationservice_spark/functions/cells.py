@@ -1,25 +1,19 @@
-"""Hierarchical cell index (H3/S2-style, own implementation).
+"""Tile-aligned grid cell ids.
 
 The reference expresses spatial matching as ``ST_Intersects(rast, geom)``
 (reference ``server/api/querybuilder.py:134,220,288``) which PostGIS
 evaluates against tile envelopes.  We replace that theta-join with an
 **equi-join on a cell id**: the plane is cut into a regular grid anchored
-at (-180, 90) whose base-resolution cell is exactly one 50x50-pixel tile
-footprint (TILE_DEG).  Because tiles are aligned to this grid with
-half-open extents, an interior point maps to exactly one cell == exactly
-one tile, making the spatial join an exact hash join.
+at (-180, 90) whose cells are exactly one 50x50-pixel tile footprint
+(TILE_DEG).  Because tiles are aligned to this grid with half-open
+extents, an interior point maps to exactly one cell == exactly one tile,
+making the spatial join an exact hash join.
 
-Two id schemes:
-
-- ``linear`` id  = cy * NCELL_X + cx  — pure integer arithmetic, used in
-  join keys because it is expressible both as Spark Column arithmetic
-  (JVM-side, no Python) and as ANSI SQL for the DuckDB oracle.
-- ``morton`` id  = bit-interleave(cx, cy) | (res << 58) — used as the
-  physical sort/cluster key of the tile index so that spatially close
-  tiles land in the same file/partition (locality for range pruning).
-
-Resolutions: res 15 == tile-sized cells (TILE_DEG); res r has cells of
-size TILE_DEG * 2**(15 - r) (so res 0 cells are 2^15 tiles wide).
+The join key is the row-major linear id ``cy * NCELL_X + cx`` — pure
+integer arithmetic, expressible both as Spark Column arithmetic
+(JVM-side, no Python) and as ANSI SQL for the DuckDB oracle.  The tile
+index's physical sort key (a Morton interleave of the same (cx, cy),
+for file-level locality) is ``sources.tiles.morton_col``.
 """
 
 from __future__ import annotations
@@ -29,114 +23,7 @@ import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ..constants import NCELL_X, NCELL_Y, TILE_DEG, WORLD_X0, WORLD_Y0
-
-RES_BASE = 15
-
-
-def cell_size_deg(res: int = RES_BASE) -> float:
-    """Cell edge length in degrees at resolution ``res``."""
-    return TILE_DEG * (1 << (RES_BASE - res))
-
-
-# ---------------------------------------------------------------------------
-# numpy kernels (vectorized; used inside pandas UDFs and the oracle)
-# ---------------------------------------------------------------------------
-
-def cell_xy(lon: np.ndarray, lat: np.ndarray, res: int = RES_BASE):
-    """(cx, cy) integer cell coordinates; half-open cells.
-
-    cx = floor((lon - WORLD_X0) / size); cy = floor((WORLD_Y0 - lat) / size)
-    (y counts downward from the north pole, matching the raster row order
-    of the reference's upper-left-origin tiles).
-    """
-    size = cell_size_deg(res)
-    cx = np.floor((np.asarray(lon, dtype=np.float64) - WORLD_X0) / size).astype(np.int64)
-    cy = np.floor((WORLD_Y0 - np.asarray(lat, dtype=np.float64)) / size).astype(np.int64)
-    return cx, cy
-
-
-def linear_id(cx: np.ndarray, cy: np.ndarray, res: int = RES_BASE) -> np.ndarray:
-    """Row-major linear cell id at resolution ``res``."""
-    nx = NCELL_X >> (RES_BASE - res) if res < RES_BASE else NCELL_X
-    nx = max(nx, 1)
-    return np.asarray(cy, dtype=np.int64) * nx + np.asarray(cx, dtype=np.int64)
-
-
-def _part1by1(v: np.ndarray) -> np.ndarray:
-    """Spread the low 29 bits of v so there is a zero bit between each."""
-    v = v.astype(np.uint64) & np.uint64(0x1FFFFFFF)
-    v = (v | (v << np.uint64(16))) & np.uint64(0x0000FFFF0000FFFF)
-    v = (v | (v << np.uint64(8))) & np.uint64(0x00FF00FF00FF00FF)
-    v = (v | (v << np.uint64(4))) & np.uint64(0x0F0F0F0F0F0F0F0F)
-    v = (v | (v << np.uint64(2))) & np.uint64(0x3333333333333333)
-    v = (v | (v << np.uint64(1))) & np.uint64(0x5555555555555555)
-    return v
-
-
-def _compact1by1(v: np.ndarray) -> np.ndarray:
-    v = v.astype(np.uint64) & np.uint64(0x5555555555555555)
-    v = (v | (v >> np.uint64(1))) & np.uint64(0x3333333333333333)
-    v = (v | (v >> np.uint64(2))) & np.uint64(0x0F0F0F0F0F0F0F0F)
-    v = (v | (v >> np.uint64(4))) & np.uint64(0x00FF00FF00FF00FF)
-    v = (v | (v >> np.uint64(8))) & np.uint64(0x0000FFFF0000FFFF)
-    v = (v | (v >> np.uint64(16))) & np.uint64(0x00000000FFFFFFFF)
-    return v
-
-
-def morton_id(cx: np.ndarray, cy: np.ndarray, res: int = RES_BASE) -> np.ndarray:
-    """Z-order (Morton) cell id with the resolution packed in bits 58..61."""
-    z = _part1by1(np.asarray(cx)) | (_part1by1(np.asarray(cy)) << np.uint64(1))
-    return (z | (np.uint64(res) << np.uint64(58))).astype(np.int64)
-
-
-def morton_decode(cell: np.ndarray):
-    """Inverse of morton_id → (cx, cy, res)."""
-    cell = np.asarray(cell, dtype=np.uint64)
-    res = (cell >> np.uint64(58)).astype(np.int64)
-    z = cell & np.uint64((1 << 58) - 1)
-    cx = _compact1by1(z).astype(np.int64)
-    cy = _compact1by1(z >> np.uint64(1)).astype(np.int64)
-    return cx, cy, res
-
-
-def parent(cell: np.ndarray, res_to: int) -> np.ndarray:
-    """Coarsen a morton cell id to a lower resolution."""
-    cx, cy, res = morton_decode(cell)
-    shift = res - res_to
-    return morton_id(cx >> shift, cy >> shift, res_to)
-
-
-def cover_cells_bbox(min_x: float, min_y: float, max_x: float, max_y: float,
-                     res: int = RES_BASE):
-    """All (cx, cy) cells whose half-open extent intersects the bbox.
-
-    Replacement for computing the tile set of ``ST_Intersects`` over a
-    query polygon's envelope (reference
-    ``server/api/elevation_query_area_union.py:15``).
-    """
-    size = cell_size_deg(res)
-    cx0 = int(np.floor((min_x - WORLD_X0) / size))
-    cx1 = int(np.floor((max_x - WORLD_X0) / size))
-    cy0 = int(np.floor((WORLD_Y0 - max_y) / size))
-    cy1 = int(np.floor((WORLD_Y0 - min_y) / size))
-    cxs = np.arange(cx0, cx1 + 1, dtype=np.int64)
-    cys = np.arange(cy0, cy1 + 1, dtype=np.int64)
-    gx, gy = np.meshgrid(cxs, cys)
-    return gx.ravel(), gy.ravel()
-
-
-def ring_offsets(k: int):
-    """(dx, dy) offsets of the Chebyshev ring at distance exactly k."""
-    if k == 0:
-        return np.array([0]), np.array([0])
-    xs, ys = [], []
-    for dx in range(-k, k + 1):
-        for dy in range(-k, k + 1):
-            if max(abs(dx), abs(dy)) == k:
-                xs.append(dx)
-                ys.append(dy)
-    return np.array(xs, dtype=np.int64), np.array(ys, dtype=np.int64)
+from ..constants import NCELL_X, TILE_DEG, WORLD_X0, WORLD_Y0
 
 
 def disk_offsets(k: int):
@@ -150,21 +37,23 @@ def disk_offsets(k: int):
 # Spark Column expressions (JVM-side — keep cell encoding OUT of Python)
 # ---------------------------------------------------------------------------
 
-def cell_x_col(lon: Column, res: int = RES_BASE) -> Column:
-    size = cell_size_deg(res)
-    return F.floor((lon - F.lit(WORLD_X0)) / F.lit(size)).cast("long")
+def cell_x_col(lon: Column) -> Column:
+    """cx = floor((lon - WORLD_X0) / TILE_DEG); half-open cells."""
+    return F.floor((lon - F.lit(WORLD_X0)) / F.lit(TILE_DEG)).cast("long")
 
 
-def cell_y_col(lat: Column, res: int = RES_BASE) -> Column:
-    size = cell_size_deg(res)
-    return F.floor((F.lit(WORLD_Y0) - lat) / F.lit(size)).cast("long")
+def cell_y_col(lat: Column) -> Column:
+    """cy = floor((WORLD_Y0 - lat) / TILE_DEG): y counts downward from the
+    north pole, matching the raster row order of the reference's
+    upper-left-origin tiles."""
+    return F.floor((F.lit(WORLD_Y0) - lat) / F.lit(TILE_DEG)).cast("long")
 
 
-def linear_id_col(cx: Column, cy: Column, res: int = RES_BASE) -> Column:
-    nx = max(NCELL_X >> (RES_BASE - res), 1) if res < RES_BASE else NCELL_X
-    return (cy * F.lit(nx) + cx).cast("long")
+def linear_id_col(cx: Column, cy: Column) -> Column:
+    """Row-major linear cell id."""
+    return (cy * F.lit(NCELL_X) + cx).cast("long")
 
 
-def cell_id_col(lon: Column, lat: Column, res: int = RES_BASE) -> Column:
+def cell_id_col(lon: Column, lat: Column) -> Column:
     """Linear cell id straight from lon/lat — pure Column arithmetic."""
-    return linear_id_col(cell_x_col(lon, res), cell_y_col(lat, res), res)
+    return linear_id_col(cell_x_col(lon), cell_y_col(lat))

@@ -179,7 +179,10 @@ def _quad_counts(ck: np.ndarray, n_bands: int):
     touched window's occupancy mask — O(n log n) in the CELL count.
     Windows with no occupied cell have mask 0 and count nowhere.
     QD ⇔ mask ∈ {6, 9}: two occupied cells on a diagonal (a·d = 9,
-    b·c = 6).
+    b·c = 6).  Euler numbers follow as χ4 = (Q1 − Q3 + 2·QD)/4 =
+    C4 − H8 and χ8 = (Q1 − Q3 − 2·QD)/4 = C8 − H4 (property-tested
+    against the grid-labeling reference in
+    tests/test_geometry_dissolve.py).
     """
     # cell (cx,cy) is quadrant a of window (cy+1,cx+1), b of (cy+1,cx),
     # c of (cy,cx+1), d of (cy,cx); the window key keeps the band field
@@ -338,16 +341,3 @@ def dissolve_pixels_rings(gx: np.ndarray, gy: np.ndarray):
         out.append(rings)
         out_areas.append(areas)
     return out, out_areas
-
-
-def quad_counts(gx: np.ndarray, gy: np.ndarray) -> tuple[int, int, int]:
-    """Gray's 2×2 window counts (Q1, Q3, QD) of one cell set, QD =
-    diagonal two-pixel windows.  Euler numbers follow as
-    χ4 = (Q1 − Q3 + 2·QD)/4 = C4 − H8 and χ8 = (Q1 − Q3 − 2·QD)/4 =
-    C8 − H4 (property-tested against the grid-labeling reference in
-    tests/test_geometry_dissolve.py)."""
-    if len(gx) == 0:
-        return 0, 0, 0
-    ck, _, _ = _one_band_keys(gx, gy)
-    q1, q3, qd = _quad_counts(ck, 1)
-    return int(q1[0]), int(q3[0]), int(qd[0])

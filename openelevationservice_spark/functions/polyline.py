@@ -11,16 +11,16 @@ MIT) with three parity-critical quirks that we reproduce:
 - elevation uses a fixed factor 100 regardless of precision
   (``codec.py:82,110``), so z decodes as ``value / 100``.
 
-Per-string bit-twiddling is inherent to the format; distribution comes
-from vectorizing across rows (``encode_series`` / ``decode_series``
-run inside Arrow batches).
+Per-string bit-twiddling is inherent to the format, so the codec is
+two plain functions: the request surface (``api.py``) decodes request
+geometries and encodes replies on the driver, and the contract's
+``polyline_roundtrip`` query runs them row by row inside Arrow batches
+against its SQL oracle.
 """
 
 from __future__ import annotations
 
 import math
-
-import pandas as pd
 
 
 def _round_half_away(x: float) -> int:
@@ -85,13 +85,3 @@ def decode(expression: str, precision: int = 5, is3d: bool = False):
         else:
             coords.append((lon / factor, lat / factor))
     return coords
-
-
-# --- row-vectorized wrappers (for pandas UDFs) -----------------------------
-
-def decode_series(s: pd.Series, precision: int = 5, is3d: bool = False) -> pd.Series:
-    return s.map(lambda e: decode(e, precision, is3d))
-
-
-def encode_series(s: pd.Series, precision: int = 5, is3d: bool = False) -> pd.Series:
-    return s.map(lambda c: encode(c, precision, is3d))

@@ -23,8 +23,6 @@ from __future__ import annotations
 import itertools
 from dataclasses import dataclass
 
-import pandas as pd
-
 from .api import ApiError, ElevationService
 from .operators.color import polygon_color_features
 from .operators.polygon import blob_stats, polygon_pixel_run_blobs
@@ -129,13 +127,8 @@ class OpenElevationServicer:
         """bbox → AreaRangesResponse (grpc_server.py:104-141): dissolved
         per-band areas plus the polygon's min/max/avg elevation (the
         reference's ``polygon_union_by_elevation`` 3-tuple)."""
-        ring = _bbox_ring(request)
         svc = self.service
-        polys = svc.spark.createDataFrame(
-            pd.DataFrame({"poly_id": [0],
-                          "ring": [[{"lon": x, "lat": y} for x, y in ring]]}),
-            schema="poly_id long, ring array<struct<lon:double,lat:double>>",
-        )
+        polys = svc.polygon_frame(_bbox_ring(request))
         # ONE rasterization per RPC: the packed run-blob table is leased
         # (persisted) so the stats action materializes it and the
         # dissolve action reads the cache — the reference likewise
@@ -166,8 +159,8 @@ class OpenElevationServicer:
                 "baseElevation": int(r["height_base"]),
                 "area": {
                     "boundaries": [
-                        {"points": [{"lon": p["x"], "lat": p["y"]} for p in ring_]}
-                        for ring_ in r["rings"]
+                        {"points": [{"lon": p["x"], "lat": p["y"]} for p in ring]}
+                        for ring in r["rings"]
                     ]
                 },
             })

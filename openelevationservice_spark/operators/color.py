@@ -22,6 +22,12 @@ pipeline stays distributed, and pixel values never become JVM rows:
                 trace per Arrow batch for the invariants, rings per band
                 only for the GeoJSON features
 
+The band arithmetic has one implementation, the numpy band-split
+(:func:`_subrun_partial_frame`), and both band oracles check it: the
+contract's ``polygon_bands`` reads each band's pixel count off
+:func:`polygon_color_invariants` (``area_px``), and ``color_dissolve``
+checks the dissolve on the same bands.
+
 Bands dissolve independently, exactly as the reference unions per band,
 so the largest polygon's bands spread across tasks.  Only the final
 FeatureCollection is collected.  This is the one physical shape of both
@@ -45,25 +51,6 @@ from ..functions.dissolve import (MAX_BATCH_BANDS, batch_invariants,
                                   dissolve_pixels_rings)
 from ..plans.cache import lease
 from .polygon import blob_stats, polygon_pixel_run_blobs
-
-
-def polygon_stats(pixels: DataFrame) -> DataFrame:
-    """min/max/avg per polygon (reference ``querybuilder.py:84-88``)."""
-    return pixels.groupBy("poly_id").agg(
-        F.min("z").alias("min_z"),
-        F.max("z").alias("max_z"),
-        F.avg("z").alias("avg_z"),
-        F.count("*").alias("n_pixels"),
-    )
-
-
-def with_height_base(pixels: DataFrame, stats_df: DataFrame) -> DataFrame:
-    """Exact reference band arithmetic as JVM columns (G2)."""
-    j = pixels.join(F.broadcast(stats_df.select("poly_id", "min_z", "max_z")), "poly_id")
-    range_div = (F.col("max_z") - F.col("min_z") + F.lit(1)) / F.lit(float(NUM_RANGES))
-    color_range = F.floor((F.col("z") - F.col("min_z")) / range_div)
-    height_base = F.ceil(color_range * range_div + F.col("min_z"))
-    return j.withColumn("height_base", height_base.cast("long"))
 
 
 FEATURE_SCHEMA = T.StructType(
@@ -199,8 +186,9 @@ def _band_subrun_kernel_blob(batches):
     broadcast per-polygon stats.  Unpacks every pair's runs with
     ``np.frombuffer`` views (z never exists as a JVM array), applies the
     exact reference band arithmetic (``querybuilder.py:56-102``; the
-    same IEEE-double expression as :func:`with_height_base`) and splits
-    runs at band-change boundaries in one vectorized pass per batch.
+    same IEEE-double expression as the contract's band oracle SQL) and
+    splits runs at band-change boundaries in one vectorized pass per
+    batch.
     Terrain is locally smooth, so subrun count ~ run count, not pixel
     count.
 

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..constants import NODATA
-from ..functions.cells import cell_size_deg, cell_x_col, cell_y_col, disk_offsets, linear_id_col
+from ..functions.cells import cell_x_col, cell_y_col, disk_offsets, linear_id_col
 from ..sources.tiles import tile_index
 from .sample import broadcast_if_fits, gather_z_jvm, pixel_index
 

@@ -12,6 +12,10 @@ Reference shape (``server/api/querybuilder.py:167-254``)::
     ORDER BY ST_Distance(geom, P1)                (:228-231)
     ST_MakeLine                                   (:238/243)
 
+The ORDER BY and ST_MakeLine are the request surface's:
+``api.ElevationService.line`` collects the vertices, sorts them by
+``seq`` and assembles the reply on the driver.
+
 PostGIS ``ST_LineInterpolatePoints(line, frac)`` (repeat=true) emits
 points at t = frac, 2*frac, …, n*frac with n = floor(1/frac).  All of
 the densify arithmetic here is JVM Column math (``sequence`` +
@@ -139,28 +143,3 @@ def line_vertices_elevation(lines_df: DataFrame, images_df: DataFrame,
     return point_elevation(
         verts, images_df, how=how, lon="x", lat="y", pix_index_df=pix_index_df,
     ).select("line_id", "seq", "x", "y", "z", "dist", "image_id", "ix", "iy")
-
-
-def line_elevation(lines_df: DataFrame, images_df: DataFrame) -> DataFrame:
-    """Assembled 3-D lines: (line_id, n_vertices, is_degenerate_point, vertices).
-
-    ``vertices`` is the ordered array of (x, y, z) structs —
-    ``ST_MakeLine`` as an order-defined aggregation (SURVEY.md §2.4 A7).
-    A single surviving vertex marks the zero-length-line fixup
-    (reference ``views.py:63-68``).
-    """
-    v = line_vertices_elevation(lines_df, images_df)
-    pt = F.struct(F.col("dist"), F.col("x"), F.col("y"), F.col("z"))
-    return (
-        v.groupBy("line_id")
-        .agg(F.sort_array(F.collect_list(pt)).alias("pts"))
-        .select(
-            "line_id",
-            F.size("pts").alias("n_vertices"),
-            (F.size("pts") == 1).alias("is_degenerate_point"),
-            F.transform(
-                "pts",
-                lambda p: F.struct(p.x.alias("x"), p.y.alias("y"), p.z.alias("z")),
-            ).alias("vertices"),
-        )
-    )

@@ -25,6 +25,11 @@ query filters NODATA explicitly).  The Spark plan:
               PIP filter, NODATA filter → scanline runs            [A2-A4, P2-P3]
             → posexplode(runs) → pixel rows (JVM codegen)
 
+The reference's ``ORDER BY x, y`` is not a Spark sort: a request's
+reply is collected anyway, so ``api.ElevationService.polygon`` sorts
+it on the driver, and the rasterizer runs once per request (a Spark
+``orderBy`` would re-run it in its range-sampling job).
+
 The per-(polygon, tile) explode is Spark's ``LATERAL
 ST_PixelAsPolygons`` equivalent (SURVEY.md §2.3 J5).  One rasterization
 core (:func:`_iter_pair_masks`) feeds two emitters: scanline runs for
@@ -46,7 +51,7 @@ from pyspark.sql import types as T
 
 from ..constants import NODATA, PX, TILE_DEG, TILE_PX, WORLD_X0, WORLD_Y0
 from ..functions import image_codec
-from ..functions.cells import linear_id_col
+from ..functions.cells import cell_x_col, cell_y_col, linear_id_col
 from ..functions.geometry import points_in_ring, ring_to_arrays
 from ..sources.tiles import tile_index
 
@@ -81,13 +86,11 @@ def polygon_tile_join(polygons_df: DataFrame, images_df: DataFrame) -> DataFrame
         .withColumn("min_y", F.array_min(lats))
         .withColumn("max_y", F.array_max(lats))
     )
-    cx0 = F.floor((F.col("min_x") - F.lit(WORLD_X0)) / F.lit(TILE_DEG)).cast("long")
-    cx1 = F.floor((F.col("max_x") - F.lit(WORLD_X0)) / F.lit(TILE_DEG)).cast("long")
-    cy0 = F.floor((F.lit(WORLD_Y0) - F.col("max_y")) / F.lit(TILE_DEG)).cast("long")
-    cy1 = F.floor((F.lit(WORLD_Y0) - F.col("min_y")) / F.lit(TILE_DEG)).cast("long")
     p = (
-        p.withColumn("cx", F.explode(F.sequence(cx0, cx1)))
-        .withColumn("cy", F.explode(F.sequence(cy0, cy1)))
+        p.withColumn("cx", F.explode(F.sequence(cell_x_col(F.col("min_x")),
+                                                cell_x_col(F.col("max_x")))))
+        .withColumn("cy", F.explode(F.sequence(cell_y_col(F.col("max_y")),
+                                               cell_y_col(F.col("min_y")))))
         .withColumn("cell_id", linear_id_col(F.col("cx"), F.col("cy")))
     )
     idx = tile_index(images_df, with_bytes=True).select(
@@ -317,8 +320,8 @@ def polygon_pixel_run_blobs(polygons_df: DataFrame, images_df: DataFrame) -> Dat
 
 def blob_stats(blobs_df: DataFrame) -> DataFrame:
     """min/max/avg/count per polygon from the blob table's scalar
-    per-pair columns — value-identical to
-    ``polygon_stats(polygon_pixels(...))`` (G1, reference
+    per-pair columns — value-identical to the same aggregates over the
+    pixel rows of :func:`polygon_pixels` (G1, reference
     ``querybuilder.py:84-88``) without unpacking a single blob: the
     avg is one exact integer sum over one exact count, the same double
     division as the pixel-row average (asserted in tests/test_polygon.py)."""
@@ -335,11 +338,13 @@ def polygon_pixels(polygons_df: DataFrame, images_df: DataFrame,
     """Pixel rows covered by each polygon: (poly_id, image_id, gx, gy, x, y, z).
 
     Matches the reference's centroid-dump semantics (z != NODATA,
-    centroid covered); ordering is applied by ``polygon_elevation``.
-    The Python kernel ships scanline runs and a JVM ``posexplode``
-    generates the pixel rows inside codegen.  Huge polygon bounding
-    boxes: see the limit noted on :func:`polygon_tile_join`.  ``spread``
-    is ignored: it is kept only because existing benchmark calls pass it.
+    centroid covered).  Rows are unordered: the request surface
+    (``api.ElevationService.polygon``) sorts its collected reply by
+    (x, y) on the driver.  The Python kernel ships scanline runs and a
+    JVM ``posexplode`` generates the pixel rows inside codegen.  Huge
+    polygon bounding boxes: see the limit noted on
+    :func:`polygon_tile_join`.  ``spread`` is ignored: it is kept only
+    because existing benchmark calls pass it.
     """
     runs = polygon_tile_join(polygons_df, images_df).mapInPandas(
         _pixel_runs, schema=RUN_SCHEMA)
@@ -352,12 +357,3 @@ def polygon_pixels(polygons_df: DataFrame, images_df: DataFrame,
         F.col("z").cast("int").alias("z"),
     )
     return with_pixel_coords(px)
-
-
-def polygon_elevation(polygons_df: DataFrame, images_df: DataFrame) -> DataFrame:
-    """(x, y, z) dump ordered by x, y (reference ``querybuilder.py:152``)."""
-    return (
-        polygon_pixels(polygons_df, images_df)
-        .select("poly_id", "x", "y", "z")
-        .orderBy("poly_id", "x", "y")
-    )

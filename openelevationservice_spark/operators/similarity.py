@@ -170,11 +170,14 @@ def topk_per_query(scored: DataFrame, k: int, query_id: str, corpus_id: str,
                       k, query_id, corpus_id, sim_col)
 
 
-def pack_vectors(df: DataFrame, vec_col: str = "embedding",
-                 out_col: str | None = None,
-                 dtype: str = "float32") -> DataFrame:
+#: element type of a packed vector column: written by :func:`pack_vectors`,
+#: read by :func:`_unpack_binary`
+PACKED_DTYPE = np.dtype("<f4")
+
+
+def pack_vectors(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     """Replace an ``array<float/double>`` column with its fixed-width
-    little-endian packed ``binary`` encoding.
+    little-endian packed ``binary`` encoding (``PACKED_DTYPE``).
 
     At scale the embedding column is the transfer bottleneck of every
     scoring kernel: Arrow serialization of ``list<double>`` rows writes
@@ -185,19 +188,16 @@ def pack_vectors(df: DataFrame, vec_col: str = "embedding",
     ``np.frombuffer`` — float32 packing of a float32 source is lossless,
     so scores are bit-identical to the list path.
     """
-    out_col = out_col or vec_col
-    np_dtype = np.dtype(dtype).newbyteorder("<")
-
     @F.pandas_udf(T.BinaryType())
     def pack(v: pd.Series) -> pd.Series:
         return pd.Series(
-            [np.asarray(a, dtype=np_dtype).tobytes() for a in v], dtype=object
+            [np.asarray(a, dtype=PACKED_DTYPE).tobytes() for a in v], dtype=object
         )
 
-    return df.withColumn(out_col, pack(F.col(vec_col)))
+    return df.withColumn(vec_col, pack(F.col(vec_col)))
 
 
-def _unpack_binary(arr: "pa.Array", dim: int, np_dtype: np.dtype) -> np.ndarray:
+def _unpack_binary(arr: "pa.Array", dim: int) -> np.ndarray:
     """View a fixed-width packed ``binary`` Arrow column as an (n, dim)
     matrix straight off the Arrow buffers — ZERO per-row python objects.
 
@@ -205,14 +205,14 @@ def _unpack_binary(arr: "pa.Array", dim: int, np_dtype: np.dtype) -> np.ndarray:
     one python ``bytes`` object per row; this reads the offsets buffer
     once and reinterprets the shared data buffer in place."""
     n = len(arr)
-    w = dim * np_dtype.itemsize
+    w = dim * PACKED_DTYPE.itemsize
     off_dtype = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
     off = np.frombuffer(arr.buffers()[1], dtype=off_dtype)[arr.offset:arr.offset + n + 1]
     if off[-1] - off[0] != n * w:
         raise ValueError(
-            f"packed vector column is not fixed-width ({dim} x {np_dtype})")
+            f"packed vector column is not fixed-width ({dim} x {PACKED_DTYPE})")
     data = np.frombuffer(arr.buffers()[2], dtype=np.uint8)
-    return data[off[0]:off[-1]].view(np_dtype).reshape(n, dim)
+    return data[off[0]:off[-1]].view(PACKED_DTYPE).reshape(n, dim)
 
 
 def _unpack_list(arr: "pa.Array", dim: int) -> np.ndarray:
@@ -228,8 +228,7 @@ def _unpack_list(arr: "pa.Array", dim: int) -> np.ndarray:
 
 def cosine_topk(corpus_df: DataFrame, queries_df: DataFrame, k: int = 3,
                 corpus_id: str = "vec_id", corpus_vec: str = "embedding",
-                query_id: str = "q_id", query_vec: str = "q_vec",
-                vec_dtype: str = "float32") -> DataFrame:
+                query_id: str = "q_id", query_vec: str = "q_vec") -> DataFrame:
     """Exact brute-force top-k: (q_id, rank, vec_id, sim).
 
     The query side is tiny by construction (it rides inside the scoring
@@ -246,9 +245,9 @@ def cosine_topk(corpus_df: DataFrame, queries_df: DataFrame, k: int = 3,
     x₀y₀) + x₁y₁) + …, norms as sequential squared sums, then one
     multiply and one divide), so results are bit-exact across engines.
     A ``binary`` corpus column (packed vectors, see :func:`pack_vectors`)
-    is detected automatically and unpacked in place (``vec_dtype`` names
-    the packed element type); float32 packing of a float32 source is
-    lossless, so the packed path is bit-identical to the list path too.
+    is detected automatically and unpacked in place; float32 packing of a
+    float32 source is lossless, so the packed path is bit-identical to
+    the list path too.
     Each batch takes one ``np.partition`` threshold per query (all
     queries at once, O(n) per batch); the rows at or above a query's
     k-th score go long-form through the same running carry and
@@ -300,7 +299,6 @@ def cosine_topk(corpus_df: DataFrame, queries_df: DataFrame, k: int = 3,
     # measured non-scaling term of the list path (BENCH/SCALE.md) —
     # and the kernel unpacks with a single frombuffer per batch.
     is_packed = isinstance(corpus_df.schema[corpus_vec].dataType, T.BinaryType)
-    np_dtype = np.dtype(vec_dtype).newbyteorder("<")
 
     def candidates(rb):
         # long-form (query index, corpus id, sim) rows at or above each
@@ -308,7 +306,7 @@ def cosine_topk(corpus_df: DataFrame, queries_df: DataFrame, k: int = 3,
         cids = rb.column(rb.schema.get_field_index(corpus_id)) \
                  .to_numpy(zero_copy_only=False)
         varr = rb.column(rb.schema.get_field_index(corpus_vec))
-        mat = (_unpack_binary(varr, dim, np_dtype) if is_packed
+        mat = (_unpack_binary(varr, dim) if is_packed
                else _unpack_list(varr, dim)).astype(np.float64)
         sims = _fold_dots(mat, qmat) / (np.sqrt(_fold_sq(mat))[:, None] * qn)
         n = len(mat)

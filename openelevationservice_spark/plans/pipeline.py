@@ -105,17 +105,3 @@ def curate_documents(
     curated, m4 = stage("curated", n_params, build_neardup,
                         inputs=[m3["snapshot_id"]])
     return curated, manifests
-
-
-def pipeline_report(manifests: list[dict]) -> dict:
-    """Per-stage row counts + lineage, e.g. for a run log or metrics sink."""
-    return {
-        m["stage"]: {
-            "rows": m["total_rows"],
-            "snapshot_id": m["snapshot_id"],
-            "inputs": m["inputs"],
-            "resumed": m.get("resumed", False),
-            "n_partitions": len(m["partitions"]),
-        }
-        for m in manifests
-    }

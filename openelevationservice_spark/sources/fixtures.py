@@ -22,7 +22,9 @@ covers pixels ``gx in [tx*50, (tx+1)*50)``, ``gy in [ty*50, (ty+1)*50)``
 The default test world is positioned to contain the reference test
 coordinate (13.331302, 38.108433) (reference
 ``openelevationservice/tests/test_api_point.py:8``); the out-of-coverage
-Bremen coordinate from the same test file falls outside it.
+Bremen coordinate from the same test file falls outside it.  The
+query-side test inputs (those coordinates, replay points and lines, a
+driver-side images frame) live in ``tests/inputs.py``.
 """
 
 from __future__ import annotations
@@ -126,25 +128,20 @@ def tile_caption(tx: int, ty: int) -> str:
     )
 
 
-def make_images_pdf(world: World = DEFAULT_WORLD, fmts: tuple[str, ...] = ("raw16", "png16")) -> pd.DataFrame:
-    """The images table as pandas (driver-side; worlds are small in tests)."""
-    rows = []
-    for ty in range(world.ty0, world.ty0 + world.ny):
-        for tx in range(world.tx0, world.tx0 + world.nx):
-            grid = tile_grid(tx, ty)
-            fmt = fmts[(tx + ty) % len(fmts)]
-            rows.append(
-                {
-                    "image_id": f"tile_{tx:05d}_{ty:05d}",
-                    "bytes": image_codec.encode(grid, fmt),
-                    "w": TILE_PX,
-                    "h": TILE_PX,
-                    "fmt": fmt,
-                    "caption": tile_caption(tx, ty),
-                    "phash": image_codec.phash64(grid),
-                }
-            )
-    return pd.DataFrame(rows)
+def tile_row(tx: int, ty: int, fmts: tuple[str, ...]) -> dict:
+    """One images-table row: tile (tx, ty) encoded in the format its
+    checkerboard position picks from ``fmts``."""
+    grid = tile_grid(tx, ty)
+    fmt = fmts[(tx + ty) % len(fmts)]
+    return {
+        "image_id": f"tile_{tx:05d}_{ty:05d}",
+        "bytes": image_codec.encode(grid, fmt),
+        "w": TILE_PX,
+        "h": TILE_PX,
+        "fmt": fmt,
+        "caption": tile_caption(tx, ty),
+        "phash": image_codec.phash64(grid),
+    }
 
 
 IMAGES_SCHEMA = T.StructType(
@@ -177,60 +174,7 @@ def make_images_df(spark: SparkSession, world: World = DEFAULT_WORLD,
 
     def gen(batches):
         for pdf in batches:
-            rows = []
-            for tx, ty in zip(pdf["tx"], pdf["ty"]):
-                tx, ty = int(tx), int(ty)
-                grid = tile_grid(tx, ty)
-                fmt = fmts[(tx + ty) % len(fmts)]
-                rows.append(
-                    {
-                        "image_id": f"tile_{tx:05d}_{ty:05d}",
-                        "bytes": image_codec.encode(grid, fmt),
-                        "w": TILE_PX,
-                        "h": TILE_PX,
-                        "fmt": fmt,
-                        "caption": tile_caption(tx, ty),
-                        "phash": image_codec.phash64(grid),
-                    }
-                )
+            rows = [tile_row(int(tx), int(ty), fmts) for tx, ty in zip(pdf["tx"], pdf["ty"])]
             yield pd.DataFrame(rows, columns=[f.name for f in IMAGES_SCHEMA.fields])
 
     return tile_df.mapInPandas(gen, schema=IMAGES_SCHEMA)
-
-
-# --- query-side fixtures (pytest replay inputs; FIXTURES.md §2) -----------
-
-REF_POINT_IN = (13.331302, 38.108433)       # tests/test_api_point.py:8
-REF_POINT_OUT = (8.807514373051843, 53.0756845615249)  # :10 (Bremen)
-REF_LINE = ((13.331302, 38.108433), (13.331273, 38.10849))  # tests/test_api_line.py:10-11
-
-
-def make_points_pdf(world: World = DEFAULT_WORLD, n: int = 500, seed: int = 42) -> pd.DataFrame:
-    """Replay points: fixture seeds + uniform bulk + 5% outside + 20% skew."""
-    rng = np.random.default_rng(seed)
-    lon = rng.uniform(world.min_x, world.max_x, n)
-    lat = rng.uniform(world.min_y, world.max_y, n)
-    n_out = n // 20
-    lon[:n_out] = world.max_x + rng.uniform(1.0, 5.0, n_out)  # outside
-    n_skew = n // 5
-    lon[n_out:n_out + n_skew] = rng.uniform(world.min_x, world.min_x + TILE_DEG, n_skew)
-    lat[n_out:n_out + n_skew] = rng.uniform(world.max_y - TILE_DEG, world.max_y, n_skew)
-    pdf = pd.DataFrame({"point_id": np.arange(n, dtype=np.int64), "lon": lon, "lat": lat})
-    pdf.loc[0, ["lon", "lat"]] = REF_POINT_IN
-    pdf.loc[1, ["lon", "lat"]] = REF_POINT_OUT
-    return pdf
-
-
-def make_lines_pdf(world: World = DEFAULT_WORLD, n: int = 200, seed: int = 43) -> pd.DataFrame:
-    """Replay 2-vertex lines incl. the reference golden line + degenerates."""
-    rng = np.random.default_rng(seed)
-    x1 = rng.uniform(world.min_x, world.max_x, n)
-    y1 = rng.uniform(world.min_y, world.max_y, n)
-    x2 = x1 + rng.uniform(-3 * TILE_DEG, 3 * TILE_DEG, n)
-    y2 = y1 + rng.uniform(-3 * TILE_DEG, 3 * TILE_DEG, n)
-    pdf = pd.DataFrame({"line_id": np.arange(n, dtype=np.int64),
-                        "x1": x1, "y1": y1, "x2": x2, "y2": y2})
-    (ax, ay), (bx, by) = REF_LINE
-    pdf.loc[0, ["x1", "y1", "x2", "y2"]] = [ax, ay, bx, by]
-    pdf.loc[1, ["x1", "y1", "x2", "y2"]] = [ax, ay, ax, ay]  # zero-length
-    return pdf

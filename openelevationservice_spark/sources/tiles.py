@@ -17,7 +17,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..constants import NCELL_X, TILE_DEG, WORLD_X0, WORLD_Y0
+from ..constants import TILE_DEG, WORLD_X0, WORLD_Y0
+from ..functions.cells import linear_id_col
 
 CAPTION_SCHEMA = T.StructType(
     [
@@ -34,7 +35,7 @@ CAPTION_SCHEMA = T.StructType(
 def tile_index(images_df: DataFrame, with_bytes: bool = False) -> DataFrame:
     """(image_id, w, h, fmt, ul_x, ul_y, px, tx, ty, cell_id, bbox...).
 
-    ``cell_id`` is the base-resolution linear cell id; because tiles are
+    ``cell_id`` is the linear cell id of functions/cells.py; because tiles are
     grid-aligned with half-open extents, one tile == one cell and the
     point→tile spatial join becomes an exact equi-join (SURVEY.md §2.3 J1).
     """
@@ -50,7 +51,7 @@ def tile_index(images_df: DataFrame, with_bytes: bool = False) -> DataFrame:
     df = (
         df.withColumn("tx", F.round((F.col("ul_x") - F.lit(WORLD_X0)) / F.lit(TILE_DEG)).cast("long"))
         .withColumn("ty", F.round((F.lit(WORLD_Y0) - F.col("ul_y")) / F.lit(TILE_DEG)).cast("long"))
-        .withColumn("cell_id", (F.col("ty") * F.lit(NCELL_X) + F.col("tx")).cast("long"))
+        .withColumn("cell_id", linear_id_col(F.col("tx"), F.col("ty")))
         .withColumn("min_x", F.col("ul_x"))
         .withColumn("max_x", F.col("ul_x") + F.col("w") * F.col("px"))
         .withColumn("max_y", F.col("ul_y"))

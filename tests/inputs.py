@@ -1,0 +1,54 @@
+"""Query-side test inputs (FIXTURES.md §2): the reference's test
+coordinates, replay points and lines, and the images table as one
+driver-side pandas frame for small test worlds."""
+
+from __future__ import annotations
+
+import numpy as np
+import pandas as pd
+
+from openelevationservice_spark.constants import TILE_DEG
+from openelevationservice_spark.sources.fixtures import DEFAULT_WORLD, World, tile_row
+
+REF_POINT_IN = (13.331302, 38.108433)       # reference tests/test_api_point.py:8
+REF_POINT_OUT = (8.807514373051843, 53.0756845615249)  # :10 (Bremen)
+REF_LINE = ((13.331302, 38.108433), (13.331273, 38.10849))  # tests/test_api_line.py:10-11
+
+
+def make_images_pdf(world: World = DEFAULT_WORLD,
+                    fmts: tuple[str, ...] = ("raw16", "png16")) -> pd.DataFrame:
+    """The rows of ``fixtures.make_images_df`` as pandas, in (ty, tx) order."""
+    return pd.DataFrame([tile_row(tx, ty, fmts)
+                         for ty in range(world.ty0, world.ty0 + world.ny)
+                         for tx in range(world.tx0, world.tx0 + world.nx)])
+
+
+def make_points_pdf(world: World = DEFAULT_WORLD, n: int = 500, seed: int = 42) -> pd.DataFrame:
+    """Replay points: fixture seeds + uniform bulk + 5% outside + 20% skew."""
+    rng = np.random.default_rng(seed)
+    lon = rng.uniform(world.min_x, world.max_x, n)
+    lat = rng.uniform(world.min_y, world.max_y, n)
+    n_out = n // 20
+    lon[:n_out] = world.max_x + rng.uniform(1.0, 5.0, n_out)  # outside
+    n_skew = n // 5
+    lon[n_out:n_out + n_skew] = rng.uniform(world.min_x, world.min_x + TILE_DEG, n_skew)
+    lat[n_out:n_out + n_skew] = rng.uniform(world.max_y - TILE_DEG, world.max_y, n_skew)
+    pdf = pd.DataFrame({"point_id": np.arange(n, dtype=np.int64), "lon": lon, "lat": lat})
+    pdf.loc[0, ["lon", "lat"]] = REF_POINT_IN
+    pdf.loc[1, ["lon", "lat"]] = REF_POINT_OUT
+    return pdf
+
+
+def make_lines_pdf(world: World = DEFAULT_WORLD, n: int = 200, seed: int = 43) -> pd.DataFrame:
+    """Replay 2-vertex lines incl. the reference golden line + degenerates."""
+    rng = np.random.default_rng(seed)
+    x1 = rng.uniform(world.min_x, world.max_x, n)
+    y1 = rng.uniform(world.min_y, world.max_y, n)
+    x2 = x1 + rng.uniform(-3 * TILE_DEG, 3 * TILE_DEG, n)
+    y2 = y1 + rng.uniform(-3 * TILE_DEG, 3 * TILE_DEG, n)
+    pdf = pd.DataFrame({"line_id": np.arange(n, dtype=np.int64),
+                        "x1": x1, "y1": y1, "x2": x2, "y2": y2})
+    (ax, ay), (bx, by) = REF_LINE
+    pdf.loc[0, ["x1", "y1", "x2", "y2"]] = [ax, ay, bx, by]
+    pdf.loc[1, ["x1", "y1", "x2", "y2"]] = [ax, ay, ax, ay]  # zero-length
+    return pdf

@@ -13,13 +13,65 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
-from openelevationservice_spark.constants import COORD_PRECISION
+from openelevationservice_spark.constants import (
+    COORD_PRECISION, NCELL_X, NUM_RANGES, TILE_DEG, WORLD_X0, WORLD_Y0)
+from openelevationservice_spark.functions import cells
 from openelevationservice_spark.functions.dissolve import dissolve_pixels_rings
 from openelevationservice_spark.operators.dedup import (
     MERSENNE31, minhash_perm_consts, word_shingles)
 from openelevationservice_spark.operators.similarity import deterministic_hyperplanes
 
 DENSIFY_COLUMNS = ["line_id", "x1", "y1", "seq", "x", "y", "dist"]
+
+
+def cell_xy(lon: np.ndarray, lat: np.ndarray):
+    """(cx, cy) of ``functions.cells.cell_x_col``/``cell_y_col``: half-open
+    tile-sized cells, y counting down from the north pole."""
+    cx = np.floor((np.asarray(lon, dtype=np.float64) - WORLD_X0) / TILE_DEG).astype(np.int64)
+    cy = np.floor((WORLD_Y0 - np.asarray(lat, dtype=np.float64)) / TILE_DEG).astype(np.int64)
+    return cx, cy
+
+
+def linear_id(cx: np.ndarray, cy: np.ndarray) -> np.ndarray:
+    """Row-major cell id of ``functions.cells.linear_id_col``."""
+    return np.asarray(cy, dtype=np.int64) * NCELL_X + np.asarray(cx, dtype=np.int64)
+
+
+def column_cells(spark, lon: np.ndarray, lat: np.ndarray) -> pd.DataFrame:
+    """(cx, cy, cell_id) per point, computed by the library's Column
+    functions in one Spark job, in input order."""
+    df = spark.createDataFrame(pd.DataFrame({
+        "i": np.arange(len(lon), dtype=np.int64),
+        "lon": np.asarray(lon, dtype=np.float64),
+        "lat": np.asarray(lat, dtype=np.float64)}))
+    lon_c, lat_c = F.col("lon"), F.col("lat")
+    return (df.select("i", cells.cell_x_col(lon_c).alias("cx"),
+                      cells.cell_y_col(lat_c).alias("cy"),
+                      cells.cell_id_col(lon_c, lat_c).alias("cell_id"))
+            .toPandas().sort_values("i").reset_index(drop=True))
+
+
+def polygon_stats(pixels):
+    """min/max/avg/count per polygon over pixel rows (reference
+    ``querybuilder.py:84-88``) — the reference for
+    ``operators.polygon.blob_stats``."""
+    return pixels.groupBy("poly_id").agg(
+        F.min("z").alias("min_z"),
+        F.max("z").alias("max_z"),
+        F.avg("z").alias("avg_z"),
+        F.count("*").alias("n_pixels"),
+    )
+
+
+def with_height_base(pixels, stats_df):
+    """Pixel rows with the reference band arithmetic as JVM columns
+    (G2), the same IEEE-double expression as the numpy band-split of
+    ``operators.color._subrun_partial_frame``."""
+    j = pixels.join(F.broadcast(stats_df.select("poly_id", "min_z", "max_z")), "poly_id")
+    range_div = (F.col("max_z") - F.col("min_z") + F.lit(1)) / F.lit(float(NUM_RANGES))
+    color_range = F.floor((F.col("z") - F.col("min_z")) / range_div)
+    height_base = F.ceil(color_range * range_div + F.col("min_z"))
+    return j.withColumn("height_base", height_base.cast("long"))
 
 
 def densify_reference(pdf: pd.DataFrame) -> pd.DataFrame:

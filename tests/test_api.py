@@ -12,6 +12,7 @@ import pytest
 from openelevationservice_spark import api
 from openelevationservice_spark.functions import polyline as pl
 from openelevationservice_spark.sources import fixtures as fx
+from tests.inputs import make_images_pdf
 
 VALID = [13.331302, 38.108433]        # reference test_api_point.py:8
 BREMEN = [8.807514373051843, 53.0756845615249]  # out-of-coverage
@@ -20,7 +21,7 @@ BREMEN = [8.807514373051843, 53.0756845615249]  # out-of-coverage
 @pytest.fixture(scope="module")
 def svc(spark):
     images = spark.createDataFrame(
-        fx.make_images_pdf(fx.World(nx=4, ny=4)), schema=fx.IMAGES_SCHEMA
+        make_images_pdf(fx.World(nx=4, ny=4)), schema=fx.IMAGES_SCHEMA
     )
     images.persist()
     images.count()
@@ -172,18 +173,10 @@ def test_invalid_format_in_4000(svc):
     assert e.value.code == 4000
 
 
-def test_maximum_nodes_4003(svc):
-    coords = [[VALID[0] + i * 1e-6, VALID[1]] for i in range(api.MAXIMUM_NODES + 1)]
-    with pytest.raises(api.ApiError) as e:
-        svc.line({"type": "LineString", "coordinates": coords}, "geojson",
-                 strict_two_vertex=False)
-    assert e.value.code == 4003
-
-
 def test_maximum_nodes_4003_in_strict_mode(svc):
-    """Oversized lines must get 4003 even with the default strict
-    two-vertex guard (reference test_api_line.py:90-97 expects 4003
-    for a 2001-node polyline)."""
+    """Oversized lines get 4003, checked before the two-vertex guard
+    (reference test_api_line.py:90-97 expects 4003 for a 2001-node
+    polyline)."""
     coords = [[VALID[0] + i * 1e-6, VALID[1]] for i in range(api.MAXIMUM_NODES + 1)]
     with pytest.raises(api.ApiError) as e:
         svc.line({"type": "LineString", "coordinates": coords}, "geojson")

@@ -20,6 +20,7 @@ from openelevationservice_spark.operators.color import (
     polygon_color_features, polygon_color_invariants)
 from openelevationservice_spark.operators.polygon import polygon_pixels
 from openelevationservice_spark.sources import fixtures as fx
+from tests.inputs import make_images_pdf
 
 BATCH_CONF = "spark.sql.execution.arrow.maxRecordsPerBatch"
 SMALL, LARGE = 7, 65536
@@ -50,7 +51,7 @@ def elevation(spark):
     (general point-in-polygon, runs split across bands) and a
     rectangle."""
     world = fx.World(nx=3, ny=3)
-    images = spark.createDataFrame(fx.make_images_pdf(world), schema=fx.IMAGES_SCHEMA)
+    images = spark.createDataFrame(make_images_pdf(world), schema=fx.IMAGES_SCHEMA)
     x0 = world.min_x + 0.2 * TILE_DEG
     y0 = world.max_y - 2.7 * TILE_DEG
     tri = [(x0, y0), (x0 + 2.3 * TILE_DEG, y0), (x0, y0 + 2.3 * TILE_DEG), (x0, y0)]

@@ -2,12 +2,14 @@ import numpy as np
 
 from openelevationservice_spark.constants import NCELL_X, TILE_DEG, WORLD_X0, WORLD_Y0
 from openelevationservice_spark.functions import cells
+from tests.references import cell_xy, column_cells, linear_id
 
 
-def test_cell_xy_roundtrip():
+def test_cell_xy_roundtrip(spark):
     lon = np.array([13.331302, -179.9999, 179.9999, 0.0])
     lat = np.array([38.108433, 89.9999, -89.9999, 0.0])
-    cx, cy = cells.cell_xy(lon, lat)
+    got = column_cells(spark, lon, lat)
+    cx, cy = got["cx"].to_numpy(), got["cy"].to_numpy()
     assert (cx >= 0).all() and (cx < NCELL_X).all()
     # cell lower-left corner must contain the point (half-open)
     x0 = WORLD_X0 + cx * TILE_DEG
@@ -16,55 +18,20 @@ def test_cell_xy_roundtrip():
     assert ((lat <= y1) & (lat > y1 - TILE_DEG)).all()
 
 
-def test_morton_roundtrip():
-    rng = np.random.default_rng(0)
-    cx = rng.integers(0, NCELL_X, 1000)
-    cy = rng.integers(0, 4320, 1000)
-    m = cells.morton_id(cx, cy)
-    dx, dy, res = cells.morton_decode(m)
-    assert (dx == cx).all() and (dy == cy).all() and (res == 15).all()
-
-
-def test_morton_locality_monotone_block():
-    # cells in a 2x2 block share all but the last 2 interleaved bits
-    m = cells.morton_id(np.array([4, 5, 4, 5]), np.array([6, 6, 7, 7]))
-    assert len(set(v >> 2 for v in m)) == 1
-
-
-def test_parent():
-    m = cells.morton_id(np.array([100]), np.array([37]))
-    p = cells.parent(m, 13)
-    cx, cy, res = cells.morton_decode(p)
-    assert (cx[0], cy[0], res[0]) == (25, 9, 13)
-
-
-def test_cover_cells_bbox():
-    gx, gy = cells.cover_cells_bbox(13.0, 38.0, 13.0 + 2.5 * TILE_DEG, 38.0 + 1.2 * TILE_DEG)
-    # 2.5-tile-wide bbox covers 3-4 columns, 1.2-tile-tall covers 2-3 rows
-    assert 6 <= len(gx) <= 12
-
-
 def test_ring_and_disk():
-    xs, ys = cells.ring_offsets(2)
-    assert len(xs) == 16
-    assert all(max(abs(a), abs(b)) == 2 for a, b in zip(xs, ys))
-    dx, dy = cells.disk_offsets(2)
-    assert len(dx) == 25
+    """The kNN candidate disk: the own cell, then the full ring around it."""
+    dx, dy = cells.disk_offsets(0)
+    assert list(zip(dx.tolist(), dy.tolist())) == [(0, 0)]
+    dx, dy = cells.disk_offsets(1)
+    assert sorted(zip(dx.tolist(), dy.tolist())) == [
+        (a, b) for a in (-1, 0, 1) for b in (-1, 0, 1)]
 
 
 def test_column_exprs_match_numpy(spark):
-    import pandas as pd
-    from pyspark.sql import functions as F
-
     rng = np.random.default_rng(1)
     lon = rng.uniform(-179, 179, 200)
     lat = rng.uniform(-89, 89, 200)
-    df = spark.createDataFrame(pd.DataFrame({"lon": lon, "lat": lat}))
-    got = (
-        df.select(cells.cell_id_col(F.col("lon"), F.col("lat")).alias("c"))
-        .toPandas()["c"]
-        .to_numpy()
-    )
-    cx, cy = cells.cell_xy(lon, lat)
-    want = cells.linear_id(cx, cy)
-    assert (got == want).all()
+    got = column_cells(spark, lon, lat)
+    cx, cy = cell_xy(lon, lat)
+    assert (got["cx"].to_numpy() == cx).all() and (got["cy"].to_numpy() == cy).all()
+    assert (got["cell_id"].to_numpy() == linear_id(cx, cy)).all()

@@ -5,16 +5,17 @@ import numpy as np
 from openelevationservice_spark.constants import NODATA, PX, TILE_DEG
 from openelevationservice_spark.functions import image_codec as ic
 from openelevationservice_spark.sources import fixtures as fx
+from tests.inputs import REF_POINT_IN, REF_POINT_OUT, make_images_pdf
 
 
 def test_world_contains_reference_point():
-    assert fx.DEFAULT_WORLD.contains(*fx.REF_POINT_IN)
-    assert not fx.DEFAULT_WORLD.contains(*fx.REF_POINT_OUT)
+    assert fx.DEFAULT_WORLD.contains(*REF_POINT_IN)
+    assert not fx.DEFAULT_WORLD.contains(*REF_POINT_OUT)
 
 
 def test_images_pdf_schema_and_invariant():
     world = fx.World(nx=3, ny=2)
-    pdf = fx.make_images_pdf(world)
+    pdf = make_images_pdf(world)
     assert list(pdf.columns) == ["image_id", "bytes", "w", "h", "fmt", "caption", "phash"]
     assert len(pdf) == 6
     for _, r in pdf.iterrows():
@@ -72,7 +73,7 @@ def test_make_images_df_distributed(spark):
     world = fx.World(nx=4, ny=2)
     df = fx.make_images_df(spark, world)
     pdf = df.toPandas().sort_values("image_id").reset_index(drop=True)
-    ref = fx.make_images_pdf(world).sort_values("image_id").reset_index(drop=True)
+    ref = make_images_pdf(world).sort_values("image_id").reset_index(drop=True)
     assert (pdf["image_id"] == ref["image_id"]).all()
     assert (pdf["phash"] == ref["phash"]).all()
     assert all(a == b for a, b in zip(pdf["bytes"], ref["bytes"]))
@@ -84,29 +85,31 @@ def test_tile_alignment():
     assert w.max_y <= 90
 
 
+def _interleave(tx: int, ty: int) -> int:
+    """Plain Morton code: bit i of tx goes to bit 2i, bit i of ty to 2i+1."""
+    return sum(((tx >> i) & 1) << (2 * i) | ((ty >> i) & 1) << (2 * i + 1)
+               for i in range(32))
+
+
 def test_write_tile_index_morton_clustered(spark, tmp_path):
     """Ingest writer: snapshot is range-partitioned + sorted by the
     Morton key (file-level locality for bbox pruning) and carries
     per-partition lineage."""
     import numpy as np
-    from openelevationservice_spark.functions import cells
-    from openelevationservice_spark.sources import fixtures as fx
     from openelevationservice_spark.sources.snapshots import SnapshotStore
     from openelevationservice_spark.sources.tiles import write_tile_index
 
     world = fx.World(nx=8, ny=8)
-    images = spark.createDataFrame(fx.make_images_pdf(world), schema=fx.IMAGES_SCHEMA)
+    images = spark.createDataFrame(make_images_pdf(world), schema=fx.IMAGES_SCHEMA)
     store = SnapshotStore(str(tmp_path))
     manifest = write_tile_index(images, store, num_files=4)
     assert manifest["total_rows"] == world.n_tiles
     assert len(manifest["partitions"]) >= 2          # range-partitioned
     out = store.read(spark, "tile_index")
-    # morton column matches the numpy reference implementation
+    # the morton column is the plain bit-interleave of (tx, ty)
     pdf = out.select("tx", "ty", "morton").toPandas()
-    want = cells.morton_id(pdf.tx.to_numpy(), pdf.ty.to_numpy(), res=15)
-    # cells.morton_id tags resolution bits; the layout key is the raw
-    # interleave — compare the low 58 bits
-    assert ((want & ((1 << 58) - 1)) == pdf.morton.to_numpy()).all()
+    want = [_interleave(int(tx), int(ty)) for tx, ty in zip(pdf.tx, pdf.ty)]
+    assert want == pdf.morton.tolist()
     # sorted within every partition (file)
     from pyspark.sql import functions as F
     part = out.withColumn("pid", F.spark_partition_id()).toPandas()

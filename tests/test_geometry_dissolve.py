@@ -1,6 +1,7 @@
 import numpy as np
 
-from openelevationservice_spark.functions.dissolve import batch_invariants, quad_counts
+from openelevationservice_spark.functions.dissolve import (_one_band_keys, _quad_counts,
+                                                           batch_invariants)
 from openelevationservice_spark.functions.geometry import points_in_ring, ring_to_arrays
 from tests.references import _signed_area2, dissolve_area_px, dissolve_pixels, label_counts
 
@@ -112,7 +113,7 @@ def test_quad_counts_match_labeling():
             continue
         gy, gx = np.nonzero(g)
         c4, c8, h4, h8 = label_counts(gx, gy)
-        q1, q3, qd = quad_counts(gx, gy)
+        q1, q3, qd = (int(q[0]) for q in _quad_counts(_one_band_keys(gx, gy)[0], 1))
         assert (q1 - q3 + 2 * qd) // 4 == c4 - h8
         assert (q1 - q3 - 2 * qd) // 4 == c8 - h4
         polys = dissolve_pixels(gx, gy)

@@ -10,6 +10,7 @@ from openelevationservice_spark import api
 from openelevationservice_spark.constants import TILE_DEG
 from openelevationservice_spark.grpc_shim import GrpcAbort, OpenElevationServicer
 from openelevationservice_spark.sources import fixtures as fx
+from tests.inputs import make_images_pdf
 
 VALID = [13.331302, 38.108433]                    # reference test fixture
 BREMEN = [8.807514373051843, 53.0756845615249]    # out-of-coverage
@@ -23,7 +24,7 @@ def world():
 @pytest.fixture(scope="module")
 def servicer(spark, world):
     images = spark.createDataFrame(
-        fx.make_images_pdf(world), schema=fx.IMAGES_SCHEMA
+        make_images_pdf(world), schema=fx.IMAGES_SCHEMA
     )
     images.persist()
     images.count()

@@ -6,6 +6,7 @@ from openelevationservice_spark.constants import NODATA, PX, TILE_DEG, TILE_PX, 
 from openelevationservice_spark.operators.knn import knn_tiles
 from openelevationservice_spark.sources import fixtures as fx
 from tests import plan_checks as pc
+from tests.inputs import make_images_pdf
 
 
 @pytest.fixture(scope="module")
@@ -15,7 +16,7 @@ def world():
 
 @pytest.fixture(scope="module")
 def images(spark, world):
-    df = spark.createDataFrame(fx.make_images_pdf(world), schema=fx.IMAGES_SCHEMA)
+    df = spark.createDataFrame(make_images_pdf(world), schema=fx.IMAGES_SCHEMA)
     df.persist()
     df.count()
     return df

@@ -19,7 +19,9 @@ dropping a parameter breaks a tier-1 test instead of a traced run.
 Every module is reached from an entry point: the request surfaces
 (``api.py``, ``grpc_shim.py``), the contract queries, the submit CLI,
 the driver entry and the benchmarks.  A module only its own tests import
-is dead code and leaves the package.
+is dead code and leaves the package.  The same holds for every
+top-level function and class: one that only tests reach leaves the
+package, or moves to ``tests/`` when a test uses it as a reference.
 """
 
 import ast
@@ -268,3 +270,86 @@ def test_detector_sees_unreached_module(tmp_path):
         (tmp_path / name).write_text(src)
     package = tmp_path / "pkg"
     assert _unreached(package, [package / "entry.py"]) == ["dead.py", "sub/gone.py"]
+
+
+DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+
+
+def _identifiers(node: ast.AST) -> set[str]:
+    """Every ``Name`` and ``Attribute`` identifier under ``node``."""
+    ids = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            ids.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            ids.add(n.attr)
+    return ids
+
+
+def _unreached_names(package: Path, entries: list[Path]) -> list[str]:
+    """``module:name`` for each top-level function or class of ``package``
+    that no entry point reaches by name.
+
+    Roots are the identifiers defined or used anywhere in ``entries``
+    (imports included) and those used by the module-level statements of
+    the package, which run on import.  A reached definition adds the
+    identifiers used in its body, to a fixpoint.  Matching is by bare
+    name, so it is conservative: any ``x.parent`` keeps every ``parent``
+    alive."""
+    roots = set()
+    for path in entries:
+        tree = ast.parse(path.read_text(), str(path))
+        roots |= _identifiers(tree)
+        for node in ast.walk(tree):
+            if isinstance(node, DEFS):
+                roots.add(node.name)
+            elif isinstance(node, (ast.Import, ast.ImportFrom)):
+                roots |= {a.asname or a.name.split(".")[-1] for a in node.names}
+    defs = []
+    for path in sorted(package.rglob("*.py")):
+        rel = path.relative_to(package).as_posix()
+        for node in ast.parse(path.read_text(), str(path)).body:
+            if isinstance(node, DEFS):
+                defs.append((rel, node.name, _identifiers(node)))
+            else:
+                roots |= _identifiers(node)
+    reached, grown = roots, True
+    while grown:
+        grown = False
+        for _, name, used in defs:
+            if name in reached and not used <= reached:
+                reached |= used
+                grown = True
+    return [f"{rel}:{name}" for rel, name, _ in defs if name not in reached]
+
+
+def test_every_top_level_name_is_reachable():
+    unreached = _unreached_names(PACKAGE, ENTRY_POINTS)
+    assert not unreached, f"functions and classes no entry point reaches: {unreached}"
+
+
+def test_detector_sees_unreached_name(tmp_path):
+    files = {
+        "entry.py": "from pkg.a import f\nimport pkg.b as b\n"
+                    "def g():\n    return b.h()\n",
+        "pkg/__init__.py": "",
+        "pkg/a.py": "K = _k()\ndef _k(): return 1\n"
+                    "def f(): return _helper()\ndef _helper(): return 2\n"
+                    "def dead(): return _only_dead()\ndef _only_dead(): return 3\n",
+        "pkg/b.py": "class C:\n    def m(self): return i()\n"
+                    "def h(): return C()\ndef i(): return 4\n"
+                    "class Dead:\n    pass\n"
+                    "def parent(): return 5\n",
+        "pkg/c.py": "def fresh(): return 6\n",
+        "other.py": "import pathlib\np = pathlib.Path('.').parent\n",
+    }
+    for name, src in files.items():
+        (tmp_path / name).parent.mkdir(parents=True, exist_ok=True)
+        (tmp_path / name).write_text(src)
+    package = tmp_path / "pkg"
+    assert _unreached_names(package, [tmp_path / "entry.py"]) == \
+        ["a.py:dead", "a.py:_only_dead", "b.py:Dead", "b.py:parent", "c.py:fresh"]
+    # bare-name matching: an attribute ``parent`` anywhere in a root keeps
+    # every function named ``parent`` alive
+    assert "b.py:parent" not in _unreached_names(
+        package, [tmp_path / "entry.py", tmp_path / "other.py"])

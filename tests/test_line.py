@@ -5,13 +5,10 @@ import pandas as pd
 import pytest
 
 from openelevationservice_spark.constants import PX, TILE_DEG, WORLD_X0, WORLD_Y0
-from openelevationservice_spark.operators.line import (
-    densify_lines,
-    line_elevation,
-    line_vertices_elevation,
-)
+from openelevationservice_spark.operators.line import densify_lines, line_vertices_elevation
 from openelevationservice_spark.sources import fixtures as fx
 from tests import plan_checks as pc
+from tests.inputs import REF_LINE, make_images_pdf, make_lines_pdf
 from tests.references import assert_densify_matches_reference
 
 
@@ -51,14 +48,14 @@ def world():
 
 @pytest.fixture(scope="module")
 def images(spark, world):
-    df = spark.createDataFrame(fx.make_images_pdf(world), schema=fx.IMAGES_SCHEMA)
+    df = spark.createDataFrame(make_images_pdf(world), schema=fx.IMAGES_SCHEMA)
     df.persist()
     df.count()
     return df
 
 
 def test_densify_matches_oracle(spark, world):
-    pdf = fx.make_lines_pdf(world, n=40)
+    pdf = make_lines_pdf(world, n=40)
     got = (
         densify_lines(spark.createDataFrame(pdf))
         .toPandas()
@@ -73,15 +70,18 @@ def test_densify_matches_oracle(spark, world):
 
 
 def test_zero_length_line_degenerates_to_point(spark, world, images):
+    """A zero-length line densifies to its one point (the request surface
+    then formats it as a POINT, reference ``views.py:63-68``)."""
     pdf = pd.DataFrame(
-        {"line_id": [0], "x1": [fx.REF_LINE[0][0]], "y1": [fx.REF_LINE[0][1]],
-         "x2": [fx.REF_LINE[0][0]], "y2": [fx.REF_LINE[0][1]]}
+        {"line_id": [0], "x1": [REF_LINE[0][0]], "y1": [REF_LINE[0][1]],
+         "x2": [REF_LINE[0][0]], "y2": [REF_LINE[0][1]]}
     )
-    out = line_elevation(spark.createDataFrame(pdf),
-                         spark.createDataFrame(fx.make_images_pdf(fx.DEFAULT_WORLD),
-                                               schema=fx.IMAGES_SCHEMA)).toPandas()
+    out = line_vertices_elevation(spark.createDataFrame(pdf),
+                                  spark.createDataFrame(make_images_pdf(fx.DEFAULT_WORLD),
+                                                        schema=fx.IMAGES_SCHEMA)).toPandas()
     assert len(out) == 1
-    assert out["n_vertices"][0] == 1 and bool(out["is_degenerate_point"][0])
+    assert out["seq"][0] == 1
+    assert (out["x"][0], out["y"][0]) == REF_LINE[0]
 
 
 def test_reference_golden_line_vertex_count(spark):
@@ -89,11 +89,11 @@ def test_reference_golden_line_vertex_count(spark):
     # → frac = 1 → the single interpolated point IS endpoint 2, deduped by
     # DISTINCT → exactly 2 vertices (the golden encoded output
     # 'u`rgFswjpA_aMKD?' holds 2 coordinate triples)
-    (ax, ay), (bx, by) = fx.REF_LINE
+    (ax, ay), (bx, by) = REF_LINE
     want = densify_oracle(ax, ay, bx, by)
     assert len(want) == 2
     pdf = pd.DataFrame({"line_id": [0], "x1": [ax], "y1": [ay], "x2": [bx], "y2": [by]})
-    imgs = spark.createDataFrame(fx.make_images_pdf(fx.DEFAULT_WORLD), schema=fx.IMAGES_SCHEMA)
+    imgs = spark.createDataFrame(make_images_pdf(fx.DEFAULT_WORLD), schema=fx.IMAGES_SCHEMA)
     out = line_vertices_elevation(spark.createDataFrame(pdf), imgs).toPandas()
     assert len(out) == 2
     assert list(out.sort_values("seq")["seq"]) == [1, 2]
@@ -103,7 +103,7 @@ def test_reference_golden_line_vertex_count(spark):
 def test_line_vertices_match_oracle(spark, world, images, index_join):
     """Same vertices under the planner's broadcast join and, with the
     threshold at -1, its shuffle join."""
-    pdf = fx.make_lines_pdf(world, n=30)
+    pdf = make_lines_pdf(world, n=30)
     df = line_vertices_elevation(spark.createDataFrame(pdf), images)
     out = df.toPandas().sort_values(["line_id", "seq"])
     pc.assert_join_regime(df, index_join)
@@ -116,18 +116,6 @@ def test_line_vertices_match_oracle(spark, world, images, index_join):
         for (wp, wz), (_, g) in zip(want, sub.iterrows()):
             assert g.x == wp[0] and g.y == wp[1]
             assert g.z == wz
-
-
-def test_line_assembly_ordered(spark, world, images):
-    pdf = fx.make_lines_pdf(world, n=10)
-    out = line_elevation(spark.createDataFrame(pdf), images).toPandas()
-    for _, r in out.iterrows():
-        d_prev = -1.0
-        x0, y0 = r.vertices[0]["x"], r.vertices[0]["y"]
-        for v in r.vertices:
-            d = math.sqrt((v["x"] - x0) ** 2 + (v["y"] - y0) ** 2)
-            assert d >= d_prev - 1e-12
-            d_prev = d
 
 
 def test_densify_equals_numpy_reference(spark):

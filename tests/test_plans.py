@@ -15,6 +15,7 @@ from openelevationservice_spark.operators.polygon import polygon_pixels
 from openelevationservice_spark.operators import dedup
 from openelevationservice_spark.sources import fixtures as fx
 from tests import plan_checks as pc
+from tests.inputs import make_images_pdf, make_points_pdf
 
 
 @pytest.fixture(scope="module")
@@ -24,7 +25,7 @@ def world():
 
 @pytest.fixture(scope="module")
 def images(spark, world):
-    df = spark.createDataFrame(fx.make_images_pdf(world), schema=fx.IMAGES_SCHEMA)
+    df = spark.createDataFrame(make_images_pdf(world), schema=fx.IMAGES_SCHEMA)
     df.persist()
     df.count()
     return df
@@ -32,7 +33,7 @@ def images(spark, world):
 
 @pytest.fixture(scope="module")
 def pts(spark, world):
-    return spark.createDataFrame(fx.make_points_pdf(world, n=50))
+    return spark.createDataFrame(make_points_pdf(world, n=50))
 
 
 def test_point_plan_is_broadcast_equi_join(spark, images, pts):
@@ -100,16 +101,13 @@ def test_line_default_path_is_pure_jvm(spark, images):
 
 
 def test_line_elevation_default_gather_is_jvm(spark, images):
-    """The assembled-line wrapper must inherit the scale-safe JVM gather
-    by default (round-4 verdict #1: the wrapper was missed when the
-    defaults flipped).  Exactly one MapInPandas node (build-side tile
-    decode; formatted explain prints each node twice — tree + detail); a
-    Python gather would add a probe-side node."""
-    from openelevationservice_spark.operators.line import line_elevation
-
+    """The line vertices take the scale-safe JVM gather by default.
+    Exactly one MapInPandas node (build-side tile decode; formatted
+    explain prints each node twice — tree + detail); a Python gather
+    would add a probe-side node."""
     lines = spark.createDataFrame(pd.DataFrame({
         "line_id": [1], "x1": [13.2], "y1": [38.2], "x2": [13.21], "y2": [38.21]}))
-    plan = pc.explain_str(line_elevation(lines, images))
+    plan = pc.explain_str(line_vertices_elevation(lines, images))
     assert plan.count("MapInPandas") == 2
     assert "BatchEvalPython" not in plan
 

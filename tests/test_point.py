@@ -6,6 +6,7 @@ from openelevationservice_spark.constants import NODATA, PX, TILE_DEG, WORLD_X0,
 from openelevationservice_spark.operators.point import point_elevation
 from openelevationservice_spark.sources import fixtures as fx
 from tests import plan_checks as pc
+from tests.inputs import REF_POINT_IN, REF_POINT_OUT, make_images_pdf, make_points_pdf
 
 
 def numpy_point_oracle(lon: np.ndarray, lat: np.ndarray, world: fx.World):
@@ -33,7 +34,7 @@ def world():
 
 @pytest.fixture(scope="module")
 def images(spark, world):
-    df = spark.createDataFrame(fx.make_images_pdf(world), schema=fx.IMAGES_SCHEMA)
+    df = spark.createDataFrame(make_images_pdf(world), schema=fx.IMAGES_SCHEMA)
     df.persist()
     df.count()
     return df
@@ -43,7 +44,7 @@ def images(spark, world):
 def test_point_elevation_matches_oracle(spark, world, images, index_join):
     """Same rows under the planner's broadcast join and, with the
     threshold at -1, its shuffle join."""
-    pdf = fx.make_points_pdf(world, n=300)
+    pdf = make_points_pdf(world, n=300)
     pts = spark.createDataFrame(pdf)
     out = point_elevation(pts, images, how="left").select("point_id", "image_id", "z")
     got = out.toPandas().sort_values("point_id")
@@ -66,13 +67,13 @@ def test_inner_join_drops_out_of_coverage(spark, world, images):
     pdf = pd.DataFrame(
         {
             "point_id": [0, 1],
-            "lon": [fx.REF_POINT_IN[0], fx.REF_POINT_OUT[0]],
-            "lat": [fx.REF_POINT_IN[1], fx.REF_POINT_OUT[1]],
+            "lon": [REF_POINT_IN[0], REF_POINT_OUT[0]],
+            "lat": [REF_POINT_IN[1], REF_POINT_OUT[1]],
         }
     )
     # REF_POINT_IN lies inside the default world; shift world to cover it
     w = fx.DEFAULT_WORLD
-    imgs = spark.createDataFrame(fx.make_images_pdf(fx.World(nx=2, ny=2,
+    imgs = spark.createDataFrame(make_images_pdf(fx.World(nx=2, ny=2,
                                                              tx0=w.tx0 + 3, ty0=w.ty0 + 3)),
                                  schema=fx.IMAGES_SCHEMA)
     out = point_elevation(spark.createDataFrame(pdf), imgs, how="inner").toPandas()
@@ -83,14 +84,14 @@ def test_inner_join_drops_out_of_coverage(spark, world, images):
 
 def test_reference_coordinate_sampled(spark):
     w = fx.DEFAULT_WORLD
-    imgs = spark.createDataFrame(fx.make_images_pdf(fx.World(nx=8, ny=8)), schema=fx.IMAGES_SCHEMA)
+    imgs = spark.createDataFrame(make_images_pdf(fx.World(nx=8, ny=8)), schema=fx.IMAGES_SCHEMA)
     pts = spark.createDataFrame(
-        pd.DataFrame({"point_id": [0], "lon": [fx.REF_POINT_IN[0]], "lat": [fx.REF_POINT_IN[1]]})
+        pd.DataFrame({"point_id": [0], "lon": [REF_POINT_IN[0]], "lat": [REF_POINT_IN[1]]})
     )
     out = point_elevation(pts, imgs).toPandas()
     assert len(out) == 1
-    gx = int(np.floor((fx.REF_POINT_IN[0] - WORLD_X0) / PX))
-    gy = int(np.floor((WORLD_Y0 - fx.REF_POINT_IN[1]) / PX))
+    gx = int(np.floor((REF_POINT_IN[0] - WORLD_X0) / PX))
+    gy = int(np.floor((WORLD_Y0 - REF_POINT_IN[1]) / PX))
     assert out["z"][0] == int(fx.z_field(np.array([gx]), np.array([gy]))[0])
 
 
@@ -118,7 +119,7 @@ def test_nodata_pixel_coalesces(spark):
     hgx, hgy = gx[holes[0][1]], gy[holes[0][0]]
     tx, ty, ix, iy = hgx // 50, hgy // 50, hgx % 50, hgy % 50
     imgs = spark.createDataFrame(
-        fx.make_images_pdf(fx.World(tx0=int(tx), ty0=int(ty), nx=1, ny=1)),
+        make_images_pdf(fx.World(tx0=int(tx), ty0=int(ty), nx=1, ny=1)),
         schema=fx.IMAGES_SCHEMA,
     )
     lon = WORLD_X0 + (tx * 50 + ix + 0.5) * PX

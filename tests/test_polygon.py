@@ -5,15 +5,12 @@ import pandas as pd
 import pytest
 
 from openelevationservice_spark.constants import NODATA, NUM_RANGES, PX, TILE_DEG, WORLD_X0, WORLD_Y0
-from openelevationservice_spark.operators.color import (
-    feature_collection,
-    polygon_color_features,
-    polygon_stats,
-    with_height_base,
-)
-from openelevationservice_spark.operators.polygon import polygon_elevation, polygon_pixels
+from openelevationservice_spark.operators.color import feature_collection, polygon_color_features
+from openelevationservice_spark.operators.polygon import polygon_pixels
 from openelevationservice_spark.sources import fixtures as fx
 from tests import plan_checks as pc
+from tests.inputs import make_images_pdf
+from tests.references import polygon_stats, with_height_base
 
 
 def bbox_ring(x0, y0, x1, y1):
@@ -50,7 +47,7 @@ def world():
 
 @pytest.fixture(scope="module")
 def images(spark, world):
-    df = spark.createDataFrame(fx.make_images_pdf(world), schema=fx.IMAGES_SCHEMA)
+    df = spark.createDataFrame(make_images_pdf(world), schema=fx.IMAGES_SCHEMA)
     df.persist()
     df.count()
     return df
@@ -70,19 +67,6 @@ def test_polygon_pixels_match_oracle(spark, world, images):
     want = sorted(oracle_bbox_pixels(x0, y0, x1, y1, world))
     assert len(got) == len(want)
     assert list(zip(got.gx, got.gy, got.z)) == [(g[0], g[1], g[4]) for g in want]
-
-
-def test_polygon_elevation_ordered(spark, world, images):
-    x0 = world.min_x + 0.2 * TILE_DEG
-    y0 = world.max_y - 0.9 * TILE_DEG
-    polys = spark.createDataFrame(
-        pd.DataFrame({"poly_id": [0], "ring": [bbox_ring(x0, y0, x0 + 0.5 * TILE_DEG, y0 + 0.5 * TILE_DEG)]}),
-        schema="poly_id long, ring array<struct<lon:double, lat:double>>",
-    )
-    got = polygon_elevation(polys, images).toPandas()
-    xy = list(zip(got.x, got.y))
-    assert xy == sorted(xy)
-    assert len(got) > 0
 
 
 def test_triangle_polygon_subset_of_bbox(spark, world, images):

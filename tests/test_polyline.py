@@ -3,8 +3,6 @@
 ``tests/test_api_line.py:45-88``).  World-independent — must hold verbatim.
 """
 
-import pandas as pd
-
 from openelevationservice_spark.functions import polyline as pl
 
 COORDS_3D = [(13.331302, 38.108433, 112.92), (13.331273, 38.10849, 1503.0932)]
@@ -58,11 +56,3 @@ def test_py2_rounding_half_away_from_zero():
     assert pl.decode(enc_pos, precision=5) == [(1e-05, 0.0)]
     enc_neg = pl.encode([(-0.000005, 0.0)], precision=5)
     assert pl.decode(enc_neg, precision=5) == [(-1e-05, 0.0)]
-
-
-def test_series_wrappers():
-    s = pd.Series(["u`rgFswjpAKD", "ap}tgAkutlXqBx@"])
-    dec = pl.decode_series(pd.Series([s[0]]), precision=5)
-    assert dec[0][0] == (13.3313, 38.10843)
-    enc = pl.encode_series(pd.Series([COORDS_3D]), precision=5, is3d=True)
-    assert enc[0] == "u`rgFswjpAw`UKDqonG"

@@ -12,8 +12,9 @@ import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from openelevationservice_spark.constants import TILE_DEG
 from openelevationservice_spark.functions import cells, polyline as pl
-from tests.references import _signed_area2, dissolve_pixels
+from tests.references import _signed_area2, column_cells, dissolve_pixels
 
 lon_s = st.floats(min_value=-179.99, max_value=179.99,
                   allow_nan=False, allow_infinity=False)
@@ -43,43 +44,35 @@ def test_polyline_roundtrip_is_quantization(coords, precision):
         assert _py2_round(z * 100) == round(dz * 100)
 
 
-@settings(max_examples=200, deadline=None)
-@given(lon_s, lat_s)
-def test_cell_contains_its_point(lon, lat):
-    """The cell a point maps to must cover the point (half-open), up to
-    one ulp of the shared floor arithmetic: the floor law itself is the
-    spec (identical expression JVM-side and in the SQL oracle), so a
-    point within rounding distance of a seam may land on either side —
-    but always on the SAME side in every component of the engine."""
-    cx, cy = cells.cell_xy(np.array([lon]), np.array([lat]))
-    size = cells.cell_size_deg()
+@settings(max_examples=20, deadline=None)
+@given(st.lists(st.tuples(lon_s, lat_s), min_size=1, max_size=50))
+def test_cell_contains_its_point(spark, points):
+    """The cell the library's Column functions map a point to must
+    cover the point (half-open), up to one ulp of the shared floor
+    arithmetic: the floor law itself is the spec (identical expression
+    JVM-side and in the SQL oracle), so a point within rounding distance
+    of a seam may land on either side — but always on the SAME side in
+    every component of the engine."""
+    lon = np.array([p[0] for p in points])
+    lat = np.array([p[1] for p in points])
+    got = column_cells(spark, lon, lat)
+    size = TILE_DEG
     tol = 1e-9 * size
-    x0 = -180.0 + cx[0] * size
-    y1 = 90.0 - cy[0] * size          # north edge
-    assert x0 - tol <= lon < x0 + size + tol
-    assert y1 - size - tol < lat <= y1 + tol
-
-
-@settings(max_examples=100, deadline=None)
-@given(lon_s, lat_s, st.integers(min_value=0, max_value=14))
-def test_cell_parent_consistency(lon, lat, res):
-    """Coarser-resolution assignment == parent of base assignment."""
-    cx, cy = cells.cell_xy(np.array([lon]), np.array([lat]))
-    base = cells.morton_id(cx, cy)
-    coarse_xy = cells.cell_xy(np.array([lon]), np.array([lat]), res=res)
-    coarse = cells.morton_id(coarse_xy[0], coarse_xy[1], res=res)
-    assert cells.parent(base, res)[0] == coarse[0]
+    x0 = -180.0 + got["cx"].to_numpy() * size
+    y1 = 90.0 - got["cy"].to_numpy() * size          # north edge
+    assert ((x0 - tol <= lon) & (lon < x0 + size + tol)).all()
+    assert ((y1 - size - tol < lat) & (lat <= y1 + tol)).all()
 
 
 @settings(max_examples=100, deadline=None)
 @given(st.integers(min_value=1, max_value=5))
 def test_ring_disk_counts(k):
-    """|ring(k)| = 8k, |disk(k)| = (2k+1)^2 — the kNN search frontier."""
-    rx, ry = cells.ring_offsets(k)
-    assert len(rx) == len(ry) == 8 * k
-    assert all(max(abs(a), abs(b)) == k for a, b in zip(rx, ry))
+    """|disk(k)| = (2k+1)^2 distinct offsets within Chebyshev distance k —
+    the kNN search frontier."""
     dx, dy = cells.disk_offsets(k)
     assert len(dx) == (2 * k + 1) ** 2
+    assert len(set(zip(dx.tolist(), dy.tolist()))) == len(dx)
+    assert np.maximum(np.abs(dx), np.abs(dy)).max() == k
 
 
 @settings(max_examples=60, deadline=None)

@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 from openelevationservice_spark.functions import image_codec as ic
 from openelevationservice_spark.operators import multimodal, textops
 from openelevationservice_spark.sources import fixtures as fx
+from tests.inputs import make_images_pdf
 
 
 @pytest.fixture(scope="module")
@@ -54,7 +55,7 @@ def test_fingerprint_deterministic(spark, docs):
 
 @pytest.fixture(scope="module")
 def images(spark):
-    return spark.createDataFrame(fx.make_images_pdf(fx.World(nx=2, ny=2)),
+    return spark.createDataFrame(make_images_pdf(fx.World(nx=2, ny=2)),
                                  schema=fx.IMAGES_SCHEMA)
 
 
@@ -62,7 +63,7 @@ def test_image_metadata(spark, images):
     got = multimodal.image_metadata(images).toPandas()
     assert len(got) == 4
     assert (got.w == 50).all() and (got.h == 50).all()
-    ref = fx.make_images_pdf(fx.World(nx=2, ny=2))
+    ref = make_images_pdf(fx.World(nx=2, ny=2))
     m = got.merge(ref[["image_id", "phash"]], on="image_id", suffixes=("", "_ref"))
     assert (m.phash == m.phash_ref).all()
 
