@@ -29,6 +29,11 @@ import numpy as np
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
+#: the per-row round-trip bar of ``input_hint``, in dB
+MIN_PSNR_DB = 40.0
+#: PSNR peak: the full uint16 range a ``png16`` sample spans on disk
+PSNR_PEAK = 65535.0
+
 
 # ---------------------------------------------------------------------------
 # numpy codecs
@@ -60,7 +65,9 @@ def encode_png16(grid: np.ndarray) -> bytes:
             + _chunk(b"IEND", b""))
 
 
-def decode_png16(data: bytes, w: int | None = None, h: int | None = None) -> np.ndarray:
+def decode_png16(data: bytes, w: int, h: int) -> np.ndarray:
+    """The (h, w) int16 grid of a 16-bit grayscale PNG; raises
+    ``ValueError`` when its IHDR declares another size than the row's."""
     if data[:8] != _PNG_SIG:
         raise ValueError("not a PNG stream")
     pos, idat, W, H = 8, [], None, None
@@ -77,6 +84,8 @@ def decode_png16(data: bytes, w: int | None = None, h: int | None = None) -> np.
         elif tag == b"IEND":
             break
         pos += 12 + length
+    if (W, H) != (w, h):
+        raise ValueError(f"PNG header is {W}x{H} but the row declares {w}x{h}")
     raw = np.frombuffer(zlib.decompress(b"".join(idat)), dtype=np.uint8)
     raw = raw.reshape(H, 2 * W + 1)
     if not (raw[:, 0] == 0).all():
@@ -101,12 +110,13 @@ def encode(grid: np.ndarray, fmt: str) -> bytes:
     raise NotImplementedError(f"unknown image format {fmt!r}")
 
 
-def psnr(a: np.ndarray, b: np.ndarray, peak: float = 65535.0) -> float:
-    """Peak signal-to-noise ratio in dB; inf for identical grids."""
+def psnr(a: np.ndarray, b: np.ndarray) -> float:
+    """Peak signal-to-noise ratio in dB against ``PSNR_PEAK``; inf for
+    identical grids."""
     mse = float(np.mean((a.astype(np.float64) - b.astype(np.float64)) ** 2))
     if mse == 0.0:
         return float("inf")
-    return 10.0 * np.log10(peak * peak / mse)
+    return 10.0 * np.log10(PSNR_PEAK * PSNR_PEAK / mse)
 
 
 def phash64(grid: np.ndarray) -> int:
@@ -141,10 +151,10 @@ def phash64(grid: np.ndarray) -> int:
     return v - (1 << 64) if v >= (1 << 63) else v
 
 
-def roundtrip_check(data: bytes, fmt: str, w: int, h: int,
-                    min_psnr: float = 40.0) -> tuple[bool, float, int]:
-    """decode → encode → decode; returns (ok, psnr_db, phash)."""
+def roundtrip_check(data: bytes, fmt: str, w: int, h: int) -> tuple[bool, float, int]:
+    """decode → encode → decode; returns (ok = psnr_db ≥ ``MIN_PSNR_DB``,
+    psnr_db, phash)."""
     g0 = decode(data, fmt, w, h)
     g1 = decode(encode(g0, fmt), fmt, w, h)
     p = psnr(g0, g1)
-    return bool(p >= min_psnr), p, phash64(g0)
+    return bool(p >= MIN_PSNR_DB), p, phash64(g0)

@@ -50,16 +50,17 @@ def minhash_perm_consts(n_hashes: int) -> list[tuple[int, int]]:
     return out
 
 
-def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Hash-groupBy exact dedup: one row per distinct text.
+def exact_dedup(df: DataFrame) -> DataFrame:
+    """Hash-groupBy exact dedup of documents(doc_id, text): one row per
+    distinct text.
 
     Returns (text_hash, rep_id = min id, dup_count).  The groupBy is a
     partial+final hash agg — no row ships its full text twice.
     """
     return (
-        df.select(F.md5(F.col(text_col)).alias("text_hash"), F.col(id_col))
+        df.select(F.md5(F.col("text")).alias("text_hash"), F.col("doc_id"))
         .groupBy("text_hash")
-        .agg(F.min(id_col).alias("rep_id"), F.count(F.lit(1)).alias("dup_count"))
+        .agg(F.min("doc_id").alias("rep_id"), F.count(F.lit(1)).alias("dup_count"))
     )
 
 
@@ -77,9 +78,9 @@ def word_shingles(text: Column, n: int) -> Column:
     return F.transform(seq, lambda k: F.concat_ws(" ", F.slice(words, k, n)))
 
 
-def minhash_signature(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-                      n_hashes: int = 8, shingle_n: int = 3) -> DataFrame:
-    """(id, sig: array<bigint>) — per-doc MinHash signature.
+def minhash_signature(df: DataFrame, n_hashes: int = 8, shingle_n: int = 3) -> DataFrame:
+    """(doc_id, sig: array<bigint>) — per-doc MinHash signature of
+    documents(doc_id, text).
 
     sig[i] = min over shingles of (a_i * md5prefix(shingle) + b_i) mod
     2^31-1 (see module docstring for the family).  MIN is
@@ -101,7 +102,7 @@ def minhash_signature(df: DataFrame, id_col: str = "doc_id", text_col: str = "te
     a_vec = np.array([a for a, _ in consts], dtype=np.int64)
     b_vec = np.array([b for _, b in consts], dtype=np.int64)
     out_schema = T.StructType([
-        T.StructField(id_col, df.schema[id_col].dataType),
+        T.StructField("doc_id", df.schema["doc_id"].dataType),
         T.StructField("sig", T.ArrayType(T.LongType())),
     ])
 
@@ -111,7 +112,7 @@ def minhash_signature(df: DataFrame, id_col: str = "doc_id", text_col: str = "te
             ids: list = []
             hashes: list[int] = []
             counts: list[int] = []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
+            for did, text in zip(pdf["doc_id"], pdf["text"]):
                 if text is None:
                     continue
                 words = text.split(" ")
@@ -134,14 +135,15 @@ def minhash_signature(df: DataFrame, id_col: str = "doc_id", text_col: str = "te
                 # overflow audit in the module docstring: a*x + b < 2^63
                 sigs[:, i] = np.minimum.reduceat(
                     (a_vec[i] * x + b_vec[i]) % MERSENNE31, starts)
-            yield pd.DataFrame({id_col: pd.Series(ids), "sig": list(sigs)})
+            yield pd.DataFrame({"doc_id": pd.Series(ids), "sig": list(sigs)})
 
-    return df.select(id_col, text_col).mapInPandas(kernel, out_schema)
+    return df.select("doc_id", "text").mapInPandas(kernel, out_schema)
 
 
-def lsh_candidate_pairs(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-                        n_hashes: int = 8, bands: int = 4, shingle_n: int = 3) -> DataFrame:
-    """MinHash-LSH candidate pairs (id_a < id_b) sharing >=1 band bucket.
+def lsh_candidate_pairs(df: DataFrame, n_hashes: int = 8, bands: int = 4,
+                        shingle_n: int = 3) -> DataFrame:
+    """MinHash-LSH candidate pairs (id_a < id_b) of documents(doc_id,
+    text) sharing >=1 band bucket.
 
     shingle → minhash → band → bucket-group: docs hash-partition by
     (band_idx, band_hash); pairs are generated *within buckets only*
@@ -160,9 +162,9 @@ def lsh_candidate_pairs(df: DataFrame, id_col: str = "doc_id", text_col: str = "
     not the signatures.
     """
     rows_per_band = n_hashes // bands
-    sig = minhash_signature(df, id_col, text_col, n_hashes, shingle_n)
+    sig = minhash_signature(df, n_hashes, shingle_n)
     banded = sig.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
             F.array(*[
                 F.struct(
@@ -174,10 +176,10 @@ def lsh_candidate_pairs(df: DataFrame, id_col: str = "doc_id", text_col: str = "
                 for b in range(bands)
             ])
         ).alias("band"),
-    ).select(id_col, "band.band_idx", "band.band_hash")
+    ).select("doc_id", "band.band_idx", "band.band_hash")
     buckets = (
         banded.groupBy("band_idx", "band_hash")
-        .agg(F.array_sort(F.collect_list(id_col)).alias("ids"))
+        .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
         .filter(F.size("ids") >= 2)
     )
     # all ordered pairs of the sorted bucket list: posexplode picks id_a,
@@ -192,19 +194,19 @@ def lsh_candidate_pairs(df: DataFrame, id_col: str = "doc_id", text_col: str = "
     )
 
 
-def ngram_jaccard(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
-                  text_col: str = "text", shingle_n: int = 3) -> DataFrame:
-    """Exact n-gram Jaccard similarity for candidate pairs.
+def ngram_jaccard(df: DataFrame, pairs: DataFrame, shingle_n: int = 3) -> DataFrame:
+    """Exact n-gram Jaccard similarity of documents(doc_id, text) for
+    candidate pairs (id_a, id_b).
 
     Joins each side's *distinct shingle set* (array column) to the pair
     list — two broadcast-or-shuffle equi-joins, then pure array math.
     """
     sets = df.select(
-        F.col(id_col),
-        F.array_distinct(word_shingles(F.col(text_col), shingle_n)).alias("sh_set"),
+        F.col("doc_id"),
+        F.array_distinct(word_shingles(F.col("text"), shingle_n)).alias("sh_set"),
     )
-    a = sets.select(F.col(id_col).alias("id_a"), F.col("sh_set").alias("sh_a"))
-    b = sets.select(F.col(id_col).alias("id_b"), F.col("sh_set").alias("sh_b"))
+    a = sets.select(F.col("doc_id").alias("id_a"), F.col("sh_set").alias("sh_a"))
+    b = sets.select(F.col("doc_id").alias("id_b"), F.col("sh_set").alias("sh_b"))
     j = pairs.join(a, "id_a").join(b, "id_b")
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size(F.array_union("sh_a", "sh_b"))
@@ -216,31 +218,31 @@ def ngram_jaccard(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
     )
 
 
-def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-            bits: int = 16) -> DataFrame:
-    """Frequency-weighted SimHash over word hashes (default 16-bit).
+def simhash(df: DataFrame, bits: int = 16) -> DataFrame:
+    """(doc_id, simhash) — frequency-weighted SimHash of documents(doc_id,
+    text) over word hashes (default 16-bit).
 
     word hash = int of the first 8 hex chars of md5 (same expression is
     valid in DuckDB: ``('0x' || substr(md5(w), 1, 8))::bigint``).
     """
-    words = df.select(F.col(id_col), F.explode(F.split(F.col(text_col), " ")).alias("w"))
+    words = df.select(F.col("doc_id"), F.explode(F.split(F.col("text"), " ")).alias("w"))
     h = F.conv(F.substring(F.md5(F.col("w")), 1, 8), 16, 10).cast("bigint")
     words = words.withColumn("wh", h)
     votes = [
         F.sum(F.shiftright(F.col("wh"), b).bitwiseAND(F.lit(1)) * 2 - 1).alias(f"v{b}")
         for b in range(bits)
     ]
-    agg = words.groupBy(id_col).agg(*votes)
+    agg = words.groupBy("doc_id").agg(*votes)
     sim = None
     for b in range(bits):
         bit = F.when(F.col(f"v{b}") > 0, F.lit(1 << b)).otherwise(F.lit(0))
         sim = bit if sim is None else sim + bit
-    return agg.select(id_col, sim.cast("bigint").alias("simhash"))
+    return agg.select("doc_id", sim.cast("bigint").alias("simhash"))
 
 
-def simhash_near_pairs(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-                       bits: int = 16, max_hamming: int = 2) -> DataFrame:
-    """Near-dup pairs by SimHash: block on bit chunks, verify Hamming.
+def simhash_near_pairs(df: DataFrame, bits: int = 16, max_hamming: int = 2) -> DataFrame:
+    """Near-dup pairs of documents(doc_id, text) by SimHash: block on bit
+    chunks, verify Hamming.
 
     The signature is split into ``max_hamming + 1`` contiguous bit
     blocks; by pigeonhole, two signatures within Hamming distance
@@ -260,18 +262,18 @@ def simhash_near_pairs(df: DataFrame, id_col: str = "doc_id", text_col: str = "t
         )
     # contiguous blocks of floor/ceil(bits/n_blocks) bits covering all bits
     bounds = [round(i * bits / n_blocks) for i in range(n_blocks + 1)]
-    s = simhash(df, id_col, text_col, bits)
+    s = simhash(df, bits)
     blocks = []
     for i in range(n_blocks):
         lo, hi = bounds[i], bounds[i + 1]
         key = F.shiftright(F.col("simhash"), lo).bitwiseAND(F.lit((1 << (hi - lo)) - 1))
         blocks.append(F.struct(F.lit(i).alias("blk"), key.alias("key")))
     blocked = s.select(
-        F.col(id_col), F.col("simhash"),
+        F.col("doc_id"), F.col("simhash"),
         F.explode(F.array(*blocks)).alias("b"),
-    ).select(id_col, "simhash", "b.blk", "b.key")
-    a = blocked.select(F.col(id_col).alias("id_a"), F.col("simhash").alias("sh_a"), "blk", "key")
-    b = blocked.select(F.col(id_col).alias("id_b"), F.col("simhash").alias("sh_b"), "blk", "key")
+    ).select("doc_id", "simhash", "b.blk", "b.key")
+    a = blocked.select(F.col("doc_id").alias("id_a"), F.col("simhash").alias("sh_a"), "blk", "key")
+    b = blocked.select(F.col("doc_id").alias("id_b"), F.col("simhash").alias("sh_b"), "blk", "key")
     ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
     return (
         a.join(b, ["blk", "key"])
@@ -323,7 +325,7 @@ def connected_components(pairs: DataFrame, ids: DataFrame,
                          driver_max_pairs: int = CC_DRIVER_MAX_PAIRS,
                          with_sizes: bool = False,
                          ids_unique: bool = False) -> DataFrame:
-    """Duplicate-cluster assignment: (id, rep_id = min id of its
+    """Duplicate-cluster assignment: (``id_col``, rep_id = min id of its
     connected component) over the near-dup pair graph — the step that
     turns candidate PAIRS into dedup GROUPS (keep one representative
     per cluster) in a production pipeline.
@@ -503,24 +505,25 @@ def _with_window_sizes(cc: DataFrame, id_col: str) -> DataFrame:
     )
 
 
-def dedup_clusters(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-                   n_hashes: int = 8, bands: int = 4, shingle_n: int = 3) -> DataFrame:
-    """End-to-end near-dup grouping: LSH candidate pairs → connected
-    components → (id, rep_id, cluster_size).  ``rep_id`` is the cluster
+def dedup_clusters(df: DataFrame, n_hashes: int = 8, bands: int = 4,
+                   shingle_n: int = 3) -> DataFrame:
+    """End-to-end near-dup grouping of documents(doc_id, text): LSH
+    candidate pairs → connected components → (doc_id, rep_id,
+    cluster_size).  ``rep_id`` is the cluster
     representative a curation pipeline keeps; singletons are their own
     representative.  Components come from :func:`connected_components`
     at its default ``driver_max_pairs`` (``CC_DRIVER_MAX_PAIRS``).
 
-    ``df`` must hold one row per document: ``id_col`` values are
+    ``df`` must hold one row per document: ``doc_id`` values are
     required to be unique.  The node set is taken as-is
     (``ids_unique=True``, no defensive distinct), so a duplicated id
     yields duplicated output rows; deduplicate ids first if the input
     does not guarantee this."""
-    pairs = lsh_candidate_pairs(df, id_col, text_col, n_hashes, bands, shingle_n)
+    pairs = lsh_candidate_pairs(df, n_hashes, bands, shingle_n)
     # sizes ride the CC result: on the driver fast path they come off
     # the same broadcast labels table (no window exchange+sort at all);
     # the distributed loop keeps the one-exchange window shape
     # ids_unique: the corpus contract is one row per document, so the
     # defensive distinct over node ids is a no-op exchange here
-    return connected_components(pairs, df.select(id_col), id_col,
+    return connected_components(pairs, df.select("doc_id"), "doc_id",
                                 with_sizes=True, ids_unique=True)

@@ -30,17 +30,16 @@ from .sample import broadcast_if_fits, gather_z_jvm, pixel_index
 
 
 def knn_tiles(points_df: DataFrame, images_df: DataFrame, k: int = 1,
-              max_rings: int = 2,
-              lon: str = "lon", lat: str = "lat",
-              id_col: str = "point_id",
-              pix_index_df: DataFrame | None = None) -> DataFrame:
-    """(…, rank, image_id, dist_deg, z) — k nearest tiles within max_rings.
+              max_rings: int = 2) -> DataFrame:
+    """points (point_id, lon, lat, …) → (…, rank, image_id, dist_deg, z):
+    the k nearest tiles within max_rings.
 
     Points farther than ``max_rings`` cells from any tile produce no
     rows (documented bound; widen max_rings for sparser worlds).
 
-    z comes from the same decoded pixel index and codegen'd
-    ``element_at`` gather as :func:`.point.point_elevation`.  The
+    z comes from the same decoded pixel index (:func:`.sample.pixel_index`
+    of ``images_df``) and codegen'd ``element_at`` gather as
+    :func:`.point.point_elevation`.  The
     candidate ranking window sees metadata only; the k winners fetch
     their pixel array through a second equi-join on ``image_id``, so
     pixel payloads never ride the window exchange (25 candidates/point
@@ -56,8 +55,8 @@ def knn_tiles(points_df: DataFrame, images_df: DataFrame, k: int = 1,
     ])
     pts = (
         points_df
-        .withColumn("cx0", cell_x_col(F.col(lon)))
-        .withColumn("cy0", cell_y_col(F.col(lat)))
+        .withColumn("cx0", cell_x_col(F.col("lon")))
+        .withColumn("cy0", cell_y_col(F.col("lat")))
         .withColumn("off", F.explode(offsets))
         .withColumn("cell_id", linear_id_col(
             F.col("cx0") + F.col("off.dx"), F.col("cy0") + F.col("off.dy")))
@@ -69,23 +68,22 @@ def knn_tiles(points_df: DataFrame, images_df: DataFrame, k: int = 1,
     )
     j = pts.join(broadcast_if_fits(idx), "cell_id", "inner")
 
-    ddx = F.greatest(F.col("min_x") - F.col(lon), F.col(lon) - F.col("max_x"), F.lit(0.0))
-    ddy = F.greatest(F.col("min_y") - F.col(lat), F.col(lat) - F.col("max_y"), F.lit(0.0))
+    ddx = F.greatest(F.col("min_x") - F.col("lon"), F.col("lon") - F.col("max_x"), F.lit(0.0))
+    ddy = F.greatest(F.col("min_y") - F.col("lat"), F.col("lat") - F.col("max_y"), F.lit(0.0))
     j = j.withColumn("dist_deg", F.sqrt(ddx * ddx + ddy * ddy))
 
-    w = Window.partitionBy(id_col).orderBy("dist_deg", "image_id")
+    w = Window.partitionBy("point_id").orderBy("dist_deg", "image_id")
     j = j.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
     # sample z at the point clamped into the tile = that tile's nearest pixel
     eps = F.col("px") / F.lit(2.0)
-    clx = F.least(F.greatest(F.col(lon), F.col("min_x") + eps), F.col("max_x") - eps)
-    cly = F.least(F.greatest(F.col(lat), F.col("min_y") + eps), F.col("max_y") - eps)
+    clx = F.least(F.greatest(F.col("lon"), F.col("min_x") + eps), F.col("max_x") - eps)
+    cly = F.least(F.greatest(F.col("lat"), F.col("min_y") + eps), F.col("max_y") - eps)
     j = (
         j.withColumn("ix", F.floor((clx - F.col("ul_x")) / F.col("px")).cast("int"))
         .withColumn("iy", F.floor((F.col("ul_y") - cly) / F.col("px")).cast("int"))
     )
-    pix = (pix_index_df if pix_index_df is not None
-           else pixel_index(images_df)).select("image_id", "pix")
+    pix = pixel_index(images_df).select("image_id", "pix")
     out = gather_z_jvm(j.join(broadcast_if_fits(pix), "image_id"))
     return (
         out.withColumn("z", F.coalesce(F.col("z"), F.lit(NODATA)).cast("int"))

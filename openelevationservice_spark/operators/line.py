@@ -127,13 +127,12 @@ def densify_lines(lines_df: DataFrame) -> DataFrame:
 
 
 def line_vertices_elevation(lines_df: DataFrame, images_df: DataFrame,
-                            how: str = "inner",
                             pix_index_df: DataFrame | None = None) -> DataFrame:
     """Densified vertices with z and a deterministic order index ``seq``.
 
     Output: (line_id, seq, x, y, z, dist, image_id, ix, iy).  ``seq``
     is assigned over the full deduped vertex set *before* the coverage
-    join, so under ``how='inner'`` out-of-coverage vertices leave gaps
+    join, and the join is inner, so out-of-coverage vertices leave gaps
     in seq (order is unaffected; the reference emits survivors in the
     same distance order).  The vertices are sampled by
     :func:`.point.point_elevation` (same index join, chosen by Spark's
@@ -141,5 +140,5 @@ def line_vertices_elevation(lines_df: DataFrame, images_df: DataFrame,
     """
     verts = densify_lines(lines_df).select("line_id", "seq", "x", "y", "dist")
     return point_elevation(
-        verts, images_df, how=how, lon="x", lat="y", pix_index_df=pix_index_df,
+        verts, images_df, lon="x", lat="y", pix_index_df=pix_index_df,
     ).select("line_id", "seq", "x", "y", "z", "dist", "image_id", "ix", "iy")

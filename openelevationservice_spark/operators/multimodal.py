@@ -74,8 +74,9 @@ RESIZE_SCHEMA = T.StructType(
 )
 
 
-def resize(images_df: DataFrame, factor: int = 2, out_fmt: str = "raw16") -> DataFrame:
-    """Block-mean downsample by an integer factor (real, numpy)."""
+def resize(images_df: DataFrame, factor: int = 2) -> DataFrame:
+    """Block-mean downsample by an integer factor (real, numpy), written
+    as ``raw16``."""
     def rs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out: dict[str, list] = {f.name: [] for f in RESIZE_SCHEMA.fields}
@@ -88,10 +89,10 @@ def resize(images_df: DataFrame, factor: int = 2, out_fmt: str = "raw16") -> Dat
                 blocks = g[: h2 * factor, : w2 * factor].reshape(h2, factor, w2, factor)
                 small = blocks.mean(axis=(1, 3)).astype(np.int16)
                 out["image_id"].append(img)
-                out["bytes"].append(image_codec.encode(small, out_fmt))
+                out["bytes"].append(image_codec.encode(small, "raw16"))
                 out["w"].append(w2)
                 out["h"].append(h2)
-                out["fmt"].append(out_fmt)
+                out["fmt"].append("raw16")
             yield pd.DataFrame(out, columns=[f.name for f in RESIZE_SCHEMA.fields])
 
     return images_df.select("image_id", "bytes", "fmt", "w", "h").mapInPandas(
@@ -99,10 +100,10 @@ def resize(images_df: DataFrame, factor: int = 2, out_fmt: str = "raw16") -> Dat
     )
 
 
-def roundtrip_invariant(images_df: DataFrame, min_psnr: float = 40.0) -> DataFrame:
-    """Per-row input_hint invariant: decode→encode→decode PSNR + phash +
-    caption equality.  Returns (image_id, ok, psnr_db, phash_match,
-    caption_ok)."""
+def roundtrip_invariant(images_df: DataFrame) -> DataFrame:
+    """Per-row input_hint invariant: decode→encode→decode PSNR (``ok``
+    at ``image_codec.MIN_PSNR_DB``) + phash + caption equality.  Returns
+    (image_id, ok, psnr_db, phash_match, caption_ok)."""
     schema = T.StructType([
         T.StructField("image_id", T.StringType()),
         T.StructField("ok", T.BooleanType()),
@@ -117,7 +118,7 @@ def roundtrip_invariant(images_df: DataFrame, min_psnr: float = 40.0) -> DataFra
             rows = []
             for _, r in pdf.iterrows():
                 ok, p, ph = image_codec.roundtrip_check(
-                    r["bytes"], r["fmt"], int(r["w"]), int(r["h"]), min_psnr
+                    r["bytes"], r["fmt"], int(r["w"]), int(r["h"])
                 )
                 try:
                     cap = json.loads(r["caption"])

@@ -74,8 +74,8 @@ def pixel_index(images_df: DataFrame) -> DataFrame:
     return idx.mapInPandas(decode, schema=schema)
 
 
-def gather_z_jvm(df: DataFrame, z_col: str = "z") -> DataFrame:
-    """JVM pixel sample over a join that already carries ``pix``.
+def gather_z_jvm(df: DataFrame) -> DataFrame:
+    """JVM pixel sample ``z`` over a join that already carries ``pix``.
 
     ``df`` must carry (pix, w, h, ix, iy).  Out-of-range / missing-tile
     rows get NULL (ANSI-safe: element_at is guarded).
@@ -89,4 +89,4 @@ def gather_z_jvm(df: DataFrame, z_col: str = "z") -> DataFrame:
         in_range,
         F.element_at(F.col("pix"), (F.col("iy") * F.col("w") + F.col("ix") + 1).cast("int")),
     )
-    return df.withColumn(z_col, z.cast("int")).drop("pix")
+    return df.withColumn("z", z.cast("int")).drop("pix")

@@ -47,6 +47,15 @@ from ..plans.cache import lease
 #: the driver.
 MAX_DRIVER_QUERIES = 10_000
 
+#: k-means of the IVF quantizer (:func:`ivf_train_centroids`): rounds,
+#: and the rows of the ordered-by-id sample it trains on
+KMEANS_ITERS = 5
+KMEANS_SAMPLE = 4096
+
+#: float slop of :func:`exact_nn`'s list-pruning bound (it only ever
+#: keeps more candidate lists)
+NN_PRUNE_MARGIN = 1e-9
+
 
 def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
@@ -122,19 +131,18 @@ def _carry_topk(batches, k: int, q: str, s: str, c: str) -> dict | None:
     return carry
 
 
-def _rank_topk(pruned: DataFrame, k: int, query_id: str, corpus_id: str,
-               sim_col: str = "sim") -> DataFrame:
+def _rank_topk(pruned: DataFrame, k: int, query_id: str, corpus_id: str) -> DataFrame:
     """The final per-query ``row_number`` window over the pruned rows."""
-    w = Window.partitionBy(query_id).orderBy(F.desc(sim_col), F.col(corpus_id))
+    w = Window.partitionBy(query_id).orderBy(F.desc("sim"), F.col(corpus_id))
     return (
         pruned.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
     )
 
 
-def topk_per_query(scored: DataFrame, k: int, query_id: str, corpus_id: str,
-                   sim_col: str = "sim") -> DataFrame:
-    """Two-stage top-k: shuffle-free per-partition prune, then one window.
+def topk_per_query(scored: DataFrame, k: int, query_id: str, corpus_id: str) -> DataFrame:
+    """Two-stage top-k of (query_id, corpus_id, sim) rows by ``sim``:
+    shuffle-free per-partition prune, then one window.
 
     Stage 1 keeps each partition's local top-k per query (a
     ``mapInPandas`` over the three narrow score columns — values pass
@@ -163,11 +171,10 @@ def topk_per_query(scored: DataFrame, k: int, query_id: str, corpus_id: str,
     def prune(batches):
         carry = _carry_topk(({n: pdf[n].to_numpy() for n in cols}
                              for pdf in batches if len(pdf)),
-                            k, query_id, sim_col, corpus_id)
+                            k, query_id, "sim", corpus_id)
         yield pd.DataFrame(carry) if carry is not None else pd.DataFrame(columns=cols)
 
-    return _rank_topk(scored.mapInPandas(prune, schema=schema),
-                      k, query_id, corpus_id, sim_col)
+    return _rank_topk(scored.mapInPandas(prune, schema=schema), k, query_id, corpus_id)
 
 
 #: element type of a packed vector column: written by :func:`pack_vectors`,
@@ -226,10 +233,9 @@ def _unpack_list(arr: "pa.Array", dim: int) -> np.ndarray:
     return flat.reshape(len(arr), dim)
 
 
-def cosine_topk(corpus_df: DataFrame, queries_df: DataFrame, k: int = 3,
-                corpus_id: str = "vec_id", corpus_vec: str = "embedding",
-                query_id: str = "q_id", query_vec: str = "q_vec") -> DataFrame:
-    """Exact brute-force top-k: (q_id, rank, vec_id, sim).
+def cosine_topk(corpus_df: DataFrame, queries_df: DataFrame, k: int = 3) -> DataFrame:
+    """Exact brute-force top-k of corpus (vec_id, embedding) for queries
+    (q_id, q_vec): (q_id, rank, vec_id, sim).
 
     The query side is tiny by construction (it rides inside the scoring
     task); the scan over the corpus is embarrassingly parallel; the
@@ -265,7 +271,7 @@ def cosine_topk(corpus_df: DataFrame, queries_df: DataFrame, k: int = 3,
     # for small query sets.  The LIMIT cap makes an oversized queries_df
     # fail loudly BEFORE it can materialize on the driver (one job, no
     # separate count action).
-    qpdf = (queries_df.select(query_id, query_vec)
+    qpdf = (queries_df.select("q_id", "q_vec")
             .limit(MAX_DRIVER_QUERIES + 1).toPandas())
     if len(qpdf) > MAX_DRIVER_QUERIES:
         raise ValueError(
@@ -277,20 +283,20 @@ def cosine_topk(corpus_df: DataFrame, queries_df: DataFrame, k: int = 3,
     if not len(qpdf):
         # empty query set: empty result, correct schema
         schema = T.StructType([
-            T.StructField(query_id, queries_df.schema[query_id].dataType),
+            T.StructField("q_id", queries_df.schema["q_id"].dataType),
             T.StructField("rank", T.IntegerType(), False),
-            T.StructField(corpus_id, corpus_df.schema[corpus_id].dataType),
+            T.StructField("vec_id", corpus_df.schema["vec_id"].dataType),
             T.StructField("sim", T.DoubleType()),
         ])
         return corpus_df.sparkSession.createDataFrame([], schema)
-    qids = qpdf[query_id].to_numpy()
-    qmat = np.stack([np.asarray(v, dtype=np.float64) for v in qpdf[query_vec]])
+    qids = qpdf["q_id"].to_numpy()
+    qmat = np.stack([np.asarray(v, dtype=np.float64) for v in qpdf["q_vec"]])
     nq, dim = qmat.shape
     qn = np.sqrt(_fold_sq(qmat))
 
     schema = T.StructType([
-        T.StructField(query_id, queries_df.schema[query_id].dataType),
-        T.StructField(corpus_id, corpus_df.schema[corpus_id].dataType),
+        T.StructField("q_id", queries_df.schema["q_id"].dataType),
+        T.StructField("vec_id", corpus_df.schema["vec_id"].dataType),
         T.StructField("sim", T.DoubleType()),
     ])
 
@@ -298,14 +304,14 @@ def cosine_topk(corpus_df: DataFrame, queries_df: DataFrame, k: int = 3,
     # one buffer memcpy per row instead of per-element list writes — the
     # measured non-scaling term of the list path (BENCH/SCALE.md) —
     # and the kernel unpacks with a single frombuffer per batch.
-    is_packed = isinstance(corpus_df.schema[corpus_vec].dataType, T.BinaryType)
+    is_packed = isinstance(corpus_df.schema["embedding"].dataType, T.BinaryType)
 
     def candidates(rb):
         # long-form (query index, corpus id, sim) rows at or above each
         # query's k-th score in this batch — all k-th ties included
-        cids = rb.column(rb.schema.get_field_index(corpus_id)) \
+        cids = rb.column(rb.schema.get_field_index("vec_id")) \
                  .to_numpy(zero_copy_only=False)
-        varr = rb.column(rb.schema.get_field_index(corpus_vec))
+        varr = rb.column(rb.schema.get_field_index("embedding"))
         mat = (_unpack_binary(varr, dim) if is_packed
                else _unpack_list(varr, dim)).astype(np.float64)
         sims = _fold_dots(mat, qmat) / (np.sqrt(_fold_sq(mat))[:, None] * qn)
@@ -322,12 +328,11 @@ def cosine_topk(corpus_df: DataFrame, queries_df: DataFrame, k: int = 3,
         if carry is None:
             return
         yield pa.RecordBatch.from_pandas(pd.DataFrame({
-            query_id: qids[carry["q"]], corpus_id: carry["c"], "sim": carry["s"],
+            "q_id": qids[carry["q"]], "vec_id": carry["c"], "sim": carry["s"],
         }), preserve_index=False)
 
-    pruned = corpus_df.select(corpus_id, corpus_vec).mapInArrow(score_prune, schema)
-    return _rank_topk(pruned, k, query_id, corpus_id).select(
-        query_id, "rank", corpus_id, "sim")
+    pruned = corpus_df.select("vec_id", "embedding").mapInArrow(score_prune, schema)
+    return _rank_topk(pruned, k, "q_id", "vec_id").select("q_id", "rank", "vec_id", "sim")
 
 
 # --- LSH (random-hyperplane signs) -----------------------------------------
@@ -350,11 +355,10 @@ def deterministic_hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[l
 
 
 def with_lsh_bucket(df: DataFrame, vec_col: str = "embedding",
-                    n_planes: int = 8, seed: int = 42,
-                    bucket_col: str = "bucket") -> DataFrame:
-    """Random-hyperplane LSH bucket id: bit p is set when the vector's
-    dot product with hyperplane p (:func:`deterministic_hyperplanes`) is
-    positive.
+                    n_planes: int = 8) -> DataFrame:
+    """Random-hyperplane LSH bucket id ``bucket``: bit p is set when the
+    vector's dot product with hyperplane p
+    (:func:`deterministic_hyperplanes` at its default seed) is positive.
 
     One scalar Arrow UDF; each batch's dot products are a
     sequential-in-dimension fold (:func:`_fold_dots`), so buckets equal
@@ -363,19 +367,18 @@ def with_lsh_bucket(df: DataFrame, vec_col: str = "embedding",
     @F.pandas_udf(T.IntegerType())
     def bucket(v: pd.Series) -> pd.Series:
         mat = np.stack(v.to_numpy()).astype(np.float64)  # (n, dim)
-        planes = np.asarray(deterministic_hyperplanes(mat.shape[1], n_planes, seed),
+        planes = np.asarray(deterministic_hyperplanes(mat.shape[1], n_planes),
                             dtype=np.float64)             # (p, dim)
         signs = _fold_dots(mat, planes) > 0               # (n, p)
         return pd.Series((signs * (1 << np.arange(n_planes))).sum(axis=1).astype(np.int32))
 
-    return df.withColumn(bucket_col, bucket(F.col(vec_col)))
+    return df.withColumn("bucket", bucket(F.col(vec_col)))
 
 
 def lsh_ann_topk(corpus_df: DataFrame, queries_df: DataFrame, k: int = 3,
-                 n_planes: int = 8, seed: int = 42, probe_bits: int = 1,
-                 corpus_id: str = "vec_id", corpus_vec: str = "embedding",
-                 query_id: str = "q_id", query_vec: str = "q_vec") -> DataFrame:
-    """Approximate top-k: bucket-equi-join + bucket-local brute force.
+                 n_planes: int = 8, probe_bits: int = 1) -> DataFrame:
+    """Approximate top-k of corpus (vec_id, embedding) for queries (q_id,
+    q_vec): bucket-equi-join + bucket-local brute force.
 
     ``probe_bits`` = multi-probe: each query also probes buckets at
     Hamming distance 1 in the first ``probe_bits`` sign bits (recall
@@ -385,49 +388,44 @@ def lsh_ann_topk(corpus_df: DataFrame, queries_df: DataFrame, k: int = 3,
     scored by :func:`cosine_similarity_col` and ranked by
     :func:`topk_per_query`.
     """
-    c = with_lsh_bucket(corpus_df.select(corpus_id, corpus_vec), corpus_vec,
-                        n_planes, seed)
-    q = with_lsh_bucket(queries_df.select(query_id, F.col(query_vec)), query_vec,
-                        n_planes, seed)
+    c = with_lsh_bucket(corpus_df.select("vec_id", "embedding"), "embedding", n_planes)
+    q = with_lsh_bucket(queries_df.select("q_id", F.col("q_vec")), "q_vec", n_planes)
     probes = [F.col("bucket")] + [
         F.col("bucket").bitwiseXOR(F.lit(1 << b)) for b in range(probe_bits)
     ]
     q = q.withColumn("probe", F.explode(F.array(*probes)))
-    vec_d = F.transform(F.col(corpus_vec), lambda x: x.cast("double"))
-    qvec_d = F.transform(F.col(query_vec), lambda x: x.cast("double"))
+    vec_d = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+    qvec_d = F.transform(F.col("q_vec"), lambda x: x.cast("double"))
     j = (
-        c.select(corpus_id, vec_d.alias("_cv"), F.col("bucket").alias("cbucket"))
-        .join(F.broadcast(q.select(query_id, qvec_d.alias("_qv"), F.col("probe").alias("cbucket"))),
+        c.select("vec_id", vec_d.alias("_cv"), F.col("bucket").alias("cbucket"))
+        .join(F.broadcast(q.select("q_id", qvec_d.alias("_qv"), F.col("probe").alias("cbucket"))),
               "cbucket")
     )
-    j = j.select(query_id, corpus_id,
+    j = j.select("q_id", "vec_id",
                  cosine_similarity_col(F.col("_cv"), F.col("_qv")).alias("sim"))
-    return topk_per_query(j, k, query_id, corpus_id).select(
-        query_id, "rank", corpus_id, "sim"
-    )
+    return topk_per_query(j, k, "q_id", "vec_id").select("q_id", "rank", "vec_id", "sim")
 
 
 # --- IVF (inverted-file) ANN — coarse-quantizer scale path -----------------
 
 def ivf_train_centroids(corpus_df: DataFrame, vec_col: str = "embedding",
-                        id_col: str = "vec_id", n_centroids: int = 16,
-                        iters: int = 5, sample_n: int = 4096) -> np.ndarray:
-    """Train the IVF coarse quantizer: numpy k-means on a deterministic
-    sample (ordered-by-id head).
+                        id_col: str = "vec_id", n_centroids: int = 16) -> np.ndarray:
+    """Train the IVF coarse quantizer: ``KMEANS_ITERS`` rounds of numpy
+    k-means on a deterministic sample (ordered-by-id head).
 
     The quantizer is tiny (k x dim floats) and training it driver-side
     on a bounded sample is the standard IVF shape — at 10^12 rows the
-    sample is still ``sample_n``; only assignment is distributed.
+    sample is still ``KMEANS_SAMPLE`` rows; only assignment is distributed.
     Initialization is the first ``n_centroids`` sample rows (seed-free,
     deterministic); empty clusters are re-seeded from the row with the
     worst quantization error.  Centroids are unit-norm.
     """
     pdf = (corpus_df.select(id_col, vec_col).orderBy(id_col)
-           .limit(sample_n).toPandas())
+           .limit(KMEANS_SAMPLE).toPandas())
     x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)  # (n, dim)
     x_n = x / np.linalg.norm(x, axis=1, keepdims=True)
     cent = x_n[:n_centroids].copy()
-    for _ in range(iters):
+    for _ in range(KMEANS_ITERS):
         sims = x_n @ cent.T                       # cosine on unit vectors
         assign = sims.argmax(axis=1)
         err = 1.0 - sims[np.arange(len(x_n)), assign]
@@ -443,9 +441,9 @@ def ivf_train_centroids(corpus_df: DataFrame, vec_col: str = "embedding",
 
 
 def ivf_assign(df: DataFrame, centroids: np.ndarray, vec_col: str,
-               nprobe: int = 1, list_col: str = "ivf_list") -> DataFrame:
-    """Attach the ``nprobe`` nearest inverted-list ids (exploded so the
-    join below is a plain equi-join).
+               nprobe: int = 1) -> DataFrame:
+    """Attach the ``nprobe`` nearest inverted-list ids as ``ivf_list``
+    (exploded so the join below is a plain equi-join).
 
     One scalar Arrow UDF ranks the centroids by raw dot product (argmax
     over dots == argmax over cosines: the vector's norm does not change
@@ -461,16 +459,14 @@ def ivf_assign(df: DataFrame, centroids: np.ndarray, vec_col: str,
         top = np.argsort(-_fold_dots(mat, cent), axis=1, kind="stable")[:, :nprobe]
         return pd.Series(list(top.astype(np.int32)))
 
-    return df.withColumn(list_col, F.explode(lists(F.col(vec_col))))
+    return df.withColumn("ivf_list", F.explode(lists(F.col(vec_col))))
 
 
 def ivf_topk(corpus_df: DataFrame, queries_df: DataFrame, k: int = 3,
-             n_centroids: int = 16, nprobe: int = 4, iters: int = 5,
-             corpus_id: str = "vec_id", corpus_vec: str = "embedding",
-             query_id: str = "q_id", query_vec: str = "q_vec",
+             n_centroids: int = 16, nprobe: int = 4,
              centroids: np.ndarray | None = None) -> DataFrame:
-    """IVF approximate top-k: corpus rows live in exactly one inverted
-    list; each query probes its ``nprobe`` nearest lists and brute-forces
+    """IVF approximate top-k of corpus (vec_id, embedding) for queries
+    (q_id, q_vec): corpus rows live in exactly one inverted list; each query probes its ``nprobe`` nearest lists and brute-forces
     only those lists (equi-join on list id — candidate volume ~
     nprobe/k of the corpus).  ``nprobe == n_centroids`` degenerates to
     exact brute force.  Both sides are assigned by :func:`ivf_assign`
@@ -479,21 +475,17 @@ def ivf_topk(corpus_df: DataFrame, queries_df: DataFrame, k: int = 3,
     ``centroids`` defaults to :func:`ivf_train_centroids`.
     """
     if centroids is None:
-        centroids = ivf_train_centroids(
-            corpus_df, corpus_vec, corpus_id, n_centroids, iters
-        )
-    vec_d = F.transform(F.col(corpus_vec), lambda x: x.cast("double"))
-    qvec_d = F.transform(F.col(query_vec), lambda x: x.cast("double"))
-    c = ivf_assign(corpus_df.select(corpus_id, vec_d.alias("_cv")), centroids, "_cv",
+        centroids = ivf_train_centroids(corpus_df, "embedding", "vec_id", n_centroids)
+    vec_d = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+    qvec_d = F.transform(F.col("q_vec"), lambda x: x.cast("double"))
+    c = ivf_assign(corpus_df.select("vec_id", vec_d.alias("_cv")), centroids, "_cv",
                    nprobe=1)
-    q = ivf_assign(queries_df.select(query_id, qvec_d.alias("_qv")), centroids, "_qv",
+    q = ivf_assign(queries_df.select("q_id", qvec_d.alias("_qv")), centroids, "_qv",
                    nprobe=nprobe)
     j = c.join(F.broadcast(q), "ivf_list")
-    j = j.select(query_id, corpus_id,
+    j = j.select("q_id", "vec_id",
                  cosine_similarity_col(F.col("_cv"), F.col("_qv")).alias("sim"))
-    return topk_per_query(j, k, query_id, corpus_id).select(
-        query_id, "rank", corpus_id, "sim"
-    )
+    return topk_per_query(j, k, "q_id", "vec_id").select("q_id", "rank", "vec_id", "sim")
 
 
 def ivf_seed_centroids(corpus_df: DataFrame, vec_col: str = "embedding",
@@ -516,8 +508,7 @@ def ivf_seed_centroids(corpus_df: DataFrame, vec_col: str = "embedding",
 # --- exact all-pairs NN via IVF triangle-inequality pruning -----------------
 
 def exact_nn(corpus_df: DataFrame, id_col: str = "vec_id",
-             vec_col: str = "embedding", n_centroids: int = 16,
-             iters: int = 5, margin: float = 1e-9) -> DataFrame:
+             vec_col: str = "embedding", n_centroids: int = 16) -> DataFrame:
     """Exact nearest neighbor for EVERY corpus vector — scale-safe.
 
     The all-pairs cross join is replaced by two equi-join phases with a
@@ -529,7 +520,7 @@ def exact_nn(corpus_df: DataFrame, id_col: str = "vec_id",
     2. the angular triangle inequality θ(q,x) ≥ θ(q,c_l) − θmax_l gives
        per-list upper bound ``cos(max(0, θ(q,c_l) − θmax_l))`` on any
        sim in list l; lists whose bound can't beat ``s1`` are pruned
-       (``margin`` absorbs float slop — pruning errs to MORE candidates,
+       (``NN_PRUNE_MARGIN`` absorbs float slop — pruning errs to MORE candidates,
        never fewer, so the result stays exact).  Survivor lists are
        scored through a plain (vector × list) equi-join.
 
@@ -537,7 +528,7 @@ def exact_nn(corpus_df: DataFrame, id_col: str = "vec_id",
     brute-force oracle; only *which pairs get scored* is data-dependent.
     Returns (id, nn_id, sim) with deterministic lowest-id tie-break.
     """
-    centroids = ivf_train_centroids(corpus_df, vec_col, id_col, n_centroids, iters)
+    centroids = ivf_train_centroids(corpus_df, vec_col, id_col, n_centroids)
     cent = centroids
     k = len(centroids)
 
@@ -598,7 +589,7 @@ def exact_nn(corpus_df: DataFrame, id_col: str = "vec_id",
         .join(F.broadcast(list_stats), "_l")
         .join(s1, "_qid", "left")
         .filter((F.col("_l") != F.col("_qown"))
-                & (bound >= F.coalesce(F.col("_s1"), F.lit(-1.0)) - F.lit(margin)))
+                & (bound >= F.coalesce(F.col("_s1"), F.lit(-1.0)) - F.lit(NN_PRUNE_MARGIN)))
         .select("_qid", "_qv", "_l")
     )
     cand2 = probes.join(c, "_l").select(

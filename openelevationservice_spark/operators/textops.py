@@ -31,15 +31,15 @@ def _hits(text: Column, words: list[str]) -> Column:
     return F.size(F.filter(tokens(text), lambda t: F.array_contains(lst, t)))
 
 
-def lang_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Per-language stopword-hit counts + argmax prediction.
+def lang_scores(df: DataFrame) -> DataFrame:
+    """Per-language stopword-hit counts of ``text`` + argmax prediction.
 
     Ties break alphabetically (deterministic, matches the SQL oracle's
     greatest-struct comparison order).
     """
     out = df
     for lang, words in sorted(STOPWORDS.items()):
-        out = out.withColumn(f"hits_{lang}", _hits(F.col(text_col), words))
+        out = out.withColumn(f"hits_{lang}", _hits(F.col("text"), words))
     # argmax via greatest over (hits, reversed-lang) structs
     structs = [
         F.struct(F.col(f"hits_{lang}").alias("h"),
@@ -50,13 +50,14 @@ def lang_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
     return out.withColumn("pred_lang", F.greatest(*structs).getField("lang"))
 
 
-def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Length / token / stopword / alpha features + a quality score.
+def quality_features(df: DataFrame) -> DataFrame:
+    """Length / token / stopword / alpha features of ``text`` + a quality
+    score.
 
     score = stopword_ratio * 0.5 + clamp(n_tokens/100, 0, 1) * 0.3
           + alpha_ratio * 0.2  (rounded to 6 dp for oracle stability).
     """
-    t = F.col(text_col)
+    t = F.col("text")
     n_chars = F.length(t)
     n_tokens = token_count(t)
     n_stop = _hits(t, STOPWORDS["en"])
@@ -78,14 +79,14 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def fingerprint(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-                shingle_n: int = 5) -> DataFrame:
-    """Winnowing-style fingerprint: min md5 over word 5-gram shingles +
-    distinct shingle count.  (id, fp, n_shingles)."""
-    sh = word_shingles(F.col(text_col), shingle_n)
+def fingerprint(df: DataFrame, shingle_n: int = 5) -> DataFrame:
+    """Winnowing-style fingerprint of documents(doc_id, text): min md5
+    over word 5-gram shingles + distinct shingle count.  (doc_id, fp,
+    n_shingles)."""
+    sh = word_shingles(F.col("text"), shingle_n)
     hashed = F.transform(sh, F.md5)
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.array_min(hashed).alias("fp"),
         F.size(F.array_distinct(sh)).alias("n_shingles"),
     )

@@ -24,24 +24,26 @@ from pyspark.sql import functions as F
 from ..operators import dedup, textops
 from ..sources.snapshots import SnapshotStore
 
+#: the curation policy.  Each stage's params dict records the values it
+#: applies, so a store written under other values is rebuilt, not resumed.
+MIN_QUALITY = 0.3
+LANGUAGES = ("en",)
+NEAR_DUP_JACCARD = 0.8
+MINHASH_HASHES = 8
+MINHASH_BANDS = 4
+SHINGLE_N = 3
 
-def curate_documents(
-    spark: SparkSession,
-    docs: DataFrame,
-    store: SnapshotStore,
-    min_quality: float = 0.3,
-    languages: tuple[str, ...] = ("en",),
-    near_dup_jaccard: float = 0.8,
-    minhash_hashes: int = 8,
-    minhash_bands: int = 4,
-    shingle_n: int = 3,
-) -> tuple[DataFrame, list[dict]]:
+
+def curate_documents(spark: SparkSession, docs: DataFrame,
+                     store: SnapshotStore) -> tuple[DataFrame, list[dict]]:
     """documents(doc_id, text, ...) → curated snapshot + stage manifests.
 
-    Near-dup policy: within every candidate pair whose verified n-gram
-    Jaccard ≥ ``near_dup_jaccard``, the larger doc_id is dropped (the
-    min-id document is kept as the representative) — the standard
-    keep-first MinHash-dedup rule.
+    Quality gate: ``q_score ≥ MIN_QUALITY``; language filter: the
+    predicted language is in ``LANGUAGES``.  Near-dup policy: within
+    every MinHash-LSH candidate pair whose verified n-gram Jaccard ≥
+    ``NEAR_DUP_JACCARD``, the larger doc_id is dropped (the min-id
+    document is kept as the representative) — the standard keep-first
+    MinHash-dedup rule.
     """
     manifests: list[dict] = []
 
@@ -51,21 +53,21 @@ def curate_documents(
         return df, m
 
     # 1. quality gate (JVM expressions only)
-    q_params = {"min_quality": min_quality}
+    q_params = {"min_quality": MIN_QUALITY}
     quality, m1 = stage(
         "quality", q_params,
         lambda: textops.quality_features(docs).filter(
-            F.col("q_score") >= F.lit(min_quality)
+            F.col("q_score") >= F.lit(MIN_QUALITY)
         ).select(*docs.columns, "q_score"),
         inputs=[],
     )
 
     # 2. language filter
-    l_params = {"languages": list(languages)}
+    l_params = {"languages": list(LANGUAGES)}
     langid, m2 = stage(
         "langid", l_params,
         lambda: textops.lang_scores(quality)
-        .filter(F.col("pred_lang").isin(*languages))
+        .filter(F.col("pred_lang").isin(*LANGUAGES))
         .select(*quality.columns, "pred_lang"),
         inputs=[m1["snapshot_id"]],
     )
@@ -85,18 +87,18 @@ def curate_documents(
 
     # 4. near-dedup — LSH candidates, Jaccard-verified, drop the max id
     n_params = {
-        "near_dup_jaccard": near_dup_jaccard, "n_hashes": minhash_hashes,
-        "bands": minhash_bands, "shingle_n": shingle_n,
+        "near_dup_jaccard": NEAR_DUP_JACCARD, "n_hashes": MINHASH_HASHES,
+        "bands": MINHASH_BANDS, "shingle_n": SHINGLE_N,
     }
 
     def build_neardup() -> DataFrame:
         pairs = dedup.lsh_candidate_pairs(
-            exact, n_hashes=minhash_hashes, bands=minhash_bands,
-            shingle_n=shingle_n,
+            exact, n_hashes=MINHASH_HASHES, bands=MINHASH_BANDS,
+            shingle_n=SHINGLE_N,
         )
-        verified = dedup.ngram_jaccard(exact, pairs, shingle_n=shingle_n)
+        verified = dedup.ngram_jaccard(exact, pairs, shingle_n=SHINGLE_N)
         losers = (
-            verified.filter(F.col("jaccard") >= F.lit(near_dup_jaccard))
+            verified.filter(F.col("jaccard") >= F.lit(NEAR_DUP_JACCARD))
             .select(F.col("id_b").alias("doc_id"))  # id_a < id_b: keep min
             .distinct()
         )

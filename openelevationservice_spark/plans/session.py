@@ -15,18 +15,17 @@ from pyspark.sql import SparkSession
 
 
 def build_session(app: str = "oes-spark", cpus: int | None = None,
-                  shuffle_partitions: int | None = None,
                   extra: dict[str, str] | None = None) -> SparkSession:
+    """A ``local[cpus]`` session; ``extra`` settings apply last, so they
+    override the defaults below."""
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
-    if shuffle_partitions is None:
-        # partitions proportional to cores: right-sized shuffles at both
-        # local[8] and local[32] (scaling-efficiency protocol).
-        shuffle_partitions = max(2 * cpus, 8)
     b = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        # partitions proportional to cores: right-sized shuffles at both
+        # local[8] and local[32] (scaling-efficiency protocol).
+        .config("spark.sql.shuffle.partitions", str(max(2 * cpus, 8)))
         .config("spark.default.parallelism", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -103,6 +103,9 @@ class World:
 # The default 8x8-tile world around the reference's Sicily test point.
 DEFAULT_WORLD = World()
 
+#: the tile encodings of the images table, alternating by (tx + ty) parity
+IMAGE_FORMATS = ("raw16", "png16")
+
 
 def tile_grid(tx: int, ty: int) -> np.ndarray:
     """Decoded 50x50 int16 elevation grid of tile (tx, ty)."""
@@ -128,11 +131,11 @@ def tile_caption(tx: int, ty: int) -> str:
     )
 
 
-def tile_row(tx: int, ty: int, fmts: tuple[str, ...]) -> dict:
+def tile_row(tx: int, ty: int) -> dict:
     """One images-table row: tile (tx, ty) encoded in the format its
-    checkerboard position picks from ``fmts``."""
+    checkerboard position picks from ``IMAGE_FORMATS``."""
     grid = tile_grid(tx, ty)
-    fmt = fmts[(tx + ty) % len(fmts)]
+    fmt = IMAGE_FORMATS[(tx + ty) % len(IMAGE_FORMATS)]
     return {
         "image_id": f"tile_{tx:05d}_{ty:05d}",
         "bytes": image_codec.encode(grid, fmt),
@@ -157,10 +160,10 @@ IMAGES_SCHEMA = T.StructType(
 )
 
 
-def make_images_df(spark: SparkSession, world: World = DEFAULT_WORLD,
-                   fmts: tuple[str, ...] = ("raw16", "png16"),
-                   num_partitions: int | None = None) -> DataFrame:
-    """Distributed images-table generator.
+def make_images_df(spark: SparkSession, world: World = DEFAULT_WORLD) -> DataFrame:
+    """Distributed images-table generator: the tiles of ``world``, in
+    ``IMAGE_FORMATS`` by checkerboard position, over one partition per
+    core (at most one per tile).
 
     Tiles are *generated on the executors* (one task per tile-row band),
     so world size scales without driver memory pressure — the ingest
@@ -169,12 +172,12 @@ def make_images_df(spark: SparkSession, world: World = DEFAULT_WORLD,
     tiles = [(tx, ty)
              for ty in range(world.ty0, world.ty0 + world.ny)
              for tx in range(world.tx0, world.tx0 + world.nx)]
-    nparts = num_partitions or min(len(tiles), max(spark.sparkContext.defaultParallelism, 1))
+    nparts = min(len(tiles), max(spark.sparkContext.defaultParallelism, 1))
     tile_df = spark.createDataFrame(tiles, schema="tx long, ty long").repartition(nparts)
 
     def gen(batches):
         for pdf in batches:
-            rows = [tile_row(int(tx), int(ty), fmts) for tx, ty in zip(pdf["tx"], pdf["ty"])]
+            rows = [tile_row(int(tx), int(ty)) for tx, ty in zip(pdf["tx"], pdf["ty"])]
             yield pd.DataFrame(rows, columns=[f.name for f in IMAGES_SCHEMA.fields])
 
     return tile_df.mapInPandas(gen, schema=IMAGES_SCHEMA)

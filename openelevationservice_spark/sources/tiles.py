@@ -77,11 +77,11 @@ def morton_col(tx, ty) -> "F.Column":
     return part1by1(tx).bitwiseOR(F.shiftleft(part1by1(ty), 1))
 
 
-def write_tile_index(images_df: DataFrame, store, stage: str = "tile_index",
-                     num_files: int | None = None) -> dict:
+def write_tile_index(images_df: DataFrame, store) -> dict:
     """Ingest job (reference S3 raster2pgsql-import equivalent): build the
-    tile index and persist it as a checkpointed snapshot, range-partitioned
-    + sorted by the Morton key so spatially-close tiles cluster into the
+    tile index and persist it as the ``tile_index`` snapshot,
+    range-partitioned into one file per default-parallelism slot and
+    sorted by the Morton key so spatially-close tiles cluster into the
     same files (Iceberg's sort-ordered write; parquet min/max stats on
     ``morton`` give file-level pruning for bbox queries).
 
@@ -91,7 +91,6 @@ def write_tile_index(images_df: DataFrame, store, stage: str = "tile_index",
     idx = tile_index(images_df).withColumn(
         "morton", morton_col(F.col("tx"), F.col("ty"))
     )
-    spark = images_df.sparkSession
-    n = num_files or spark.sparkContext.defaultParallelism
+    n = images_df.sparkSession.sparkContext.defaultParallelism
     clustered = idx.repartitionByRange(n, "morton").sortWithinPartitions("morton")
-    return store.write(clustered, stage, params={"num_files": n, "order": "morton"})
+    return store.write(clustered, "tile_index", params={"num_files": n, "order": "morton"})

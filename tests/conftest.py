@@ -12,7 +12,8 @@ from openelevationservice_spark.plans.session import build_session  # noqa: E402
 
 @pytest.fixture(scope="session")
 def spark():
-    s = build_session(app="oes-tests", cpus=8, shuffle_partitions=8)
+    s = build_session(app="oes-tests", cpus=8,
+                      extra={"spark.sql.shuffle.partitions": "8"})
     yield s
     s.stop()
 

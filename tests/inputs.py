@@ -15,10 +15,9 @@ REF_POINT_OUT = (8.807514373051843, 53.0756845615249)  # :10 (Bremen)
 REF_LINE = ((13.331302, 38.108433), (13.331273, 38.10849))  # tests/test_api_line.py:10-11
 
 
-def make_images_pdf(world: World = DEFAULT_WORLD,
-                    fmts: tuple[str, ...] = ("raw16", "png16")) -> pd.DataFrame:
+def make_images_pdf(world: World = DEFAULT_WORLD) -> pd.DataFrame:
     """The rows of ``fixtures.make_images_df`` as pandas, in (ty, tx) order."""
-    return pd.DataFrame([tile_row(tx, ty, fmts)
+    return pd.DataFrame([tile_row(tx, ty)
                          for ty in range(world.ty0, world.ty0 + world.ny)
                          for tx in range(world.tx0, world.tx0 + world.nx)])
 

@@ -29,10 +29,10 @@ def emb(spark):
 
 
 def test_exact_nn_storage_bounded_across_calls(spark, emb):
-    exact_nn(emb, n_centroids=4, iters=2).count()
+    exact_nn(emb, n_centroids=4).count()
     after_first = _n_persistent(spark)
     for _ in range(5):
-        exact_nn(emb, n_centroids=4, iters=2).count()
+        exact_nn(emb, n_centroids=4).count()
     assert _n_persistent(spark) <= after_first  # one generation, not six
     cache.release("exact_nn")
     assert _n_persistent(spark) <= after_first - 2  # assigned + cand1 gone
@@ -62,7 +62,7 @@ def test_color_invariants_storage_bounded_across_calls(spark):
 
 
 def test_release_all_idempotent(spark, emb):
-    exact_nn(emb, n_centroids=4, iters=2).count()
+    exact_nn(emb, n_centroids=4).count()
     cache.release_all()
     cache.release_all()
     assert not cache._LEASES

@@ -102,7 +102,7 @@ def test_write_tile_index_morton_clustered(spark, tmp_path):
     world = fx.World(nx=8, ny=8)
     images = spark.createDataFrame(make_images_pdf(world), schema=fx.IMAGES_SCHEMA)
     store = SnapshotStore(str(tmp_path))
-    manifest = write_tile_index(images, store, num_files=4)
+    manifest = write_tile_index(images, store)
     assert manifest["total_rows"] == world.n_tiles
     assert len(manifest["partitions"]) >= 2          # range-partitioned
     out = store.read(spark, "tile_index")

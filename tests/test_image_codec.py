@@ -20,7 +20,18 @@ def test_raw16_roundtrip(grid):
 def test_png16_roundtrip(grid):
     data = ic.encode_png16(grid)
     assert data[:8] == b"\x89PNG\r\n\x1a\n"
-    assert (ic.decode_png16(data) == grid).all()
+    assert (ic.decode_png16(data, 50, 50) == grid).all()
+
+
+@pytest.mark.parametrize("w, h", [(40, 50), (50, 60)])
+def test_png16_size_mismatch_raises(grid, w, h):
+    """A PNG whose header disagrees with its row's w/h is an error, as it
+    is for raw16: the pixel gather indexes the decoded array with the
+    row's w."""
+    with pytest.raises(ValueError, match=f"50x50 .* {w}x{h}"):
+        ic.decode(ic.encode_png16(grid), "png16", w, h)
+    with pytest.raises(ValueError):
+        ic.decode(ic.encode_raw16(grid), "raw16", w, h)
 
 
 def test_png16_is_parseable_by_stdlib_structure(grid):

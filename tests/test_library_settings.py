@@ -22,9 +22,17 @@ the driver entry and the benchmarks.  A module only its own tests import
 is dead code and leaves the package.  The same holds for every
 top-level function and class: one that only tests reach leaves the
 package, or moves to ``tests/`` when a test uses it as a reference.
+
+Every settable value is set by someone.  A defaulted parameter that no
+call in the package or an entry point passes (by keyword or by
+position) carries one value, so it is a module constant or a literal
+instead; the only exceptions are allowlisted below, each with its
+reason.  And every parameter is read: one its function ignores is a
+setting that silently does nothing.
 """
 
 import ast
+import fnmatch
 import importlib
 import inspect
 from pathlib import Path
@@ -211,6 +219,168 @@ def test_detector_sees_unbound_calls():
     assert [(line, call) for line, call, _ in _unbound_library_calls(ast.parse(src))] == \
         [(3, "polygon_pixels"), (5, "api.no_such_function"), (7, "polygon_pixels"),
          (8, "polygon_pixels")]
+
+
+#: defaulted parameters that no caller in the package or an entry point
+#: sets, each kept for the reason given
+UNSET_DEFAULTS_ALLOWED = {
+    "api.py:ElevationService.point_get(format_out)": "request field, validated to 4000",
+    "api.py:ElevationService.point_get(dataset)": "request field, validated to 4000",
+    "api.py:ElevationService.line(dataset)": "request field, validated to 4000",
+    "api.py:ElevationService.polygon(dataset)": "request field, validated to 4000",
+    "api.py:ElevationService.colorpolygon(format_in)": "request field, validated to 4000",
+    "api.py:ElevationService.colorpolygon(dataset)": "request field, validated to 4000",
+    "grpc_shim.py:grpc_serve(port)": "deployment address of the gRPC server",
+    "operators/dedup.py:connected_components(driver_max_pairs)":
+        "the CC scale alternative; the distributed-path tests force it",
+    "operators/dedup.py:connected_components(max_iters)":
+        "the non-convergence bound; test_connected_components_unpersists_on_nonconvergence"
+        " forces the raise",
+}
+
+
+def _functions(tree: ast.Module):
+    """(qualified name, def, bound) for each top-level function and each
+    method of a top-level class; ``bound`` is 1 where a call passes the
+    first parameter implicitly (a method, a class's ``__init__``)."""
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            yield node.name, node, 0
+        elif isinstance(node, ast.ClassDef):
+            for m in node.body:
+                if isinstance(m, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    static = any(isinstance(d, ast.Name) and d.id == "staticmethod"
+                                 for d in m.decorator_list)
+                    yield f"{node.name}.{m.name}", m, 0 if static else 1
+
+
+def _defaulted(fn: ast.FunctionDef) -> list[tuple[int | None, str]]:
+    """(position or None for keyword-only, name) of each defaulted parameter."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    first = len(pos) - len(a.defaults)
+    return ([(i, p.arg) for i, p in enumerate(pos) if i >= first]
+            + [(None, p.arg) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None])
+
+
+def _unset_defaults(package: Path, entries: list[Path]) -> list[str]:
+    """``module:function(param)`` for each defaulted parameter of a
+    top-level function or class method of ``package`` that no call in
+    the package or in ``entries`` passes, by keyword or by position.
+
+    Calls match by the callee's bare name (``f(...)``, ``x.f(...)``; a
+    class's ``__init__`` by ``C(...)``), so any call named like the
+    function counts.  A call with ``**kwargs`` passes every keyword, one
+    with ``*args`` every position."""
+    calls: dict[str, list[ast.Call]] = {}
+    for path in sorted(set(package.rglob("*.py")) | set(entries)):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.Call):
+                f = node.func
+                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                calls.setdefault(name, []).append(node)
+    found = []
+    for path in sorted(package.rglob("*.py")):
+        rel = path.relative_to(package).as_posix()
+        for qual, fn, bound in _functions(ast.parse(path.read_text(), str(path))):
+            cls, _, meth = qual.rpartition(".")
+            callee = cls if meth == "__init__" else fn.name
+            for i, param in _defaulted(fn):
+                pos = None if i is None else i - bound
+                if not any(_passes(c, param, pos) for c in calls.get(callee, [])):
+                    found.append(f"{rel}:{qual}({param})")
+    return found
+
+
+def _passes(call: ast.Call, param: str, pos: int | None) -> bool:
+    """Whether ``call`` sets ``param``: by keyword, or as its argument at
+    position ``pos`` (None: keyword-only)."""
+    if any(k.arg in (param, None) for k in call.keywords):
+        return True
+    return pos is not None and pos >= 0 and (
+        len(call.args) > pos or any(isinstance(a, ast.Starred) for a in call.args))
+
+
+def test_every_defaulted_parameter_is_set_by_a_caller():
+    unset = _unset_defaults(PACKAGE, ENTRY_POINTS)
+    offenders = [u for u in unset if u not in UNSET_DEFAULTS_ALLOWED]
+    assert not offenders, ("defaulted parameters no caller sets (make each a constant, "
+                           f"or allow it with a reason): {offenders}")
+    stale = sorted(set(UNSET_DEFAULTS_ALLOWED) - set(unset))
+    assert not stale, f"allowed unset defaults that a caller sets or that are gone: {stale}"
+
+
+def test_detector_sees_unset_defaults(tmp_path):
+    files = {
+        "entry.py": "from pkg.a import f, C\nf(1, 2, k=3)\nC(0).m(4)\nC(x=1)\n",
+        "pkg/__init__.py": "",
+        "pkg/a.py": "def f(a, b=1, c=2, *, k=0, j=1): return g(*xs) + h(**kw)\n"
+                    "def g(a=1, b=2): pass\n"
+                    "def h(a, b=2): pass\n"
+                    "class C:\n"
+                    "    def __init__(self, x=0, y=0): pass\n"
+                    "    def m(self, p=1, q=2): pass\n"
+                    "    @staticmethod\n"
+                    "    def s(p=1): pass\n"
+                    "def outer(n=1):\n    def inner(z=1): pass\n",
+        "tests/test_a.py": "from pkg.a import f, outer\nf(1, 2, 3, j=4)\nouter(n=2)\n",
+    }
+    for name, src in files.items():
+        (tmp_path / name).parent.mkdir(parents=True, exist_ok=True)
+        (tmp_path / name).write_text(src)
+    # a test's call sets nothing; a nested function is not a parameter
+    # surface; ``C(x=1)`` sets ``__init__``'s x, ``C(0)`` its x by position
+    assert _unset_defaults(tmp_path / "pkg", [tmp_path / "entry.py"]) == \
+        ["a.py:f(c)", "a.py:f(j)", "a.py:C.__init__(y)", "a.py:C.m(q)", "a.py:C.s(p)",
+         "a.py:outer(n)"]
+
+
+#: parameters a function never reads, each kept for the reason given
+UNREAD_ALLOWED = {
+    "contract.py:q_*(sf_dir)": "the uniform QUERIES signature (spark, sf_dir)",
+    "operators/*.py:polygon_*(spread)":
+        "perfbench still passes it; it leaves with the next benchmark change",
+}
+
+
+def _unread_params(package: Path) -> list[str]:
+    """``module:function(param)`` for each parameter of a top-level
+    function or class method of ``package`` that its body never reads."""
+    found = []
+    for path in sorted(package.rglob("*.py")):
+        rel = path.relative_to(package).as_posix()
+        for qual, fn, _ in _functions(ast.parse(path.read_text(), str(path))):
+            a = fn.args
+            params = [p.arg for p in a.posonlyargs + a.args + a.kwonlyargs]
+            params += [p.arg for p in (a.vararg, a.kwarg) if p is not None]
+            read = {n.id for stmt in fn.body for n in ast.walk(stmt)
+                    if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)}
+            found += [f"{rel}:{qual}({p})" for p in params if p not in read]
+    return found
+
+
+def test_every_parameter_is_read():
+    unread = _unread_params(PACKAGE)
+    offenders = [u for u in unread
+                 if not any(fnmatch.fnmatchcase(u, pat) for pat in UNREAD_ALLOWED)]
+    assert not offenders, f"parameters their function never reads: {offenders}"
+    stale = [pat for pat in UNREAD_ALLOWED
+             if not any(fnmatch.fnmatchcase(u, pat) for u in unread)]
+    assert not stale, f"allowed unread parameters that are read or gone: {stale}"
+
+
+def test_detector_sees_unread_parameters(tmp_path):
+    (tmp_path / "pkg").mkdir()
+    (tmp_path / "pkg" / "a.py").write_text(
+        "def f(a, b, *args, c=1, **kw):\n    return a + args[0] + kw['x']\n"
+        "def g(a, w=None, h=None):\n    def inner(w):\n        return w\n"
+        "    return inner(a)\n"
+        "class C:\n    def m(self, x):\n        self.x = 1\n"
+        "def k(x):\n    x = 2\n    return lambda: x\n")
+    # names match by bare identifier: ``inner`` reading its own ``w``
+    # counts as a read of ``g``'s
+    assert _unread_params(tmp_path / "pkg") == \
+        ["a.py:f(b)", "a.py:f(c)", "a.py:g(h)", "a.py:C.m(x)"]
 
 
 def _imported_files(path: Path, root: Path) -> set[Path]:
