@@ -12,20 +12,6 @@ from __future__ import annotations
 import numpy as np
 
 
-def ring_to_arrays(ring) -> tuple[np.ndarray, np.ndarray]:
-    """list of (lon, lat) pairs / dicts → (xs, ys) float64 arrays (closed)."""
-    if len(ring) and isinstance(ring[0], dict):
-        xs = np.array([p["lon"] for p in ring], dtype=np.float64)
-        ys = np.array([p["lat"] for p in ring], dtype=np.float64)
-    else:
-        arr = np.asarray(ring, dtype=np.float64)
-        xs, ys = arr[:, 0], arr[:, 1]
-    if xs[0] != xs[-1] or ys[0] != ys[-1]:
-        xs = np.append(xs, xs[0])
-        ys = np.append(ys, ys[0])
-    return xs, ys
-
-
 def points_in_ring(px: np.ndarray, py: np.ndarray,
                    rx: np.ndarray, ry: np.ndarray) -> np.ndarray:
     """Boolean mask: point covered by the closed ring (boundary inclusive).

@@ -23,7 +23,7 @@ pipeline stays distributed, and pixel values never become JVM rows:
                 only for the GeoJSON features
 
 The band arithmetic has one implementation, the numpy band-split
-(:func:`_subrun_partial_frame`), and both band oracles check it: the
+(:func:`_subrun_partial_batch`), and both band oracles check it: the
 contract's ``polygon_bands`` reads each band's pixel count off
 :func:`polygon_color_invariants` (``area_px``), and ``color_dissolve``
 checks the dissolve on the same bands.
@@ -41,16 +41,20 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..constants import NUM_RANGES, PX, WORLD_X0, WORLD_Y0
+from ..functions.arrow_batches import (binary_array, binary_buffers, list_array,
+                                       list_offsets, record_batch)
 from ..functions.dissolve import (MAX_BATCH_BANDS, batch_invariants,
                                   dissolve_pixels_rings)
 from ..plans.cache import lease
-from .polygon import blob_stats, polygon_pixel_run_blobs
+from .polygon import _unpack_run_blobs, blob_stats, polygon_pixel_run_blobs
 
 
 FEATURE_SCHEMA = T.StructType(
@@ -68,27 +72,7 @@ FEATURE_SCHEMA = T.StructType(
         ),
     ]
 )
-
-
-def _dissolve_group(poly_id: int, hb: int, gx: np.ndarray,
-                    gy: np.ndarray) -> list[dict]:
-    polys, ring_areas = dissolve_pixels_rings(gx, gy)
-    rows = []
-    for i, (rings, ra) in enumerate(zip(polys, ring_areas)):
-        deg_rings = [
-            [{"x": WORLD_X0 + gx * PX, "y": WORLD_Y0 - gy * PX} for gx, gy in ring]
-            for ring in rings
-        ]
-        area = sum(ra) / 2.0
-        rows.append({
-            "poly_id": poly_id,
-            "height_base": hb,
-            "feature_idx": i,
-            "n_rings": len(rings),
-            "area_px": float(area),
-            "rings": deg_rings,
-        })
-    return rows
+_FEATURE_ARROW = to_arrow_schema(FEATURE_SCHEMA)
 
 
 def _dissolve_partitions(df: DataFrame) -> int:
@@ -129,10 +113,13 @@ SUBRUN_SCHEMA = T.StructType(
 )
 
 
-def _subrun_partial_frame(pid_run, gy_run, gx0_run, lens, z,
+_SUBRUN_ARROW = to_arrow_schema(SUBRUN_SCHEMA)
+
+
+def _subrun_partial_batch(pid_run, gy_run, gx0_run, lens, z,
                           minz_run, maxz_run):
     """Vectorized band-split of flat run arrays → map-side-partial
-    subrun frame (one row per (poly, band) group of the batch, subruns
+    subrun batch (one row per (poly, band) group of the batch, subruns
     packed).  ``z`` is the int64 concat of every run's values in run
     order; per-run scalars are expanded with one np.repeat."""
     total = len(z)
@@ -163,19 +150,16 @@ def _subrun_partial_frame(pid_run, gy_run, gx0_run, lens, z,
     sub = (gy_s << _SUB_GY_SHIFT) | (gx_s << _SUB_GX_SHIFT) | ln
     pid_s = np.asarray(pid_run)[rep][s]
     hb_s = hb[s]
-    # map-side partial: group the batch's subruns by (poly, band)
+    # map-side partial: group the batch's subruns by (poly, band); each
+    # group's packed longs are one contiguous slice of ONE buffer
     order = np.lexsort((hb_s, pid_s))
     pid_o, hb_o, sub_o = pid_s[order], hb_s[order], sub[order]
     grp = np.flatnonzero(np.concatenate(
         ([True], (pid_o[1:] != pid_o[:-1]) | (hb_o[1:] != hb_o[:-1]))))
-    sub_le = sub_o.astype("<i8", copy=False)
-    return pd.DataFrame(
-        {"poly_id": pid_o[grp],
-         "height_base": hb_o[grp],
-         "subs": pd.Series([chunk.tobytes() for chunk in
-                            np.split(sub_le, grp[1:])], dtype=object)},
-        columns=["poly_id", "height_base", "subs"],
-    )
+    return record_batch(_SUBRUN_ARROW, [
+        pa.array(pid_o[grp]), pa.array(hb_o[grp]),
+        binary_array(8 * np.diff(np.append(grp, len(sub_o))),
+                     sub_o.astype("<i8", copy=False))])
 
 
 def _band_subrun_kernel_blob(batches):
@@ -183,58 +167,44 @@ def _band_subrun_kernel_blob(batches):
 
     Input rows: (poly_id, blob, min_z, max_z) from
     :func:`~..operators.polygon.polygon_pixel_run_blobs` joined with the
-    broadcast per-polygon stats.  Unpacks every pair's runs with
-    ``np.frombuffer`` views (z never exists as a JVM array), applies the
-    exact reference band arithmetic (``querybuilder.py:56-102``; the
-    same IEEE-double expression as the contract's band oracle SQL) and
-    splits runs at band-change boundaries in one vectorized pass per
-    batch.
+    broadcast per-polygon stats.  Every blob of the batch is unpacked
+    at once through the binary column's offsets and data buffers
+    (:func:`~..operators.polygon._unpack_run_blobs`; z never exists as
+    a JVM array, and no row becomes a Python ``bytes``), then the exact
+    reference band arithmetic (``querybuilder.py:56-102``; the same
+    IEEE-double expression as the contract's band oracle SQL) splits
+    runs at band-change boundaries in one vectorized pass per batch.
     Terrain is locally smooth, so subrun count ~ run count, not pixel
     count.
 
     The packed subruns are PARTIALLY AGGREGATED before they leave the
     kernel (guide §2.3 "aggregate before you shuffle"): one output row
     per (poly_id, height_base) group *of the batch*, carrying that
-    group's subruns as one binary buffer — per-subrun rows would
+    group's subruns as one binary value — per-subrun rows would
     re-create the per-pixel row volume on the exchange (the synthetic
     z field band-splits almost every step).  The final gather
     concatenates the partials (same multiset of packed longs; every
     consumer rasterizes, so order never matters)."""
-    for pdf in batches:
-        if not len(pdf):
+    for rb in batches:
+        if not rb.num_rows:
             continue
-        # per-row work is VIEWS only (3 frombuffer slices); every
-        # astype/expansion happens once per batch over the
-        # concatenated arrays — the per-pair alloc loop was the
-        # measured low-core cost of the blob path
-        gy_l, gx0_l, ln_l, z_l, n_runs = [], [], [], [], []
-        for blob in pdf["blob"]:
-            n = int(np.frombuffer(blob, dtype="<i4", count=1)[0])
-            head = np.frombuffer(blob, dtype="<i4", count=1 + 3 * n)
-            gy_l.append(head[1:1 + n])
-            gx0_l.append(head[1 + n:1 + 2 * n])
-            ln_l.append(head[1 + 2 * n:])
-            z_l.append(np.frombuffer(blob, dtype="<i2",
-                                     offset=4 * (1 + 3 * n)))
-            n_runs.append(n)
-        n_runs = np.asarray(n_runs, dtype=np.int64)
-        out = _subrun_partial_frame(
-            np.repeat(pdf["poly_id"].to_numpy(), n_runs),
-            np.concatenate(gy_l).astype(np.int64),
-            np.concatenate(gx0_l).astype(np.int64),
-            np.concatenate(ln_l).astype(np.int64),
-            np.concatenate(z_l).astype(np.int64),
-            np.repeat(pdf["min_z"].to_numpy(), n_runs),
-            np.repeat(pdf["max_z"].to_numpy(), n_runs))
+        n_runs, gy, gx0, ln, z = _unpack_run_blobs(rb.column("blob"))
+        out = _subrun_partial_batch(
+            np.repeat(rb.column("poly_id").to_numpy(), n_runs),
+            gy.astype(np.int64), gx0.astype(np.int64), ln.astype(np.int64),
+            z.astype(np.int64),
+            np.repeat(rb.column("min_z").to_numpy(), n_runs),
+            np.repeat(rb.column("max_z").to_numpy(), n_runs))
         if out is not None:
             yield out
 
 
 def _gather_bands(subs: DataFrame) -> DataFrame:
     """(poly, band)-exchange + gather of the map-side subrun partials.
-    The gathered column is ``array<binary>`` (one packed buffer per
-    partial); kernels re-join the chunks with one ``b"".join`` —
-    no per-element JVM work anywhere in the gather."""
+    The gathered column is ``array<binary>`` (one packed value per
+    partial); the kernels read a whole batch of it through the list and
+    binary offsets (:func:`_expand_subrun_batch`) — no per-element JVM
+    work anywhere in the gather."""
     return (
         subs.repartition(_dissolve_partitions(subs), "poly_id", "height_base")
         .groupBy("poly_id", "height_base")
@@ -251,26 +221,25 @@ def _banded_subruns_blob(blobs: DataFrame) -> DataFrame:
     stats = blob_stats(blobs).select("poly_id", "min_z", "max_z")
     j = (blobs.join(F.broadcast(stats), "poly_id")
          .select("poly_id", "blob", "min_z", "max_z"))
-    subs = j.mapInPandas(_band_subrun_kernel_blob, SUBRUN_SCHEMA)
+    subs = j.mapInArrow(_band_subrun_kernel_blob, SUBRUN_SCHEMA)
     return _gather_bands(subs)
 
 
-def _expand_subrun_batch(pdf):
-    """Batch-expand one Arrow batch of (poly_id, height_base, subs)
-    band rows into flat cell arrays: (band_of_cell, gx, gy, seg) with
-    ``seg`` the per-band segment bounds (band b's cells contiguous at
-    gx[seg[b]:seg[b+1]]).  ONE np.repeat for the whole batch instead of
-    ~10 small numpy calls per band — the per-band expansion overhead
-    was a measured term of the r6 dissolve-kernel wall."""
-    subs_list = pdf["subs"].to_numpy()
-    n_rows = len(subs_list)
-    joined = [b"".join(chunks) for chunks in subs_list]
-    ln_rows = np.fromiter((len(b) // 8 for b in joined), np.int64, count=n_rows)
-    if n_rows:
-        arr = np.frombuffer(b"".join(joined), dtype="<i8").astype(np.int64,
-                                                                  copy=False)
-    else:
-        arr = np.empty(0, dtype=np.int64)
+def _expand_subrun_batch(subs: pa.Array):
+    """Batch-expand the ``subs`` column (``array<binary>``) of one Arrow
+    batch of (poly_id, height_base, subs) band rows into flat cell
+    arrays: (band_of_cell, gx, gy, seg) with ``seg`` the per-band
+    segment bounds (band b's cells contiguous at gx[seg[b]:seg[b+1]]).
+    A row's partials are consecutive values of the list's binary child,
+    so its packed longs are one contiguous slice of the child's data
+    buffer, found through the list offsets and then the binary offsets:
+    the whole batch is one ``frombuffer`` and ONE np.repeat, with no
+    per-band join or copy."""
+    off, data = binary_buffers(subs.values)
+    row_bytes = off[list_offsets(subs)]
+    n_rows = len(subs)
+    ln_rows = np.diff(row_bytes) // 8
+    arr = data[row_bytes[0]:row_bytes[-1]].view("<i8").astype(np.int64)
     gy0 = arr >> _SUB_GY_SHIFT
     gx0 = (arr >> _SUB_GX_SHIFT) & (_SUB_G_MAX - 1)
     ln = arr & (_SUB_LEN_MAX - 1)
@@ -286,23 +255,47 @@ def _expand_subrun_batch(pdf):
     return band, gx, gy, seg
 
 
-def _iter_subrun_groups(batches):
-    """(poly_id, height_base, gx, gy) per band row, cells re-expanded
-    from packed subruns.  collect_list order is nondeterministic, but
-    every kernel consumer rasterizes into an occupancy grid first —
-    order-invariant by construction."""
-    for pdf in batches:
-        band, gx, gy, seg = _expand_subrun_batch(pdf)
-        for b, (pid, hb) in enumerate(zip(pdf["poly_id"].to_numpy(),
-                                          pdf["height_base"].to_numpy())):
-            yield int(pid), int(hb), gx[seg[b]:seg[b + 1]], gy[seg[b]:seg[b + 1]]
+def _features_batch(rb: pa.RecordBatch) -> pa.RecordBatch:
+    """FEATURE_SCHEMA rows of every band of one batch: each band's cells
+    re-expanded from packed subruns (:func:`_expand_subrun_batch`) and
+    traced by ``dissolve_pixels_rings``; the ring vertices of all
+    features are converted to degrees at once and leave as one double
+    buffer per coordinate plus two offsets arrays.  collect_list order
+    is nondeterministic, but the tracer rasterizes into an occupancy
+    grid first — order-invariant by construction."""
+    band, gx, gy, seg = _expand_subrun_batch(rb.column("subs"))
+    pids = rb.column("poly_id").to_numpy()
+    hbs = rb.column("height_base").to_numpy()
+    f_band, f_idx, f_area, rings_per_f, pts_per_ring, pts = [], [], [], [], [], []
+    for b in range(rb.num_rows):
+        polys, ring_areas = dissolve_pixels_rings(gx[seg[b]:seg[b + 1]],
+                                                  gy[seg[b]:seg[b + 1]])
+        for i, (rings, ra) in enumerate(zip(polys, ring_areas)):
+            f_band.append(b)
+            f_idx.append(i)
+            f_area.append(sum(ra) / 2.0)
+            rings_per_f.append(len(rings))
+            for ring in rings:
+                pts_per_ring.append(len(ring))
+                pts.extend(ring)
+    f_band = np.asarray(f_band, dtype=np.int64)
+    rings_per_f = np.asarray(rings_per_f, dtype=np.int64)
+    xy = np.asarray(pts, dtype=np.int64).reshape(-1, 2)
+    points = pa.StructArray.from_arrays(
+        [pa.array(WORLD_X0 + xy[:, 0] * PX), pa.array(WORLD_Y0 - xy[:, 1] * PX)],
+        names=["x", "y"])
+    return record_batch(_FEATURE_ARROW, [
+        pa.array(pids[f_band]), pa.array(hbs[f_band]),
+        pa.array(np.asarray(f_idx, dtype=np.int32)),
+        pa.array(rings_per_f.astype(np.int32)),
+        pa.array(np.asarray(f_area, dtype=np.float64)),
+        list_array(rings_per_f, list_array(np.asarray(pts_per_ring, dtype=np.int64),
+                                           points))])
 
 
 def _dissolve_partition_subs(batches):
-    rows = []
-    for pid, hb, gx, gy in _iter_subrun_groups(batches):
-        rows.extend(_dissolve_group(pid, hb, gx, gy))
-    yield pd.DataFrame(rows, columns=[f.name for f in FEATURE_SCHEMA.fields])
+    for rb in batches:
+        yield _features_batch(rb)
 
 
 def polygon_color_features(polygons_df: DataFrame, images_df: DataFrame,
@@ -324,7 +317,7 @@ def polygon_color_features(polygons_df: DataFrame, images_df: DataFrame,
     if blobs is None:
         blobs = polygon_pixel_run_blobs(polygons_df, images_df)
         lease("color_features", blobs)
-    return _banded_subruns_blob(blobs).mapInPandas(
+    return _banded_subruns_blob(blobs).mapInArrow(
         _dissolve_partition_subs, schema=FEATURE_SCHEMA
     )
 
@@ -338,6 +331,7 @@ INVARIANT_SCHEMA = T.StructType(
         T.StructField("euler8", T.LongType()),
     ]
 )
+_INVARIANT_ARROW = to_arrow_schema(INVARIANT_SCHEMA)
 
 
 def _invariants_partition_subs(batches):
@@ -361,17 +355,15 @@ def _invariants_partition_subs(batches):
     while the Arrow batch size (``spark.sql.execution.arrow.
     maxRecordsPerBatch``) is a deployment setting, so every batch is
     sliced into runs of at most ``MAX_BATCH_BANDS`` bands."""
-    for batch in batches:
-        for start in range(0, len(batch), MAX_BATCH_BANDS):
-            yield _invariants_frame(batch.iloc[start:start + MAX_BATCH_BANDS])
+    for rb in batches:
+        for start in range(0, rb.num_rows, MAX_BATCH_BANDS):
+            yield _invariants_batch(rb.slice(start, MAX_BATCH_BANDS))
 
 
-def _invariants_frame(pdf: pd.DataFrame) -> pd.DataFrame:
+def _invariants_batch(rb: pa.RecordBatch) -> pa.RecordBatch:
     """INVARIANT_SCHEMA rows for one slice of ≤ MAX_BATCH_BANDS bands."""
-    band, gx, gy, seg = _expand_subrun_batch(pdf)
-    n_bands = len(pdf)
-    pid = pdf["poly_id"].to_numpy()
-    hbs = pdf["height_base"].to_numpy()
+    band, gx, gy, seg = _expand_subrun_batch(rb.column("subs"))
+    n_bands = rb.num_rows
     shells, holes, area2, q1, q3, qd = batch_invariants(
         band, gx, gy, n_bands, seg)
     euler4 = (q1 - q3 + 2 * qd) // 4
@@ -385,11 +377,9 @@ def _invariants_frame(pdf: pd.DataFrame) -> pd.DataFrame:
             f"holes={int(holes[b])} euler4={int(euler4[b])} "
             f"euler8={int(euler8[b])} area2={int(area2[b])}"
         )
-    return pd.DataFrame(
-        {"poly_id": pid, "height_base": hbs, "area_px": area2 // 2,
-         "euler4": euler4, "euler8": euler8},
-        columns=[f.name for f in INVARIANT_SCHEMA.fields],
-    )
+    return record_batch(_INVARIANT_ARROW, [
+        rb.column("poly_id"), rb.column("height_base"),
+        pa.array(area2 // 2), pa.array(euler4), pa.array(euler8)])
 
 
 def polygon_color_invariants(polygons_df: DataFrame, images_df: DataFrame) -> DataFrame:
@@ -398,7 +388,7 @@ def polygon_color_invariants(polygons_df: DataFrame, images_df: DataFrame) -> Da
     Same plan shape as :func:`polygon_color_features`."""
     blobs = polygon_pixel_run_blobs(polygons_df, images_df)
     lease("color_invariants", blobs)
-    return _banded_subruns_blob(blobs).mapInPandas(
+    return _banded_subruns_blob(blobs).mapInArrow(
         _invariants_partition_subs, schema=INVARIANT_SCHEMA
     )
 

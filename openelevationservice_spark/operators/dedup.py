@@ -7,7 +7,7 @@ and SimHash, each checked by an ANSI-SQL DuckDB oracle.  Every operator
 has one physical shape (connected components picks its driver or
 distributed path from the pair count).  All of them are DataFrame/Column
 expressions (JVM-side, whole-stage codegen) except the MinHash
-signature, which is one ``mapInPandas`` kernel: shingle construction and
+signature, which is one ``mapInArrow`` kernel: shingle construction and
 md5 per shingle through interpreted higher-order Column functions cost
 about an order of magnitude more than python ``hashlib`` behind a single
 Arrow boundary.
@@ -26,10 +26,14 @@ import hashlib
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+
+from ..functions.arrow_batches import list_array, record_batch
 
 #: modulus of the permutation family (Mersenne prime 2^31 - 1).
 #: overflow audit: a < 2^31-1, x < 2^32 → a*x + b < 2^63 - 2^31 + 2^31
@@ -88,13 +92,15 @@ def minhash_signature(df: DataFrame, n_hashes: int = 8, shingle_n: int = 3) -> D
     Docs with no shingle (null, or fewer than ``shingle_n`` words)
     produce no row.
 
-    One ``mapInPandas`` kernel, no exchange: per Arrow batch, python
+    One ``mapInArrow`` kernel, no exchange: per Arrow batch, python
     ``str.split``/``" ".join`` build the shingles, ``hashlib.md5``
     hashes each one, and one ``np.minimum.reduceat`` per hash function
-    takes the per-doc mins.  Python ``split(" ")`` keeps leading, empty
-    and trailing tokens exactly like Spark's regex split with limit -1
-    (:func:`word_shingles`), ``join`` matches ``concat_ws`` over
-    non-null strings, and the int64 permutation arithmetic is
+    takes the per-doc mins; the signatures leave as one int64 values
+    buffer (one list array over the batch's signature matrix).  Python
+    ``split(" ")`` keeps leading, empty and trailing tokens exactly like
+    Spark's regex split with limit -1 (:func:`word_shingles`), ``join``
+    matches ``concat_ws`` over non-null strings, and the int64
+    permutation arithmetic is
     overflow-audited (module docstring), so the signatures equal the SQL
     oracle's bit for bit.
     """
@@ -105,14 +111,15 @@ def minhash_signature(df: DataFrame, n_hashes: int = 8, shingle_n: int = 3) -> D
         T.StructField("doc_id", df.schema["doc_id"].dataType),
         T.StructField("sig", T.ArrayType(T.LongType())),
     ])
+    out_arrow = to_arrow_schema(out_schema)
 
     def kernel(batches):
         md5 = hashlib.md5
-        for pdf in batches:
-            ids: list = []
+        for rb in batches:
+            rows: list[int] = []
             hashes: list[int] = []
             counts: list[int] = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
+            for row, text in enumerate(rb.column("text").to_pylist()):
                 if text is None:
                     continue
                 words = text.split(" ")
@@ -124,20 +131,22 @@ def minhash_signature(df: DataFrame, n_hashes: int = 8, shingle_n: int = 3) -> D
                         .hexdigest()[:8], 16)
                     for k in range(m)
                 )
-                ids.append(did)
+                rows.append(row)
                 counts.append(m)
-            if not ids:
+            if not rows:
                 continue
             x = np.asarray(hashes, dtype=np.int64)
             starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-            sigs = np.empty((len(ids), n_hashes), dtype=np.int64)
+            sigs = np.empty((len(rows), n_hashes), dtype=np.int64)
             for i in range(n_hashes):
                 # overflow audit in the module docstring: a*x + b < 2^63
                 sigs[:, i] = np.minimum.reduceat(
                     (a_vec[i] * x + b_vec[i]) % MERSENNE31, starts)
-            yield pd.DataFrame({"doc_id": pd.Series(ids), "sig": list(sigs)})
+            yield record_batch(out_arrow, [
+                rb.column("doc_id").take(pa.array(rows, pa.int64())),
+                list_array(np.full(len(rows), n_hashes), sigs.ravel())])
 
-    return df.select("doc_id", "text").mapInPandas(kernel, out_schema)
+    return df.select("doc_id", "text").mapInArrow(kernel, out_schema)
 
 
 def lsh_candidate_pairs(df: DataFrame, n_hashes: int = 8, bands: int = 4,
@@ -407,12 +416,16 @@ def connected_components(pairs: DataFrame, ids: DataFrame,
             if own_p:
                 p.unpersist()
         id_type = pairs.schema["id_a"].dataType
+        # the labels go to the JVM as Arrow batches from a pandas frame:
+        # a list of tuples would run a Python-worker stage to pickle rows
+        # (one task per core, ~0.3 s each warm and seconds cold)
+        vs, ls = list(lbl.keys()), list(lbl.values())
         if with_sizes:
             from collections import Counter
 
-            csz = Counter(lbl.values())
+            csz = Counter(ls)
             labels = pairs.sparkSession.createDataFrame(
-                [(v, l, csz[l]) for v, l in lbl.items()],
+                pd.DataFrame({"_v": vs, "_lbl": ls, "_sz": [csz[l] for l in ls]}),
                 T.StructType([T.StructField("_v", id_type),
                               T.StructField("_lbl", id_type),
                               T.StructField("_sz", T.LongType())]),
@@ -425,7 +438,7 @@ def connected_components(pairs: DataFrame, ids: DataFrame,
                         .alias("cluster_size"))
             )
         labels = pairs.sparkSession.createDataFrame(
-            list(lbl.items()),
+            pd.DataFrame({"_v": vs, "_lbl": ls}),
             T.StructType([T.StructField("_v", id_type),
                           T.StructField("_lbl", id_type)]),
         )

@@ -1,22 +1,26 @@
 """Image-column plumbing: opaque binary payloads + typed metadata.
 
 Tiles are carried as ``binary`` columns with typed metadata and
-processed through ``mapInPandas`` Arrow batches.  The raster codecs
+processed by ``mapInArrow`` kernels that read the bytes through the
+binary column's buffers.  The raster codecs
 (raw16/png16) are real; ``image_codec.decode`` raises
 ``NotImplementedError`` for any other format.
 """
 
 from __future__ import annotations
 
+import json
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..functions import image_codec
+from ..functions.arrow_batches import binary_buffers, join_binary, record_batch
 
 META_SCHEMA = T.StructType(
     [
@@ -34,31 +38,38 @@ META_SCHEMA = T.StructType(
     ]
 )
 
+_META_ARROW = to_arrow_schema(META_SCHEMA)
+
+
+def _decoded(rb: pa.RecordBatch) -> list[np.ndarray]:
+    """The decoded grid of every row of a batch of (bytes, fmt, w, h),
+    the bytes read through the binary column's buffers."""
+    off, data = binary_buffers(rb.column("bytes"))
+    return [image_codec.decode(data[off[i]:off[i + 1]].tobytes(), fmt, int(w), int(h))
+            for i, (fmt, w, h) in enumerate(zip(rb.column("fmt").to_pylist(),
+                                                rb.column("w").to_numpy(),
+                                                rb.column("h").to_numpy()))]
+
+
 def image_metadata(images_df: DataFrame) -> DataFrame:
     """Decode + feature-extract per image (Arrow batches)."""
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            # column-wise iteration, not iterrows: the per-row Series
-            # construction cost exceeded the 50x50 decode itself
-            out: dict[str, list] = {f.name: [] for f in META_SCHEMA.fields}
-            for img, data, fmt, w, h in zip(
-                pdf["image_id"], pdf["bytes"], pdf["fmt"], pdf["w"], pdf["h"]
-            ):
-                g = image_codec.decode(data, fmt, int(w), int(h))
-                out["image_id"].append(img)
-                out["fmt"].append(fmt)
-                out["n_bytes"].append(len(data))
-                out["w"].append(int(w))
-                out["h"].append(int(h))
-                out["min_v"].append(int(g.min()))
-                out["max_v"].append(int(g.max()))
-                out["sum_v"].append(int(g.astype(np.int64).sum()))
-                out["n_nodata"].append(int((g == -32768).sum()))
-                out["mean_v"].append(float(g.mean()))
-                out["phash"].append(image_codec.phash64(g))
-            yield pd.DataFrame(out, columns=[f.name for f in META_SCHEMA.fields])
+    def extract(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            grids = _decoded(rb)
+            off, _ = binary_buffers(rb.column("bytes"))
+            yield record_batch(_META_ARROW, [
+                rb.column("image_id"), rb.column("fmt"),
+                pa.array(np.diff(off).astype(np.int32)),
+                rb.column("w"), rb.column("h"),
+                pa.array([int(g.min()) for g in grids], pa.int32()),
+                pa.array([int(g.max()) for g in grids], pa.int32()),
+                pa.array([int(g.astype(np.int64).sum()) for g in grids], pa.int64()),
+                pa.array([int((g == -32768).sum()) for g in grids], pa.int32()),
+                pa.array([float(g.mean()) for g in grids], pa.float64()),
+                pa.array([image_codec.phash64(g) for g in grids], pa.int64()),
+            ])
 
-    return images_df.select("image_id", "bytes", "fmt", "w", "h").mapInPandas(
+    return images_df.select("image_id", "bytes", "fmt", "w", "h").mapInArrow(
         extract, schema=META_SCHEMA
     )
 
@@ -72,65 +83,73 @@ RESIZE_SCHEMA = T.StructType(
         T.StructField("fmt", T.StringType()),
     ]
 )
+_RESIZE_ARROW = to_arrow_schema(RESIZE_SCHEMA)
 
 
 def resize(images_df: DataFrame, factor: int = 2) -> DataFrame:
     """Block-mean downsample by an integer factor (real, numpy), written
     as ``raw16``."""
-    def rs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {f.name: [] for f in RESIZE_SCHEMA.fields}
-            for img, data, fmt, w0, h0 in zip(
-                pdf["image_id"], pdf["bytes"], pdf["fmt"], pdf["w"], pdf["h"]
-            ):
-                g = image_codec.decode(data, fmt, int(w0), int(h0))
-                h, w = g.shape
-                h2, w2 = h // factor, w // factor
+    def rs(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            small = []
+            for g in _decoded(rb):
+                h2, w2 = g.shape[0] // factor, g.shape[1] // factor
                 blocks = g[: h2 * factor, : w2 * factor].reshape(h2, factor, w2, factor)
-                small = blocks.mean(axis=(1, 3)).astype(np.int16)
-                out["image_id"].append(img)
-                out["bytes"].append(image_codec.encode(small, "raw16"))
-                out["w"].append(w2)
-                out["h"].append(h2)
-                out["fmt"].append("raw16")
-            yield pd.DataFrame(out, columns=[f.name for f in RESIZE_SCHEMA.fields])
+                small.append(blocks.mean(axis=(1, 3)).astype(np.int16))
+            yield record_batch(_RESIZE_ARROW, [
+                rb.column("image_id"),
+                join_binary([image_codec.encode(g, "raw16") for g in small]),
+                pa.array([g.shape[1] for g in small], pa.int32()),
+                pa.array([g.shape[0] for g in small], pa.int32()),
+                pa.array(["raw16"] * len(small), pa.string()),
+            ])
 
-    return images_df.select("image_id", "bytes", "fmt", "w", "h").mapInPandas(
+    return images_df.select("image_id", "bytes", "fmt", "w", "h").mapInArrow(
         rs, schema=RESIZE_SCHEMA
     )
+
+
+ROUNDTRIP_SCHEMA = T.StructType([
+    T.StructField("image_id", T.StringType()),
+    T.StructField("ok", T.BooleanType()),
+    T.StructField("psnr_db", T.DoubleType()),
+    T.StructField("phash_match", T.BooleanType()),
+    T.StructField("caption_ok", T.BooleanType()),
+])
+_ROUNDTRIP_ARROW = to_arrow_schema(ROUNDTRIP_SCHEMA)
+
+
+def _caption_names(caption: str, image_id: str) -> bool:
+    """Whether a caption parses as JSON and names ``image_id``."""
+    try:
+        return json.loads(caption).get("name") == image_id
+    except Exception:
+        return False
 
 
 def roundtrip_invariant(images_df: DataFrame) -> DataFrame:
     """Per-row input_hint invariant: decode→encode→decode PSNR (``ok``
     at ``image_codec.MIN_PSNR_DB``) + phash + caption equality.  Returns
     (image_id, ok, psnr_db, phash_match, caption_ok)."""
-    schema = T.StructType([
-        T.StructField("image_id", T.StringType()),
-        T.StructField("ok", T.BooleanType()),
-        T.StructField("psnr_db", T.DoubleType()),
-        T.StructField("phash_match", T.BooleanType()),
-        T.StructField("caption_ok", T.BooleanType()),
-    ])
+    def check(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            off, data = binary_buffers(rb.column("bytes"))
+            ids = rb.column("image_id").to_pylist()
+            res = [image_codec.roundtrip_check(data[off[i]:off[i + 1]].tobytes(),
+                                               fmt, int(w), int(h))
+                   for i, (fmt, w, h) in enumerate(zip(rb.column("fmt").to_pylist(),
+                                                       rb.column("w").to_numpy(),
+                                                       rb.column("h").to_numpy()))]
+            yield record_batch(_ROUNDTRIP_ARROW, [
+                rb.column("image_id"),
+                pa.array([bool(ok) for ok, _, _ in res], pa.bool_()),
+                # inf → large finite for parquet
+                pa.array([min(p, 1e9) for _, p, _ in res], pa.float64()),
+                pa.array([ph == want for (_, _, ph), want in
+                          zip(res, rb.column("phash").to_pylist())], pa.bool_()),
+                pa.array([_caption_names(c, i) for c, i in
+                          zip(rb.column("caption").to_pylist(), ids)], pa.bool_()),
+            ])
 
-    def check(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import json
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                ok, p, ph = image_codec.roundtrip_check(
-                    r["bytes"], r["fmt"], int(r["w"]), int(r["h"])
-                )
-                try:
-                    cap = json.loads(r["caption"])
-                    cap_ok = cap.get("name") == r["image_id"]
-                except Exception:
-                    cap_ok = False
-                rows.append({
-                    "image_id": r["image_id"], "ok": bool(ok),
-                    "psnr_db": min(p, 1e9),  # inf → large finite for parquet
-                    "phash_match": bool(ph == r["phash"]),
-                    "caption_ok": bool(cap_ok),
-                })
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
-
-    return images_df.mapInPandas(check, schema=schema)
+    return images_df.select("image_id", "bytes", "fmt", "w", "h", "caption",
+                            "phash").mapInArrow(check, schema=ROUNDTRIP_SCHEMA)

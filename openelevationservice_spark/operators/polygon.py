@@ -21,8 +21,9 @@ query filters NODATA explicitly).  The Spark plan:
     polygon → bbox (Column arithmetic over the ring array)
             → cover-cell explode (sequence × sequence, JVM)        [J3]
             → equi-join tile index on cell_id                      [J3]
-            → mapInPandas: decode tile, centroid grid, vectorized
-              PIP filter, NODATA filter → scanline runs            [A2-A4, P2-P3]
+            → mapInArrow: decode each tile of the batch once, one
+              mask stack per chunk of pairs (rectangles vectorized,
+              other rings by PIP), NODATA filter → scanline runs   [A2-A4, P2-P3]
             → posexplode(runs) → pixel rows (JVM codegen)
 
 The reference's ``ORDER BY x, y`` is not a Spark sort: a request's
@@ -31,11 +32,13 @@ it on the driver, and the rasterizer runs once per request (a Spark
 ``orderBy`` would re-run it in its range-sampling job).
 
 The per-(polygon, tile) explode is Spark's ``LATERAL
-ST_PixelAsPolygons`` equivalent (SURVEY.md §2.3 J5).  One rasterization
-core (:func:`_iter_pair_masks`) feeds two emitters: scanline runs for
-the pixel dump (:func:`polygon_pixels`) and one packed blob per
-(polygon, tile) pair for the band dissolve
+ST_PixelAsPolygons`` equivalent (SURVEY.md §2.3 J5).  One batch-wide
+rasterization core (:func:`_pair_run_chunks`) feeds two emitters:
+scanline runs for the pixel dump (:func:`polygon_pixels`) and one
+packed blob per (polygon, tile) pair for the band dissolve
 (:func:`polygon_pixel_run_blobs`, consumed by ``operators/color.py``).
+Both read their Arrow input through its buffers and write each list or
+binary output column as one values buffer plus one offsets array.
 """
 
 from __future__ import annotations
@@ -43,16 +46,19 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..constants import NODATA, PX, TILE_DEG, TILE_PX, WORLD_X0, WORLD_Y0
 from ..functions import image_codec
+from ..functions.arrow_batches import (binary_array, binary_buffers, list_array,
+                                       list_offsets, record_batch)
 from ..functions.cells import cell_x_col, cell_y_col, linear_id_col
-from ..functions.geometry import points_in_ring, ring_to_arrays
+from ..functions.geometry import points_in_ring
 from ..sources.tiles import tile_index
 
 
@@ -131,6 +137,8 @@ def with_pixel_coords(df: DataFrame) -> DataFrame:
 # narrower element halves the Arrow buffer, the JVM array copies and
 # the cache bytes (guide §2.3 "narrower types"); consumers cast the
 # exploded value back to int, so downstream schemas are unchanged.
+# Each output batch carries zs as ONE int16 values buffer plus one
+# offsets array, so no per-run object crosses the boundary.
 RUN_SCHEMA = T.StructType(
     [
         T.StructField("poly_id", T.LongType()),
@@ -140,117 +148,167 @@ RUN_SCHEMA = T.StructType(
     ]
 )
 
-
-def _is_axis_rect(rx: np.ndarray, ry: np.ndarray) -> bool:
-    """True iff the closed ring is exactly an axis-aligned, non-degenerate
-    rectangle (4 edges, each axis-parallel, corners = bbox corners)."""
-    if len(rx) != 5:
-        return False
-    dx = np.diff(rx)
-    dy = np.diff(ry)
-    if not np.all((dx == 0.0) | (dy == 0.0)):
-        return False
-    corners = set(zip(rx[:4].tolist(), ry[:4].tolist()))
-    x0, x1 = float(rx.min()), float(rx.max())
-    y0, y1 = float(ry.min()), float(ry.max())
-    return corners == {(x0, y0), (x0, y1), (x1, y0), (x1, y1)}
+#: (polygon, tile) pairs per mask stack.  One boolean stack of them is
+#: pairs × TILE_PX² bytes (10 MB at 4096 pairs of 50×50 tiles), and a
+#: chunk holds about six such stacks at once (the mask, its valid-pixel
+#: gather, the padded copy and scanline toggles, the gathered int16
+#: grids): ~60 MB.  The Arrow batch size
+#: (``spark.sql.execution.arrow.maxRecordsPerBatch``) is a deployment
+#: setting, so the bound is kept per chunk, not per batch — the same
+#: reasoning as ``functions.dissolve.MAX_BATCH_BANDS``.
+MASK_CHUNK_PAIRS = 4096
 
 
-def _pixel_runs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Per (polygon, tile) row → covered non-NODATA scanline runs.
+def _decoded_tiles(rb: pa.RecordBatch):
+    """Each distinct tile of the batch, decoded once: (tile index of each
+    row, int16 grids (T, TILE_PX, TILE_PX), centroid lons (T, TILE_PX),
+    centroid lats (T, TILE_PX), tx (T,), ty (T,))."""
+    tile = rb.column("image_id").dictionary_encode().indices.to_numpy()
+    _, first = np.unique(tile, return_index=True)   # codes: first-seen order
+    off, data = binary_buffers(rb.column("bytes"))
+    fmts = rb.column("fmt").take(first).to_pylist()
+    ws = rb.column("w").to_numpy()[first]
+    hs = rb.column("h").to_numpy()[first]
+    grids = np.empty((len(first), TILE_PX, TILE_PX), np.int16)
+    for t, (i, fmt) in enumerate(zip(first, fmts)):
+        grid = image_codec.decode(data[off[i]:off[i + 1]].tobytes(), fmt,
+                                  int(ws[t]), int(hs[t]))
+        if grid.shape != (TILE_PX, TILE_PX):
+            # with_pixel_coords derives image_id/x/y from gx, gy using
+            # the constant TILE_PX — a tile of any other size would
+            # silently produce wrong coordinates downstream
+            img = rb.column("image_id")[int(i)].as_py()
+            raise AssertionError(
+                f"tile {img} is {grid.shape[1]}x{grid.shape[0]}, "
+                f"expected {TILE_PX}x{TILE_PX}"
+            )
+        grids[t] = grid
+    ul_x = rb.column("ul_x").to_numpy()[first]
+    ul_y = rb.column("ul_y").to_numpy()[first]
+    px = rb.column("px").to_numpy()[first]
+    half = np.arange(TILE_PX) + 0.5
+    return (tile, grids,
+            ul_x[:, None] + half * px[:, None],
+            ul_y[:, None] - half * px[:, None],
+            np.rint((ul_x - WORLD_X0) / TILE_DEG).astype(np.int64),
+            np.rint((WORLD_Y0 - ul_y) / TILE_DEG).astype(np.int64))
 
-    Tile-keyed cache holds the decoded grid AND its centroid coordinate
-    vectors/grids (they depend only on the tile, not the polygon — the
-    former per-pair meshgrid rebuild dominated the kernel).  Exactly
-    rectangular rings take an interval-comparison fast path (identical
-    covered set to the boundary-inclusive even-odd PIP for axis-aligned
-    rectangles — asserted against a numpy centroid-in-ring mask in
-    tests/test_polygon.py); everything else runs the general vectorized
-    PIP over the cached centroid grid.
+
+def _ring_points(ring: pa.Array):
+    """(lon, lat, starts, ends) of a ``ring`` column: ring r's points are
+    ``lon[starts[r]:ends[r]]``, as given (closed or not)."""
+    off = list_offsets(ring)
+    pts = ring.values
+    starts, ends = off[:-1], off[1:]
+    if (ends <= starts).any():
+        raise ValueError("a polygon ring has no points")
+    return (pts.field("lon").to_numpy(zero_copy_only=False),
+            pts.field("lat").to_numpy(zero_copy_only=False), starts, ends)
+
+
+def _axis_rects(x: np.ndarray, y: np.ndarray, starts: np.ndarray,
+                ends: np.ndarray):
+    """Which rings, once closed, are exactly an axis-aligned rectangle:
+    5 points, each edge axis-parallel, corner set == bbox corner set.
+    Zero-width and zero-height rectangles count (the interval test is
+    exact there too).  One vectorized test over every ring; returns
+    (is_rect (n,), bbox (n, 4) as x0, x1, y0, y1 — meaningful where
+    ``is_rect``)."""
+    n = len(starts)
+    closed = (x[starts] == x[ends - 1]) & (y[starts] == y[ends - 1])
+    cand = np.flatnonzero(ends - starts + ~closed == 5)
+    idx = starts[cand, None] + np.arange(5)
+    open_ = ~closed[cand]
+    idx[open_, 4] = starts[cand][open_]            # the closing point
+    xs, ys = x[idx], y[idx]
+    x0, x1 = xs.min(axis=1), xs.max(axis=1)
+    y0, y1 = ys.min(axis=1), ys.max(axis=1)
+    cx, cy = xs[:, :4], ys[:, :4]
+    ok = ((np.diff(xs, axis=1) == 0.0) | (np.diff(ys, axis=1) == 0.0)).all(axis=1)
+    ok &= (((cx == x0[:, None]) | (cx == x1[:, None]))
+           & ((cy == y0[:, None]) | (cy == y1[:, None]))).all(axis=1)
+    for bx, by in ((x0, y0), (x0, y1), (x1, y0), (x1, y1)):
+        ok &= ((cx == bx[:, None]) & (cy == by[:, None])).any(axis=1)
+    is_rect = np.zeros(n, dtype=bool)
+    is_rect[cand] = ok
+    bbox = np.zeros((n, 4))
+    bbox[cand] = np.stack([x0, x1, y0, y1], axis=1)
+    return is_rect, bbox
+
+
+def _closed_ring(x: np.ndarray, y: np.ndarray, s: int, e: int):
+    """Ring ``x[s:e], y[s:e]`` with its first point appended when it is
+    not closed."""
+    rx, ry = x[s:e], y[s:e]
+    if rx[0] != rx[-1] or ry[0] != ry[-1]:
+        rx, ry = np.append(rx, rx[0]), np.append(ry, ry[0])
+    return rx, ry
+
+
+def _pair_run_chunks(rb: pa.RecordBatch):
+    """Covered non-NODATA scanline runs of a batch of (polygon, tile)
+    rows — the shared rasterization core of the run and blob kernels.
+
+    Per chunk of at most ``MASK_CHUNK_PAIRS`` rows, one boolean mask
+    stack of shape (rows, TILE_PX, TILE_PX): exactly rectangular rings
+    (:func:`_axis_rects`) fill it with one interval comparison for all
+    of them (the covered set of the boundary-inclusive even-odd PIP for
+    axis-aligned rectangles — asserted against the per-pair reference
+    in tests/test_properties.py); every other ring runs
+    ``points_in_ring`` over its tile's centroid grid, one row at a time.
+    The runs come out of the whole stack at once: the toggles of each
+    zero-padded scanline alternate run start, run end, and one boolean
+    gather of the stacked grids is every run's z values concatenated.
+
+    Yields, per chunk, for the rows with at least one covered pixel (in
+    row order): (poly_id, runs per row, pixels per row) and, per run in
+    (row, y, x0) order, int64 (gy, gx0, length), plus the int16 z of
+    every run concatenated.
     """
-    cols = [f.name for f in RUN_SCHEMA.fields]
-    for pdf in batches:
-        poly_ids: list[np.ndarray] = []
-        gys: list[np.ndarray] = []
-        gx0s: list[np.ndarray] = []
-        zs: list[np.ndarray] = []
-        for pid, grid, mask, tx, ty in _iter_pair_masks(pdf):
-            gy, gx0, ln = _mask_runs(mask, tx, ty)
-            # fully vectorized run assembly (no per-run Python): masked
-            # values in row-major order ARE the runs concatenated in
-            # (y, x0) order, so one boolean gather + np.split at the
-            # run-length boundaries rebuilds every run's z slice
-            poly_ids.append(np.full(len(gy), pid, np.int64))
-            gys.append(gy)
-            gx0s.append(gx0)
-            zs.extend(np.split(grid[mask], np.cumsum(ln)[:-1]))
-        empty = np.empty(0, np.int64)
-        yield pd.DataFrame(
-            {"poly_id": np.concatenate(poly_ids) if poly_ids else empty,
-             "gy": np.concatenate(gys) if gys else empty,
-             "gx0": np.concatenate(gx0s) if gx0s else empty,
-             # explicit object dtype: an empty batch would otherwise
-             # infer float64, which Arrow can't convert to list<int32>
-             "zs": pd.Series(zs, dtype=object)},
-            columns=cols,
-        )
+    tile, grids, cxv, cyv, tx, ty = _decoded_tiles(rb)
+    valid = grids != NODATA
+    x, y, starts, ends = _ring_points(rb.column("ring"))
+    is_rect, bbox = _axis_rects(x, y, starts, ends)
+    pid = rb.column("poly_id").to_numpy()
+    centroids = {}   # tile → flattened centroid grids, for the general PIP
+    for r0 in range(0, rb.num_rows, MASK_CHUNK_PAIRS):
+        rows = slice(r0, r0 + MASK_CHUNK_PAIRS)
+        t = tile[rows]
+        rect = is_rect[rows]
+        mask = np.empty((len(t), TILE_PX, TILE_PX), dtype=bool)
+        if rect.any():
+            tr = t[rect]
+            x0, x1, y0, y1 = (c[:, None] for c in bbox[rows][rect].T)
+            x_in = (cxv[tr] >= x0) & (cxv[tr] <= x1)
+            y_in = (cyv[tr] >= y0) & (cyv[tr] <= y1)
+            mask[rect] = y_in[:, :, None] & x_in[:, None, :]
+        for k in np.flatnonzero(~rect):
+            if t[k] not in centroids:
+                centroids[t[k]] = (np.broadcast_to(cxv[t[k]], (TILE_PX, TILE_PX)).ravel(),
+                                   np.repeat(cyv[t[k]], TILE_PX))
+            rx, ry = _closed_ring(x, y, starts[r0 + k], ends[r0 + k])
+            mask[k] = points_in_ring(*centroids[t[k]], rx, ry).reshape(TILE_PX, TILE_PX)
+        mask &= valid[t]
+        p, ys, xs = np.nonzero(np.diff(mask, axis=2, prepend=False, append=False))
+        p, ys, xs0, xs1 = p[::2], ys[::2], xs[::2], xs[1::2]
+        n_px = mask.sum(axis=(1, 2))
+        kept = n_px > 0
+        yield (pid[rows][kept], np.bincount(p, minlength=len(t))[kept], n_px[kept],
+               ty[t[p]] * TILE_PX + ys, tx[t[p]] * TILE_PX + xs0, xs1 - xs0,
+               grids[t][mask])
 
 
-def _mask_runs(mask: np.ndarray, tx: int, ty: int):
-    """Scanline runs of one tile's covered-pixel mask as GLOBAL
-    (gy, gx0, length) int64 arrays in (y, x0) order — the ±1 edges of
-    each scanline's 0-padded mask are the run starts and ends."""
-    d = np.diff(np.pad(mask, ((0, 0), (1, 1))).astype(np.int8), axis=1)
-    ys, xs0 = np.nonzero(d == 1)          # run starts (inclusive)
-    _, xs1 = np.nonzero(d == -1)          # run ends (exclusive)
-    h, w = mask.shape
-    return (ty * h + ys.astype(np.int64), tx * w + xs0.astype(np.int64),
-            xs1 - xs0)
+_RUN_ARROW = to_arrow_schema(RUN_SCHEMA)
 
 
-def _iter_pair_masks(pdf: pd.DataFrame):
-    """(poly_id, grid, covered-mask, tx, ty) per (polygon, tile) pair —
-    the shared rasterization core of the run/blob kernels.  Column zip
-    instead of ``iterrows`` (the per-row Series construction measurably
-    outweighed the 50×50 mask math); tile-keyed cache holds the decoded
-    grid and centroid vectors (they depend only on the tile)."""
-    tile_cache: dict[str, tuple] = {}
-    for img, data, fmt, w0, h0, ul_x, ul_y, px, ring, pid in zip(
-        pdf["image_id"], pdf["bytes"], pdf["fmt"], pdf["w"], pdf["h"],
-        pdf["ul_x"], pdf["ul_y"], pdf["px"], pdf["ring"], pdf["poly_id"],
-    ):
-        ctx = tile_cache.get(img)
-        if ctx is None:
-            grid = image_codec.decode(data, fmt, int(w0), int(h0))
-            h, w = grid.shape
-            if w != TILE_PX or h != TILE_PX:
-                # with_pixel_coords derives image_id/x/y from gx, gy using
-                # the constant TILE_PX — a tile of any other size would
-                # silently produce wrong coordinates downstream
-                raise AssertionError(
-                    f"tile {img} is {w}x{h}, expected {TILE_PX}x{TILE_PX}"
-                )
-            cxv = ul_x + (np.arange(w) + 0.5) * px    # centroid lons
-            cyv = ul_y - (np.arange(h) + 0.5) * px    # centroid lats
-            ctx = (grid, grid != NODATA, cxv, cyv,
-                   np.broadcast_to(cxv, (h, w)).ravel(),
-                   np.repeat(cyv, w),
-                   int(round((ul_x - WORLD_X0) / TILE_DEG)),
-                   int(round((WORLD_Y0 - ul_y) / TILE_DEG)))
-            tile_cache[img] = ctx
-        grid, valid, cxv, cyv, cxr, cyr, tx, ty = ctx
-        h, w = grid.shape
-        rx, ry = ring_to_arrays(ring)
-        if _is_axis_rect(rx, ry):
-            x_in = (cxv >= rx.min()) & (cxv <= rx.max())
-            y_in = (cyv >= ry.min()) & (cyv <= ry.max())
-            mask = y_in[:, None] & x_in[None, :]
-        else:
-            mask = points_in_ring(cxr, cyr, rx, ry).reshape(h, w)
-        mask = mask & valid
-        if not mask.any():
-            continue
-        yield int(pid), grid, mask, tx, ty
+def _pixel_runs(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """Per (polygon, tile) row → covered non-NODATA scanline runs
+    (:func:`_pair_run_chunks`), one output batch per mask chunk."""
+    for rb in batches:
+        for pid, n_runs, _, gy, gx0, ln, z in _pair_run_chunks(rb):
+            yield record_batch(_RUN_ARROW, [
+                pa.array(np.repeat(pid, n_runs)), pa.array(gy), pa.array(gx0),
+                list_array(ln, z)])
 
 
 # Opaque-blob run transfer for the dissolve pipeline: one row per
@@ -262,6 +320,8 @@ def _iter_pair_masks(pdf: pd.DataFrame):
 # memcpy, the cache stores ~9k blob rows instead of ~300k array rows,
 # and the stats scan reads 2 pruned int columns instead of re-folding
 # every array (guide §8: move heavy bytes once, decide on small rows).
+# _pack_run_blobs writes the format and _unpack_run_blobs reads it, a
+# whole batch at a time.
 RUN_BLOB_SCHEMA = T.StructType(
     [
         T.StructField("poly_id", T.LongType()),
@@ -274,39 +334,86 @@ RUN_BLOB_SCHEMA = T.StructType(
 )
 
 
-def _pixel_run_blobs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cols = [f.name for f in RUN_BLOB_SCHEMA.fields]
-    for pdf in batches:
-        pids: list[int] = []
-        blobs: list[bytes] = []
-        mins: list[int] = []
-        maxs: list[int] = []
-        sums: list[int] = []
-        ns: list[int] = []
-        for pid, grid, mask, tx, ty in _iter_pair_masks(pdf):
-            gy, gx0, ln = _mask_runs(mask, tx, ty)
-            n = len(gy)
-            zcat = grid[mask].astype("<i2", copy=False)
-            head = np.empty(1 + 3 * n, dtype="<i4")
-            head[0] = n
-            head[1:1 + n] = gy
-            head[1 + n:1 + 2 * n] = gx0
-            head[1 + 2 * n:] = ln
-            pids.append(pid)
-            blobs.append(head.tobytes() + zcat.tobytes())
-            mins.append(int(zcat.min()))
-            maxs.append(int(zcat.max()))
-            sums.append(int(zcat.sum(dtype=np.int64)))
-            ns.append(len(zcat))
-        yield pd.DataFrame(
-            {"poly_id": np.asarray(pids, dtype=np.int64),
-             "blob": pd.Series(blobs, dtype=object),
-             "run_min": np.asarray(mins, dtype=np.int32),
-             "run_max": np.asarray(maxs, dtype=np.int32),
-             "run_sum": np.asarray(sums, dtype=np.int64),
-             "run_n": np.asarray(ns, dtype=np.int32)},
-            columns=cols,
-        )
+def _split_mask(first_len: np.ndarray, total_len: np.ndarray) -> np.ndarray:
+    """Boolean mask over consecutive segments of ``total_len`` items:
+    True on the first ``first_len`` items of each segment."""
+    delta = np.zeros(int(total_len.sum()) + 1, dtype=np.int8)
+    start = np.zeros(len(total_len), dtype=np.int64)
+    np.cumsum(total_len[:-1], out=start[1:])
+    delta[start] += 1
+    delta[start + first_len] -= 1
+    return np.cumsum(delta[:-1], dtype=np.int8).astype(bool)
+
+
+def _head_slots(n_runs: np.ndarray):
+    """Word offset of each pair's int32 header and, per run, the offset
+    of its gy word (gx0 is ``n`` words on, len ``2n``) and its pair's
+    run count."""
+    head = np.zeros(len(n_runs), dtype=np.int64)
+    np.cumsum(1 + 3 * n_runs[:-1], out=head[1:])
+    first_run = np.zeros(len(n_runs), dtype=np.int64)
+    np.cumsum(n_runs[:-1], out=first_run[1:])
+    pair = np.repeat(np.arange(len(n_runs)), n_runs)
+    base = head[pair] + 1 + (np.arange(len(pair)) - first_run[pair])
+    return head, base, n_runs[pair]
+
+
+def _pack_run_blobs(n_runs, n_px, gy, gx0, ln, z):
+    """(blob lengths, blob bytes) of ``RUN_BLOB_SCHEMA``'s packed format
+    for pairs of ``n_runs`` runs and ``n_px`` pixels each, run arrays in
+    pair order."""
+    head, base, n = _head_slots(n_runs)
+    words = np.empty(int((1 + 3 * n_runs).sum()), dtype="<i4")
+    words[head] = n_runs
+    words[base] = gy
+    words[base + n] = gx0
+    words[base + 2 * n] = ln
+    head_bytes = 4 * (1 + 3 * n_runs)
+    lengths = head_bytes + 2 * n_px
+    data = np.empty(int(lengths.sum()), dtype=np.uint8)
+    is_head = _split_mask(head_bytes, lengths)
+    data[is_head] = words.view(np.uint8)
+    data[~is_head] = z.astype("<i2", copy=False).view(np.uint8)
+    return lengths, data
+
+
+def _unpack_run_blobs(blob: pa.Array):
+    """Every blob of a ``RUN_BLOB_SCHEMA`` ``blob`` column at once:
+    (runs per row, gy, gx0, length per run, z per pixel), read through
+    the column's offsets and data buffers; the run arrays are int32
+    and ``z`` is int16, in row order."""
+    off, data = binary_buffers(blob)
+    data = data[off[0]:off[-1]]
+    off = off - off[0]
+    n_runs = (data[off[:-1, None] + np.arange(4)].copy()
+              .view("<i4").ravel().astype(np.int64))
+    head_bytes = 4 * (1 + 3 * n_runs)
+    is_head = _split_mask(head_bytes, np.diff(off))
+    words = data[is_head].view("<i4")
+    _, base, n = _head_slots(n_runs)
+    return (n_runs, words[base], words[base + n], words[base + 2 * n],
+            data[~is_head].view("<i2"))
+
+
+_RUN_BLOB_ARROW = to_arrow_schema(RUN_BLOB_SCHEMA)
+
+
+def _pixel_run_blobs(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """Per (polygon, tile) row → one packed run blob plus the scalar
+    min/max/sum/count of its z values, one output batch per mask chunk."""
+    for rb in batches:
+        for pid, n_runs, n_px, gy, gx0, ln, z in _pair_run_chunks(rb):
+            lengths, data = _pack_run_blobs(n_runs, n_px, gy, gx0, ln, z)
+            stats = [np.empty(0, np.int16)] * 3
+            if len(pid):
+                at = np.zeros(len(n_px), dtype=np.int64)
+                np.cumsum(n_px[:-1], out=at[1:])
+                stats = [np.minimum.reduceat(z, at), np.maximum.reduceat(z, at),
+                         np.add.reduceat(z.astype(np.int64), at)]
+            yield record_batch(_RUN_BLOB_ARROW, [
+                pa.array(pid), binary_array(lengths, data),
+                pa.array(stats[0].astype(np.int32)), pa.array(stats[1].astype(np.int32)),
+                pa.array(stats[2].astype(np.int64)), pa.array(n_px.astype(np.int32))])
 
 
 def polygon_pixel_run_blobs(polygons_df: DataFrame, images_df: DataFrame) -> DataFrame:
@@ -314,7 +421,7 @@ def polygon_pixel_run_blobs(polygons_df: DataFrame, images_df: DataFrame) -> Dat
     the dissolve pipeline's transfer/cache format (see RUN_BLOB_SCHEMA).
     Huge polygon bounding boxes: see the limit noted on
     :func:`polygon_tile_join`."""
-    return polygon_tile_join(polygons_df, images_df).mapInPandas(
+    return polygon_tile_join(polygons_df, images_df).mapInArrow(
         _pixel_run_blobs, schema=RUN_BLOB_SCHEMA)
 
 
@@ -346,7 +453,7 @@ def polygon_pixels(polygons_df: DataFrame, images_df: DataFrame,
     :func:`polygon_tile_join`.  ``spread`` is ignored: it is kept only
     because existing benchmark calls pass it.
     """
-    runs = polygon_tile_join(polygons_df, images_df).mapInPandas(
+    runs = polygon_tile_join(polygons_df, images_df).mapInArrow(
         _pixel_runs, schema=RUN_SCHEMA)
     px = runs.select(
         "poly_id", "gy", "gx0", F.posexplode("zs").alias("pos", "z")

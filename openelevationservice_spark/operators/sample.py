@@ -20,13 +20,16 @@ from __future__ import annotations
 
 from typing import Iterator
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..functions import image_codec
+from ..functions.arrow_batches import binary_buffers, list_array, record_batch
 
 
 def broadcast_if_fits(index_df: DataFrame) -> DataFrame:
@@ -51,7 +54,9 @@ def pixel_index(images_df: DataFrame) -> DataFrame:
     Decoding runs ONCE per tile (Arrow batches); downstream queries
     sample pixels entirely JVM-side via ``element_at`` inside the same
     whole-stage-codegen'd projection as the index join — no Python
-    and no Arrow transfer anywhere in the per-query hot path.
+    and no Arrow transfer anywhere in the per-query hot path.  The
+    decode kernel reads the tile bytes through the binary column's
+    buffers and emits ``pix`` as one int16 values buffer per batch.
     """
     from ..sources.tiles import tile_index
 
@@ -60,18 +65,22 @@ def pixel_index(images_df: DataFrame) -> DataFrame:
         [f for f in idx.schema.fields if f.name != "bytes"]
         + [T.StructField("pix", T.ArrayType(T.ShortType()), False)]
     )
-    cols = [f.name for f in schema.fields]
+    out = to_arrow_schema(schema)
+    keep = out.names[:-1]
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["pix"] = [
-                image_codec.decode(b, f, int(w), int(h)).ravel()
-                for b, f, w, h in zip(pdf["bytes"], pdf["fmt"], pdf["w"], pdf["h"])
-            ]
-            yield pdf[cols]
+    def decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            off, data = binary_buffers(rb.column("bytes"))
+            grids = [image_codec.decode(data[off[i]:off[i + 1]].tobytes(), f, int(w), int(h))
+                     for i, (f, w, h) in enumerate(zip(rb.column("fmt").to_pylist(),
+                                                       rb.column("w").to_numpy(),
+                                                       rb.column("h").to_numpy()))]
+            pix = list_array(np.array([g.size for g in grids], dtype=np.int64),
+                             np.concatenate([g.ravel() for g in grids] or
+                                            [np.empty(0, np.int16)]))
+            yield record_batch(out, [rb.column(n) for n in keep] + [pix])
 
-    return idx.mapInPandas(decode, schema=schema)
+    return idx.mapInArrow(decode, schema=schema)
 
 
 def gather_z_jvm(df: DataFrame) -> DataFrame:

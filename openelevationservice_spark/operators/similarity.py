@@ -38,7 +38,9 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
+from ..functions.arrow_batches import binary_buffers, record_batch
 from ..plans.cache import lease
 
 #: cap on driver-collected query rows for the brute-force paths — the
@@ -116,18 +118,18 @@ def _topk_keep(q: np.ndarray, s: np.ndarray, c: np.ndarray, k: int) -> np.ndarra
     return np.sort(order[rank < k])
 
 
-def _carry_topk(batches, k: int, q: str, s: str, c: str) -> dict | None:
-    """Running top-k over a stream of column dicts (name → array): after
-    every batch the carry is cut back to ≤ k rows per query.  Top-k of
-    carry ∪ batch == top-k of the union (a row outside some prefix's
-    top-k is outside the whole stream's), so memory is O(q·k + batch).
-    ``None`` when the stream is empty."""
+def _carry_topk(tables, k: int, q: str, s: str, c: str) -> pa.Table | None:
+    """Running top-k over a stream of Arrow tables: after every table the
+    carry is cut back to ≤ k rows per query.  Top-k of carry ∪ table ==
+    top-k of the union (a row outside some prefix's top-k is outside
+    the whole stream's), so memory is O(q·k + batch).  The kept rows
+    are a ``take`` of the input columns, so their types and nulls pass
+    through untouched.  ``None`` when the stream is empty."""
     carry = None
-    for cols in batches:
+    for t in tables:
         if carry is not None:
-            cols = {n: np.concatenate([carry[n], a]) for n, a in cols.items()}
-        keep = _topk_keep(cols[q], cols[s], cols[c], k)
-        carry = {n: a[keep] for n, a in cols.items()}
+            t = pa.concat_tables([carry, t])
+        carry = t.take(_topk_keep(*(t.column(n).to_numpy() for n in (q, s, c)), k))
     return carry
 
 
@@ -145,7 +147,7 @@ def topk_per_query(scored: DataFrame, k: int, query_id: str, corpus_id: str) -> 
     shuffle-free per-partition prune, then one window.
 
     Stage 1 keeps each partition's local top-k per query (a
-    ``mapInPandas`` over the three narrow score columns — values pass
+    ``mapInArrow`` over the three narrow score columns — values pass
     through bit-exact, only row selection happens) with ZERO shuffle;
     the final per-query ``row_number`` window then ranks only ≤ P·k
     survivors per query.  The full score set never crosses an exchange —
@@ -166,15 +168,16 @@ def topk_per_query(scored: DataFrame, k: int, query_id: str, corpus_id: str) -> 
     transfer volume.
     """
     schema = scored.schema
-    cols = [f.name for f in schema.fields]
+    out = to_arrow_schema(schema)
 
     def prune(batches):
-        carry = _carry_topk(({n: pdf[n].to_numpy() for n in cols}
-                             for pdf in batches if len(pdf)),
+        carry = _carry_topk((pa.Table.from_batches([rb]) for rb in batches if rb.num_rows),
                             k, query_id, "sim", corpus_id)
-        yield pd.DataFrame(carry) if carry is not None else pd.DataFrame(columns=cols)
+        if carry is not None:
+            for rb in carry.combine_chunks().to_batches():
+                yield record_batch(out, rb.columns)
 
-    return _rank_topk(scored.mapInPandas(prune, schema=schema), k, query_id, corpus_id)
+    return _rank_topk(scored.mapInArrow(prune, schema=schema), k, query_id, corpus_id)
 
 
 #: element type of a packed vector column: written by :func:`pack_vectors`,
@@ -206,19 +209,14 @@ def pack_vectors(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
 
 def _unpack_binary(arr: "pa.Array", dim: int) -> np.ndarray:
     """View a fixed-width packed ``binary`` Arrow column as an (n, dim)
-    matrix straight off the Arrow buffers — ZERO per-row python objects.
-
-    A ``mapInPandas`` conversion of a binary column would materialize
-    one python ``bytes`` object per row; this reads the offsets buffer
-    once and reinterprets the shared data buffer in place."""
+    matrix straight off the Arrow buffers — ZERO per-row python objects:
+    the offsets buffer is read once and the shared data buffer is
+    reinterpreted in place."""
     n = len(arr)
-    w = dim * PACKED_DTYPE.itemsize
-    off_dtype = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
-    off = np.frombuffer(arr.buffers()[1], dtype=off_dtype)[arr.offset:arr.offset + n + 1]
-    if off[-1] - off[0] != n * w:
+    off, data = binary_buffers(arr)
+    if off[-1] - off[0] != n * dim * PACKED_DTYPE.itemsize:
         raise ValueError(
             f"packed vector column is not fixed-width ({dim} x {PACKED_DTYPE})")
-    data = np.frombuffer(arr.buffers()[2], dtype=np.uint8)
     return data[off[0]:off[-1]].view(PACKED_DTYPE).reshape(n, dim)
 
 
@@ -226,7 +224,7 @@ def _unpack_list(arr: "pa.Array", dim: int) -> np.ndarray:
     """Flatten a fixed-length ``list<float>`` Arrow column to an
     (n, dim) matrix — one contiguous child-buffer view (``flatten`` is
     a slice of the child array when offsets are contiguous), instead of
-    the ``mapInPandas`` route of one numpy object per row + ``np.stack``."""
+    one numpy object per row + ``np.stack``."""
     flat = arr.flatten().to_numpy(zero_copy_only=False)
     if flat.size != len(arr) * dim:
         raise ValueError("embedding lists are not fixed-length")
@@ -309,8 +307,6 @@ def cosine_topk(corpus_df: DataFrame, queries_df: DataFrame, k: int = 3) -> Data
     def candidates(rb):
         # long-form (query index, corpus id, sim) rows at or above each
         # query's k-th score in this batch — all k-th ties included
-        cids = rb.column(rb.schema.get_field_index("vec_id")) \
-                 .to_numpy(zero_copy_only=False)
         varr = rb.column(rb.schema.get_field_index("embedding"))
         mat = (_unpack_binary(varr, dim) if is_packed
                else _unpack_list(varr, dim)).astype(np.float64)
@@ -320,7 +316,8 @@ def cosine_topk(corpus_df: DataFrame, queries_df: DataFrame, k: int = 3) -> Data
             rows, qi = np.nonzero(sims >= np.partition(sims, n - k, axis=0)[n - k])
         else:
             rows, qi = np.divmod(np.arange(n * nq), nq)
-        return {"q": qi, "c": cids[rows], "s": sims[rows, qi]}
+        return pa.table({"q": qi, "c": rb.column("vec_id").take(pa.array(rows)),
+                         "s": sims[rows, qi]})
 
     def score_prune(batches):
         carry = _carry_topk((candidates(rb) for rb in batches if rb.num_rows),
@@ -328,7 +325,9 @@ def cosine_topk(corpus_df: DataFrame, queries_df: DataFrame, k: int = 3) -> Data
         if carry is None:
             return
         yield pa.RecordBatch.from_pandas(pd.DataFrame({
-            "q_id": qids[carry["q"]], "vec_id": carry["c"], "sim": carry["s"],
+            "q_id": qids[carry.column("q").to_numpy()],
+            "vec_id": carry.column("c").to_numpy(),
+            "sim": carry.column("s").to_numpy(),
         }), preserve_index=False)
 
     pruned = corpus_df.select("vec_id", "embedding").mapInArrow(score_prune, schema)

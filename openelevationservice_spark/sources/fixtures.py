@@ -33,13 +33,16 @@ import json
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..constants import NODATA, PX, TILE_DEG, TILE_PX, WORLD_X0, WORLD_Y0
 from ..functions import image_codec
+from ..functions.arrow_batches import join_binary, record_batch
 
 # Integer elevation-field parameters (shared with the SQL oracle).
 Z_A, Z_B, Z_M1 = 31, 17, 929
@@ -160,24 +163,34 @@ IMAGES_SCHEMA = T.StructType(
 )
 
 
+_IMAGES_ARROW = to_arrow_schema(IMAGES_SCHEMA)
+
+
 def make_images_df(spark: SparkSession, world: World = DEFAULT_WORLD) -> DataFrame:
     """Distributed images-table generator: the tiles of ``world``, in
     ``IMAGE_FORMATS`` by checkerboard position, over one partition per
     core (at most one per tile).
 
-    Tiles are *generated on the executors* (one task per tile-row band),
-    so world size scales without driver memory pressure — the ingest
-    path a 10^12-image table would use, minus the object-store read.
+    Tiles are *generated on the executors* (one task per band of
+    consecutive tiles in (ty, tx) order), so world size scales without
+    driver memory pressure — the ingest path a 10^12-image table would
+    use, minus the object-store read.  The (tx, ty) list is one narrow
+    ``range`` source with Column arithmetic, so no exchange sits under
+    the generator.
     """
-    tiles = [(tx, ty)
-             for ty in range(world.ty0, world.ty0 + world.ny)
-             for tx in range(world.tx0, world.tx0 + world.nx)]
-    nparts = min(len(tiles), max(spark.sparkContext.defaultParallelism, 1))
-    tile_df = spark.createDataFrame(tiles, schema="tx long, ty long").repartition(nparts)
+    nparts = min(world.n_tiles, max(spark.sparkContext.defaultParallelism, 1))
+    i = F.col("id")
+    tile_df = spark.range(world.n_tiles, numPartitions=nparts).select(
+        (F.lit(world.tx0) + i % world.nx).alias("tx"),
+        (F.lit(world.ty0) + F.floor(i / world.nx)).alias("ty"))
 
     def gen(batches):
-        for pdf in batches:
-            rows = [tile_row(int(tx), int(ty)) for tx, ty in zip(pdf["tx"], pdf["ty"])]
-            yield pd.DataFrame(rows, columns=[f.name for f in IMAGES_SCHEMA.fields])
+        for rb in batches:
+            rows = [tile_row(tx, ty) for tx, ty in zip(rb.column("tx").to_pylist(),
+                                                       rb.column("ty").to_pylist())]
+            cols = [[r[f.name] for r in rows] for f in _IMAGES_ARROW]
+            yield record_batch(_IMAGES_ARROW, [
+                join_binary(col) if f.type == pa.binary() else pa.array(col, f.type)
+                for f, col in zip(_IMAGES_ARROW, cols)])
 
-    return tile_df.mapInPandas(gen, schema=IMAGES_SCHEMA)
+    return tile_df.mapInArrow(gen, schema=IMAGES_SCHEMA)

@@ -14,9 +14,10 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from openelevationservice_spark.constants import (
-    COORD_PRECISION, NCELL_X, NUM_RANGES, TILE_DEG, WORLD_X0, WORLD_Y0)
-from openelevationservice_spark.functions import cells
+    COORD_PRECISION, NCELL_X, NODATA, NUM_RANGES, TILE_DEG, WORLD_X0, WORLD_Y0)
+from openelevationservice_spark.functions import cells, image_codec
 from openelevationservice_spark.functions.dissolve import dissolve_pixels_rings
+from openelevationservice_spark.functions.geometry import points_in_ring
 from openelevationservice_spark.operators.dedup import (
     MERSENNE31, minhash_perm_consts, word_shingles)
 from openelevationservice_spark.operators.similarity import deterministic_hyperplanes
@@ -279,3 +280,70 @@ def label_counts(gx: np.ndarray, gy: np.ndarray) -> tuple[int, int, int, int]:
         _n_components(bg, 4) - 1,
         _n_components(bg, 8) - 1,
     )
+
+
+def ring_to_arrays(ring) -> tuple[np.ndarray, np.ndarray]:
+    """list of (lon, lat) pairs / dicts → (xs, ys) float64 arrays (closed)."""
+    if len(ring) and isinstance(ring[0], dict):
+        xs = np.array([p["lon"] for p in ring], dtype=np.float64)
+        ys = np.array([p["lat"] for p in ring], dtype=np.float64)
+    else:
+        arr = np.asarray(ring, dtype=np.float64)
+        xs, ys = arr[:, 0], arr[:, 1]
+    if xs[0] != xs[-1] or ys[0] != ys[-1]:
+        xs = np.append(xs, xs[0])
+        ys = np.append(ys, ys[0])
+    return xs, ys
+
+
+def is_axis_rect(rx: np.ndarray, ry: np.ndarray) -> bool:
+    """True iff the closed ring is exactly an axis-aligned rectangle
+    (4 edges, each axis-parallel, corners = bbox corners) — one ring at
+    a time, the reference of ``operators.polygon._axis_rects``."""
+    if len(rx) != 5:
+        return False
+    dx = np.diff(rx)
+    dy = np.diff(ry)
+    if not np.all((dx == 0.0) | (dy == 0.0)):
+        return False
+    corners = set(zip(rx[:4].tolist(), ry[:4].tolist()))
+    x0, x1 = float(rx.min()), float(rx.max())
+    y0, y1 = float(ry.min()), float(ry.max())
+    return corners == {(x0, y0), (x0, y1), (x1, y0), (x1, y1)}
+
+
+RUN_COLUMNS = ["poly_id", "gy", "gx0", "len", "z"]
+
+
+def pair_runs_reference(pairs: pd.DataFrame) -> pd.DataFrame:
+    """The polygon rasterizer one (polygon, tile) row at a time: decode
+    the tile, mask the centroids the ring covers (an interval test for
+    an exact axis-aligned rectangle, ``points_in_ring`` otherwise) and
+    not NODATA, and cut each scanline of the mask into runs.  Rows
+    carry the columns of ``operators.polygon.polygon_tile_join``;
+    returns (poly_id, gy, gx0, len, z) per run, z as a tuple, in row
+    then (y, x0) order."""
+    out = []
+    for data, fmt, w, h, ul_x, ul_y, px, ring, pid in zip(
+            pairs["bytes"], pairs["fmt"], pairs["w"], pairs["h"], pairs["ul_x"],
+            pairs["ul_y"], pairs["px"], pairs["ring"], pairs["poly_id"]):
+        grid = image_codec.decode(data, fmt, int(w), int(h))
+        cxv = ul_x + (np.arange(w) + 0.5) * px
+        cyv = ul_y - (np.arange(h) + 0.5) * px
+        rx, ry = ring_to_arrays(ring)
+        if is_axis_rect(rx, ry):
+            mask = (((cyv >= ry.min()) & (cyv <= ry.max()))[:, None]
+                    & ((cxv >= rx.min()) & (cxv <= rx.max()))[None, :])
+        else:
+            mask = points_in_ring(np.broadcast_to(cxv, (h, w)).ravel(),
+                                  np.repeat(cyv, w), rx, ry).reshape(h, w)
+        mask &= grid != NODATA
+        tx = int(round((ul_x - WORLD_X0) / TILE_DEG))
+        ty = int(round((WORLD_Y0 - ul_y) / TILE_DEG))
+        d = np.diff(np.pad(mask, ((0, 0), (1, 1))).astype(np.int8), axis=1)
+        ys, xs0 = np.nonzero(d == 1)
+        _, xs1 = np.nonzero(d == -1)
+        for y, x0, x1 in zip(ys.tolist(), xs0.tolist(), xs1.tolist()):
+            out.append((int(pid), ty * h + y, tx * w + x0, x1 - x0,
+                        tuple(grid[y, x0:x1].tolist())))
+    return pd.DataFrame(out, columns=RUN_COLUMNS)

@@ -5,6 +5,7 @@ import numpy as np
 from openelevationservice_spark.constants import NODATA, PX, TILE_DEG
 from openelevationservice_spark.functions import image_codec as ic
 from openelevationservice_spark.sources import fixtures as fx
+from tests import plan_checks as pc
 from tests.inputs import REF_POINT_IN, REF_POINT_OUT, make_images_pdf
 
 
@@ -77,6 +78,19 @@ def test_make_images_df_distributed(spark):
     assert (pdf["image_id"] == ref["image_id"]).all()
     assert (pdf["phash"] == ref["phash"]).all()
     assert all(a == b for a, b in zip(pdf["bytes"], ref["bytes"]))
+
+
+def test_make_images_df_has_no_exchange_under_the_generator(spark):
+    """The (tx, ty) list is one narrow ``range`` source, so the plan of
+    the generated images table holds no exchange, and it keeps one
+    partition per core (at most one per tile)."""
+    world = fx.World(nx=4, ny=2)
+    df = fx.make_images_df(spark, world)
+    plan = pc.explain_str(df)
+    assert "MapInArrow" in plan
+    assert "Exchange" not in plan, plan
+    assert df.rdd.getNumPartitions() == min(world.n_tiles,
+                                            spark.sparkContext.defaultParallelism)
 
 
 def test_tile_alignment():

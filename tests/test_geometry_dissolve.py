@@ -2,8 +2,9 @@ import numpy as np
 
 from openelevationservice_spark.functions.dissolve import (_one_band_keys, _quad_counts,
                                                            batch_invariants)
-from openelevationservice_spark.functions.geometry import points_in_ring, ring_to_arrays
-from tests.references import _signed_area2, dissolve_area_px, dissolve_pixels, label_counts
+from openelevationservice_spark.functions.geometry import points_in_ring
+from tests.references import (_signed_area2, dissolve_area_px, dissolve_pixels, label_counts,
+                              ring_to_arrays)
 
 
 def test_pip_square_inclusive_boundary():
@@ -180,6 +181,7 @@ def test_invariants_partition_slices_oversized_batches():
     bands that follow them in the batch come back with area = cell
     count and the labeling's Euler numbers."""
     import pandas as pd
+    import pyarrow as pa
 
     from openelevationservice_spark.operators.color import (
         _SUB_GX_SHIFT,
@@ -199,14 +201,14 @@ def test_invariants_partition_slices_oversized_batches():
         cells = cells.astype("<i8")
         subs.append([cells[:3].tobytes(), cells[3:].tobytes()])
     n_all = n + len(holey)
-    batch = pd.DataFrame({
-        "poly_id": np.zeros(n_all, dtype=np.int64),
-        "height_base": np.arange(n_all, dtype=np.int64),
-        "subs": subs,
+    batch = pa.RecordBatch.from_pydict({
+        "poly_id": pa.array(np.zeros(n_all, dtype=np.int64)),
+        "height_base": pa.array(np.arange(n_all, dtype=np.int64)),
+        "subs": pa.array(subs, pa.list_(pa.binary())),
     })
     frames = list(_invariants_partition_subs(iter([batch])))
     assert len(frames) == 2
-    out = pd.concat(frames, ignore_index=True)
+    out = pd.concat([f.to_pandas() for f in frames], ignore_index=True)
     assert out["height_base"].tolist() == list(range(n_all))
     single = out.iloc[:n]
     assert (single["area_px"] == 1).all()

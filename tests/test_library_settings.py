@@ -93,6 +93,37 @@ def test_submit_leaves_cpus_to_build_session(monkeypatch):
     assert calls == [("point_elevation", "sf", None, None)]
 
 
+def _pandas_map_calls(tree: ast.AST) -> list[int]:
+    """Line numbers of ``<frame>.mapInPandas(...)`` calls."""
+    return sorted(node.lineno for node in ast.walk(tree)
+                  if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+                  and node.func.attr == "mapInPandas")
+
+
+def test_kernels_are_arrow_native():
+    """Every Python kernel under ``operators/`` and ``sources/`` is a
+    ``mapInArrow`` function: it reads its input through the Arrow
+    buffers and builds its output batch from whole numpy arrays, where
+    ``mapInPandas`` converts every batch to pandas and back (one
+    Python object per list or binary value)."""
+    offenders = []
+    for sub in ("operators", "sources"):
+        for path in sorted((PACKAGE / sub).rglob("*.py")):
+            rel = path.relative_to(PACKAGE).as_posix()
+            offenders += [f"{rel}:{line}" for line in
+                          _pandas_map_calls(ast.parse(path.read_text(), str(path)))]
+    assert not offenders, f"mapInPandas kernels: {offenders}"
+
+
+def test_detector_sees_pandas_map_calls():
+    src = ("df.mapInPandas(f, schema)\n"
+           "x = a.b.mapInPandas(\n    g, s)\n"
+           "df.mapInArrow(f, schema)\n"
+           "mapInPandas(f)\n"
+           "fn = df.mapInPandas\n")
+    assert _pandas_map_calls(ast.parse(src)) == [1, 2]
+
+
 def _shape_selectors(tree: ast.Module) -> list[str]:
     """``function(param)`` for each public module-level function that
     takes a banned shape-selector parameter."""

@@ -52,7 +52,7 @@ def test_densify_plan_has_no_exchange(spark):
         "line_id": [1], "x1": [13.2], "y1": [38.2], "x2": [13.21], "y2": [38.21]}))
     plan = pc.explain_str(densify_lines(lines))
     assert "Exchange" not in plan          # densify is shuffle-free
-    assert "MapInPandas" not in plan       # and pure JVM: no Arrow kernel
+    assert "MapIn" not in plan             # and pure JVM: no Arrow kernel
     assert "EvalPython" not in plan
 
 
@@ -93,7 +93,7 @@ def test_line_default_path_is_pure_jvm(spark, images):
         "line_id": [1], "x1": [13.2], "y1": [38.2], "x2": [13.21], "y2": [38.21]}))
     df = line_vertices_elevation(lines, images)
     plan = pc.explain_str(df)
-    # the pixel-index build decodes tiles (one MapInPandas on the
+    # the pixel-index build decodes tiles (one MapInArrow on the
     # broadcast side); the probe-side pipeline itself must be JVM-only
     probe = plan[plan.index("BroadcastHashJoin"):] + plan[:plan.index("Generate")]
     assert "ArrowEvalPython" not in probe
@@ -102,18 +102,18 @@ def test_line_default_path_is_pure_jvm(spark, images):
 
 def test_line_elevation_default_gather_is_jvm(spark, images):
     """The line vertices take the scale-safe JVM gather by default.
-    Exactly one MapInPandas node (build-side tile decode; formatted
+    Exactly one MapInArrow node (build-side tile decode; formatted
     explain prints each node twice — tree + detail); a Python gather
     would add a probe-side node."""
     lines = spark.createDataFrame(pd.DataFrame({
         "line_id": [1], "x1": [13.2], "y1": [38.2], "x2": [13.21], "y2": [38.21]}))
     plan = pc.explain_str(line_vertices_elevation(lines, images))
-    assert plan.count("MapInPandas") == 2
+    assert plan.count("MapInArrow") == 2
     assert "BatchEvalPython" not in plan
 
 
 def test_polygon_runs_plan_generates_rows_in_jvm(spark, images):
-    """Run-encoded polygon dump: exactly one probe-side MapInPandas (the
+    """Run-encoded polygon dump: exactly one probe-side MapInArrow (the
     run kernel); pixel rows come from a JVM Generate (posexplode)."""
     polys = spark.createDataFrame(
         pd.DataFrame({"poly_id": [0], "ring": [
@@ -124,8 +124,8 @@ def test_polygon_runs_plan_generates_rows_in_jvm(spark, images):
     df = polygon_pixels(polys, images)
     plan = pc.explain_str(df)
     assert "Generate" in plan and "posexplode" in plan
-    # two MapInPandas total: tile decode (build side) + run kernel
-    assert plan.count("MapInPandas") == 2
+    # two MapInArrow total: tile decode (build side) + run kernel
+    assert plan.count("MapInArrow") == 2
     assert "BatchEvalPython" not in plan
 
 

@@ -147,10 +147,8 @@ def centroid_mask_pixels(poly_id, ring, world):
     ``fixtures.z_field`` value is not NODATA, with the tile-caption
     centroid arithmetic (ul + (i + 0.5)·PX)."""
     from openelevationservice_spark.constants import TILE_PX
-    from openelevationservice_spark.functions.geometry import (
-        points_in_ring,
-        ring_to_arrays,
-    )
+    from openelevationservice_spark.functions.geometry import points_in_ring
+    from tests.references import ring_to_arrays
 
     rx, ry = ring_to_arrays(ring)
     i = np.arange(TILE_PX)
@@ -223,21 +221,36 @@ def test_polygon_pixels_shuffle_join_matches_oracle(spark, world, images, no_bro
 
 
 def test_is_axis_rect_detector():
-    import numpy as np
-    from openelevationservice_spark.operators.polygon import _is_axis_rect
+    """The batch detector on every ring at once agrees with the one-ring
+    reference, case by case, and gives the rectangles their bboxes."""
+    from openelevationservice_spark.operators.polygon import _axis_rects
+    from tests.references import is_axis_rect
+
     rect = (np.array([0.0, 2.0, 2.0, 0.0, 0.0]), np.array([0.0, 0.0, 3.0, 3.0, 0.0]))
-    assert _is_axis_rect(*rect)
     tri = (np.array([0.0, 2.0, 0.0, 0.0]), np.array([0.0, 0.0, 3.0, 0.0]))
-    assert not _is_axis_rect(*tri)
     # degenerate (zero-width) rectangle: fast path is still exact there
     # (points_in_ring's even-odd crossings cancel, leaving on_edge ==
     # the boundary-inclusive interval test), so detecting it is fine
     line = (np.array([0.0, 0.0, 0.0, 0.0, 0.0]), np.array([0.0, 0.0, 3.0, 3.0, 0.0]))
-    assert _is_axis_rect(*line)
     # axis-aligned hexagon (L-shape) → not a rect
     ell = (np.array([0.0, 2.0, 2.0, 1.0, 1.0, 0.0, 0.0]),
            np.array([0.0, 0.0, 1.0, 1.0, 2.0, 2.0, 0.0]))
-    assert not _is_axis_rect(*ell)
+    # the rectangle given unclosed: closing it makes the same ring
+    open_rect = (rect[0][:4], rect[1][:4])
+    # 5 points, axis-parallel edges, but one bbox corner missing (a
+    # spike back along an edge) → not a rect
+    spike = (np.array([0.0, 2.0, 2.0, 2.0, 0.0]), np.array([0.0, 0.0, 3.0, 0.0, 0.0]))
+    rings = [rect, tri, line, ell, open_rect, spike]
+    lens = np.array([len(x) for x, _ in rings])
+    ends = np.cumsum(lens)
+    is_rect, bbox = _axis_rects(np.concatenate([x for x, _ in rings]),
+                                np.concatenate([y for _, y in rings]), ends - lens, ends)
+    assert is_rect.tolist() == [True, False, True, False, True, False]
+    assert is_rect.tolist() == [is_axis_rect(*rect), is_axis_rect(*tri),
+                                is_axis_rect(*line), is_axis_rect(*ell), True,
+                                is_axis_rect(*spike)]
+    assert bbox[[0, 2, 4]].tolist() == [[0.0, 2.0, 0.0, 3.0], [0.0, 0.0, 0.0, 3.0],
+                                        [0.0, 2.0, 0.0, 3.0]]
 
 
 def test_dissolve_bands_of_one_polygon_spread_across_tasks(spark, world, images):

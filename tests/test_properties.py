@@ -6,6 +6,7 @@ kernels across randomized inputs, which is what actually protects the
 10^12-row paths (every weird coordinate WILL occur at that scale).
 """
 
+import functools
 import math
 
 import numpy as np
@@ -113,3 +114,117 @@ def test_densify_matches_numpy_reference(spark, lines):
     )
     got = densify_lines(spark.createDataFrame(pdf)).toPandas()
     assert_densify_matches_reference(got, pdf)
+
+
+@functools.cache
+def _seam_world_images():
+    """A 3x3-tile world whose centre tile has a 12x12-pixel NODATA block,
+    and the centroid (lon, lat) of that block's middle pixel."""
+    from openelevationservice_spark.constants import NODATA, PX
+    from openelevationservice_spark.functions import image_codec
+    from openelevationservice_spark.sources import fixtures as fx
+    from tests.inputs import make_images_pdf
+
+    world = fx.World(nx=3, ny=3)
+    images = make_images_pdf(world)
+    tx, ty = world.tx0 + 1, world.ty0 + 1
+    grid = fx.tile_grid(tx, ty)
+    grid[20:32, 14:26] = NODATA
+    row = images.index[images["image_id"] == f"tile_{tx:05d}_{ty:05d}"][0]
+    images.at[row, "bytes"] = image_codec.encode(grid, images.at[row, "fmt"])
+    hole = (fx.World(tx0=tx, ty0=ty).min_x + 20.5 * PX, fx.World(tx0=tx, ty0=ty).max_y - 26.5 * PX)
+    return world, images, hole
+
+
+def _random_rings(rng, world, hole):
+    """Rings of every kind the rasterizer tells apart, at random places
+    and sizes up to 1.6 tiles (so most cross a tile seam): closed and
+    unclosed rectangles, zero-width and zero-height rectangles, closed
+    and unclosed triangles, rectangles whose edges sit exactly on pixel
+    centroids, small rectangles inside the NODATA block, and 5-point
+    axis-parallel rings on three bbox corners (no rectangle: a spike
+    back along one edge)."""
+    from openelevationservice_spark.constants import PX
+
+    rings = []
+    for kind in rng.integers(0, 9, size=int(rng.integers(1, 12))):
+        x0 = rng.uniform(world.min_x, world.max_x - 0.1 * TILE_DEG)
+        y0 = rng.uniform(world.min_y, world.max_y - 0.1 * TILE_DEG)
+        w, h = rng.uniform(0.0, 1.6 * TILE_DEG, size=2)
+        if kind == 0:
+            ring = [(x0, y0), (x0 + w, y0), (x0 + w, y0 + h), (x0, y0 + h), (x0, y0)]
+        elif kind == 1:
+            ring = [(x0, y0 + h), (x0 + w, y0 + h), (x0 + w, y0), (x0, y0)]
+        elif kind == 2:
+            ring = [(x0, y0), (x0, y0 + h), (x0, y0 + h), (x0, y0), (x0, y0)]
+        elif kind == 3:
+            ring = [(x0, y0), (x0 + w, y0), (x0 + w, y0), (x0, y0), (x0, y0)]
+        elif kind == 4:
+            ring = [(x0, y0), (x0 + w, y0 + 0.3 * h), (x0 + 0.2 * w, y0 + h), (x0, y0)]
+        elif kind == 5:
+            ring = [(x0 + w, y0), (x0, y0 + h), (x0 + 0.5 * w, y0 - 0.4 * h)]
+        elif kind == 6:
+            # edges on pixel centroids: ul + (i + 0.5)·px, the kernel's arithmetic
+            i, j = rng.integers(0, 3 * 50 - 20, size=2)
+            ul_x = world.min_x + (i // 50) * TILE_DEG
+            ul_y = world.max_y - (j // 50) * TILE_DEG
+            cx0, cy0 = ul_x + (i % 50 + 0.5) * PX, ul_y - (j % 50 + 0.5) * PX
+            cx1, cy1 = cx0 + int(rng.integers(0, 20)) * PX, cy0 - int(rng.integers(0, 20)) * PX
+            ring = [(cx0, cy1), (cx1, cy1), (cx1, cy0), (cx0, cy0), (cx0, cy1)]
+        elif kind == 7:
+            d = float(rng.uniform(0.1, 4.0)) * PX
+            hx, hy = hole
+            ring = [(hx - d, hy - d), (hx + d, hy - d), (hx + d, hy + d), (hx - d, hy + d)]
+        else:
+            ring = [(x0, y0), (x0 + w, y0), (x0 + w, y0 + h), (x0 + w, y0), (x0, y0)]
+        rings.append(ring)
+    return rings
+
+
+@settings(max_examples=40, deadline=None)
+@given(st.integers(min_value=0, max_value=2**32 - 1), st.sampled_from([3, 4096]))
+def test_batch_rasterizer_equals_per_pair_reference(seed, chunk):
+    """The batch-wide rasterizer (one mask stack per chunk of pairs,
+    vectorized rectangle test, runs from one scanline diff) emits the
+    same (poly_id, gy, gx0, len, z) runs, in the same order, as the
+    per-pair reference (tests/references.py) on seeded random rings —
+    with chunks of 3 pairs and with one chunk per batch.  The packed
+    blobs of the dissolve path unpack to the same runs and carry the
+    same per-pair z stats."""
+    from unittest import mock
+
+    import pandas as pd
+    import pyarrow as pa
+
+    from openelevationservice_spark.operators import polygon
+    from tests.inputs import polygon_pair_batch
+    from tests.references import RUN_COLUMNS, pair_runs_reference
+
+    world, images, hole = _seam_world_images()
+    rb = polygon_pair_batch(images, _random_rings(np.random.default_rng(seed), world, hole))
+    want = pair_runs_reference(rb.to_pandas())
+    with mock.patch.object(polygon, "MASK_CHUNK_PAIRS", chunk):
+        runs = pa.Table.from_batches(list(polygon._pixel_runs(iter([rb]))),
+                                     schema=polygon._RUN_ARROW)
+        blobs = pa.Table.from_batches(list(polygon._pixel_run_blobs(iter([rb]))),
+                                      schema=polygon._RUN_BLOB_ARROW)
+    zs = runs.column("zs").to_pylist()
+    got = pd.DataFrame({"poly_id": runs.column("poly_id").to_pylist(),
+                        "gy": runs.column("gy").to_pylist(),
+                        "gx0": runs.column("gx0").to_pylist(),
+                        "len": [len(z) for z in zs], "z": [tuple(z) for z in zs]},
+                       columns=RUN_COLUMNS)
+    assert got.values.tolist() == want.values.tolist()
+
+    n_runs, gy, gx0, ln, z = polygon._unpack_run_blobs(
+        blobs.column("blob").combine_chunks())
+    assert np.repeat(blobs.column("poly_id").to_numpy(), n_runs).tolist() == \
+        want["poly_id"].tolist()
+    assert (gy.tolist(), gx0.tolist(), ln.tolist()) == \
+        (want["gy"].tolist(), want["gx0"].tolist(), want["len"].tolist())
+    assert z.tolist() == [v for run in want["z"] for v in run]
+    per_pair = np.split(z, np.cumsum(blobs.column("run_n").to_numpy())[:-1])
+    if len(per_pair[0]):
+        assert blobs.column("run_min").to_pylist() == [int(p.min()) for p in per_pair]
+        assert blobs.column("run_max").to_pylist() == [int(p.max()) for p in per_pair]
+        assert blobs.column("run_sum").to_pylist() == [int(p.sum()) for p in per_pair]
