@@ -27,6 +27,8 @@ import zlib
 
 import numpy as np
 
+from .arrow_batches import binary_buffers
+
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
 #: the per-row round-trip bar of ``input_hint``, in dB
@@ -100,6 +102,19 @@ def decode(data: bytes, fmt: str, w: int, h: int) -> np.ndarray:
     if fmt == "png16":
         return decode_png16(data, w, h)
     raise NotImplementedError(f"unknown image format {fmt!r}")
+
+
+def decode_rows(rb, rows=None) -> list[np.ndarray]:
+    """The decoded grid of each row of an Arrow batch of (bytes, fmt, w,
+    h) — or of the rows at the indices ``rows`` only — with the bytes
+    read through the binary column's buffers."""
+    off, data = binary_buffers(rb.column("bytes"))
+    if rows is None:
+        rows = np.arange(rb.num_rows)
+    fmts = rb.column("fmt").take(rows).to_pylist()
+    ws, hs = rb.column("w").to_numpy()[rows], rb.column("h").to_numpy()[rows]
+    return [decode(data[off[i]:off[i + 1]].tobytes(), fmt, int(w), int(h))
+            for i, fmt, w, h in zip(rows, fmts, ws, hs)]
 
 
 def encode(grid: np.ndarray, fmt: str) -> bytes:

@@ -12,9 +12,10 @@ and a shapely ``unary_union`` per band.  At continental polygons that
 pixel list explodes driver memory (SURVEY.md §3.3) — here the whole
 pipeline stays distributed, and pixel values never become JVM rows:
 
-    rasterize → one packed run blob per (polygon, tile) pair
-                (operators/polygon.py, scalar min/max/sum/count beside it)
-              → per-polygon stats off the scalar columns (G1, blob_stats)
+    rasterize → scanline runs (the run table of the pixel dump,
+                operators/polygon.py ``polygon_pixel_runs``)
+              → per-polygon stats as codegen'd ``array_min``/``array_max``
+                aggregates over the runs (G1, ``run_stats``)
               → vectorized band-split kernel → packed band-subruns,
                 partially aggregated per (poly_id, height_base) map-side
               → hash exchange on (poly_id, height_base) → one row per band
@@ -54,7 +55,7 @@ from ..functions.arrow_batches import (binary_array, binary_buffers, list_array,
 from ..functions.dissolve import (MAX_BATCH_BANDS, batch_invariants,
                                   dissolve_pixels_rings)
 from ..plans.cache import lease
-from .polygon import _unpack_run_blobs, blob_stats, polygon_pixel_run_blobs
+from .polygon import polygon_pixel_runs, run_stats
 
 
 FEATURE_SCHEMA = T.StructType(
@@ -162,20 +163,18 @@ def _subrun_partial_batch(pid_run, gy_run, gx0_run, lens, z,
                      sub_o.astype("<i8", copy=False))])
 
 
-def _band_subrun_kernel_blob(batches):
-    """Vectorized band-split of packed run blobs → packed band-subruns.
+def _band_subrun_kernel(batches):
+    """Vectorized band-split of scanline runs → packed band-subruns.
 
-    Input rows: (poly_id, blob, min_z, max_z) from
-    :func:`~..operators.polygon.polygon_pixel_run_blobs` joined with the
-    broadcast per-polygon stats.  Every blob of the batch is unpacked
-    at once through the binary column's offsets and data buffers
-    (:func:`~..operators.polygon._unpack_run_blobs`; z never exists as
-    a JVM array, and no row becomes a Python ``bytes``), then the exact
-    reference band arithmetic (``querybuilder.py:56-102``; the same
-    IEEE-double expression as the contract's band oracle SQL) splits
-    runs at band-change boundaries in one vectorized pass per batch.
-    Terrain is locally smooth, so subrun count ~ run count, not pixel
-    count.
+    Input rows: (poly_id, gy, gx0, zs, min_z, max_z), the run table of
+    :func:`~.polygon.polygon_pixel_runs` joined with the broadcast
+    per-polygon stats.  ``gy``, ``gx0`` and every run's z values are
+    read through the ``zs`` list offsets and its one int16 values
+    buffer, then the exact reference band arithmetic
+    (``querybuilder.py:56-102``; the same IEEE-double expression as the
+    contract's band oracle SQL) splits runs at band-change boundaries
+    in one vectorized pass per batch.  Terrain is locally smooth, so
+    subrun count ~ run count, not pixel count.
 
     The packed subruns are PARTIALLY AGGREGATED before they leave the
     kernel (guide §2.3 "aggregate before you shuffle"): one output row
@@ -188,13 +187,13 @@ def _band_subrun_kernel_blob(batches):
     for rb in batches:
         if not rb.num_rows:
             continue
-        n_runs, gy, gx0, ln, z = _unpack_run_blobs(rb.column("blob"))
+        zs = rb.column("zs")
+        off = list_offsets(zs)
         out = _subrun_partial_batch(
-            np.repeat(rb.column("poly_id").to_numpy(), n_runs),
-            gy.astype(np.int64), gx0.astype(np.int64), ln.astype(np.int64),
-            z.astype(np.int64),
-            np.repeat(rb.column("min_z").to_numpy(), n_runs),
-            np.repeat(rb.column("max_z").to_numpy(), n_runs))
+            rb.column("poly_id").to_numpy(), rb.column("gy").to_numpy(),
+            rb.column("gx0").to_numpy(), np.diff(off),
+            zs.values.to_numpy()[off[0]:off[-1]].astype(np.int64),
+            rb.column("min_z").to_numpy(), rb.column("max_z").to_numpy())
         if out is not None:
             yield out
 
@@ -212,16 +211,16 @@ def _gather_bands(subs: DataFrame) -> DataFrame:
     )
 
 
-def _banded_subruns_blob(blobs: DataFrame) -> DataFrame:
+def _banded_subruns(runs: DataFrame) -> DataFrame:
     """One row per (poly_id, height_base): the band's packed subruns.
-    Stats aggregate over the blob table's pruned scalar min/max columns
-    (no blob unpacking), broadcast back, and the band-split unpacks the
-    packed runs in Python — z values cross the JVM boundary exactly
-    twice, both times as one binary buffer memcpy."""
-    stats = blob_stats(blobs).select("poly_id", "min_z", "max_z")
-    j = (blobs.join(F.broadcast(stats), "poly_id")
-         .select("poly_id", "blob", "min_z", "max_z"))
-    subs = j.mapInArrow(_band_subrun_kernel_blob, SUBRUN_SCHEMA)
+    The per-polygon stats are codegen'd aggregates over the run table
+    (:func:`~.polygon.run_stats`), broadcast back, and the band-split
+    reads the runs in Python — z values cross the Arrow boundary as one
+    int16 values buffer per batch."""
+    stats = run_stats(runs).select("poly_id", "min_z", "max_z")
+    j = (runs.join(F.broadcast(stats), "poly_id")
+         .select("poly_id", "gy", "gx0", "zs", "min_z", "max_z"))
+    subs = j.mapInArrow(_band_subrun_kernel, SUBRUN_SCHEMA)
     return _gather_bands(subs)
 
 
@@ -300,24 +299,24 @@ def _dissolve_partition_subs(batches):
 
 def polygon_color_features(polygons_df: DataFrame, images_df: DataFrame,
                            *, spread: bool = True,
-                           blobs_df: DataFrame | None = None) -> DataFrame:
+                           runs_df: DataFrame | None = None) -> DataFrame:
     """Distributed equivalent of ``group_and_union_geometries``.
 
     Returns one row per dissolved feature:
     (poly_id, height_base, feature_idx, n_rings, area_px, rings).
 
-    Pass ``blobs_df`` (an already-built — typically already-persisted —
-    ``polygon_pixel_run_blobs`` result for the same polygons) to reuse
-    one rasterization across :func:`~.polygon.blob_stats` and the
-    dissolve; the caller then owns its cache lifecycle and this
-    operator takes no lease of its own.  ``spread`` is ignored: it is
-    kept only because existing benchmark calls pass it.
+    Pass ``runs_df`` (an already-built — typically already-persisted —
+    ``polygon_pixel_runs`` result for the same polygons) to reuse one
+    rasterization across :func:`~.polygon.run_stats` and the dissolve;
+    the caller then owns its cache lifecycle and this operator takes no
+    lease of its own.  ``spread`` is ignored: it is kept only because
+    existing benchmark calls pass it.
     """
-    blobs = blobs_df
-    if blobs is None:
-        blobs = polygon_pixel_run_blobs(polygons_df, images_df)
-        lease("color_features", blobs)
-    return _banded_subruns_blob(blobs).mapInArrow(
+    runs = runs_df
+    if runs is None:
+        runs = polygon_pixel_runs(polygons_df, images_df)
+        lease("color_features", runs)
+    return _banded_subruns(runs).mapInArrow(
         _dissolve_partition_subs, schema=FEATURE_SCHEMA
     )
 
@@ -386,9 +385,9 @@ def polygon_color_invariants(polygons_df: DataFrame, images_df: DataFrame) -> Da
     """Per-band dissolve invariants (poly_id, height_base, area_px,
     euler4, euler8) — the oracle-checkable face of the dissolve (G3).
     Same plan shape as :func:`polygon_color_features`."""
-    blobs = polygon_pixel_run_blobs(polygons_df, images_df)
-    lease("color_invariants", blobs)
-    return _banded_subruns_blob(blobs).mapInArrow(
+    runs = polygon_pixel_runs(polygons_df, images_df)
+    lease("color_invariants", runs)
+    return _banded_subruns(runs).mapInArrow(
         _invariants_partition_subs, schema=INVARIANT_SCHEMA
     )
 

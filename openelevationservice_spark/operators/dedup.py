@@ -23,6 +23,7 @@ expressible in the oracle SQL.
 from __future__ import annotations
 
 import hashlib
+from collections import Counter
 
 import numpy as np
 import pandas as pd
@@ -420,33 +421,20 @@ def connected_components(pairs: DataFrame, ids: DataFrame,
         # a list of tuples would run a Python-worker stage to pickle rows
         # (one task per core, ~0.3 s each warm and seconds cold)
         vs, ls = list(lbl.keys()), list(lbl.values())
-        if with_sizes:
-            from collections import Counter
-
-            csz = Counter(ls)
-            labels = pairs.sparkSession.createDataFrame(
-                pd.DataFrame({"_v": vs, "_lbl": ls, "_sz": [csz[l] for l in ls]}),
-                T.StructType([T.StructField("_v", id_type),
-                              T.StructField("_lbl", id_type),
-                              T.StructField("_sz", T.LongType())]),
-            )
-            return (
-                nodes.join(F.broadcast(labels), "_v", "left")
-                .select(F.col("_v").alias(id_col),
-                        F.coalesce(F.col("_lbl"), F.col("_v")).alias("rep_id"),
-                        F.coalesce(F.col("_sz"), F.lit(1).cast("long"))
-                        .alias("cluster_size"))
-            )
+        csz = Counter(ls)
         labels = pairs.sparkSession.createDataFrame(
-            pd.DataFrame({"_v": vs, "_lbl": ls}),
+            pd.DataFrame({"_v": vs, "_lbl": ls, "_sz": [csz[l] for l in ls]}),
             T.StructType([T.StructField("_v", id_type),
-                          T.StructField("_lbl", id_type)]),
+                          T.StructField("_lbl", id_type),
+                          T.StructField("_sz", T.LongType())]),
         )
-        return (
+        res = (
             nodes.join(F.broadcast(labels), "_v", "left")
             .select(F.col("_v").alias(id_col),
-                    F.coalesce(F.col("_lbl"), F.col("_v")).alias("rep_id"))
+                    F.coalesce(F.col("_lbl"), F.col("_v")).alias("rep_id"),
+                    F.coalesce(F.col("_sz"), F.lit(1).cast("long")).alias("cluster_size"))
         )
+        return res if with_sizes else res.drop("cluster_size")
     # both directions; propagation includes the node's own label
     e = (
         p.select(F.col("id_a").alias("_v"), F.col("id_b").alias("_w"))

@@ -41,21 +41,11 @@ META_SCHEMA = T.StructType(
 _META_ARROW = to_arrow_schema(META_SCHEMA)
 
 
-def _decoded(rb: pa.RecordBatch) -> list[np.ndarray]:
-    """The decoded grid of every row of a batch of (bytes, fmt, w, h),
-    the bytes read through the binary column's buffers."""
-    off, data = binary_buffers(rb.column("bytes"))
-    return [image_codec.decode(data[off[i]:off[i + 1]].tobytes(), fmt, int(w), int(h))
-            for i, (fmt, w, h) in enumerate(zip(rb.column("fmt").to_pylist(),
-                                                rb.column("w").to_numpy(),
-                                                rb.column("h").to_numpy()))]
-
-
 def image_metadata(images_df: DataFrame) -> DataFrame:
     """Decode + feature-extract per image (Arrow batches)."""
     def extract(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for rb in batches:
-            grids = _decoded(rb)
+            grids = image_codec.decode_rows(rb)
             off, _ = binary_buffers(rb.column("bytes"))
             yield record_batch(_META_ARROW, [
                 rb.column("image_id"), rb.column("fmt"),
@@ -92,7 +82,7 @@ def resize(images_df: DataFrame, factor: int = 2) -> DataFrame:
     def rs(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for rb in batches:
             small = []
-            for g in _decoded(rb):
+            for g in image_codec.decode_rows(rb):
                 h2, w2 = g.shape[0] // factor, g.shape[1] // factor
                 blocks = g[: h2 * factor, : w2 * factor].reshape(h2, factor, w2, factor)
                 small.append(blocks.mean(axis=(1, 3)).astype(np.int16))

@@ -33,12 +33,13 @@ it on the driver, and the rasterizer runs once per request (a Spark
 
 The per-(polygon, tile) explode is Spark's ``LATERAL
 ST_PixelAsPolygons`` equivalent (SURVEY.md §2.3 J5).  One batch-wide
-rasterization core (:func:`_pair_run_chunks`) feeds two emitters:
-scanline runs for the pixel dump (:func:`polygon_pixels`) and one
-packed blob per (polygon, tile) pair for the band dissolve
-(:func:`polygon_pixel_run_blobs`, consumed by ``operators/color.py``).
-Both read their Arrow input through its buffers and write each list or
-binary output column as one values buffer plus one offsets array.
+rasterizer (:func:`_pixel_runs`) emits the one run table
+(:func:`polygon_pixel_runs`) that serves every polygon operator: the
+pixel dump (:func:`polygon_pixels`) posexplodes it, and the band
+dissolve (``operators/color.py``) takes its stats (:func:`run_stats`)
+and band-splits its runs.  The rasterizer reads its Arrow input through
+its buffers and writes ``zs`` as one values buffer plus one offsets
+array.
 """
 
 from __future__ import annotations
@@ -55,8 +56,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..constants import NODATA, PX, TILE_DEG, TILE_PX, WORLD_X0, WORLD_Y0
 from ..functions import image_codec
-from ..functions.arrow_batches import (binary_array, binary_buffers, list_array,
-                                       list_offsets, record_batch)
+from ..functions.arrow_batches import list_array, list_offsets, record_batch
 from ..functions.cells import cell_x_col, cell_y_col, linear_id_col
 from ..functions.geometry import points_in_ring
 from ..sources.tiles import tile_index
@@ -165,14 +165,8 @@ def _decoded_tiles(rb: pa.RecordBatch):
     centroid lats (T, TILE_PX), tx (T,), ty (T,))."""
     tile = rb.column("image_id").dictionary_encode().indices.to_numpy()
     _, first = np.unique(tile, return_index=True)   # codes: first-seen order
-    off, data = binary_buffers(rb.column("bytes"))
-    fmts = rb.column("fmt").take(first).to_pylist()
-    ws = rb.column("w").to_numpy()[first]
-    hs = rb.column("h").to_numpy()[first]
     grids = np.empty((len(first), TILE_PX, TILE_PX), np.int16)
-    for t, (i, fmt) in enumerate(zip(first, fmts)):
-        grid = image_codec.decode(data[off[i]:off[i + 1]].tobytes(), fmt,
-                                  int(ws[t]), int(hs[t]))
+    for t, (i, grid) in enumerate(zip(first, image_codec.decode_rows(rb, first))):
         if grid.shape != (TILE_PX, TILE_PX):
             # with_pixel_coords derives image_id/x/y from gx, gy using
             # the constant TILE_PX — a tile of any other size would
@@ -245,198 +239,81 @@ def _closed_ring(x: np.ndarray, y: np.ndarray, s: int, e: int):
     return rx, ry
 
 
-def _pair_run_chunks(rb: pa.RecordBatch):
-    """Covered non-NODATA scanline runs of a batch of (polygon, tile)
-    rows — the shared rasterization core of the run and blob kernels.
-
-    Per chunk of at most ``MASK_CHUNK_PAIRS`` rows, one boolean mask
-    stack of shape (rows, TILE_PX, TILE_PX): exactly rectangular rings
-    (:func:`_axis_rects`) fill it with one interval comparison for all
-    of them (the covered set of the boundary-inclusive even-odd PIP for
-    axis-aligned rectangles — asserted against the per-pair reference
-    in tests/test_properties.py); every other ring runs
-    ``points_in_ring`` over its tile's centroid grid, one row at a time.
-    The runs come out of the whole stack at once: the toggles of each
-    zero-padded scanline alternate run start, run end, and one boolean
-    gather of the stacked grids is every run's z values concatenated.
-
-    Yields, per chunk, for the rows with at least one covered pixel (in
-    row order): (poly_id, runs per row, pixels per row) and, per run in
-    (row, y, x0) order, int64 (gy, gx0, length), plus the int16 z of
-    every run concatenated.
-    """
-    tile, grids, cxv, cyv, tx, ty = _decoded_tiles(rb)
-    valid = grids != NODATA
-    x, y, starts, ends = _ring_points(rb.column("ring"))
-    is_rect, bbox = _axis_rects(x, y, starts, ends)
-    pid = rb.column("poly_id").to_numpy()
-    centroids = {}   # tile → flattened centroid grids, for the general PIP
-    for r0 in range(0, rb.num_rows, MASK_CHUNK_PAIRS):
-        rows = slice(r0, r0 + MASK_CHUNK_PAIRS)
-        t = tile[rows]
-        rect = is_rect[rows]
-        mask = np.empty((len(t), TILE_PX, TILE_PX), dtype=bool)
-        if rect.any():
-            tr = t[rect]
-            x0, x1, y0, y1 = (c[:, None] for c in bbox[rows][rect].T)
-            x_in = (cxv[tr] >= x0) & (cxv[tr] <= x1)
-            y_in = (cyv[tr] >= y0) & (cyv[tr] <= y1)
-            mask[rect] = y_in[:, :, None] & x_in[:, None, :]
-        for k in np.flatnonzero(~rect):
-            if t[k] not in centroids:
-                centroids[t[k]] = (np.broadcast_to(cxv[t[k]], (TILE_PX, TILE_PX)).ravel(),
-                                   np.repeat(cyv[t[k]], TILE_PX))
-            rx, ry = _closed_ring(x, y, starts[r0 + k], ends[r0 + k])
-            mask[k] = points_in_ring(*centroids[t[k]], rx, ry).reshape(TILE_PX, TILE_PX)
-        mask &= valid[t]
-        p, ys, xs = np.nonzero(np.diff(mask, axis=2, prepend=False, append=False))
-        p, ys, xs0, xs1 = p[::2], ys[::2], xs[::2], xs[1::2]
-        n_px = mask.sum(axis=(1, 2))
-        kept = n_px > 0
-        yield (pid[rows][kept], np.bincount(p, minlength=len(t))[kept], n_px[kept],
-               ty[t[p]] * TILE_PX + ys, tx[t[p]] * TILE_PX + xs0, xs1 - xs0,
-               grids[t][mask])
-
-
 _RUN_ARROW = to_arrow_schema(RUN_SCHEMA)
 
 
 def _pixel_runs(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    """Per (polygon, tile) row → covered non-NODATA scanline runs
-    (:func:`_pair_run_chunks`), one output batch per mask chunk."""
+    """Per (polygon, tile) row → covered non-NODATA scanline runs, one
+    output batch per chunk of at most ``MASK_CHUNK_PAIRS`` rows.
+
+    Per chunk, one boolean mask stack of shape (rows, TILE_PX, TILE_PX):
+    exactly rectangular rings (:func:`_axis_rects`) fill it with one
+    interval comparison for all of them (the covered set of the
+    boundary-inclusive even-odd PIP for axis-aligned rectangles —
+    asserted against the per-pair reference in tests/test_properties.py);
+    every other ring runs ``points_in_ring`` over its tile's centroid
+    grid, one row at a time.  The runs come out of the whole stack at
+    once: the toggles of each zero-padded scanline alternate run start,
+    run end, and one boolean gather of the stacked grids is every run's
+    z values concatenated, in (row, y, x0) order.
+    """
     for rb in batches:
-        for pid, n_runs, _, gy, gx0, ln, z in _pair_run_chunks(rb):
+        tile, grids, cxv, cyv, tx, ty = _decoded_tiles(rb)
+        valid = grids != NODATA
+        x, y, starts, ends = _ring_points(rb.column("ring"))
+        is_rect, bbox = _axis_rects(x, y, starts, ends)
+        pid = rb.column("poly_id").to_numpy()
+        centroids = {}   # tile → flattened centroid grids, for the general PIP
+        for r0 in range(0, rb.num_rows, MASK_CHUNK_PAIRS):
+            rows = slice(r0, r0 + MASK_CHUNK_PAIRS)
+            t = tile[rows]
+            rect = is_rect[rows]
+            mask = np.empty((len(t), TILE_PX, TILE_PX), dtype=bool)
+            if rect.any():
+                tr = t[rect]
+                x0, x1, y0, y1 = (c[:, None] for c in bbox[rows][rect].T)
+                x_in = (cxv[tr] >= x0) & (cxv[tr] <= x1)
+                y_in = (cyv[tr] >= y0) & (cyv[tr] <= y1)
+                mask[rect] = y_in[:, :, None] & x_in[:, None, :]
+            for k in np.flatnonzero(~rect):
+                if t[k] not in centroids:
+                    centroids[t[k]] = (np.broadcast_to(cxv[t[k]], (TILE_PX, TILE_PX)).ravel(),
+                                       np.repeat(cyv[t[k]], TILE_PX))
+                rx, ry = _closed_ring(x, y, starts[r0 + k], ends[r0 + k])
+                mask[k] = points_in_ring(*centroids[t[k]], rx, ry).reshape(TILE_PX, TILE_PX)
+            mask &= valid[t]
+            p, ys, xs = np.nonzero(np.diff(mask, axis=2, prepend=False, append=False))
+            p, ys, xs0, xs1 = p[::2], ys[::2], xs[::2], xs[1::2]
             yield record_batch(_RUN_ARROW, [
-                pa.array(np.repeat(pid, n_runs)), pa.array(gy), pa.array(gx0),
-                list_array(ln, z)])
+                pa.array(pid[rows][p]), pa.array(ty[t[p]] * TILE_PX + ys),
+                pa.array(tx[t[p]] * TILE_PX + xs0), list_array(xs1 - xs0, grids[t][mask])])
 
 
-# Opaque-blob run transfer for the dissolve pipeline: one row per
-# (polygon, tile) pair, runs packed into a single binary column —
-# int32 n_runs, int32 gy[n], int32 gx0[n], int32 len[n], int16 z[...]
-# (little-endian), plus scalar per-pair min/max/sum/count for the stats
-# agg (blob_stats).
-# z values never become JVM arrays: binary crosses Arrow as one buffer
-# memcpy, the cache stores ~9k blob rows instead of ~300k array rows,
-# and the stats scan reads 2 pruned int columns instead of re-folding
-# every array (guide §8: move heavy bytes once, decide on small rows).
-# _pack_run_blobs writes the format and _unpack_run_blobs reads it, a
-# whole batch at a time.
-RUN_BLOB_SCHEMA = T.StructType(
-    [
-        T.StructField("poly_id", T.LongType()),
-        T.StructField("blob", T.BinaryType()),
-        T.StructField("run_min", T.IntegerType()),
-        T.StructField("run_max", T.IntegerType()),
-        T.StructField("run_sum", T.LongType()),
-        T.StructField("run_n", T.IntegerType()),
-    ]
-)
-
-
-def _split_mask(first_len: np.ndarray, total_len: np.ndarray) -> np.ndarray:
-    """Boolean mask over consecutive segments of ``total_len`` items:
-    True on the first ``first_len`` items of each segment."""
-    delta = np.zeros(int(total_len.sum()) + 1, dtype=np.int8)
-    start = np.zeros(len(total_len), dtype=np.int64)
-    np.cumsum(total_len[:-1], out=start[1:])
-    delta[start] += 1
-    delta[start + first_len] -= 1
-    return np.cumsum(delta[:-1], dtype=np.int8).astype(bool)
-
-
-def _head_slots(n_runs: np.ndarray):
-    """Word offset of each pair's int32 header and, per run, the offset
-    of its gy word (gx0 is ``n`` words on, len ``2n``) and its pair's
-    run count."""
-    head = np.zeros(len(n_runs), dtype=np.int64)
-    np.cumsum(1 + 3 * n_runs[:-1], out=head[1:])
-    first_run = np.zeros(len(n_runs), dtype=np.int64)
-    np.cumsum(n_runs[:-1], out=first_run[1:])
-    pair = np.repeat(np.arange(len(n_runs)), n_runs)
-    base = head[pair] + 1 + (np.arange(len(pair)) - first_run[pair])
-    return head, base, n_runs[pair]
-
-
-def _pack_run_blobs(n_runs, n_px, gy, gx0, ln, z):
-    """(blob lengths, blob bytes) of ``RUN_BLOB_SCHEMA``'s packed format
-    for pairs of ``n_runs`` runs and ``n_px`` pixels each, run arrays in
-    pair order."""
-    head, base, n = _head_slots(n_runs)
-    words = np.empty(int((1 + 3 * n_runs).sum()), dtype="<i4")
-    words[head] = n_runs
-    words[base] = gy
-    words[base + n] = gx0
-    words[base + 2 * n] = ln
-    head_bytes = 4 * (1 + 3 * n_runs)
-    lengths = head_bytes + 2 * n_px
-    data = np.empty(int(lengths.sum()), dtype=np.uint8)
-    is_head = _split_mask(head_bytes, lengths)
-    data[is_head] = words.view(np.uint8)
-    data[~is_head] = z.astype("<i2", copy=False).view(np.uint8)
-    return lengths, data
-
-
-def _unpack_run_blobs(blob: pa.Array):
-    """Every blob of a ``RUN_BLOB_SCHEMA`` ``blob`` column at once:
-    (runs per row, gy, gx0, length per run, z per pixel), read through
-    the column's offsets and data buffers; the run arrays are int32
-    and ``z`` is int16, in row order."""
-    off, data = binary_buffers(blob)
-    data = data[off[0]:off[-1]]
-    off = off - off[0]
-    n_runs = (data[off[:-1, None] + np.arange(4)].copy()
-              .view("<i4").ravel().astype(np.int64))
-    head_bytes = 4 * (1 + 3 * n_runs)
-    is_head = _split_mask(head_bytes, np.diff(off))
-    words = data[is_head].view("<i4")
-    _, base, n = _head_slots(n_runs)
-    return (n_runs, words[base], words[base + n], words[base + 2 * n],
-            data[~is_head].view("<i2"))
-
-
-_RUN_BLOB_ARROW = to_arrow_schema(RUN_BLOB_SCHEMA)
-
-
-def _pixel_run_blobs(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    """Per (polygon, tile) row → one packed run blob plus the scalar
-    min/max/sum/count of its z values, one output batch per mask chunk."""
-    for rb in batches:
-        for pid, n_runs, n_px, gy, gx0, ln, z in _pair_run_chunks(rb):
-            lengths, data = _pack_run_blobs(n_runs, n_px, gy, gx0, ln, z)
-            stats = [np.empty(0, np.int16)] * 3
-            if len(pid):
-                at = np.zeros(len(n_px), dtype=np.int64)
-                np.cumsum(n_px[:-1], out=at[1:])
-                stats = [np.minimum.reduceat(z, at), np.maximum.reduceat(z, at),
-                         np.add.reduceat(z.astype(np.int64), at)]
-            yield record_batch(_RUN_BLOB_ARROW, [
-                pa.array(pid), binary_array(lengths, data),
-                pa.array(stats[0].astype(np.int32)), pa.array(stats[1].astype(np.int32)),
-                pa.array(stats[2].astype(np.int64)), pa.array(n_px.astype(np.int32))])
-
-
-def polygon_pixel_run_blobs(polygons_df: DataFrame, images_df: DataFrame) -> DataFrame:
-    """Covered-pixel runs as per-(polygon, tile) packed blobs —
-    the dissolve pipeline's transfer/cache format (see RUN_BLOB_SCHEMA).
-    Huge polygon bounding boxes: see the limit noted on
-    :func:`polygon_tile_join`."""
+def polygon_pixel_runs(polygons_df: DataFrame, images_df: DataFrame) -> DataFrame:
+    """Covered non-NODATA scanline runs (``RUN_SCHEMA``) of every
+    polygon: the one run table that :func:`polygon_pixels` explodes and
+    the band dissolve (``operators/color.py``) splits.  Huge polygon
+    bounding boxes: see the limit noted on :func:`polygon_tile_join`."""
     return polygon_tile_join(polygons_df, images_df).mapInArrow(
-        _pixel_run_blobs, schema=RUN_BLOB_SCHEMA)
+        _pixel_runs, schema=RUN_SCHEMA)
 
 
-def blob_stats(blobs_df: DataFrame) -> DataFrame:
-    """min/max/avg/count per polygon from the blob table's scalar
-    per-pair columns — value-identical to the same aggregates over the
-    pixel rows of :func:`polygon_pixels` (G1, reference
-    ``querybuilder.py:84-88``) without unpacking a single blob: the
-    avg is one exact integer sum over one exact count, the same double
-    division as the pixel-row average (asserted in tests/test_polygon.py)."""
-    return blobs_df.groupBy("poly_id").agg(
-        F.min("run_min").alias("min_z"),
-        F.max("run_max").alias("max_z"),
-        (F.sum("run_sum") / F.sum("run_n")).alias("avg_z"),
-        F.sum("run_n").alias("n_pixels"),
+def run_stats(runs_df: DataFrame) -> DataFrame:
+    """min/max/avg/count per polygon over a :func:`polygon_pixel_runs`
+    table — value-identical to the same aggregates over the pixel rows
+    of :func:`polygon_pixels` (G1, reference ``querybuilder.py:84-88``)
+    without exploding a run.  min and max are the codegen'd
+    ``array_min``/``array_max`` of each run; the avg is one exact
+    integer sum over one exact count, the same double division as the
+    pixel-row average (asserted in tests/test_polygon.py).  Its per-run
+    sum is an interpreted ``aggregate`` lambda, which column pruning
+    drops from a plan that reads only min and max (the dissolve)."""
+    run_sum = F.aggregate("zs", F.lit(0).cast("long"), lambda acc, z: acc + z)
+    return runs_df.groupBy("poly_id").agg(
+        F.min(F.array_min("zs")).alias("min_z"),
+        F.max(F.array_max("zs")).alias("max_z"),
+        (F.sum(run_sum) / F.sum(F.size("zs"))).alias("avg_z"),
+        F.sum(F.size("zs")).alias("n_pixels"),
     )
 
 
@@ -453,9 +330,7 @@ def polygon_pixels(polygons_df: DataFrame, images_df: DataFrame,
     :func:`polygon_tile_join`.  ``spread`` is ignored: it is kept only
     because existing benchmark calls pass it.
     """
-    runs = polygon_tile_join(polygons_df, images_df).mapInArrow(
-        _pixel_runs, schema=RUN_SCHEMA)
-    px = runs.select(
+    px = polygon_pixel_runs(polygons_df, images_df).select(
         "poly_id", "gy", "gx0", F.posexplode("zs").alias("pos", "z")
     ).select(
         "poly_id",

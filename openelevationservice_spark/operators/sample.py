@@ -29,7 +29,7 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..functions import image_codec
-from ..functions.arrow_batches import binary_buffers, list_array, record_batch
+from ..functions.arrow_batches import list_array, record_batch
 
 
 def broadcast_if_fits(index_df: DataFrame) -> DataFrame:
@@ -70,11 +70,7 @@ def pixel_index(images_df: DataFrame) -> DataFrame:
 
     def decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for rb in batches:
-            off, data = binary_buffers(rb.column("bytes"))
-            grids = [image_codec.decode(data[off[i]:off[i + 1]].tobytes(), f, int(w), int(h))
-                     for i, (f, w, h) in enumerate(zip(rb.column("fmt").to_pylist(),
-                                                       rb.column("w").to_numpy(),
-                                                       rb.column("h").to_numpy()))]
+            grids = image_codec.decode_rows(rb)
             pix = list_array(np.array([g.size for g in grids], dtype=np.int64),
                              np.concatenate([g.ravel() for g in grids] or
                                             [np.empty(0, np.int16)]))

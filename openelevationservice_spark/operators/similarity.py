@@ -287,7 +287,6 @@ def cosine_topk(corpus_df: DataFrame, queries_df: DataFrame, k: int = 3) -> Data
             T.StructField("sim", T.DoubleType()),
         ])
         return corpus_df.sparkSession.createDataFrame([], schema)
-    qids = qpdf["q_id"].to_numpy()
     qmat = np.stack([np.asarray(v, dtype=np.float64) for v in qpdf["q_vec"]])
     nq, dim = qmat.shape
     qn = np.sqrt(_fold_sq(qmat))
@@ -319,16 +318,16 @@ def cosine_topk(corpus_df: DataFrame, queries_df: DataFrame, k: int = 3) -> Data
         return pa.table({"q": qi, "c": rb.column("vec_id").take(pa.array(rows)),
                          "s": sims[rows, qi]})
 
+    out = to_arrow_schema(schema)
+    q_ids = pa.array(qpdf["q_id"], type=out.field("q_id").type)
+
     def score_prune(batches):
         carry = _carry_topk((candidates(rb) for rb in batches if rb.num_rows),
                             k, "q", "s", "c")
-        if carry is None:
-            return
-        yield pa.RecordBatch.from_pandas(pd.DataFrame({
-            "q_id": qids[carry.column("q").to_numpy()],
-            "vec_id": carry.column("c").to_numpy(),
-            "sim": carry.column("s").to_numpy(),
-        }), preserve_index=False)
+        if carry is not None:
+            for rb in carry.combine_chunks().to_batches():
+                yield record_batch(out, [q_ids.take(rb.column("q")), rb.column("c"),
+                                         rb.column("s")])
 
     pruned = corpus_df.select("vec_id", "embedding").mapInArrow(score_prune, schema)
     return _rank_topk(pruned, k, "q_id", "vec_id").select("q_id", "rank", "vec_id", "sim")

@@ -55,7 +55,7 @@ def column_cells(spark, lon: np.ndarray, lat: np.ndarray) -> pd.DataFrame:
 def polygon_stats(pixels):
     """min/max/avg/count per polygon over pixel rows (reference
     ``querybuilder.py:84-88``) — the reference for
-    ``operators.polygon.blob_stats``."""
+    ``operators.polygon.run_stats``."""
     return pixels.groupBy("poly_id").agg(
         F.min("z").alias("min_z"),
         F.max("z").alias("max_z"),

@@ -103,22 +103,22 @@ def test_area_out_of_coverage_aborts(servicer):
 
 def test_area_ranges_single_pixel_dump(servicer, world, monkeypatch):
     """AreaRangesElevation rasterizes the polygon ONCE per RPC: the
-    leased run-blob table feeds both the stats collect and the
-    dissolve (the reference likewise fetches pixels once,
-    querybuilder.py:77-88).  Every blob build is counted, the shim's
-    and any the dissolve operator might start on its own."""
+    leased run table feeds both the stats collect and the dissolve
+    (the reference likewise fetches pixels once, querybuilder.py:77-88).
+    Every run-table build is counted, the shim's and any the dissolve
+    operator might start on its own."""
     import openelevationservice_spark.grpc_shim as shim
     import openelevationservice_spark.operators.color as color
 
     calls = []
-    orig = shim.polygon_pixel_run_blobs
+    orig = shim.polygon_pixel_runs
 
     def counting(*a, **k):
         calls.append(1)
         return orig(*a, **k)
 
-    monkeypatch.setattr(shim, "polygon_pixel_run_blobs", counting)
-    monkeypatch.setattr(color, "polygon_pixel_run_blobs", counting)
+    monkeypatch.setattr(shim, "polygon_pixel_runs", counting)
+    monkeypatch.setattr(color, "polygon_pixel_runs", counting)
     req = {
         "bottomLeft": {"lon": world.min_x + 0.1 * TILE_DEG,
                        "lat": world.max_y - 0.6 * TILE_DEG},

@@ -20,8 +20,7 @@ from openelevationservice_spark.constants import PX, TILE_DEG
 from openelevationservice_spark.operators import dedup, multimodal, similarity
 from openelevationservice_spark.operators.color import (polygon_color_features,
                                                         polygon_color_invariants)
-from openelevationservice_spark.operators.polygon import (polygon_pixel_run_blobs,
-                                                          polygon_pixels)
+from openelevationservice_spark.operators.polygon import polygon_pixels
 from openelevationservice_spark.operators.sample import pixel_index
 from openelevationservice_spark.sources import fixtures as fx
 from tests.inputs import make_images_pdf
@@ -64,8 +63,16 @@ def inputs(spark, world):
         pd.DataFrame({"q": ["a", "a", "b", None], "c": [1, 2, 3, 4],
                       "sim": [0.5, 0.7, 0.1, 0.2]}),
         schema="q string, c long, sim double")
+    rng = np.random.default_rng(3)
+    corpus = spark.createDataFrame(
+        pd.DataFrame({"vec_id": np.arange(20, dtype=np.int64),
+                      "embedding": list(rng.normal(size=(20, 4)).astype(np.float32))}),
+        schema="vec_id long, embedding array<float>")
+    queries = corpus.filter("vec_id IN (2, 11)").selectExpr("vec_id AS q_id",
+                                                            "embedding AS q_vec")
     return {"images": images, "polys": polys(tri, rect), "none": polys(tiny),
-            "docs": docs, "short_docs": short_docs, "scored": scored, "world": world}
+            "docs": docs, "short_docs": short_docs, "scored": scored, "world": world,
+            "corpus": corpus, "queries": queries}
 
 
 @pytest.fixture
@@ -84,15 +91,15 @@ def kernels(spark, monkeypatch):
     return calls
 
 
-#: kernel name → (operator over the normal inputs, operator over inputs
-#: none of whose kernel rows yields output, or None where every row does)
+#: kernel name (with a ``-case`` suffix where one kernel is run on two
+#: kinds of input) → (operator over the normal inputs, operator over
+#: inputs none of whose kernel rows yields output, or None where every
+#: row does)
 OPERATORS = {
     "_pixel_runs": (lambda d: polygon_pixels(d["polys"], d["images"]),
                     lambda d: polygon_pixels(d["none"], d["images"])),
-    "_pixel_run_blobs": (lambda d: polygon_pixel_run_blobs(d["polys"], d["images"]),
-                         lambda d: polygon_pixel_run_blobs(d["none"], d["images"])),
-    "_band_subrun_kernel_blob": (lambda d: polygon_color_invariants(d["polys"], d["images"]),
-                                 None),
+    "_band_subrun_kernel": (lambda d: polygon_color_invariants(d["polys"], d["images"]),
+                            None),
     "_invariants_partition_subs": (lambda d: polygon_color_invariants(d["polys"], d["images"]),
                                    None),
     "_dissolve_partition_subs": (lambda d: polygon_color_features(d["polys"], d["images"]),
@@ -105,10 +112,15 @@ OPERATORS = {
     "kernel": (lambda d: dedup.minhash_signature(d["docs"]),
                lambda d: dedup.minhash_signature(d["short_docs"])),
     "prune": (lambda d: similarity.topk_per_query(d["scored"], 1, "q", "c"), None),
+    "score_prune-list": (lambda d: similarity.cosine_topk(d["corpus"], d["queries"], k=3),
+                         None),
+    "score_prune-packed": (lambda d: similarity.cosine_topk(
+        similarity.pack_vectors(d["corpus"]), d["queries"], k=3), None),
 }
 
 
-def _captured(kernels, name):
+def _captured(kernels, case):
+    name = case.partition("-")[0]
     found = [(df, func, schema) for df, func, schema in kernels if func.__name__ == name]
     assert len(found) == 1, [func.__name__ for _, func, _ in kernels]
     return found[0]

@@ -23,6 +23,9 @@ is dead code and leaves the package.  The same holds for every
 top-level function and class: one that only tests reach leaves the
 package, or moves to ``tests/`` when a test uses it as a reference.
 
+No package module imports another's private (``_``-prefixed) name;
+a name two modules share is public.
+
 Every settable value is set by someone.  A defaulted parameter that no
 call in the package or an entry point passes (by keyword or by
 position) carries one value, so it is a module constant or a literal
@@ -122,6 +125,42 @@ def test_detector_sees_pandas_map_calls():
            "mapInPandas(f)\n"
            "fn = df.mapInPandas\n")
     assert _pandas_map_calls(ast.parse(src)) == [1, 2]
+
+
+def _private_imports(tree: ast.AST) -> list[tuple[int, str]]:
+    """(line, name) for each ``_name`` imported from the package, by a
+    relative import or by the package's absolute name (dunders are not
+    private)."""
+    found = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and (
+                node.level or node.module.split(".")[0] == PACKAGE.name):
+            found += [(node.lineno, a.name) for a in node.names
+                      if a.name.startswith("_") and not a.name.endswith("__")]
+    return sorted(found)
+
+
+def test_no_private_cross_module_imports():
+    """A module's ``_name`` is its own: another package module that needs
+    it needs a public name, so the two modules' contract is visible.
+    Tests may reach private names."""
+    offenders = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        rel = path.relative_to(PACKAGE).as_posix()
+        offenders += [f"{rel}:{line} {name}" for line, name in
+                      _private_imports(ast.parse(path.read_text(), str(path)))]
+    assert not offenders, f"private names imported across modules: {offenders}"
+
+
+def test_detector_sees_private_imports():
+    src = ("from .polygon import _unpack, polygon_pixels\n"
+           "from openelevationservice_spark.operators.color import (\n    a, _b)\n"
+           "from ..functions import _codec as c\n"
+           "from . import __version__\n"
+           "from numpy import _private\n"
+           "import openelevationservice_spark._x\n"
+           "from __future__ import annotations\n")
+    assert _private_imports(ast.parse(src)) == [(1, "_unpack"), (2, "_b"), (4, "_codec")]
 
 
 def _shape_selectors(tree: ast.Module) -> list[str]:

@@ -154,3 +154,28 @@ def test_dissolve_exchange_partition_count_is_explicit(spark, images, world):
     m = re.search(r"hashpartitioning\(poly_id[^,]*, height_base[^,]*, (\d+)\)", plan)
     assert m, "dissolve band exchange missing from plan"
     assert int(m.group(1)) == want, (m.group(0), want)
+
+
+def test_polygon_operators_share_one_rasterizer(spark, images, world):
+    """The pixel dump and the band dissolve read ONE run table: each
+    optimized plan holds exactly one ``_pixel_runs`` kernel (the
+    dissolve's stats and band split both read its leased cache), and
+    the dissolve's stats are the codegen'd ``array_min``/``array_max``,
+    with no interpreted ``aggregate`` lambda left in the plan."""
+    from openelevationservice_spark.operators.color import polygon_color_invariants
+
+    polys = spark.createDataFrame(
+        pd.DataFrame({
+            "poly_id": [0],
+            "ring": [[{"lon": world.min_x + dx, "lat": world.max_y - dy}
+                      for dx, dy in ((0.01, 0.01), (0.4, 0.01), (0.4, 0.4),
+                                     (0.01, 0.4), (0.01, 0.01))]],
+        }),
+        schema="poly_id long, ring array<struct<lon:double,lat:double>>",
+    )
+    assert pc.kernel_nodes(polygon_pixels(polys, images), "_pixel_runs") == 1
+    bands = polygon_color_invariants(polys, images)
+    assert pc.kernel_nodes(bands, "_pixel_runs") == 1
+    plan = bands._jdf.queryExecution().optimizedPlan().toString()
+    assert "array_min(" in plan and "array_max(" in plan
+    assert "aggregate(" not in plan

@@ -289,12 +289,11 @@ def test_dissolve_bands_of_one_polygon_spread_across_tasks(spark, world, images)
 
 
 def test_runs_stats_equal_pixel_stats(spark, world, images):
-    """blob_stats (scalar per-pair min/max/sum/count beside the packed
-    run blobs) must be value-identical to polygon_stats over the
-    exploded pixel rows — including the double avg (exact integer sum /
-    count in both)."""
+    """run_stats (JVM aggregates over the run table's ``zs``) must be
+    value-identical to polygon_stats over the exploded pixel rows —
+    including the double avg (exact integer sum / count in both)."""
     from openelevationservice_spark.operators.polygon import (
-        blob_stats, polygon_pixel_run_blobs,
+        polygon_pixel_runs, run_stats,
     )
 
     x0 = world.min_x + 0.1 * TILE_DEG
@@ -310,7 +309,7 @@ def test_runs_stats_equal_pixel_stats(spark, world, images):
                       "ring": [tri, bbox_ring(x0, y0, x0 + 0.7 * TILE_DEG,
                                               y0 + 0.9 * TILE_DEG)]}),
         schema="poly_id long, ring array<struct<lon:double, lat:double>>")
-    a = (blob_stats(polygon_pixel_run_blobs(polys, images))
+    a = (run_stats(polygon_pixel_runs(polys, images))
          .toPandas().sort_values("poly_id").reset_index(drop=True))
     b = (polygon_stats(polygon_pixels(polys, images))
          .toPandas().sort_values("poly_id").reset_index(drop=True))
@@ -335,7 +334,7 @@ def reference_bands(px: pd.DataFrame, num_ranges: int = NUM_RANGES):
 
 
 def test_dissolve_subrun_shape_equals_pixel_shape(spark, world, images):
-    """The blob-resident dissolve (band-split subruns, batched
+    """The run-table dissolve (band-split subruns, batched
     invariants) equals bands traced one at a time from the pixel dump:
     invariants against ring areas + connected-component labeling,
     features against ``dissolve_pixels_rings`` — on a rectangle (rect

@@ -188,9 +188,7 @@ def test_batch_rasterizer_equals_per_pair_reference(seed, chunk):
     vectorized rectangle test, runs from one scanline diff) emits the
     same (poly_id, gy, gx0, len, z) runs, in the same order, as the
     per-pair reference (tests/references.py) on seeded random rings —
-    with chunks of 3 pairs and with one chunk per batch.  The packed
-    blobs of the dissolve path unpack to the same runs and carry the
-    same per-pair z stats."""
+    with chunks of 3 pairs and with one chunk per batch."""
     from unittest import mock
 
     import pandas as pd
@@ -206,8 +204,6 @@ def test_batch_rasterizer_equals_per_pair_reference(seed, chunk):
     with mock.patch.object(polygon, "MASK_CHUNK_PAIRS", chunk):
         runs = pa.Table.from_batches(list(polygon._pixel_runs(iter([rb]))),
                                      schema=polygon._RUN_ARROW)
-        blobs = pa.Table.from_batches(list(polygon._pixel_run_blobs(iter([rb]))),
-                                      schema=polygon._RUN_BLOB_ARROW)
     zs = runs.column("zs").to_pylist()
     got = pd.DataFrame({"poly_id": runs.column("poly_id").to_pylist(),
                         "gy": runs.column("gy").to_pylist(),
@@ -215,16 +211,3 @@ def test_batch_rasterizer_equals_per_pair_reference(seed, chunk):
                         "len": [len(z) for z in zs], "z": [tuple(z) for z in zs]},
                        columns=RUN_COLUMNS)
     assert got.values.tolist() == want.values.tolist()
-
-    n_runs, gy, gx0, ln, z = polygon._unpack_run_blobs(
-        blobs.column("blob").combine_chunks())
-    assert np.repeat(blobs.column("poly_id").to_numpy(), n_runs).tolist() == \
-        want["poly_id"].tolist()
-    assert (gy.tolist(), gx0.tolist(), ln.tolist()) == \
-        (want["gy"].tolist(), want["gx0"].tolist(), want["len"].tolist())
-    assert z.tolist() == [v for run in want["z"] for v in run]
-    per_pair = np.split(z, np.cumsum(blobs.column("run_n").to_numpy())[:-1])
-    if len(per_pair[0]):
-        assert blobs.column("run_min").to_pylist() == [int(p.min()) for p in per_pair]
-        assert blobs.column("run_max").to_pylist() == [int(p.max()) for p in per_pair]
-        assert blobs.column("run_sum").to_pylist() == [int(p.sum()) for p in per_pair]
