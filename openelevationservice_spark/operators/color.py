@@ -82,7 +82,8 @@ def _dissolve_partitions(df: DataFrame) -> int:
     interleaved minima: 4× 5.90 s, 2× 5.19 s, 1× 8.56 s (straggler
     tail) — with the batched invariants kernel the per-task python
     dispatch outweighs 4×'s extra balance slack, while 1× loses the
-    skew headroom outright."""
+    skew headroom outright.  The sweep predates the zip-import cache of
+    ``plans/worker.py``, which cut that per-task dispatch."""
     return df.sparkSession.sparkContext.defaultParallelism * 2
 
 
