@@ -737,10 +737,13 @@ def q_polyline_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte-exact golden strings are pinned separately in
     tests/test_polyline.py.
     """
-    import pandas as pd
+    import numpy as np
+    import pyarrow as pa
     from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     from .functions import polyline as pl
+    from .functions.arrow_batches import record_batch
 
     lines = _lines_df(spark, sf_dir).withColumn(
         "z1", (F.col("line_id") % 3000).cast("double") * F.lit(0.01)
@@ -755,22 +758,21 @@ def q_polyline_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         T.StructField("z_e2", T.LongType()),
     ])
 
-    def rt(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples():
-                coords = [(r.x1, r.y1, r.z1), (r.x2, r.y2, r.z2)]
-                dec = pl.decode(pl.encode(coords, 5, is3d=True), 5, is3d=True)
-                for i, (lon, lat, z) in enumerate(dec):
-                    rows.append({
-                        "line_id": int(r.line_id), "pt_idx": i,
-                        "lon_e5": int(round(lon * 1e5)),
-                        "lat_e5": int(round(lat * 1e5)),
-                        "z_e2": int(round(z * 100)),
-                    })
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+    out = to_arrow_schema(schema)
 
-    return lines.mapInPandas(rt, schema=schema)
+    def rt(batches):
+        for rb in batches:
+            rows = []
+            cols = (rb.column(n).to_pylist() for n in ("line_id", "x1", "y1", "z1",
+                                                       "x2", "y2", "z2"))
+            for line_id, x1, y1, z1, x2, y2, z2 in zip(*cols):
+                enc = pl.encode([(x1, y1, z1), (x2, y2, z2)], 5, is3d=True)
+                rows += [(line_id, i, round(lon * 1e5), round(lat * 1e5), round(z * 100))
+                         for i, (lon, lat, z) in enumerate(pl.decode(enc, 5, is3d=True))]
+            vals = np.array(rows, dtype=np.int64).reshape(-1, len(out))
+            yield record_batch(out, [pa.array(v) for v in vals.T])
+
+    return lines.mapInArrow(rt, schema=schema)
 
 
 def _sql_polyline_roundtrip() -> str:
@@ -833,10 +835,13 @@ def q_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """2x block-mean downsample (numpy, Arrow-batched) then re-decode;
     emits every resized pixel.  int16 cast truncates toward zero —
     mirrored by trunc() in the oracle."""
-    import pandas as pd
+    import numpy as np
+    import pyarrow as pa
     from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     from .functions import image_codec
+    from .functions.arrow_batches import record_batch
     from .operators.multimodal import resize
 
     small = resize(_images(spark), factor=2)
@@ -848,25 +853,20 @@ def q_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
         T.StructField("z2", T.LongType()),
     ])
 
-    def dump(batches):
-        import numpy as np
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples():
-                g = image_codec.decode(r.bytes, r.fmt, int(r.w), int(r.h))
-                tx, ty = int(r.image_id[5:10]), int(r.image_id[11:16])
-                ii, jj = np.meshgrid(np.arange(g.shape[0]), np.arange(g.shape[1]),
-                                     indexing="ij")
-                out.append(pd.DataFrame({
-                    "tx": tx, "ty": ty,
-                    "i2": ii.ravel().astype(np.int64),
-                    "j2": jj.ravel().astype(np.int64),
-                    "z2": g.ravel().astype(np.int64),
-                }))
-            yield (pd.concat(out, ignore_index=True) if out
-                   else pd.DataFrame(columns=[f.name for f in schema.fields]))
+    out = to_arrow_schema(schema)
 
-    return small.mapInPandas(dump, schema=schema)
+    def dump(batches):
+        for rb in batches:
+            # one (tx, ty, i2, j2, z2) row per pixel of every resized tile
+            cols = [np.empty((5, 0), np.int64)]
+            for img, g in zip(rb.column("image_id").to_pylist(), image_codec.decode_rows(rb)):
+                cols.append(np.vstack([np.full(g.size, int(img[5:10])),
+                                       np.full(g.size, int(img[11:16])),
+                                       np.indices(g.shape).reshape(2, -1), g.ravel()]))
+            vals = np.hstack(cols).astype(np.int64)
+            yield record_batch(out, [pa.array(v) for v in vals])
+
+    return small.mapInArrow(dump, schema=schema)
 
 
 def _sql_image_resize() -> str:
@@ -985,8 +985,7 @@ def q_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     can beat the phase-1 best.  No cross join, no full-corpus window —
     the brute-force all-pairs version is demoted to the SQL oracle."""
     emb = _read(spark, sf_dir, "embeddings")
-    out = similarity.exact_nn(emb, id_col="vec_id", vec_col="embedding",
-                              n_centroids=8)
+    out = similarity.exact_nn(emb, n_centroids=8)
     return out.select("vec_id", "nn_id", F.round("sim", 6).alias("sim"))
 
 
@@ -1083,7 +1082,7 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
-    cent = similarity.ivf_seed_centroids(emb, "embedding", "vec_id", _IVF_K)
+    cent = similarity.ivf_seed_centroids(emb, _IVF_K)
     out = similarity.ivf_topk(emb, queries, k=3, n_centroids=_IVF_K,
                               nprobe=_IVF_NPROBE, centroids=cent)
     return out.select("q_id", F.col("rank").cast("long").alias("rank"),

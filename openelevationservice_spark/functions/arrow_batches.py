@@ -1,9 +1,10 @@
 """Arrow column plumbing for the ``mapInArrow`` kernels.
 
-Every Python kernel of the package is a ``mapInArrow`` function.  It
-reads a binary or list input column through that column's offsets and
-values buffers, so no per-row Python object is made, and it builds each
-output column from one concatenated numpy values array plus one offsets
+Every Python kernel of the package is a ``mapInArrow`` function (a
+tier-1 AST test rejects ``pandas_udf`` and ``mapInPandas``).  It reads
+a binary or list input column through that column's offsets and values
+buffers, so no per-row Python object is made, and it builds each output
+column from one concatenated numpy values array plus one offsets
 array.  ``mapInArrow`` reads the batches a kernel yields by the types of
 its Spark schema (``pyspark.sql.pandas.types.to_arrow_schema``) and
 checks none of them on the Python side, so :func:`record_batch` checks

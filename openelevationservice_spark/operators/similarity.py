@@ -11,11 +11,12 @@ shape, and it is the shape the DuckDB oracle checks.
 Determinism: LSH hyperplanes and IVF centroids are derived from md5 /
 deterministic k-means, so an external engine (the DuckDB oracle) can
 reproduce bucketing bit-for-bit from injected literals.  Every dot
-product — similarity values, LSH plane signs, IVF centroid ranks — is a
-sequential-in-dimension fold of doubles, whether it runs as a Column
-fold in the JVM or one of the two numpy folds (:func:`_fold_dots`,
-:func:`_fold_sq`), so it has the same IEEE-754 result as DuckDB's
-``list_reduce``.
+product of a kernel is a sequential-in-dimension numpy fold of doubles
+(:func:`_fold_dots` over all pairs, :func:`_fold_rows` row by row), the
+IEEE-754 order of DuckDB's ``list_reduce``; every norm is checked by
+:func:`_nonzero`, which names a zero-norm vector (its cosine is 0/0).
+Every kernel is a ``mapInArrow`` function: :func:`_pair_sims` scores
+candidate pairs, :func:`_with_columns` adds computed columns.
 
 Top-k extraction is two-stage: a shuffle-free per-partition prune
 keeps each partition's local top-k per query, the final per-query
@@ -40,7 +41,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from ..functions.arrow_batches import binary_buffers, record_batch
+from ..functions.arrow_batches import (binary_array, binary_buffers, list_array,
+                                       list_offsets, record_batch)
 from ..plans.cache import lease
 
 #: cap on driver-collected query rows for the brute-force paths — the
@@ -59,40 +61,39 @@ KMEANS_SAMPLE = 4096
 NN_PRUNE_MARGIN = 1e-9
 
 
-def _dot(a, b):
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
-                       F.lit(0.0), lambda acc, x: acc + x)
-
-
-def _norm(a):
-    return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x),
-                              F.lit(0.0), lambda acc, x: acc + x))
-
-
 def _fold_dots(mat: np.ndarray, rows: np.ndarray) -> np.ndarray:
     """(n, m) dot products of every row of ``mat`` with every row of
     ``rows`` as a sequential-in-dimension fold: acc = ((0 + x₀y₀) +
-    x₁y₁) + …, the IEEE order of :func:`_dot` and of DuckDB's
-    ``list_reduce`` (a matmul's blocked summation could round a
-    near-zero dot to the other sign)."""
+    x₁y₁) + …, the IEEE order of DuckDB's ``list_reduce`` (a matmul's
+    blocked summation could round a near-zero dot to the other sign)."""
     acc = np.zeros((mat.shape[0], rows.shape[0]))
     for i in range(mat.shape[1]):
         acc += mat[:, i, None] * rows[:, i]
     return acc
 
 
-def _fold_sq(mat: np.ndarray) -> np.ndarray:
-    """Row-wise sum of squares as the same sequential fold — the IEEE
-    order of :func:`_norm`'s ``aggregate``."""
-    acc = np.zeros(mat.shape[0])
-    for i in range(mat.shape[1]):
-        acc += mat[:, i] * mat[:, i]
+def _fold_rows(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Row-wise dot products of two (n, dim) matrices as the same fold."""
+    acc = np.zeros(a.shape[0])
+    for i in range(a.shape[1]):
+        acc += a[:, i] * b[:, i]
     return acc
 
 
-def cosine_similarity_col(a, b):
-    """cos(a, b) as a Column — sequential fold, deterministic order."""
-    return _dot(a, b) / (_norm(a) * _norm(b))
+def _nonzero(norms: np.ndarray, ids: pa.Array) -> np.ndarray:
+    """``norms``, after raising ``ValueError`` naming the id of the first
+    vector whose norm is 0 (its cosine is 0/0)."""
+    zero = np.flatnonzero(norms == 0)
+    if len(zero):
+        raise ValueError(f"vector {ids[int(zero[0])].as_py()!r} has norm 0: "
+                         f"its cosine similarity is undefined")
+    return norms
+
+
+def _norms(mat: np.ndarray, ids: pa.Array) -> np.ndarray:
+    """Row norms of ``mat`` as an IEEE sqrt of the fold sum of squares,
+    checked by :func:`_nonzero`."""
+    return _nonzero(np.sqrt(_fold_rows(mat, mat)), ids)
 
 
 def _sort_key(a: np.ndarray) -> np.ndarray:
@@ -150,11 +151,8 @@ def topk_per_query(scored: DataFrame, k: int, query_id: str, corpus_id: str) -> 
     ``mapInArrow`` over the three narrow score columns — values pass
     through bit-exact, only row selection happens) with ZERO shuffle;
     the final per-query ``row_number`` window then ranks only ≤ P·k
-    survivors per query.  The full score set never crosses an exchange —
-    a single per-query window funnels corpus×queries rows through
-    ≤|queries| reducers, a straggler by construction at 100× corpus.
-    Output is identical to the single window (the true top-k rows are
-    each top-k within their own partition).
+    survivors per query.  Output is identical to the single window (the
+    true top-k rows are each top-k within their own partition).
 
     The prune is incremental (:func:`_carry_topk`): after every Arrow
     batch the carry is cut back to ≤ q·k rows, so per-task memory is
@@ -180,6 +178,46 @@ def topk_per_query(scored: DataFrame, k: int, query_id: str, corpus_id: str) -> 
     return _rank_topk(scored.mapInArrow(prune, schema=schema), k, query_id, corpus_id)
 
 
+def _with_columns(df: DataFrame, fields: list[T.StructField], compute) -> DataFrame:
+    """``df`` plus the columns ``compute(rb)`` returns per Arrow batch (in
+    ``fields``' order) as one ``mapInArrow`` kernel named after
+    ``compute``; as in ``withColumn``, a field named like an input
+    column replaces it in place."""
+    new = {f.name: f for f in fields}
+    schema = T.StructType([new.pop(f.name, f) for f in df.schema] + list(new.values()))
+    out = to_arrow_schema(schema)
+    names = [f.name for f in fields]
+
+    def kernel(batches):
+        for rb in batches:
+            cols = dict(zip(names, compute(rb), strict=True))
+            yield record_batch(out, [cols[n] if n in cols else rb.column(n)
+                                     for n in schema.names])
+
+    kernel.__name__ = compute.__name__
+    return df.mapInArrow(kernel, schema)
+
+
+def _pair_sims(pairs: DataFrame) -> DataFrame:
+    """(query id, corpus id, ``sim``) of (query id, corpus id, query
+    vector, corpus vector) rows in one ``mapInArrow`` kernel: sim =
+    fold dot / (|q| · |c|) in float64, every term a sequential fold
+    (:func:`_fold_rows`, :func:`_norms`), bit-identical to the SQL
+    oracle's ``list_reduce`` cosine and to :func:`cosine_topk`."""
+    schema = T.StructType(pairs.schema.fields[:2] + [T.StructField("sim", T.DoubleType())])
+    out = to_arrow_schema(schema)
+
+    def pair_sims(batches):
+        for rb in batches:
+            q_ids, c_ids = rb.column(0), rb.column(1)
+            q = _unpack_list(rb.column(2)).astype(np.float64)
+            c = _unpack_list(rb.column(3), q.shape[1]).astype(np.float64)
+            sims = _fold_rows(q, c) / (_norms(q, q_ids) * _norms(c, c_ids))
+            yield record_batch(out, [q_ids, c_ids, pa.array(sims)])
+
+    return pairs.mapInArrow(pair_sims, schema)
+
+
 #: element type of a packed vector column: written by :func:`pack_vectors`,
 #: read by :func:`_unpack_binary`
 PACKED_DTYPE = np.dtype("<f4")
@@ -198,13 +236,11 @@ def pack_vectors(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     ``np.frombuffer`` — float32 packing of a float32 source is lossless,
     so scores are bit-identical to the list path.
     """
-    @F.pandas_udf(T.BinaryType())
-    def pack(v: pd.Series) -> pd.Series:
-        return pd.Series(
-            [np.asarray(a, dtype=PACKED_DTYPE).tobytes() for a in v], dtype=object
-        )
+    def pack(rb):
+        mat = _unpack_list(rb.column(vec_col)).astype(PACKED_DTYPE)
+        return [binary_array(np.full(len(mat), mat.shape[1] * PACKED_DTYPE.itemsize), mat)]
 
-    return df.withColumn(vec_col, pack(F.col(vec_col)))
+    return _with_columns(df, [T.StructField(vec_col, T.BinaryType())], pack)
 
 
 def _unpack_binary(arr: "pa.Array", dim: int) -> np.ndarray:
@@ -220,15 +256,18 @@ def _unpack_binary(arr: "pa.Array", dim: int) -> np.ndarray:
     return data[off[0]:off[-1]].view(PACKED_DTYPE).reshape(n, dim)
 
 
-def _unpack_list(arr: "pa.Array", dim: int) -> np.ndarray:
-    """Flatten a fixed-length ``list<float>`` Arrow column to an
-    (n, dim) matrix — one contiguous child-buffer view (``flatten`` is
-    a slice of the child array when offsets are contiguous), instead of
-    one numpy object per row + ``np.stack``."""
-    flat = arr.flatten().to_numpy(zero_copy_only=False)
-    if flat.size != len(arr) * dim:
+def _unpack_list(arr: "pa.Array", dim: int | None = None) -> np.ndarray:
+    """Flatten a ``list<float/double>`` Arrow column whose every row has
+    ``dim`` values (by default, the first row's length) to an (n, dim)
+    matrix — one contiguous child-buffer view (``flatten`` is a slice of
+    the child array when offsets are contiguous), instead of one numpy
+    object per row + ``np.stack``."""
+    lengths = np.diff(list_offsets(arr))
+    if dim is None:
+        dim = int(lengths[0]) if len(lengths) else 0
+    if (lengths != dim).any():
         raise ValueError("embedding lists are not fixed-length")
-    return flat.reshape(len(arr), dim)
+    return arr.flatten().to_numpy(zero_copy_only=False).reshape(len(arr), dim)
 
 
 def cosine_topk(corpus_df: DataFrame, queries_df: DataFrame, k: int = 3) -> DataFrame:
@@ -241,28 +280,23 @@ def cosine_topk(corpus_df: DataFrame, queries_df: DataFrame, k: int = 3) -> Data
 
     Scoring and the per-partition top-k prune are ONE ``mapInArrow``
     kernel over raw record batches: the corpus matrix is a view of the
-    Arrow buffers (no per-row python objects).  Each batch is scored
-    against every query with the *sequential-in-dimension* folds
-    :func:`_fold_dots` and :func:`_fold_sq` — the identical IEEE
-    operation order as the SQL oracle's
-    ``list_reduce`` and :func:`cosine_similarity_col` (acc = ((0 +
-    x₀y₀) + x₁y₁) + …, norms as sequential squared sums, then one
-    multiply and one divide), so results are bit-exact across engines.
-    A ``binary`` corpus column (packed vectors, see :func:`pack_vectors`)
-    is detected automatically and unpacked in place; float32 packing of a
-    float32 source is lossless, so the packed path is bit-identical to
-    the list path too.
+    Arrow buffers.  Each batch is scored against every query with the
+    sequential folds :func:`_fold_dots` and :func:`_norms` — the IEEE
+    order of the SQL oracle's ``list_reduce`` and of :func:`_pair_sims`,
+    so results are bit-exact across engines and operators.  A zero-norm
+    query raises on the driver before any job runs, a zero-norm corpus
+    row in the kernel.  A ``binary`` corpus column (packed vectors, see
+    :func:`pack_vectors`) is detected automatically and unpacked in
+    place; float32 packing of a float32 source is lossless, so the
+    packed path is bit-identical to the list path too.
     Each batch takes one ``np.partition`` threshold per query (all
     queries at once, O(n) per batch); the rows at or above a query's
     k-th score go long-form through the same running carry and
     ``lexsort`` cut as :func:`topk_per_query` (:func:`_carry_topk`), and
     the same final window ranks the survivors.
-    Rationale (BENCH/SCALE.md r4 decomposition): the Column
-    ``aggregate``/``zip_with`` fold over a cross join is
-    CodegenFallback — interpreted, one boxed object per element — and
-    was measured as ~95 % of query wall with a 0.75 scaling ceiling from
-    single-JVM-heap allocation contention; the Arrow kernel runs in
-    separate worker processes and sidesteps both.
+    Rationale (BENCH/SCALE.md r4): the JVM Column fold it replaced is
+    CodegenFallback, measured at ~95 % of query wall with a 0.75 scaling
+    ceiling from single-JVM-heap allocation contention.
     """
     # The query side rides inside every scoring task (driver collect +
     # closure capture) — that is the operator's contract and only holds
@@ -278,24 +312,21 @@ def cosine_topk(corpus_df: DataFrame, queries_df: DataFrame, k: int = 3) -> Data
             f"sets use lsh_ann_topk/ivf_topk (bucketed equi-joins) or "
             f"score in chunks."
         )
-    if not len(qpdf):
-        # empty query set: empty result, correct schema
-        schema = T.StructType([
-            T.StructField("q_id", queries_df.schema["q_id"].dataType),
-            T.StructField("rank", T.IntegerType(), False),
-            T.StructField("vec_id", corpus_df.schema["vec_id"].dataType),
-            T.StructField("sim", T.DoubleType()),
-        ])
-        return corpus_df.sparkSession.createDataFrame([], schema)
-    qmat = np.stack([np.asarray(v, dtype=np.float64) for v in qpdf["q_vec"]])
-    nq, dim = qmat.shape
-    qn = np.sqrt(_fold_sq(qmat))
-
     schema = T.StructType([
         T.StructField("q_id", queries_df.schema["q_id"].dataType),
         T.StructField("vec_id", corpus_df.schema["vec_id"].dataType),
         T.StructField("sim", T.DoubleType()),
     ])
+    if not len(qpdf):
+        # empty query set: empty result, correct schema
+        rank = T.StructField("rank", T.IntegerType(), False)
+        return corpus_df.sparkSession.createDataFrame(
+            [], T.StructType(schema.fields[:1] + [rank] + schema.fields[1:]))
+    out = to_arrow_schema(schema)
+    q_ids = pa.array(qpdf["q_id"], type=out.field("q_id").type)
+    qmat = np.stack([np.asarray(v, dtype=np.float64) for v in qpdf["q_vec"]])
+    nq, dim = qmat.shape
+    qn = _norms(qmat, q_ids)
 
     # packed-binary corpus (see pack_vectors): the Arrow transfer ships
     # one buffer memcpy per row instead of per-element list writes — the
@@ -309,7 +340,7 @@ def cosine_topk(corpus_df: DataFrame, queries_df: DataFrame, k: int = 3) -> Data
         varr = rb.column(rb.schema.get_field_index("embedding"))
         mat = (_unpack_binary(varr, dim) if is_packed
                else _unpack_list(varr, dim)).astype(np.float64)
-        sims = _fold_dots(mat, qmat) / (np.sqrt(_fold_sq(mat))[:, None] * qn)
+        sims = _fold_dots(mat, qmat) / (_norms(mat, rb.column("vec_id"))[:, None] * qn)
         n = len(mat)
         if n > k:
             rows, qi = np.nonzero(sims >= np.partition(sims, n - k, axis=0)[n - k])
@@ -317,9 +348,6 @@ def cosine_topk(corpus_df: DataFrame, queries_df: DataFrame, k: int = 3) -> Data
             rows, qi = np.divmod(np.arange(n * nq), nq)
         return pa.table({"q": qi, "c": rb.column("vec_id").take(pa.array(rows)),
                          "s": sims[rows, qi]})
-
-    out = to_arrow_schema(schema)
-    q_ids = pa.array(qpdf["q_id"], type=out.field("q_id").type)
 
     def score_prune(batches):
         carry = _carry_topk((candidates(rb) for rb in batches if rb.num_rows),
@@ -358,19 +386,18 @@ def with_lsh_bucket(df: DataFrame, vec_col: str = "embedding",
     vector's dot product with hyperplane p
     (:func:`deterministic_hyperplanes` at its default seed) is positive.
 
-    One scalar Arrow UDF; each batch's dot products are a
+    One ``mapInArrow`` kernel; each batch's dot products are a
     sequential-in-dimension fold (:func:`_fold_dots`), so buckets equal
     the SQL oracle's ``list_reduce`` sign bits exactly.
     """
-    @F.pandas_udf(T.IntegerType())
-    def bucket(v: pd.Series) -> pd.Series:
-        mat = np.stack(v.to_numpy()).astype(np.float64)  # (n, dim)
+    def bucket(rb):
+        mat = _unpack_list(rb.column(vec_col)).astype(np.float64)   # (n, dim)
         planes = np.asarray(deterministic_hyperplanes(mat.shape[1], n_planes),
-                            dtype=np.float64)             # (p, dim)
-        signs = _fold_dots(mat, planes) > 0               # (n, p)
-        return pd.Series((signs * (1 << np.arange(n_planes))).sum(axis=1).astype(np.int32))
+                            dtype=np.float64)                       # (p, dim)
+        signs = _fold_dots(mat, planes) > 0                         # (n, p)
+        return [pa.array((signs * (1 << np.arange(n_planes))).sum(axis=1).astype(np.int32))]
 
-    return df.withColumn("bucket", bucket(F.col(vec_col)))
+    return _with_columns(df, [T.StructField("bucket", T.IntegerType())], bucket)
 
 
 def lsh_ann_topk(corpus_df: DataFrame, queries_df: DataFrame, k: int = 3,
@@ -383,45 +410,38 @@ def lsh_ann_topk(corpus_df: DataFrame, queries_df: DataFrame, k: int = 3,
     knob).  Candidate volume ~ corpus/2^p per probe — scale path.
     Both sides are bucketed by :func:`with_lsh_bucket`, the probes join
     the corpus on bucket id (broadcast query side), candidates are
-    scored by :func:`cosine_similarity_col` and ranked by
-    :func:`topk_per_query`.
+    scored by :func:`_pair_sims` and ranked by :func:`topk_per_query`.
     """
     c = with_lsh_bucket(corpus_df.select("vec_id", "embedding"), "embedding", n_planes)
-    q = with_lsh_bucket(queries_df.select("q_id", F.col("q_vec")), "q_vec", n_planes)
+    q = with_lsh_bucket(queries_df.select("q_id", "q_vec"), "q_vec", n_planes)
     probes = [F.col("bucket")] + [
         F.col("bucket").bitwiseXOR(F.lit(1 << b)) for b in range(probe_bits)
     ]
-    q = q.withColumn("probe", F.explode(F.array(*probes)))
-    vec_d = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    qvec_d = F.transform(F.col("q_vec"), lambda x: x.cast("double"))
-    j = (
-        c.select("vec_id", vec_d.alias("_cv"), F.col("bucket").alias("cbucket"))
-        .join(F.broadcast(q.select("q_id", qvec_d.alias("_qv"), F.col("probe").alias("cbucket"))),
-              "cbucket")
-    )
-    j = j.select("q_id", "vec_id",
-                 cosine_similarity_col(F.col("_cv"), F.col("_qv")).alias("sim"))
-    return topk_per_query(j, k, "q_id", "vec_id").select("q_id", "rank", "vec_id", "sim")
+    q = q.select("q_id", "q_vec", F.explode(F.array(*probes)).alias("bucket"))
+    j = c.join(F.broadcast(q), "bucket")
+    sims = _pair_sims(j.select("q_id", "vec_id", "q_vec", "embedding"))
+    return topk_per_query(sims, k, "q_id", "vec_id").select("q_id", "rank", "vec_id", "sim")
 
 
 # --- IVF (inverted-file) ANN — coarse-quantizer scale path -----------------
 
-def ivf_train_centroids(corpus_df: DataFrame, vec_col: str = "embedding",
-                        id_col: str = "vec_id", n_centroids: int = 16) -> np.ndarray:
+def ivf_train_centroids(corpus_df: DataFrame, n_centroids: int = 16) -> np.ndarray:
     """Train the IVF coarse quantizer: ``KMEANS_ITERS`` rounds of numpy
-    k-means on a deterministic sample (ordered-by-id head).
+    k-means on a deterministic sample (ordered-by-id head) of corpus
+    (vec_id, embedding).
 
     The quantizer is tiny (k x dim floats) and training it driver-side
     on a bounded sample is the standard IVF shape — at 10^12 rows the
     sample is still ``KMEANS_SAMPLE`` rows; only assignment is distributed.
     Initialization is the first ``n_centroids`` sample rows (seed-free,
     deterministic); empty clusters are re-seeded from the row with the
-    worst quantization error.  Centroids are unit-norm.
+    worst quantization error.  Centroids are unit-norm (BLAS norms and
+    matmul: they only choose the lists; every sim is a fold).
     """
-    pdf = (corpus_df.select(id_col, vec_col).orderBy(id_col)
+    pdf = (corpus_df.select("vec_id", "embedding").orderBy("vec_id")
            .limit(KMEANS_SAMPLE).toPandas())
-    x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)  # (n, dim)
-    x_n = x / np.linalg.norm(x, axis=1, keepdims=True)
+    x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)  # (n, dim)
+    x_n = x / _nonzero(np.linalg.norm(x, axis=1), pa.array(pdf["vec_id"]))[:, None]
     cent = x_n[:n_centroids].copy()
     for _ in range(KMEANS_ITERS):
         sims = x_n @ cent.T                       # cosine on unit vectors
@@ -443,78 +463,74 @@ def ivf_assign(df: DataFrame, centroids: np.ndarray, vec_col: str,
     """Attach the ``nprobe`` nearest inverted-list ids as ``ivf_list``
     (exploded so the join below is a plain equi-join).
 
-    One scalar Arrow UDF ranks the centroids by raw dot product (argmax
-    over dots == argmax over cosines: the vector's norm does not change
-    the order), computed as a sequential-in-dimension fold
+    One ``mapInArrow`` kernel ranks the centroids by raw dot product
+    (argmax over dots == argmax over cosines: the vector's norm does not
+    change the order), computed as a sequential-in-dimension fold
     (:func:`_fold_dots`) and ordered by a stable argsort, so ties go to
     the lowest centroid id — the SQL oracle's ``ORDER BY dot DESC, l``.
     """
     cent = np.asarray(centroids, dtype=np.float64)  # closure-captured
 
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def lists(v: pd.Series) -> pd.Series:
-        mat = np.stack(v.to_numpy()).astype(np.float64)
+    def lists(rb):
+        mat = _unpack_list(rb.column(vec_col)).astype(np.float64)
         top = np.argsort(-_fold_dots(mat, cent), axis=1, kind="stable")[:, :nprobe]
-        return pd.Series(list(top.astype(np.int32)))
+        return [list_array(np.full(len(top), top.shape[1]), top.astype(np.int32).ravel())]
 
-    return df.withColumn("ivf_list", F.explode(lists(F.col(vec_col))))
+    listed = _with_columns(df, [T.StructField("ivf_list", T.ArrayType(T.IntegerType()))],
+                           lists)
+    return listed.withColumn("ivf_list", F.explode("ivf_list"))
 
 
 def ivf_topk(corpus_df: DataFrame, queries_df: DataFrame, k: int = 3,
              n_centroids: int = 16, nprobe: int = 4,
              centroids: np.ndarray | None = None) -> DataFrame:
     """IVF approximate top-k of corpus (vec_id, embedding) for queries
-    (q_id, q_vec): corpus rows live in exactly one inverted list; each query probes its ``nprobe`` nearest lists and brute-forces
-    only those lists (equi-join on list id — candidate volume ~
-    nprobe/k of the corpus).  ``nprobe == n_centroids`` degenerates to
-    exact brute force.  Both sides are assigned by :func:`ivf_assign`
-    (the corpus to its one nearest list), candidates are scored by
-    :func:`cosine_similarity_col` and ranked by :func:`topk_per_query`.
+    (q_id, q_vec): corpus rows live in exactly one inverted list; each
+    query probes its ``nprobe`` nearest lists and brute-forces only them
+    (equi-join on list id — candidate volume ~ nprobe/k of the corpus).
+    ``nprobe == n_centroids`` degenerates to exact brute force.  Both
+    sides are assigned by :func:`ivf_assign` (the corpus to its one
+    nearest list), candidates are scored by :func:`_pair_sims` and
+    ranked by :func:`topk_per_query`.
     ``centroids`` defaults to :func:`ivf_train_centroids`.
     """
     if centroids is None:
-        centroids = ivf_train_centroids(corpus_df, "embedding", "vec_id", n_centroids)
-    vec_d = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    qvec_d = F.transform(F.col("q_vec"), lambda x: x.cast("double"))
-    c = ivf_assign(corpus_df.select("vec_id", vec_d.alias("_cv")), centroids, "_cv",
+        centroids = ivf_train_centroids(corpus_df, n_centroids)
+    c = ivf_assign(corpus_df.select("vec_id", "embedding"), centroids, "embedding",
                    nprobe=1)
-    q = ivf_assign(queries_df.select("q_id", qvec_d.alias("_qv")), centroids, "_qv",
-                   nprobe=nprobe)
+    q = ivf_assign(queries_df.select("q_id", "q_vec"), centroids, "q_vec", nprobe=nprobe)
     j = c.join(F.broadcast(q), "ivf_list")
-    j = j.select("q_id", "vec_id",
-                 cosine_similarity_col(F.col("_cv"), F.col("_qv")).alias("sim"))
-    return topk_per_query(j, k, "q_id", "vec_id").select("q_id", "rank", "vec_id", "sim")
+    sims = _pair_sims(j.select("q_id", "vec_id", "q_vec", "embedding"))
+    return topk_per_query(sims, k, "q_id", "vec_id").select("q_id", "rank", "vec_id", "sim")
 
 
-def ivf_seed_centroids(corpus_df: DataFrame, vec_col: str = "embedding",
-                       id_col: str = "vec_id", n_centroids: int = 16) -> np.ndarray:
+def ivf_seed_centroids(corpus_df: DataFrame, n_centroids: int = 16) -> np.ndarray:
     """Zero-iteration quantizer: the normalized first ``n_centroids``
-    vectors by id.  Norms are a sequential-fold sum of squares
-    (:func:`_fold_sq`, NOT numpy pairwise summation) and an IEEE sqrt,
-    so an external SQL engine's ``list_reduce`` reproduces every
-    centroid bit-for-bit — this is the quantizer the oracle-checked
-    contract query uses; the k-means quantizer
-    (:func:`ivf_train_centroids`) is the production default and is
-    unit-tested against full-probe brute force.
+    vectors of corpus (vec_id, embedding) by id.  Norms are
+    :func:`_norms` (a sequential-fold sum of squares, NOT numpy pairwise
+    summation, and an IEEE sqrt), so an external SQL engine's
+    ``list_reduce`` reproduces every centroid bit-for-bit — this is the
+    quantizer the oracle-checked contract query uses; the k-means
+    quantizer (:func:`ivf_train_centroids`) is the production default and
+    is unit-tested against full-probe brute force.
     """
-    pdf = (corpus_df.select(id_col, vec_col).orderBy(id_col)
+    pdf = (corpus_df.select("vec_id", "embedding").orderBy("vec_id")
            .limit(n_centroids).toPandas())
-    mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-    return mat / np.sqrt(_fold_sq(mat))[:, None]
+    mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
+    return mat / _norms(mat, pa.array(pdf["vec_id"]))[:, None]
 
 
 # --- exact all-pairs NN via IVF triangle-inequality pruning -----------------
 
-def exact_nn(corpus_df: DataFrame, id_col: str = "vec_id",
-             vec_col: str = "embedding", n_centroids: int = 16) -> DataFrame:
-    """Exact nearest neighbor for EVERY corpus vector — scale-safe.
+def exact_nn(corpus_df: DataFrame, n_centroids: int = 16) -> DataFrame:
+    """Exact nearest neighbor of EVERY corpus (vec_id, embedding) row — scale-safe.
 
     The all-pairs cross join is replaced by two equi-join phases with a
     provable pruning bound (standard exact IVF search, distributed):
 
-    1. vectors are assigned to their nearest of k centroids (one arrow
-       matmul); phase 1 scores only same-list pairs → per-vector best
-       candidate ``s1``;
+    1. vectors are assigned to their nearest of k centroids (fold
+       cosines, :func:`_fold_dots` over :func:`_norms`); phase 1 scores
+       only same-list pairs → per-vector best candidate ``s1``;
     2. the angular triangle inequality θ(q,x) ≥ θ(q,c_l) − θmax_l gives
        per-list upper bound ``cos(max(0, θ(q,c_l) − θmax_l))`` on any
        sim in list l; lists whose bound can't beat ``s1`` are pruned
@@ -522,36 +538,23 @@ def exact_nn(corpus_df: DataFrame, id_col: str = "vec_id",
        never fewer, so the result stays exact).  Survivor lists are
        scored through a plain (vector × list) equi-join.
 
-    Final sims are sequential-fold doubles — bit-identical to the
-    brute-force oracle; only *which pairs get scored* is data-dependent.
-    Returns (id, nn_id, sim) with deterministic lowest-id tie-break.
+    Both phases score by :func:`_pair_sims`: final sims are bit-identical
+    to the brute-force oracle; only *which pairs get scored* is
+    data-dependent.  Returns (vec_id, nn_id, sim), lowest-id tie-break.
     """
-    centroids = ivf_train_centroids(corpus_df, vec_col, id_col, n_centroids)
-    cent = centroids
-    k = len(centroids)
+    cent = ivf_train_centroids(corpus_df, n_centroids)
 
-    sims_schema = T.StructType([
-        T.StructField("own", T.IntegerType()),
-        T.StructField("csims", T.ArrayType(T.DoubleType())),
-    ])
+    def centroid_sims(rb):
+        mat = _unpack_list(rb.column("_v")).astype(np.float64)
+        s = _fold_dots(mat, cent) / _norms(mat, rb.column("_id"))[:, None]  # (n, k)
+        return [pa.array(s.argmax(axis=1).astype(np.int32)),
+                list_array(np.full(len(s), len(cent)), s.ravel())]
 
-    @F.pandas_udf(sims_schema)
-    def centroid_sims(v: pd.Series) -> pd.DataFrame:
-        mat = np.stack(v.to_numpy()).astype(np.float64)
-        mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-        s = mat @ cent.T                          # (n, k) cosines
-        return pd.DataFrame({
-            "own": s.argmax(axis=1).astype(np.int32),
-            "csims": list(s),
-        })
-
-    vec_d = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    assigned = (
-        corpus_df.select(F.col(id_col).alias("_id"), vec_d.alias("_v"))
-        .withColumn("_cs", centroid_sims(F.col("_v")))
-        .select("_id", "_v", F.col("_cs.own").alias("_own"),
-                F.col("_cs.csims").alias("_csims"))
-    )
+    assigned = _with_columns(
+        corpus_df.select(F.col("vec_id").alias("_id"), F.col("embedding").alias("_v")),
+        [T.StructField("_own", T.IntegerType()),
+         T.StructField("_csims", T.ArrayType(T.DoubleType()))],
+        centroid_sims)
 
     # per-list max angle to its centroid (tiny: k rows, broadcast below)
     theta_own = F.acos(F.least(F.lit(1.0), F.greatest(
@@ -567,11 +570,10 @@ def exact_nn(corpus_df: DataFrame, id_col: str = "vec_id",
                         F.col("_own").alias("_l"))
 
     # phase 1: same-list candidates
-    cand1 = (
+    cand1 = _pair_sims(
         q.withColumn("_l", F.col("_qown")).join(c, "_l")
         .filter(F.col("_qid") != F.col("_cid"))
-        .select("_qid", "_cid",
-                cosine_similarity_col(F.col("_qv"), F.col("_cv")).alias("sim"))
+        .select("_qid", "_cid", "_qv", "_cv")
     )
     # one storage generation per session regardless of how many times
     # exact_nn is called (lease supersedes the previous call's persists)
@@ -590,10 +592,7 @@ def exact_nn(corpus_df: DataFrame, id_col: str = "vec_id",
                 & (bound >= F.coalesce(F.col("_s1"), F.lit(-1.0)) - F.lit(NN_PRUNE_MARGIN)))
         .select("_qid", "_qv", "_l")
     )
-    cand2 = probes.join(c, "_l").select(
-        "_qid", "_cid",
-        cosine_similarity_col(F.col("_qv"), F.col("_cv")).alias("sim"),
-    )
+    cand2 = _pair_sims(probes.join(c, "_l").select("_qid", "_cid", "_qv", "_cv"))
 
     best = topk_per_query(cand1.unionByName(cand2), 1, "_qid", "_cid")
-    return best.select(F.col("_qid").alias(id_col), F.col("_cid").alias("nn_id"), "sim")
+    return best.select(F.col("_qid").alias("vec_id"), F.col("_cid").alias("nn_id"), "sim")

@@ -4,8 +4,9 @@ Local mode is the sandbox proxy for a multi-executor cluster; the same
 configs apply on a real cluster via ``spark-submit --py-files`` (see
 ``plans/submit.py``).  AQE + skew-join handling are on by default per
 the north rule (skewed dense tiles).  Every Python kernel of the
-operators is a ``mapInArrow`` function over Arrow batches; Arrow is also
-on for the driver's pandas conversions (``toPandas``/``createDataFrame``).
+package is a ``mapInArrow`` function over Arrow batches (no
+``pandas_udf``, no ``mapInPandas``); Arrow is also on for the driver's
+pandas conversions (``toPandas``/``createDataFrame``).
 """
 
 from __future__ import annotations

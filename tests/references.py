@@ -153,8 +153,8 @@ def minhash_reference(df, id_col: str = "doc_id", text_col: str = "text",
 def fold_dot(u: np.ndarray, v: np.ndarray) -> np.ndarray:
     """Row-wise dot products of two (n, dim) float64 matrices (or a
     matrix and one vector) as a sequential fold over the dimension,
-    acc = ((0 + u₀v₀) + u₁v₁) + …: the IEEE order of the Column fold and
-    of DuckDB's ``list_reduce``."""
+    acc = ((0 + u₀v₀) + u₁v₁) + …: the IEEE order of the library's numpy
+    folds and of DuckDB's ``list_reduce``."""
     acc = np.zeros(len(u))
     for i in range(u.shape[1]):
         acc = acc + u[:, i] * v[..., i]

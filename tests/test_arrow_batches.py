@@ -1,9 +1,10 @@
 """Arrow batch boundaries do not change kernel output.
 
 Each curation and elevation kernel runs once with 7-row Arrow batches
-(many batches per partition: the cosine top-k carry across batches,
-per-batch ``reduceat`` offsets in MinHash, the rasterizer's per-batch
-tile cache, map-side band partials and batched dissolve slices) and
+(many batches per partition: the cosine top-k carry across batches, the
+pair scoring of LSH, IVF and exact-NN candidates, per-batch ``reduceat``
+offsets in MinHash, the rasterizer's per-batch tile cache, map-side
+band partials and batched dissolve slices) and
 once with 65536-row batches (one batch per partition); the results
 must be identical.
 """
@@ -100,6 +101,11 @@ def _outputs(docs, corpus, polys, images):
                      ["vec_id"]),
         "ivf": _rows(sim.ivf_assign(corpus, cent, "embedding", nprobe=3)
                      .select("vec_id", "ivf_list"), ["vec_id", "ivf_list"]),
+        "lsh_topk": _rows(sim.lsh_ann_topk(corpus, queries, k=5, n_planes=6, probe_bits=2),
+                          ["q_id", "rank"]),
+        "ivf_topk": _rows(sim.ivf_topk(corpus, queries, k=5, n_centroids=8, nprobe=4),
+                          ["q_id", "rank"]),
+        "exact_nn": _rows(sim.exact_nn(corpus, n_centroids=8), ["vec_id"]),
         "polygon_pixels": _rows(polygon_pixels(polys, images), ["poly_id", "gy", "gx"]),
         "color_invariants": _rows(polygon_color_invariants(polys, images),
                                   ["poly_id", "height_base"]),

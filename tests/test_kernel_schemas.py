@@ -16,6 +16,7 @@ import pyarrow as pa
 import pytest
 from pyspark.sql.pandas.types import to_arrow_schema
 
+from openelevationservice_spark import contract
 from openelevationservice_spark.constants import PX, TILE_DEG
 from openelevationservice_spark.operators import dedup, multimodal, similarity
 from openelevationservice_spark.operators.color import (polygon_color_features,
@@ -24,6 +25,7 @@ from openelevationservice_spark.operators.polygon import polygon_pixels
 from openelevationservice_spark.operators.sample import pixel_index
 from openelevationservice_spark.sources import fixtures as fx
 from tests.inputs import make_images_pdf
+from tests.test_contract import SF_DIR
 
 RING = "poly_id long, ring array<struct<lon:double, lat:double>>"
 
@@ -116,6 +118,15 @@ OPERATORS = {
                          None),
     "score_prune-packed": (lambda d: similarity.cosine_topk(
         similarity.pack_vectors(d["corpus"]), d["queries"], k=3), None),
+    "pack": (lambda d: similarity.pack_vectors(d["corpus"]), None),
+    "bucket": (lambda d: similarity.with_lsh_bucket(d["corpus"]), None),
+    "lists": (lambda d: similarity.ivf_assign(
+        d["corpus"], similarity.ivf_seed_centroids(d["corpus"], 4), "embedding", nprobe=2),
+              None),
+    "centroid_sims": (lambda d: similarity.exact_nn(d["corpus"], n_centroids=4), None),
+    "pair_sims": (lambda d: similarity.lsh_ann_topk(d["corpus"], d["queries"], k=3), None),
+    "rt": (lambda d: contract.q_polyline_roundtrip(d["images"].sparkSession, SF_DIR), None),
+    "dump": (lambda d: contract.q_image_resize(d["images"].sparkSession, SF_DIR), None),
 }
 
 

@@ -96,26 +96,37 @@ def test_submit_leaves_cpus_to_build_session(monkeypatch):
     assert calls == [("point_elevation", "sf", None, None)]
 
 
+def _named(node: ast.AST, name: str) -> bool:
+    return ((isinstance(node, ast.Name) and node.id == name)
+            or (isinstance(node, ast.Attribute) and node.attr == name))
+
+
 def _pandas_map_calls(tree: ast.AST) -> list[int]:
-    """Line numbers of ``<frame>.mapInPandas(...)`` calls."""
-    return sorted(node.lineno for node in ast.walk(tree)
-                  if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
-                  and node.func.attr == "mapInPandas")
+    """Line numbers of ``<frame>.mapInPandas(...)`` calls and of
+    ``pandas_udf`` kernels: called, or a decorator, bare or called."""
+    lines = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Call) and (
+                _named(node.func, "pandas_udf")
+                or (isinstance(node.func, ast.Attribute) and node.func.attr == "mapInPandas")):
+            lines.add(node.lineno)
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            lines.update(d.lineno for d in node.decorator_list if _named(d, "pandas_udf"))
+    return sorted(lines)
 
 
 def test_kernels_are_arrow_native():
-    """Every Python kernel under ``operators/`` and ``sources/`` is a
-    ``mapInArrow`` function: it reads its input through the Arrow
-    buffers and builds its output batch from whole numpy arrays, where
-    ``mapInPandas`` converts every batch to pandas and back (one
-    Python object per list or binary value)."""
+    """Every Python kernel of the package is a ``mapInArrow`` function:
+    it reads its input through the Arrow buffers and builds its output
+    batch from whole numpy arrays, where ``mapInPandas`` and
+    ``pandas_udf`` convert every batch to pandas and back (one Python
+    object per list or binary value)."""
     offenders = []
-    for sub in ("operators", "sources"):
-        for path in sorted((PACKAGE / sub).rglob("*.py")):
-            rel = path.relative_to(PACKAGE).as_posix()
-            offenders += [f"{rel}:{line}" for line in
-                          _pandas_map_calls(ast.parse(path.read_text(), str(path)))]
-    assert not offenders, f"mapInPandas kernels: {offenders}"
+    for path in sorted(PACKAGE.rglob("*.py")):
+        rel = path.relative_to(PACKAGE).as_posix()
+        offenders += [f"{rel}:{line}" for line in
+                      _pandas_map_calls(ast.parse(path.read_text(), str(path)))]
+    assert not offenders, f"pandas kernels: {offenders}"
 
 
 def test_detector_sees_pandas_map_calls():
@@ -123,8 +134,12 @@ def test_detector_sees_pandas_map_calls():
            "x = a.b.mapInPandas(\n    g, s)\n"
            "df.mapInArrow(f, schema)\n"
            "mapInPandas(f)\n"
-           "fn = df.mapInPandas\n")
-    assert _pandas_map_calls(ast.parse(src)) == [1, 2]
+           "fn = df.mapInPandas\n"
+           "@F.pandas_udf('double')\ndef f(v): return v\n"
+           "@pandas_udf\ndef g(v): return v\n"
+           "h = pandas_udf(g, 'long')\n"
+           "u = F.pandas_udf\n")
+    assert _pandas_map_calls(ast.parse(src)) == [1, 2, 7, 9, 11]
 
 
 def _private_imports(tree: ast.AST) -> list[tuple[int, str]]:

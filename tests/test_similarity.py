@@ -5,7 +5,7 @@ import pytest
 from openelevationservice_spark.operators import similarity as sim
 
 from tests.references import (
-    cosine_topk_reference, ivf_lists_reference, lsh_bucket_reference)
+    cosine_topk_reference, fold_dot, ivf_lists_reference, lsh_bucket_reference)
 
 
 @pytest.fixture(scope="module")
@@ -239,26 +239,27 @@ def test_cosine_topk_query_collect_is_capped(spark, corpus, monkeypatch):
         sim.cosine_topk(corpus, queries, k=3)
 
 
-def test_cosine_topk_equals_single_window(spark, corpus):
+def test_cosine_topk_equals_single_window(spark, corpus, corpus_pdf):
     """cosine_topk's partition-local prune plus final window is
-    output-identical to one window over the full cross join."""
+    output-identical to one window over every (query, corpus) fold sim."""
     from pyspark.sql import Window, functions as F
-    q = corpus.limit(4).select(F.col("vec_id").alias("q_id"),
-                               F.col("embedding").alias("q_vec"))
+    q = corpus.filter("vec_id < 4").select(F.col("vec_id").alias("q_id"),
+                                           F.col("embedding").alias("q_vec"))
     got = sim.cosine_topk(corpus, q, k=7).toPandas()
-    vec_d = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    qvec_d = F.transform(F.col("q_vec"), lambda x: x.cast("double"))
-    j = (corpus.select("vec_id", vec_d.alias("_cv"))
-         .crossJoin(F.broadcast(q.select("q_id", qvec_d.alias("_qv"))))
-         .withColumn("sim", sim.cosine_similarity_col(F.col("_cv"), F.col("_qv"))))
+    mat = _matrix(corpus_pdf)
+    cnorm = np.sqrt(fold_dot(mat, mat))
+    scored = spark.createDataFrame(
+        [(q_id, int(v), float(s)) for q_id in range(4)
+         for v, s in zip(corpus_pdf["vec_id"], fold_dot(mat, mat[q_id]) /
+                         (cnorm * np.sqrt(fold_dot(mat[[q_id]], mat[q_id])[0])))],
+        schema="q_id long, vec_id long, sim double")
     w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.col("vec_id"))
-    want = (j.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= 7)
+    want = (scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= 7)
             .select("q_id", "rank", "vec_id", "sim").toPandas())
     key = ["q_id", "rank"]
     got = got.sort_values(key).reset_index(drop=True)
     want = want.sort_values(key).reset_index(drop=True)
-    pd.testing.assert_frame_equal(got[["q_id", "rank", "vec_id"]],
-                                  want[["q_id", "rank", "vec_id"]])
+    pd.testing.assert_frame_equal(got, want)  # sims bit-equal, not approx
 
 
 def test_topk_per_query_string_ids_equal_single_window(spark):
@@ -291,3 +292,54 @@ def test_topk_per_query_string_ids_equal_single_window(spark):
     want = want.sort_values(key).reset_index(drop=True)
     pd.testing.assert_frame_equal(got, want)
     assert want["vec_id"].isna().any()
+
+
+@pytest.fixture(scope="module")
+def zero_corpus(spark):
+    """Ids 1 and 2 are [1,0,0,0] and [.5,.5,0,0]; id 3 is the zero
+    vector, whose cosine with anything is 0/0."""
+    return spark.createDataFrame(
+        pd.DataFrame({"vec_id": [1, 2, 3],
+                      "embedding": [[1.0, 0, 0, 0], [0.5, 0.5, 0, 0], [0.0] * 4]}),
+        schema="vec_id long, embedding array<float>")
+
+
+#: case → (operator over the corpus and its queries, k-means sample)
+ZERO_NORM_CASES = {
+    # nonzero queries: the corpus row fails in the scoring kernel
+    "cosine_topk-corpus": (lambda c, q: sim.cosine_topk(c, q.filter("q_id < 3"), k=2), None),
+    # the zero query fails on the driver, before any job runs
+    "cosine_topk-query": (lambda c, q: sim.cosine_topk(c, q, k=2), None),
+    "lsh_ann_topk": (lambda c, q: sim.lsh_ann_topk(c, q, k=2), None),
+    # a k-means sample that holds the zero vector fails on the driver
+    "ivf_topk-train": (lambda c, q: sim.ivf_topk(c, q, k=2, n_centroids=2), None),
+    "ivf_topk-pairs": (lambda c, q: sim.ivf_topk(
+        c, q, k=2, n_centroids=2, centroids=sim.ivf_seed_centroids(c, 2)), None),
+    "exact_nn-train": (lambda c, q: sim.exact_nn(c, n_centroids=2), None),
+    # past the sample, the centroid kernel fails
+    "exact_nn-centroids": (lambda c, q: sim.exact_nn(c, n_centroids=2), 2),
+}
+
+
+@pytest.mark.parametrize("case", sorted(ZERO_NORM_CASES))
+def test_zero_norm_vector_fails_loudly(spark, zero_corpus, monkeypatch, case):
+    """Every operator raises on a zero-norm vector and names it, in
+    place of a NaN sim ranked first or an ANSI divide-by-zero."""
+    op, sample = ZERO_NORM_CASES[case]
+    if sample is not None:
+        monkeypatch.setattr(sim, "KMEANS_SAMPLE", sample)
+    queries = zero_corpus.selectExpr("vec_id AS q_id", "embedding AS q_vec")
+    with pytest.raises(Exception, match="vector 3 has norm 0"):
+        op(zero_corpus, queries).collect()
+
+
+def test_bucketed_operators_have_no_column_fold(spark, corpus, corpus_pdf):
+    """LSH, IVF and exact-NN score pairs in the Arrow kernel: no
+    interpreted ``aggregate``/``zip_with`` lambda is left in their
+    optimized plans."""
+    queries = corpus.filter("vec_id < 3").selectExpr("vec_id AS q_id", "embedding AS q_vec")
+    for df in (sim.lsh_ann_topk(corpus, queries, k=3), sim.ivf_topk(corpus, queries, k=3),
+               sim.exact_nn(corpus, n_centroids=4)):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "ArrowEvalPython" not in plan and "MapInArrow" in plan
+        assert "aggregate(" not in plan and "zip_with(" not in plan
