@@ -899,8 +899,10 @@ FROM px
 # shell and hole counts against its own Gray quad counts
 # (χ8 ≤ shells − holes ≤ χ4, operators/color.py), so this oracle binds
 # the boundary tracer, the quad counts, the band arithmetic and the
-# pixel sets.  Per-ring geometric checks and the grid-labeling
-# reference stay in tests/test_geometry_dissolve.py.
+# pixel sets.  The features' rings come from the same edge table and
+# cycle labels (functions/dissolve.py ``_cycles``).  Per-ring geometric
+# checks, the reference walk and the grid-labeling reference stay in
+# tests/test_geometry_dissolve.py.
 # ===========================================================================
 
 def q_color_dissolve(spark: SparkSession, sf_dir: str) -> DataFrame:

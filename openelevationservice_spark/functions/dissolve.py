@@ -16,9 +16,10 @@ Edge-connected pixel regions become one polygon; corner-touching
 regions become separate polygons (GEOS's union yields a MultiPolygon
 there as well).
 
-One edge table (:func:`_edge_table`) serves both consumers: the
-batched invariants (:func:`batch_invariants`, many bands per call) and
-the ring output of one band (:func:`dissolve_pixels_rings`).
+One edge table (:func:`_edge_table`) and one cycle finder
+(:func:`_cycles`) serve both outputs, each many bands per call: the
+invariants (:func:`batch_invariants`) and the rings
+(:func:`batch_rings`).
 """
 
 from __future__ import annotations
@@ -74,6 +75,10 @@ def _band_keys(band: np.ndarray, gx: np.ndarray, gy: np.ndarray,
     gx[seg[b]:seg[b+1]] (REQUIRED contiguous, at least one cell).
     Sorted keys enumerate each band's cells in row-major order, and
     ``np.unique`` collapses duplicate cells like an occupancy grid."""
+    if len(seg) - 1 > MAX_BATCH_BANDS:
+        # band index must fit the 16-bit field of the packed edge key;
+        # callers slice batches to MAX_BATCH_BANDS (color.py)
+        raise ValueError(f"dissolve: {len(seg) - 1} bands > 2^16 per batch")
     gx = np.asarray(gx, dtype=np.int64)
     gy = np.asarray(gy, dtype=np.int64)
     band = np.asarray(band, dtype=np.int64)
@@ -90,15 +95,9 @@ def _band_keys(band: np.ndarray, gx: np.ndarray, gy: np.ndarray,
     return np.unique((band << _BSH_BAND) | (ly << _BSH_Y) | lx), x0b, y0b
 
 
-def _one_band_keys(gx: np.ndarray, gy: np.ndarray):
-    """:func:`_band_keys` of a single non-empty cell set."""
-    n = len(gx)
-    return _band_keys(np.zeros(n, dtype=np.int64), gx, gy, np.array([0, n]))
-
-
 def _edge_table(ck: np.ndarray):
     """Directed boundary edges of the cell keys ``ck``, as
-    ``(succ, band, tx, ty, contrib)`` arrays indexed by edge id.
+    ``(succ, band, tx, ty, contrib, dirs)`` arrays indexed by edge id.
 
     Edge ids run direction-major, then row-major over each band's cells
     (sorted keys ARE row-major order).  ``succ`` is the successor
@@ -106,7 +105,8 @@ def _edge_table(ck: np.ndarray):
     occupancy at the edge's head vertex; every cycle of it is one
     boundary loop.  (tx, ty) is the LOCAL tail vertex and ``contrib``
     its shoelace term x1*y2 − x2*y1 = tx*dy − ty*dx, so a cycle's sum
-    is twice its signed area (translation-invariant).
+    is twice its signed area (translation-invariant); ``dirs`` indexes
+    ``_DXY``.
 
     Neighbor occupancy and the (dir, band, tail vertex) → edge-id
     lookup both run as ``np.searchsorted`` probes of sorted packed
@@ -166,7 +166,7 @@ def _edge_table(ck: np.ndarray):
         miss2 = miss[succ[miss] < 0]
         if len(miss2):
             succ[miss2] = edge_at(pref[miss2, 2], hk[miss2])
-    return succ, eb, tx, ty, contrib
+    return succ, eb, tx, ty, contrib, dirs
 
 
 def _quad_counts(ck: np.ndarray, n_bands: int):
@@ -202,38 +202,20 @@ def _quad_counts(ck: np.ndarray, n_bands: int):
     return q1, q3, qd
 
 
-def batch_invariants(band: np.ndarray, gx: np.ndarray, gy: np.ndarray,
-                     n_bands: int, seg: np.ndarray):
-    """Per-band dissolve invariants for MANY bands in one vectorized
-    pass: returns (n_shells, n_holes, area2, q1, q3, qd) int64 arrays
-    of length ``n_bands``.
+def _cycles(succ: np.ndarray, contrib: np.ndarray):
+    """Cycles of the successor permutation: ``(reps, inv, a2)`` with
+    ``reps`` every cycle's lowest edge id, ascending, ``inv`` each
+    edge's cycle index into ``reps`` and ``a2`` every cycle's shoelace
+    sum, twice its signed area (shells +, holes −).
 
-    ``band`` assigns every cell to its band row; ``seg`` holds the
-    band segment boundaries (cells of band b are gx[seg[b]:seg[b+1]],
-    REQUIRED contiguous).  Loops are the cycles of
-    :func:`_edge_table`'s successor permutation, found by min-label
-    pointer doubling — O(E log L) numpy gathers (L = longest ring)
-    instead of a per-edge interpreted chase, which owned the dissolve
-    kernel's CPU at bench volume (~4 edges per ring, ~190 rings per
-    band: the walk cost ~26 s CPU per 23k bands).
-
-    Ring VERTEX SEQUENCES are never materialized.  ``area2`` sums every
-    cycle (shells + and holes −), ``n_shells``/``n_holes`` count
-    positive/negative cycles.  In a union of pixel squares every hole
-    lies inside a shell, so these are exactly the ring counts and
-    areas of :func:`dissolve_pixels_rings`.
-    """
-    if n_bands > MAX_BATCH_BANDS:
-        # band index must fit the 16-bit field of the packed edge key;
-        # callers slice batches to MAX_BATCH_BANDS (color.py)
-        raise ValueError(f"batch_invariants: {n_bands} bands > 2^16 per batch")
-    if len(gx) == 0:
-        z = np.zeros(n_bands, dtype=np.int64)
-        return z, z.copy(), z.copy(), z.copy(), z.copy(), z.copy()
-    ck, _, _ = _band_keys(band, gx, gy, seg)
-    succ, eb, _, _, contrib = _edge_table(ck)
+    Min-label pointer doubling — O(E log L) numpy gathers (L = longest
+    ring) instead of a per-edge interpreted chase, which owned the
+    dissolve kernel's CPU at bench volume (~4 edges per ring, ~190
+    rings per band: the walk cost ~26 s CPU per 23k bands).  Edge ids
+    run direction-major, and every loop has an R edge, so every
+    representative is an R edge: the topmost, then leftmost, of its
+    loop."""
     n = len(succ)
-    # min-label pointer doubling: lbl converges to the cycle-min id
     lbl = np.arange(n)
     s = succ
     while True:
@@ -246,9 +228,34 @@ def batch_invariants(band: np.ndarray, gx: np.ndarray, gy: np.ndarray,
     # np.unique sort of the label array
     reps = np.flatnonzero(lbl == np.arange(n))
     inv = np.searchsorted(reps, lbl)
-    # per-cycle shoelace sums: contribs are small ints, cycle sums stay
-    # far inside float64's exact-integer range
-    a2 = np.rint(np.bincount(inv, weights=contrib)).astype(np.int64)
+    # contribs are small ints, cycle sums stay far inside float64's
+    # exact-integer range
+    return reps, inv, np.rint(np.bincount(inv, weights=contrib)).astype(np.int64)
+
+
+def batch_invariants(band: np.ndarray, gx: np.ndarray, gy: np.ndarray,
+                     n_bands: int, seg: np.ndarray):
+    """Per-band dissolve invariants for MANY bands in one vectorized
+    pass: returns (n_shells, n_holes, area2, q1, q3, qd) int64 arrays
+    of length ``n_bands``.
+
+    ``band`` assigns every cell to its band row; ``seg`` holds the
+    band segment boundaries (cells of band b are gx[seg[b]:seg[b+1]],
+    REQUIRED contiguous).  Loops are the cycles of
+    :func:`_edge_table`'s successor permutation (:func:`_cycles`).
+
+    Ring VERTEX SEQUENCES are never materialized.  ``area2`` sums every
+    cycle (shells + and holes −), ``n_shells``/``n_holes`` count
+    positive/negative cycles.  In a union of pixel squares every hole
+    lies inside a shell, so these are exactly the ring counts and
+    areas of :func:`batch_rings`.
+    """
+    if len(gx) == 0:
+        z = np.zeros(n_bands, dtype=np.int64)
+        return z, z.copy(), z.copy(), z.copy(), z.copy(), z.copy()
+    ck, _, _ = _band_keys(band, gx, gy, seg)
+    succ, eb, _, _, contrib, _ = _edge_table(ck)
+    reps, inv, a2 = _cycles(succ, contrib)
     cyc_band = eb[reps]
     shells = np.bincount(cyc_band[a2 > 0], minlength=n_bands)
     holes = np.bincount(cyc_band[a2 < 0], minlength=n_bands)
@@ -258,86 +265,94 @@ def batch_invariants(band: np.ndarray, gx: np.ndarray, gy: np.ndarray,
     return shells, holes, area2, q1, q3, qd
 
 
-def _loop_arrays(loop):
-    """(x1, y1, x2, y2) edge arrays of a loop (not closed) — cached per
-    shell by the hole-attachment pass."""
-    a = np.asarray(loop, dtype=np.float64)
-    b = np.roll(a, -1, axis=0)
-    return a[:, 0], a[:, 1], b[:, 0], b[:, 1]
+def _walk_order(succ: np.ndarray, reps: np.ndarray, base: np.ndarray) -> np.ndarray:
+    """Edge ids placed at ``base`` (their cycle's first slot) plus their
+    steps from the cycle's representative along ``succ``: every loop
+    starts at its representative's tail vertex and follows the
+    successor permutation.  The steps come from pointer doubling along
+    the predecessors, each cycle cut open at its representative."""
+    n = len(succ)
+    nxt = np.empty(n, dtype=np.int64)
+    nxt[succ] = np.arange(n)
+    nxt[reps] = reps
+    rank = np.ones(n, dtype=np.int64)
+    rank[reps] = 0
+    while True:
+        nn = nxt[nxt]
+        if (nn == nxt).all():
+            break
+        rank += rank[nxt]
+        nxt = nn
+    order = np.empty(n, dtype=np.int64)
+    order[base + rank] = np.arange(n)
+    return order
 
 
-def _point_in_loop_np(px: float, py: float, arrs) -> bool:
-    """Even-odd point-in-loop test over a loop's edge arrays
-    (:func:`_loop_arrays`): crossing-parity count, order-independent."""
-    x1, y1, x2, y2 = arrs
-    cross = (y1 > py) != (y2 > py)
-    if not cross.any():
-        return False
-    xint = x1[cross] + (py - y1[cross]) / (y2[cross] - y1[cross]) * (x2[cross] - x1[cross])
-    return bool(int((px < xint).sum()) & 1)
+def _hole_owners(h, shell_edge, eb, tx, ty, dirs, inv):
+    """Cycle index of the smallest shell enclosing each hole, given the
+    holes' representative edge ids ``h``.
+
+    A hole's representative is the top side of the set cell (hx, hy);
+    its owner is the innermost shell around that cell's centre, the
+    start of a ray towards +x along row hy.  Each shell's vertical
+    edges in the row alternate U (entering: a set cell's left side)
+    and D (leaving: its right side), so the shells around the start
+    are those with an odd number of edges right of it.  Shells nest
+    without crossing, so a row's shell edges are balanced parentheses:
+    the start sits at the nesting depth d of the edges left of it (one
+    ``searchsorted`` over the sorted (band, row, x) keys), and the
+    innermost shell is the one whose U last reached depth d before it.
+    A hole with no enclosing shell raises AssertionError."""
+    v = np.flatnonzero(shell_edge & (dirs % 2 == 1))
+    up = dirs[v] == 3
+    # a D edge runs down its row ty, a U edge up the row above its tail
+    key = (eb[v] << _BSH_BAND) | ((ty[v] - up) << _BSH_Y) | tx[v]
+    o = np.argsort(key)
+    key, v, up = key[o], v[o], up[o]
+    depth = np.cumsum(np.where(up, 1, -1))
+    p = np.searchsorted(key, (eb[h] << _BSH_BAND) | (ty[h] << _BSH_Y) | (tx[h] + 1))
+    d = np.where(p > 0, depth[p - 1], 0)
+    if not (d > 0).all():
+        raise AssertionError("dissolve: a hole outside every shell")
+    # last U before p at depth d: U crossings keyed (depth, position)
+    n = len(key)
+    uk = (depth * n + np.arange(n))[up]
+    uo = np.argsort(uk)
+    j = np.searchsorted(uk[uo], d * n + p) - 1
+    return inv[v[up][uo[j]]]
 
 
-def dissolve_pixels_rings(gx: np.ndarray, gy: np.ndarray):
-    """Union of unit squares at integer grid cells (gx, gy), with areas.
+def batch_rings(band: np.ndarray, gx: np.ndarray, gy: np.ndarray,
+                seg: np.ndarray):
+    """Dissolved polygons of MANY bands in one vectorized pass, as flat
+    arrays ``(f_band, f_area2, rings_per_f, pts_per_ring, x, y)``.
 
-    Returns ``(polys, areas2)``: ``polys`` is a list of polygons, each a
-    list of rings (first = outer shell CCW, rest = holes CW), each ring
-    a list of integer (x, y) grid-corner vertices, closed (first ==
-    last); ``areas2`` mirrors the structure with twice the shoelace
-    signed area of every ring (shell +, hole −) — already computed by
-    the tracer, so callers never re-walk ring vertices for areas.
-
-    Loops come from a Python walk of :func:`_edge_table`'s successor
-    permutation in edge-id order, so loop starts and output order are
-    deterministic (row-major over the cells).
-    """
-    if len(gx) == 0:
-        return [], []
-    ck, x0b, y0b = _one_band_keys(gx, gy)
-    succ, _, tx, ty, contrib = _edge_table(ck)
-    succ = succ.tolist()
-    gxl = (tx + int(x0b[0])).tolist()
-    gyl = (ty + int(y0b[0])).tolist()
-    cl = contrib.tolist()
-    visited = bytearray(len(succ))
-    shells, holes = [], []
-    for s in range(len(succ)):
-        if visited[s]:
-            continue
-        loop = []
-        a = 0
-        cur = s
-        while not visited[cur]:
-            visited[cur] = 1
-            loop.append((gxl[cur], gyl[cur]))
-            a += cl[cur]
-            cur = succ[cur]
-        if a > 0:
-            shells.append((loop, a))
-        elif a < 0:
-            holes.append((loop, a))
-
-    polys = [{"shell": lp, "area2": a, "holes": []} for lp, a in shells]
-    for hl, ha in holes:
-        # attach to the smallest shell containing the hole's first vertex
-        hx, hy = hl[0]
-        for p in polys:
-            if "sarr" not in p:
-                p["sarr"] = _loop_arrays(p["shell"])
-        candidates = [
-            p for p in polys if _point_in_loop_np(hx + 1e-9, hy + 1e-9, p["sarr"])
-            or _point_in_loop_np(hx - 1e-9, hy + 1e-9, p["sarr"])
-        ]
-        if candidates:
-            min(candidates, key=lambda p: p["area2"])["holes"].append((hl, ha))
-
-    out, out_areas = [], []
-    for p in polys:
-        rings = [p["shell"] + [p["shell"][0]]]
-        areas = [p["area2"]]
-        for h, ha in p["holes"]:
-            rings.append(h + [h[0]])
-            areas.append(ha)
-        out.append(rings)
-        out_areas.append(areas)
-    return out, out_areas
+    Cells and bands as in :func:`batch_invariants`.  One feature per shell, in
+    band order and, within a band, in representative order (row-major
+    by the loop's topmost-leftmost R edge); ``f_area2`` is twice its
+    area (shell minus holes).  A feature's rings are its shell (CCW in
+    the y-up world) then its holes (CW) in representative order; each
+    ring lists its global integer grid-corner vertices from its
+    representative's tail along the successor permutation, closed
+    (first vertex repeated).  ``x``/``y`` concatenate every ring's
+    vertices, ``pts_per_ring`` counts them."""
+    ck, x0b, y0b = _band_keys(band, gx, gy, seg)
+    succ, eb, tx, ty, contrib, dirs = _edge_table(ck)
+    reps, inv, a2 = _cycles(succ, contrib)
+    shell = a2 > 0
+    owner = np.arange(len(reps))
+    owner[~shell] = _hole_owners(reps[~shell], shell[inv], eb, tx, ty, dirs, inv)
+    # rings ordered by (owning shell, shell first, representative)
+    ring = np.lexsort((np.arange(len(reps)), ~shell, owner))
+    f_of_ring = (np.cumsum(shell) - 1)[owner[ring]]
+    f_area2 = np.bincount(f_of_ring, weights=a2[ring]).astype(np.int64)
+    lens = np.bincount(inv)
+    start = np.cumsum(lens) - lens
+    pts_per_ring = lens[ring] + 1
+    # vertex k of a ring is its cycle's k-th edge tail, k = len wrapping to 0
+    k = np.arange(int(pts_per_ring.sum())) - np.repeat(
+        np.cumsum(pts_per_ring) - pts_per_ring, pts_per_ring)
+    e = _walk_order(succ, reps, start[inv])[
+        np.repeat(start[ring], pts_per_ring) + k % np.repeat(lens[ring], pts_per_ring)]
+    return (eb[reps[shell]], f_area2, np.bincount(f_of_ring),
+            pts_per_ring, tx[e] + x0b[eb[e]], ty[e] + y0b[eb[e]])

@@ -20,20 +20,11 @@ with ``StatusCode.INTERNAL`` and the error message as details.
 
 from __future__ import annotations
 
-import itertools
 from dataclasses import dataclass
 
 from .api import ApiError, ElevationService
 from .operators.color import polygon_color_features
 from .operators.polygon import polygon_pixel_runs, run_stats
-from .plans.cache import lease, release
-
-#: per-RPC lease-slot counter: grpc_serve runs a thread pool, and a
-#: single shared slot would let a concurrent AreaRangesElevation RPC's
-#: lease() unpersist the in-flight RPC's run table between its stats
-#: collect and the dissolve — correct results, cache benefit silently
-#: lost (round-4 ADVICE).  itertools.count() is atomic under the GIL.
-_AREA_RPC_SEQ = itertools.count()
 
 
 class GrpcAbort(Exception):
@@ -129,17 +120,13 @@ class OpenElevationServicer:
         reference's ``polygon_union_by_elevation`` 3-tuple)."""
         svc = self.service
         polys = svc.polygon_frame(_bbox_ring(request))
-        # ONE rasterization per RPC: the run table is leased (persisted)
-        # so the stats action materializes it and the dissolve action
-        # reads the cache — the reference likewise fetches pixels once
-        # and derives both from the list (querybuilder.py:77-88).  The
-        # run table is the dissolve's own input, and the stats are JVM
-        # aggregates over its runs.  The slot is per-call (and released
-        # at RPC end): concurrent area RPCs from grpc_serve's thread
-        # pool must not evict each other's in-flight cache.
-        slot = f"grpc_area_pixels:{next(_AREA_RPC_SEQ)}"
-        runs = polygon_pixel_runs(polys, svc.images_df)
-        lease(slot, runs)
+        # ONE rasterization per RPC: the run table is persisted for
+        # the RPC's two actions, so the stats action materializes it and
+        # the dissolve action reads the cache — the reference likewise
+        # fetches pixels once and derives both from the list
+        # (querybuilder.py:77-88).  The run table is the dissolve's own
+        # input, and the stats are JVM aggregates over its runs.
+        runs = polygon_pixel_runs(polys, svc.images_df).persist()
         try:
             stats = run_stats(runs).collect()
             if not stats:
@@ -151,7 +138,7 @@ class OpenElevationServicer:
                 polys, svc.images_df, runs_df=runs
             ).toPandas()
         finally:
-            release(slot)
+            runs.unpersist()
         unions = []
         for _, r in feats.iterrows():
             unions.append({

@@ -20,8 +20,8 @@ pipeline stays distributed, and pixel values never become JVM rows:
                 partially aggregated per (poly_id, height_base) map-side
               → hash exchange on (poly_id, height_base) → one row per band
               → exact grid dissolve kernel (G3): one batched boundary
-                trace per Arrow batch for the invariants, rings per band
-                only for the GeoJSON features
+                trace per Arrow batch, reduced to the invariants or
+                emitted as the GeoJSON features' rings
 
 The band arithmetic has one implementation, the numpy band-split
 (:func:`_subrun_partial_batch`), and both band oracles check it: the
@@ -52,8 +52,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from ..constants import NUM_RANGES, PX, WORLD_X0, WORLD_Y0
 from ..functions.arrow_batches import (binary_array, binary_buffers, list_array,
                                        list_offsets, record_batch)
-from ..functions.dissolve import (MAX_BATCH_BANDS, batch_invariants,
-                                  dissolve_pixels_rings)
+from ..functions.dissolve import MAX_BATCH_BANDS, batch_invariants, batch_rings
 from ..plans.cache import lease
 from .polygon import polygon_pixel_runs, run_stats
 
@@ -255,46 +254,39 @@ def _expand_subrun_batch(subs: pa.Array):
     return band, gx, gy, seg
 
 
+def _band_slices(batches):
+    """Every Arrow batch in slices of at most ``MAX_BATCH_BANDS`` bands:
+    the dissolve packs the band index into a 16-bit key field, while
+    the Arrow batch size (``spark.sql.execution.arrow.
+    maxRecordsPerBatch``) is a deployment setting."""
+    for rb in batches:
+        for start in range(0, rb.num_rows, MAX_BATCH_BANDS):
+            yield rb.slice(start, MAX_BATCH_BANDS)
+
+
 def _features_batch(rb: pa.RecordBatch) -> pa.RecordBatch:
-    """FEATURE_SCHEMA rows of every band of one batch: each band's cells
-    re-expanded from packed subruns (:func:`_expand_subrun_batch`) and
-    traced by ``dissolve_pixels_rings``; the ring vertices of all
-    features are converted to degrees at once and leave as one double
-    buffer per coordinate plus two offsets arrays.  collect_list order
-    is nondeterministic, but the tracer rasterizes into an occupancy
-    grid first — order-invariant by construction."""
-    band, gx, gy, seg = _expand_subrun_batch(rb.column("subs"))
-    pids = rb.column("poly_id").to_numpy()
-    hbs = rb.column("height_base").to_numpy()
-    f_band, f_idx, f_area, rings_per_f, pts_per_ring, pts = [], [], [], [], [], []
-    for b in range(rb.num_rows):
-        polys, ring_areas = dissolve_pixels_rings(gx[seg[b]:seg[b + 1]],
-                                                  gy[seg[b]:seg[b + 1]])
-        for i, (rings, ra) in enumerate(zip(polys, ring_areas)):
-            f_band.append(b)
-            f_idx.append(i)
-            f_area.append(sum(ra) / 2.0)
-            rings_per_f.append(len(rings))
-            for ring in rings:
-                pts_per_ring.append(len(ring))
-                pts.extend(ring)
-    f_band = np.asarray(f_band, dtype=np.int64)
-    rings_per_f = np.asarray(rings_per_f, dtype=np.int64)
-    xy = np.asarray(pts, dtype=np.int64).reshape(-1, 2)
+    """FEATURE_SCHEMA rows of every band of one slice: the cells
+    re-expanded from packed subruns (:func:`_expand_subrun_batch`), the
+    rings of all bands traced at once (``batch_rings``), and the vertices
+    converted to degrees at once; they leave as one double buffer per
+    coordinate plus two offsets arrays.  collect_list order is
+    nondeterministic, but the tracer sorts the cells into keys first —
+    order-invariant by construction."""
+    f_band, f_area2, rings_per_f, pts_per_ring, x, y = batch_rings(
+        *_expand_subrun_batch(rb.column("subs")))
+    f_idx = np.arange(len(f_band)) - np.searchsorted(f_band, f_band)
     points = pa.StructArray.from_arrays(
-        [pa.array(WORLD_X0 + xy[:, 0] * PX), pa.array(WORLD_Y0 - xy[:, 1] * PX)],
-        names=["x", "y"])
+        [pa.array(WORLD_X0 + x * PX), pa.array(WORLD_Y0 - y * PX)], names=["x", "y"])
     return record_batch(_FEATURE_ARROW, [
-        pa.array(pids[f_band]), pa.array(hbs[f_band]),
-        pa.array(np.asarray(f_idx, dtype=np.int32)),
-        pa.array(rings_per_f.astype(np.int32)),
-        pa.array(np.asarray(f_area, dtype=np.float64)),
-        list_array(rings_per_f, list_array(np.asarray(pts_per_ring, dtype=np.int64),
-                                           points))])
+        pa.array(rb.column("poly_id").to_numpy()[f_band]),
+        pa.array(rb.column("height_base").to_numpy()[f_band]),
+        pa.array(f_idx.astype(np.int32)), pa.array(rings_per_f.astype(np.int32)),
+        pa.array(f_area2 / 2.0),
+        list_array(rings_per_f, list_array(pts_per_ring, points))])
 
 
 def _dissolve_partition_subs(batches):
-    for rb in batches:
+    for rb in _band_slices(batches):
         yield _features_batch(rb)
 
 
@@ -349,15 +341,9 @@ def _invariants_partition_subs(batches):
     (shells = C4 and holes ∈ [H8, H4], established against grid
     labeling in tests/test_geometry_dissolve.py, give the sandwich
     χ8 ≤ shells − holes ≤ χ4), so a tracer bug fails the query instead
-    of shipping wrong areas.
-
-    ``batch_invariants`` packs the band index into a 16-bit key field,
-    while the Arrow batch size (``spark.sql.execution.arrow.
-    maxRecordsPerBatch``) is a deployment setting, so every batch is
-    sliced into runs of at most ``MAX_BATCH_BANDS`` bands."""
-    for rb in batches:
-        for start in range(0, rb.num_rows, MAX_BATCH_BANDS):
-            yield _invariants_batch(rb.slice(start, MAX_BATCH_BANDS))
+    of shipping wrong areas."""
+    for rb in _band_slices(batches):
+        yield _invariants_batch(rb)
 
 
 def _invariants_batch(rb: pa.RecordBatch) -> pa.RecordBatch:

@@ -15,9 +15,9 @@ hold at most ONE generation of cached storage per operator.  Re-running
 a previously returned DataFrame after its lease was superseded stays
 correct — the plan simply recomputes instead of hitting cache.
 
-``release()`` / ``release_all()`` drop leases eagerly (bench teardown,
-tests).  Entries belonging to stopped SparkContexts are evicted
-opportunistically on every call.
+``release_all()`` drops every lease eagerly (bench teardown, tests).
+Entries belonging to stopped SparkContexts are evicted opportunistically
+on every call.
 """
 
 from __future__ import annotations
@@ -71,13 +71,6 @@ def lease(slot: str, *dfs: DataFrame) -> None:
         for df in dfs:
             df.persist()
         _LEASES[key] = list(dfs)
-
-
-def release(slot: str) -> None:
-    """Eagerly drop every app's lease of ``slot``."""
-    with _LOCK:
-        for key in [k for k in _LEASES if k[1] == slot]:
-            _unpersist_all(_LEASES.pop(key))
 
 
 def release_all() -> None:

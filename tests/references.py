@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from openelevationservice_spark.constants import (
     COORD_PRECISION, NCELL_X, NODATA, NUM_RANGES, TILE_DEG, WORLD_X0, WORLD_Y0)
 from openelevationservice_spark.functions import cells, image_codec
-from openelevationservice_spark.functions.dissolve import dissolve_pixels_rings
+from openelevationservice_spark.functions.dissolve import _band_keys, _edge_table
 from openelevationservice_spark.functions.geometry import points_in_ring
 from openelevationservice_spark.operators.dedup import (
     MERSENNE31, minhash_perm_consts, word_shingles)
@@ -196,9 +196,87 @@ def cosine_topk_reference(ids, vecs: np.ndarray, q_ids, q_vecs: np.ndarray,
     return pd.DataFrame(out, columns=["q_id", "rank", "vec_id", "sim"])
 
 
+def one_band_keys(gx: np.ndarray, gy: np.ndarray):
+    """``functions.dissolve._band_keys`` of a single non-empty cell set."""
+    n = len(gx)
+    return _band_keys(np.zeros(n, dtype=np.int64), gx, gy, np.array([0, n]))
+
+
+def _loop_arrays(loop):
+    """(x1, y1, x2, y2) edge arrays of a loop (not closed)."""
+    a = np.asarray(loop, dtype=np.float64)
+    b = np.roll(a, -1, axis=0)
+    return a[:, 0], a[:, 1], b[:, 0], b[:, 1]
+
+
+def _point_in_loop(px: float, py: float, arrs) -> bool:
+    """Even-odd point-in-loop test over a loop's edge arrays."""
+    x1, y1, x2, y2 = arrs
+    cross = (y1 > py) != (y2 > py)
+    if not cross.any():
+        return False
+    xint = x1[cross] + (py - y1[cross]) / (y2[cross] - y1[cross]) * (x2[cross] - x1[cross])
+    return bool(int((px < xint).sum()) & 1)
+
+
+def dissolve_pixels_rings(gx: np.ndarray, gy: np.ndarray):
+    """Reference for ``functions.dissolve.batch_rings`` on one band: a
+    Python walk of the edge table's successor permutation in edge-id
+    order, holes attached by point-in-loop tests.
+
+    Returns ``(polys, areas2)``: ``polys`` is a list of polygons, each a
+    list of closed rings (first = outer shell CCW, rest = holes CW) of
+    integer (x, y) grid-corner vertices; ``areas2`` mirrors it with
+    twice every ring's signed shoelace area (shell +, hole −).  A hole
+    no shell contains is dropped."""
+    if len(gx) == 0:
+        return [], []
+    ck, x0b, y0b = one_band_keys(gx, gy)
+    succ, _, tx, ty, contrib, _ = _edge_table(ck)
+    succ = succ.tolist()
+    gxl = (tx + int(x0b[0])).tolist()
+    gyl = (ty + int(y0b[0])).tolist()
+    cl = contrib.tolist()
+    visited = bytearray(len(succ))
+    shells, holes = [], []
+    for s in range(len(succ)):
+        if visited[s]:
+            continue
+        loop = []
+        a = 0
+        cur = s
+        while not visited[cur]:
+            visited[cur] = 1
+            loop.append((gxl[cur], gyl[cur]))
+            a += cl[cur]
+            cur = succ[cur]
+        if a > 0:
+            shells.append((loop, a))
+        elif a < 0:
+            holes.append((loop, a))
+
+    polys = [{"shell": lp, "area2": a, "holes": [], "sarr": _loop_arrays(lp)}
+             for lp, a in shells]
+    for hl, ha in holes:
+        # attach to the smallest shell containing the hole's first vertex
+        hx, hy = hl[0]
+        candidates = [
+            p for p in polys if _point_in_loop(hx + 1e-9, hy + 1e-9, p["sarr"])
+            or _point_in_loop(hx - 1e-9, hy + 1e-9, p["sarr"])
+        ]
+        if candidates:
+            min(candidates, key=lambda p: p["area2"])["holes"].append((hl, ha))
+
+    out, out_areas = [], []
+    for p in polys:
+        out.append([p["shell"] + [p["shell"][0]]] + [h + [h[0]] for h, _ in p["holes"]])
+        out_areas.append([p["area2"]] + [ha for _, ha in p["holes"]])
+    return out, out_areas
+
+
 def dissolve_pixels(gx: np.ndarray, gy: np.ndarray):
-    """Rings only of ``functions.dissolve.dissolve_pixels_rings``: a list
-    of polygons, each a list of closed rings (shell CCW, holes CW)."""
+    """Rings only of :func:`dissolve_pixels_rings`: a list of polygons,
+    each a list of closed rings (shell CCW, holes CW)."""
     return dissolve_pixels_rings(gx, gy)[0]
 
 

@@ -34,7 +34,7 @@ def test_exact_nn_storage_bounded_across_calls(spark, emb):
     for _ in range(5):
         exact_nn(emb, n_centroids=4).count()
     assert _n_persistent(spark) <= after_first  # one generation, not six
-    cache.release("exact_nn")
+    cache.release_all()
     assert _n_persistent(spark) <= after_first - 2  # assigned + cand1 gone
 
 
@@ -57,7 +57,7 @@ def test_color_invariants_storage_bounded_across_calls(spark):
     for _ in range(4):
         polygon_color_invariants(polys, images).count()
     assert _n_persistent(spark) <= after_first
-    cache.release("color_invariants")
+    cache.release_all()
     assert _n_persistent(spark) < after_first
 
 

@@ -103,7 +103,7 @@ def test_area_out_of_coverage_aborts(servicer):
 
 def test_area_ranges_single_pixel_dump(servicer, world, monkeypatch):
     """AreaRangesElevation rasterizes the polygon ONCE per RPC: the
-    leased run table feeds both the stats collect and the dissolve
+    persisted run table feeds both the stats collect and the dissolve
     (the reference likewise fetches pixels once, querybuilder.py:77-88).
     Every run-table build is counted, the shim's and any the dissolve
     operator might start on its own."""
@@ -128,6 +128,27 @@ def test_area_ranges_single_pixel_dump(servicer, world, monkeypatch):
     resp = servicer.AreaRangesElevation(req)
     assert resp["unions"]
     assert len(calls) == 1
+
+
+def test_area_ranges_releases_its_run_table(servicer, world, spark):
+    """AreaRangesElevation persists its run table for the RPC only: the
+    count of persistent RDDs is unchanged after an answered RPC and
+    after an out-of-coverage RPC that aborts."""
+    def n_persistent():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    before = n_persistent()
+    servicer.AreaRangesElevation({
+        "bottomLeft": {"lon": world.min_x + 0.2 * TILE_DEG,
+                       "lat": world.max_y - 0.5 * TILE_DEG},
+        "topRight": {"lon": world.min_x + 0.5 * TILE_DEG,
+                     "lat": world.max_y - 0.2 * TILE_DEG},
+    })
+    assert n_persistent() == before
+    with pytest.raises(GrpcAbort):
+        servicer.AreaRangesElevation({"bottomLeft": {"lon": 100.0, "lat": 10.0},
+                                      "topRight": {"lon": 101.0, "lat": 11.0}})
+    assert n_persistent() == before
 
 
 def test_grpc_serve_over_local_socket(servicer, world):

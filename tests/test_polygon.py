@@ -337,10 +337,10 @@ def test_dissolve_subrun_shape_equals_pixel_shape(spark, world, images):
     """The run-table dissolve (band-split subruns, batched
     invariants) equals bands traced one at a time from the pixel dump:
     invariants against ring areas + connected-component labeling,
-    features against ``dissolve_pixels_rings`` — on a rectangle (rect
-    fast path) and a triangle (general PIP, runs split across bands)."""
-    from openelevationservice_spark.functions.dissolve import dissolve_pixels_rings
-    from tests.references import label_counts
+    features against the reference walk ``dissolve_pixels_rings`` — on a
+    rectangle (rect fast path) and a triangle (general PIP, runs split
+    across bands)."""
+    from tests.references import dissolve_pixels_rings, label_counts
     from openelevationservice_spark.operators.color import (
         polygon_color_invariants,
     )
